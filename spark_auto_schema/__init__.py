@@ -21,7 +21,7 @@ side-effect-free.
 
 from .core import SparkAutoSchema
 from .inference import ColumnInference, infer_table_schema, inference_to_df
-from .types import classify_type, classify_type_col
+from .types import classify_type
 
 __all__ = [
     "SparkAutoSchema",
@@ -29,7 +29,6 @@ __all__ = [
     "infer_table_schema",
     "inference_to_df",
     "classify_type",
-    "classify_type_col",
 ]
 
 __version__ = "0.2.0"

@@ -7,10 +7,11 @@ Reference: psycopg2 probes of Redshift system tables —
 ``information_schema.columns`` (RAS.py:215-216).
 
 The rebuild targets the Spark catalog: ``databaseExists`` / ``tableExists``
-(which covers views) / ``listColumns``.  Deployed Spark types are lifted into
-the Redshift type vocabulary via :func:`spark_to_redshift_type` so the
-13-class alias diffing (types.py) behaves exactly like the reference's
-``udt_name || '(len)'`` strings.
+(which covers views) and the resolved schema of ``spark.table``, which costs
+no Spark job where ``listColumns`` walks a Dataset with two to four.
+Deployed Spark types are lifted into the Redshift type vocabulary via
+:func:`spark_to_redshift_type` so the 13-class alias diffing (types.py)
+behaves exactly like the reference's ``udt_name || '(len)'`` strings.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .io import local_df, sql_name
 from .types import spark_to_redshift_type
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_$]*$")
@@ -35,30 +37,23 @@ def table_exists(spark: SparkSession, schema: str, table: str) -> bool:
     return spark.catalog.tableExists(f"{schema}.{table}")
 
 
+_DEPLOYED_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType(), False) for c in ("field", "deployed_type")]
+)
+
+
 def deployed_schema_df(spark: SparkSession, schema: str, table: str) -> DataFrame:
     """Deployed columns as (field, deployed_type) in ordinal order.
 
     Mirrors the reference's information_schema query (RAS.py:215-216) against
-    the Spark catalog.  Catalog metadata is driver-local; the result is lifted
-    into a DataFrame to feed the distributed diff join.
+    the Spark catalog.  Resolving the table's schema is driver-local metadata
+    work; the result is a local relation, so the diff reads it without a
+    Spark job.
     """
-    cols = spark.catalog.listColumns(tableName=table, dbName=schema)
-    rows = []
-    for c in cols:
-        # listColumns yields DDL-ish dataType strings; parse via StructType
-        try:
-            dt = T._parse_datatype_string(c.dataType)
-            rtype = spark_to_redshift_type(dt)
-        except Exception:
-            rtype = str(c.dataType).lower()
-        rows.append((c.name, rtype))
-    schema_t = T.StructType(
-        [
-            T.StructField("field", T.StringType(), False),
-            T.StructField("deployed_type", T.StringType(), False),
-        ]
-    )
-    return spark.createDataFrame(rows, schema_t)
+    name = f"{sql_name(schema)}.{sql_name(table)}"
+    columns = spark.table(name).schema
+    rows = [(c.name, spark_to_redshift_type(c.dataType)) for c in columns]
+    return local_df(spark, rows, _DEPLOYED_SCHEMA)
 
 
 def deployed_columns_query(

@@ -3,8 +3,10 @@
 Mirrors the 9-method surface of ``RedshiftAutoSchema``
 (``/root/reference/redshift_auto_schema/RedshiftAutoSchema.py:26-225``,
 README.md:36-46) with the psycopg2 Redshift connection replaced by the Spark
-catalog, pandas replaced by a lazy Spark DataFrame, and the per-column
-inference loop replaced by the single-pass aggregate (inference.py).
+catalog and the per-column pandas inference loop replaced by the single-pass
+aggregate (inference.py).  The diff stays on the driver like the reference's
+pandas merge: both sides are catalog-sized, so it is returned as a local
+DataFrame that its consumers read without a Spark job (diff.py).
 
 Constructor parameters track RAS.py:47-80; ``conn`` becomes ``spark``, and
 ``file_df`` accepts a Spark DataFrame.  An optional ``deployed_df`` can be
@@ -188,7 +190,8 @@ class SparkAutoSchema:
         jdbc_url: str | None = None,
         jdbc_properties: dict[str, str] | None = None,
     ) -> DataFrame:
-        """RAS.py:202-225 — proposed vs deployed full-outer diff.
+        """RAS.py:202-225 — proposed vs deployed full-outer diff, as a local
+        DataFrame (field, proposed_type, deployed_type, reason).
 
         Deployed-schema source, in precedence order: an explicit
         ``deployed_df`` (field, deployed_type); a live warehouse via

@@ -1,74 +1,84 @@
-"""Schema diff: proposed vs deployed, as a distributed DataFrame plan.
+"""Schema diff: proposed vs deployed, computed on the driver.
 
 Reference: ``evaluate_table_ddl_diffs`` at
 ``/root/reference/redshift_auto_schema/RedshiftAutoSchema.py:202-225``:
-full outer join of proposed metadata and deployed catalog columns on the
-column name, then row-wise classification into
+a pandas full outer join of proposed metadata and deployed catalog columns
+on the column name, then row-wise classification into
 TYPE MISMATCH / MISSING / DEPRECATED, dropping ``notype`` proposals.
 
-Spark-native notes: schema relations are catalog-sized (columns, not rows of
-data), so Catalyst will broadcast the join automatically; we still express it
-declaratively so the same plan scales if ever run across thousands of tables
-at once.
+Both sides hold one row per column, so the diff stays in Python like the
+reference's: :func:`diff_rows` is the one implementation of the rule, and
+:func:`evaluate_diffs` returns its rows as a local relation that consumers
+collect, filter and project without a Spark job.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .types import classify_type_col
+from .io import local_df
+from .types import classify_type
 
 REASON_MISSING = "MISSING"
 REASON_DEPRECATED = "DEPRECATED"
 REASON_TYPE_MISMATCH = "TYPE MISMATCH"
 
+DIFF_COLUMNS = ("field", "proposed_type", "deployed_type", "reason")
+DIFF_SCHEMA = T.StructType([T.StructField(c, T.StringType()) for c in DIFF_COLUMNS])
 
-def evaluate_diffs(proposed: DataFrame, deployed: DataFrame) -> DataFrame:
-    """Full-outer diff of proposed vs deployed schema.
 
-    Args:
-        proposed: DataFrame with columns (field, proposed_type).
-        deployed: DataFrame with columns (field, deployed_type).
+def _reason(proposed_type: str | None, deployed_type: str | None) -> str | None:
+    if proposed_type is None:
+        return REASON_DEPRECATED if deployed_type is not None else None
+    if proposed_type == "notype":
+        return None
+    if deployed_type is None:
+        return REASON_MISSING
+    if classify_type(proposed_type) != classify_type(deployed_type):
+        return REASON_TYPE_MISMATCH
+    return None
 
-    Returns DataFrame (field, proposed_type, deployed_type, reason) holding
-    only rows with a reason, mirroring RAS.py:217-225:
 
-    * both sides present and 13-class types differ -> TYPE MISMATCH
-    * proposed only -> MISSING; deployed only -> DEPRECATED
+def diff_rows(
+    proposed: Sequence[tuple[str, str | None]],
+    deployed: Sequence[tuple[str, str | None]],
+) -> list[tuple[str, str | None, str | None, str]]:
+    """Full-outer diff of two (field, type) lists, mirroring RAS.py:217-225:
+    (field, proposed_type, deployed_type, reason) for the rows with a
+    reason, in proposed order, then deprecated columns in deployed order.
+
+    * both types present and their 13-class types differ -> TYPE MISMATCH
+    * proposed type only -> MISSING (also against a NULL deployed type)
+    * deployed type only -> DEPRECATED
     * ``notype`` proposals are silently dropped (so an all-null new column
       never produces an ADD COLUMN — reference behavior, RAS.py:153 vs 222)
     """
-    p = proposed.select("field", "proposed_type")
-    d = deployed.select("field", "deployed_type")
-    joined = p.join(d, on="field", how="full_outer")
+    deployed_types = dict(deployed)  # a catalog lists each column once
+    proposed_fields = {field for field, _ in proposed}
+    joined = [(f, p, deployed_types.get(f)) for f, p in proposed]
+    joined += [(f, None, d) for f, d in deployed if f not in proposed_fields]
+    return [(f, p, d, reason) for f, p, d in joined if (reason := _reason(p, d))]
 
-    pt, dt = F.col("proposed_type"), F.col("deployed_type")
-    reason = (
-        F.when(pt.isNotNull() & dt.isNull(), F.lit(REASON_MISSING))
-        .when(pt.isNull() & dt.isNotNull(), F.lit(REASON_DEPRECATED))
-        .when(
-            classify_type_col(pt) != classify_type_col(dt),
-            F.lit(REASON_TYPE_MISMATCH),
-        )
-    )
 
-    return (
-        joined.withColumn("reason", reason)
-        # NaN != 'notype' keeps DEPRECATED rows in pandas; in Spark NULL
-        # comparison yields NULL, so keep nulls explicitly.
-        .filter(pt.isNull() | (pt != F.lit("notype")))
-        .filter(F.col("reason").isNotNull())
-        .select("field", "proposed_type", "deployed_type", "reason")
+def evaluate_diffs(proposed: DataFrame, deployed: DataFrame) -> DataFrame:
+    """:func:`diff_rows` over DataFrames (field, proposed_type) and
+    (field, deployed_type), returned as a local DataFrame with the columns
+    (field, proposed_type, deployed_type, reason).  Both sides are collected;
+    for local relations that runs no Spark job."""
+    rows = diff_rows(
+        proposed.select("field", "proposed_type").collect(),
+        deployed.select("field", "deployed_type").collect(),
     )
+    return local_df(proposed.sparkSession, rows, DIFF_SCHEMA)
 
 
 def missing_columns(diff: DataFrame) -> list[tuple[str, str]]:
-    """Collect (field, proposed_type) for MISSING rows (RAS.py:188-189).
-
-    The diff relation is catalog-sized; collecting it is a driver-side
-    formality, not a data-scale collect.
-    """
+    """Collect (field, proposed_type) for MISSING rows (RAS.py:188-189);
+    over the local diff relation this runs no Spark job."""
     rows = (
         diff.filter(F.col("reason") == REASON_MISSING)
         .select("field", "proposed_type")

@@ -7,7 +7,7 @@ full pandas DataFrame once **per column**, sequentially probing
 bool -> numeric -> date -> varchar.
 
 Spark-native redesign (SURVEY.md section 4.2): every statistic each column's
-decision needs is computed for **all columns in ONE ``df.agg(...)``** — a
+decision needs is computed for **all columns in ONE global aggregate** — a
 shuffle-free two-phase HashAggregate (map-side partial aggregation, single-row
 exchange, final merge).  The branching decision tree then runs on the
 collected one-row statistics vector on the driver.  At 100 TB this is one
@@ -42,11 +42,13 @@ what pandas-typed CSV input already produces.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .io import local_df, sql_name
 
 BOOL_LITERALS = ("true", "false", "t", "f", "0", "1")
 INT4_MIN, INT4_MAX = -2147483648, 2147483647
@@ -56,17 +58,24 @@ VARCHAR_THRESHOLD = 240  # RAS.py:336 — threshold really is 240, not 256
 # Spark's CORRECTED-mode parser is strict: trailing unparsed text => NULL,
 # and bracketed sections are optional.  "S" fraction patterns accept 1..9
 # digits.  Partial shapes like "2019", "03/2019", "Jan 2020" match nothing.
-COMPLETE_DATE_FORMATS = (
-    "yyyy-M-d[ H:m[:s[.SSSSSSSSS]]]",
-    "yyyy-M-d'T'H:m[:s[.SSSSSSSSS]]",
-    "yyyy/M/d[ H:m[:s[.SSSSSSSSS]]]",
-    "M/d/yyyy[ H:m[:s[.SSSSSSSSS]]]",
-    "M-d-yyyy[ H:m[:s]]",
-    "MMM d, yyyy[ H:m[:s]]",
-    "MMM d yyyy",
-    "d MMM yyyy",
-    "MMMM d, yyyy",
-)
+#
+# Each format maps to a prefix that every value it parses starts with (the
+# numeric fields read greedy digit runs, "yyyy" at least four, then the
+# literal must follow; month names start with a letter).  A value without
+# the prefix would only fail the format, and a failing parse throws inside
+# the formatter, so the probe tries just the formats whose prefix matches:
+# the first format that parses is the same, at a fraction of the cost.
+COMPLETE_DATE_FORMATS = {
+    "yyyy-M-d[ H:m[:s[.SSSSSSSSS]]]": "^[0-9]{4,}-",
+    "yyyy-M-d'T'H:m[:s[.SSSSSSSSS]]": "^[0-9]{4,}-",
+    "yyyy/M/d[ H:m[:s[.SSSSSSSSS]]]": "^[0-9]{4,}/",
+    "M/d/yyyy[ H:m[:s[.SSSSSSSSS]]]": "^[0-9]+/",
+    "M-d-yyyy[ H:m[:s]]": "^[0-9]+-",
+    "MMM d, yyyy[ H:m[:s]]": "^[A-Za-z]",
+    "MMM d yyyy": "^[A-Za-z]",
+    "d MMM yyyy": "^[0-9]+ ",
+    "MMMM d, yyyy": "^[A-Za-z]",
+}
 
 # Acceptance gap vs the reference (documented, deliberate): dateutil accepts
 # more *complete* datetime shapes than this whitelist — e.g. timezone-offset
@@ -83,11 +92,16 @@ COMPLETE_DATE_FORMATS = (
 # expensive DateTimeFormatter probe is skipped for them — measured ~30x
 # faster on non-date string columns (formatter failure paths are costly).
 DATEISH_RE = (
-    r"^(\d{4}[-/]\d{1,2}[-/]\d{1,2}"
-    r"|\d{1,2}[-/]\d{1,2}[-/]\d{4}"
-    r"|[A-Za-z]{3,9} \d{1,2},? \d{4}"
-    r"|\d{1,2} [A-Za-z]{3,9} \d{4})"
+    "^([0-9]{4}[-/][0-9]{1,2}[-/][0-9]{1,2}"
+    "|[0-9]{1,2}[-/][0-9]{1,2}[-/][0-9]{4}"
+    "|[A-Za-z]{3,9} [0-9]{1,2},? [0-9]{4}"
+    "|[0-9]{1,2} [A-Za-z]{3,9} [0-9]{4})"
 )
+
+# Every string that casts to a double holds a digit or spells NaN or
+# infinity ("inf" included).  Casting other text only fails, and a failed
+# cast throws inside the number parser, so the numeric probe skips it.
+NUMERIC_HINT_RE = "(?i)[0-9]|inf|nan"
 
 _INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FRACTIONAL_TYPES = (T.FloatType, T.DoubleType)
@@ -102,79 +116,90 @@ class ColumnInference:
     spark_type: str  # source Spark dtype, simpleString form
     proposed_type: str  # Redshift-vocabulary proposed type (or Spark type in native mode)
 
-    @property
-    def is_identifier(self) -> bool:
-        return self.name.endswith("_id")
+
+def _sql_string(s: str) -> str:
+    """A SQL string constant for ``s`` that reads the same under every
+    ``spark.sql.parser.escapedStringLiterals`` setting: quotes and
+    backslashes are spliced in as ``chr`` calls, which fold to a literal."""
+    parts = [
+        f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'"
+        for p in re.split(r"(['\\])", s)
+        if p
+    ]
+    if len(parts) == 1:
+        return parts[0]
+    return f"concat({', '.join(parts)})" if parts else "''"
 
 
-def _stat_exprs(df: DataFrame, i: int, name: str, dtype: T.DataType) -> list:
-    """Aggregate expressions producing column *i*'s statistics vector.
+def _parsed_timestamp_sql(c: str) -> str:
+    """The first of :data:`COMPLETE_DATE_FORMATS` that parses SQL column
+    ``c``, as a timestamp; NULL when none does."""
+    stamps = ", ".join(
+        f"CASE WHEN {c} RLIKE {_sql_string(prefix)} "
+        f"THEN try_to_timestamp({c}, {_sql_string(fmt)}) END"
+        for fmt, prefix in COMPLETE_DATE_FORMATS.items()
+    )
+    return f"CASE WHEN {c} RLIKE {_sql_string(DATEISH_RE)} THEN coalesce({stamps}) END"
+
+
+def _stat_sql(i: int, name: str, dtype: T.DataType) -> list[str]:
+    """Aggregate expressions, as SQL text, producing column *i*'s statistics
+    vector.  Text keeps building a wide table's aggregate to one call into
+    the JVM, where composing Column objects costs thousands of round trips.
 
     Null handling: the reference drops nulls before probing (RAS.py:309).
-    ``bool_and``/``min``/``max`` ignore NULL inputs, so probe expressions are
-    wrapped in ``when(value is not null, probe)`` making null rows contribute
+    ``bool_and``/``min``/``max`` ignore NULL inputs; a comparison of a NULL
+    value is NULL already, and the ``IS NOT NULL`` probes are wrapped in
+    ``CASE WHEN value IS NOT NULL THEN probe END`` so null rows contribute
     NULL (ignored) instead of false.  For float columns NaN counts as null
     (pandas ``notnull`` semantics), hence the ``isnan`` guards.
     """
-    c = df[name]
+    c = sql_name(name)
     a = f"c{i}__"
-    exprs = []
 
     if isinstance(dtype, _FRACTIONAL_TYPES):
-        valid = F.when(~F.isnan(c), c)
-        exprs.append(F.count(valid).alias(a + "cnt"))
-        exprs.append(F.bool_and(F.when(~F.isnan(c), c == F.floor(c))).alias(a + "intg"))
-        exprs.append(F.min(valid).cast("double").alias(a + "mn"))
-        exprs.append(F.max(valid).cast("double").alias(a + "mx"))
-        return exprs
+        valid = f"CASE WHEN NOT isnan({c}) THEN {c} END"
+        return [
+            f"count({valid}) AS {a}cnt",
+            f"bool_and(CASE WHEN NOT isnan({c}) THEN {c} = floor({c}) END) AS {a}intg",
+            f"CAST(min({valid}) AS DOUBLE) AS {a}mn",
+            f"CAST(max({valid}) AS DOUBLE) AS {a}mx",
+        ]
 
-    exprs.append(F.count(c).alias(a + "cnt"))
-
+    exprs = [f"count({c}) AS {a}cnt"]
     if isinstance(dtype, _INTEGRAL_TYPES):
-        exprs.append(F.bool_and(c.isin(0, 1)).alias(a + "b01"))
-        exprs.append(F.min(c).cast("long").alias(a + "mn"))
-        exprs.append(F.max(c).cast("long").alias(a + "mx"))
+        exprs.append(f"bool_and({c} IN (0, 1)) AS {a}b01")
+        exprs.append(f"CAST(min({c}) AS BIGINT) AS {a}mn")
+        exprs.append(f"CAST(max({c}) AS BIGINT) AS {a}mx")
     elif isinstance(dtype, T.DecimalType):
-        exprs.append(F.bool_and(c == F.floor(c)).alias(a + "intg"))
-        exprs.append(F.min(c).cast("double").alias(a + "mn"))
-        exprs.append(F.max(c).cast("double").alias(a + "mx"))
+        exprs.append(f"bool_and({c} = floor({c})) AS {a}intg")
+        exprs.append(f"CAST(min({c}) AS DOUBLE) AS {a}mn")
+        exprs.append(f"CAST(max({c}) AS DOUBLE) AS {a}mx")
     elif isinstance(dtype, _TIMESTAMP_TYPES):
-        exprs.append(F.bool_and(c == F.date_trunc("DAY", c)).alias(a + "mid"))
+        exprs.append(f"bool_and({c} = date_trunc('DAY', {c})) AS {a}mid")
     elif isinstance(dtype, T.StringType):
         # try_cast: ANSI-safe — malformed numeric text yields NULL, mirroring
         # the reference's try/except around astype(float) (RAS.py:314-326)
-        d = c.try_cast("double")
-        parsed = F.when(
-            c.rlike(DATEISH_RE),
-            F.coalesce(
-                *[F.try_to_timestamp(c, F.lit(fmt)) for fmt in COMPLETE_DATE_FORMATS]
-            ),
-        )
-        exprs.append(
-            F.bool_and(
-                F.when(c.isNotNull(), F.lower(c).isin(*BOOL_LITERALS))
-            ).alias(a + "b01")
-        )
-        exprs.append(F.bool_and(F.when(c.isNotNull(), d.isNotNull())).alias(a + "isnum"))
-        exprs.append(F.bool_and(F.when(d.isNotNull(), d == F.floor(d))).alias(a + "intg"))
-        exprs.append(F.min(d).alias(a + "mn"))
-        exprs.append(F.max(d).alias(a + "mx"))
-        exprs.append(
-            F.bool_and(F.when(c.isNotNull(), parsed.isNotNull())).alias(a + "isdate")
-        )
-        exprs.append(
-            F.bool_and(
-                F.when(parsed.isNotNull(), parsed == F.date_trunc("DAY", parsed))
-            ).alias(a + "mid")
-        )
-        exprs.append(F.max(F.length(c)).alias(a + "maxlen"))
+        d = f"CASE WHEN {c} RLIKE {_sql_string(NUMERIC_HINT_RE)} THEN try_cast({c} AS DOUBLE) END"
+        parsed = _parsed_timestamp_sql(c)
+        bools = ", ".join(_sql_string(b) for b in BOOL_LITERALS)
+        exprs += [
+            f"bool_and(lower({c}) IN ({bools})) AS {a}b01",
+            f"bool_and(CASE WHEN {c} IS NOT NULL THEN {d} IS NOT NULL END) AS {a}isnum",
+            f"bool_and({d} = floor({d})) AS {a}intg",
+            f"min({d}) AS {a}mn",
+            f"max({d}) AS {a}mx",
+            f"bool_and(CASE WHEN {c} IS NOT NULL THEN ({parsed}) IS NOT NULL END) AS {a}isdate",
+            f"bool_and(({parsed}) = date_trunc('DAY', {parsed})) AS {a}mid",
+            f"max(length({c})) AS {a}maxlen",
+        ]
     elif isinstance(dtype, (T.BooleanType, T.DateType)):
         pass  # dtype alone decides
     else:
         # nested / binary / other: reference-compat mode sizes the stringified
         # value (pandas stringifies objects before the varchar branch,
         # RAS.py:336-339)
-        exprs.append(F.max(F.length(c.cast("string"))).alias(a + "maxlen"))
+        exprs.append(f"max(length(CAST({c} AS STRING))) AS {a}maxlen")
     return exprs
 
 
@@ -295,13 +320,12 @@ def infer_table_schema(
     stats: dict[str, object] = {}
     nrows = None
     for gi, group in enumerate(groups):
-        exprs = []
-        if gi == 0:
-            exprs.append(F.count(F.lit(1)).alias("__nrows"))
+        exprs = ["count(1) AS __nrows"] if gi == 0 else []
         for i, field in group:
-            exprs.extend(_stat_exprs(df, i, field.name, field.dataType))
-        row: Row = df.agg(*exprs).collect()[0]
-        d = row.asDict()
+            exprs.extend(_stat_sql(i, field.name, field.dataType))
+        # one struct: a list of expressions crosses into the JVM item by item
+        row: Row = df.selectExpr(f"struct({', '.join(exprs)}) AS stats").collect()[0]
+        d = row.stats.asDict()
         if gi == 0:
             nrows = d.pop("__nrows")
         stats.update(d)
@@ -320,14 +344,12 @@ def infer_table_schema(
     return results
 
 
+_INFERENCE_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType(), False) for c in ("field", "spark_type", "proposed_type")]
+)
+
+
 def inference_to_df(spark, inferences: list[ColumnInference]) -> DataFrame:
-    """Lift inference results into a small DataFrame (field, spark_type, proposed_type)."""
-    schema = T.StructType(
-        [
-            T.StructField("field", T.StringType(), False),
-            T.StructField("spark_type", T.StringType(), False),
-            T.StructField("proposed_type", T.StringType(), False),
-        ]
-    )
+    """Lift inference results into a local DataFrame (field, spark_type, proposed_type)."""
     rows = [(ci.name, ci.spark_type, ci.proposed_type) for ci in inferences]
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, _INFERENCE_SCHEMA)

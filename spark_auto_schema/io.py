@@ -42,6 +42,28 @@ except Exception:  # pragma: no cover
     _pa = None
 
 
+def sql_name(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Lift catalog-sized driver rows into a DataFrame as a ``LocalRelation``.
+
+    A list handed to ``createDataFrame`` is parallelized, so each collect of
+    it is a Spark job; a ``pyarrow.Table`` becomes a ``LocalRelation``, whose
+    collects, filters and projections run none (with or without Arrow
+    execution enabled)."""
+    if _pa is None:  # pragma: no cover
+        return spark.createDataFrame(list(rows), schema)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = _pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def normalize_columns(df: DataFrame) -> DataFrame:
     """Replace ``.`` with ``_`` in every column name (RAS.py:233)."""
     renamed = [c.replace(".", "_") for c in df.columns]
@@ -346,9 +368,9 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
                 if not isinstance(f.dataType, T.MapType)
             ]
             if hashable:
-                return df.repartition(
-                    cores, F.xxhash64(*[F.col(c) for c in hashable])
-                )
+                # one SQL expression: a Column per name costs JVM round trips
+                names = ", ".join(sql_name(c) for c in hashable)
+                return df.repartition(cores, F.expr(f"xxhash64({names})"))
             return df.repartition(cores)
     except Exception:  # pragma: no cover - non-classic sessions
         pass

@@ -414,7 +414,9 @@ def ngram_jaccard_pairs(
     w.h.p., much smaller shuffle).  ``max_df`` (default 10,000) caps the
     document frequency of join-eligible shingles so a single hot shingle
     cannot go quadratic — see :func:`_jaccard_from_shingles`; pass ``None``
-    for the uncapped exact semantics."""
+    for the uncapped exact semantics.  Not plan-only: the call persists the
+    shingles and, with ``max_df`` set, runs one Spark job (the
+    ``hot.isEmpty()`` probe of :func:`_persisted_capped_shingles`)."""
     sh = shingles(df, text_col, id_col, n, hashed=hashed)
     return _jaccard_from_shingles(sh, threshold, max_df=max_df)
 
@@ -1079,17 +1081,16 @@ def contamination_ngram_sweep(
     # (e.g. all-empty eval texts) has no totals row either, but the
     # operator's row contract is one row per swept n — the former per-n
     # global aggregate emitted (n, 0, 0, 0, NULL) for it (r14 ADVICE)
-    ns_frame = F.broadcast(
-        eval_df.sparkSession.createDataFrame(
-            [(int(n),) for n in ns], "n int"
-        )
+    # a left join builds its right side: broadcast the |ns|-row aggregates
+    ns_frame = eval_df.sparkSession.createDataFrame(
+        [(int(n),) for n in ns], "n int"
     )
-    totals = ns_frame.join(totals, "n", "left").select(
+    totals = ns_frame.join(F.broadcast(totals), "n", "left").select(
         "n", F.coalesce("n_eval_grams", F.lit(0)).alias("n_eval_grams")
     )
     # left join: an n with zero hits has no hits row (the old per-n global
     # aggregate emitted 0s) — coalesce restores the 0-valued row
-    return totals.join(hits, "n", "left").select(
+    return totals.join(F.broadcast(hits), "n", "left").select(
         F.col("n").cast("long").alias("n"),
         F.col("n_eval_grams").cast("long").alias("n_eval_grams"),
         F.coalesce("n_eval_grams_hit", F.lit(0))
@@ -1941,7 +1942,9 @@ def containment_pairs(
     8-byte keys, ``max_df`` hot-shingle cap so one boilerplate phrase
     cannot go quadratic); containment is computed over the capped shingle
     space, exactly like the Jaccard variant.  One extra projection over
-    the pair aggregate, no extra shuffle."""
+    the pair aggregate, no extra shuffle.  Not plan-only, like
+    :func:`ngram_jaccard_pairs`: the call persists the shingles and, with
+    ``max_df`` set, runs the one-job ``hot.isEmpty()`` probe."""
     sh = shingles(df, text_col, id_col, n, hashed=hashed)
     # persisted + capped (anti-join skipped when no shingle exceeds the
     # cap — see _persisted_capped_shingles); consumed three times below

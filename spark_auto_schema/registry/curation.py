@@ -347,7 +347,7 @@ def _q_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_auto_schema.ops import similarity
 
     return similarity.hamming_topk(
-        _spread_embs(spark, sf_dir), query_id=0, k=10
+        read_table(spark, sf_dir, "embeddings"), query_id=0, k=10
     )
 
 
@@ -729,7 +729,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax assignment with cid tie-break, cluster-local pair join, and the
     drop anti-set (`ops/similarity.py` semantic_dedup)."""
     return similarity.semantic_dedup(
-        _spread_embs(spark, sf_dir), threshold=0.3, nlist=16
+        read_table(spark, sf_dir, "embeddings"), threshold=0.3, nlist=16
     )
 
 
@@ -1159,7 +1159,7 @@ def _q_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     control for a curated corpus.  Centroids come from the CORPUS (the
     stable side); the oracle replays both assignments and the
     batch x corpus cluster-local dup set."""
-    emb = _spread_embs(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     return similarity.incremental_semantic_dedup(
         emb.where(F.col("vec_id") % 5 == 0),
         emb.where(F.col("vec_id") % 5 != 0),

@@ -373,11 +373,11 @@ def _spread_docs(spark, sf_dir):
 
 def _spread_embs(spark, sf_dir):
     """Spread the single-row-group embeddings file before expensive
-    per-row vector work (assignment fan-outs, cluster-pair joins,
-    posexplode pipelines): unspread, a BNLJ or d-wide explode runs in
-    ONE scan task (guide §2.5; measured 5.3 -> 1.4 s on the
-    centroid_assign_join assignment and 4.3 -> 2.3 s on semantic_dedup
-    at sf0.1)."""
+    per-row vector work (assignment fan-outs, posexplode pipelines):
+    unspread, a BNLJ or d-wide explode runs in ONE scan task (guide §2.5;
+    measured 5.3 -> 1.4 s on the centroid_assign_join assignment at
+    sf0.1).  Top-k and the semantic-dedup queries read unspread: their
+    plans are pinned to the shuffles the operator itself needs."""
     from spark_auto_schema.io import spread_small_scan
 
     return spread_small_scan(read_table(spark, sf_dir, "embeddings"))
@@ -398,7 +398,7 @@ def _q_multimodal_bytes(spark, sf_dir):
 
 def _q_embedding_topk(spark, sf_dir):
     return similarity.cosine_topk(
-        _spread_embs(spark, sf_dir), query_id=0, k=10
+        read_table(spark, sf_dir, "embeddings"), query_id=0, k=10
     )
 
 

@@ -16,8 +16,6 @@ Deliberate divergences from the reference (SURVEY.md section 1.4):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Class id -> alias list, order matters (first match wins), all lowercase.
@@ -61,20 +59,6 @@ def classify_type(datatype: object) -> int:
     return _ALIAS_TO_CLASS.get(str(datatype).lower().strip(), 0)
 
 
-def classify_type_col(c: Column) -> Column:
-    """Distributed version of :func:`classify_type` as a Catalyst CASE chain.
-
-    Null input falls through every WHEN (null predicate) to ``otherwise(0)``,
-    matching the reference's ``str(nan) -> 'nan' -> 0`` behavior.
-    """
-    norm = F.lower(F.trim(c.cast("string")))
-    expr = None
-    for cls, aliases in TYPE_CLASSES.items():
-        cond = norm.isin(*aliases)
-        expr = F.when(cond, F.lit(cls)) if expr is None else expr.when(cond, F.lit(cls))
-    return expr.otherwise(F.lit(0))
-
-
 # ---------------------------------------------------------------------------
 # Redshift <-> Spark type mapping (rebuild-side dialect tables; no reference
 # equivalent — the reference only ever emits Redshift type strings).
@@ -115,7 +99,7 @@ def redshift_to_spark_type(redshift_type: str) -> str:
 def spark_to_redshift_type(dt: T.DataType) -> str:
     """Map a Spark DataType to the Redshift-vocabulary name used in diffs.
 
-    Used to lift ``spark.catalog.listColumns`` output into the same type
+    Used to lift the deployed Spark catalog schema into the same type
     vocabulary the reference reads from ``information_schema.columns``
     (RAS.py:215-216), so alias-aware diffing works against Spark tables.
     """

@@ -121,6 +121,70 @@ def test_catalog_existence_and_diff(spark, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS sas_cat_test")
 
 
+def test_deployed_schema_df_type_strings(spark, tmp_path):
+    """Deployed Spark types lifted into the Redshift vocabulary, in catalog
+    order, for a table whose name only parses backtick-quoted."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS sas_types_test")
+    spark.sql("DROP TABLE IF EXISTS sas_types_test.`2024`")
+    spark.sql(
+        "CREATE TABLE sas_types_test.`2024` (c CHAR(8), v VARCHAR(64), "
+        "ntz TIMESTAMP_NTZ, d DECIMAL(10,2), arr ARRAY<INT>, `x y` INT) "
+        "USING parquet LOCATION '" + str(tmp_path / "t2024") + "'"
+    )
+    try:
+        dep = deployed_schema_df(spark, "sas_types_test", "2024")
+        assert dep.columns == ["field", "deployed_type"]
+        assert [tuple(r) for r in dep.collect()] == [
+            ("c", "varchar(256)"),
+            ("v", "varchar(256)"),
+            ("ntz", "timestamp"),
+            ("d", "numeric"),
+            ("arr", "text"),
+            ("x y", "int4"),
+        ]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sas_types_test.`2024`")
+        spark.sql("DROP DATABASE IF EXISTS sas_types_test")
+
+
+def test_catalog_diff_runs_no_spark_job(spark, tmp_path):
+    """Once inference has run, the catalog read, the diff, its collect and
+    both column-DDL dialects are catalog-sized driver work: 0 Spark jobs."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS sas_jobs_test")
+    spark.sql("DROP TABLE IF EXISTS sas_jobs_test.nation")
+    spark.sql(
+        "CREATE TABLE sas_jobs_test.nation (n_nationkey INT, n_name CHAR(8), "
+        "gone DATE) USING parquet LOCATION '" + str(tmp_path / "nation") + "'"
+    )
+    sc = spark.sparkContext
+    try:
+        sas = SparkAutoSchema(
+            schema="sas_jobs_test",
+            table="nation",
+            file=f"{SF_DIR}/nation.parquet",
+            spark=spark,
+        )
+        sas._ensure_metadata()
+        sc.setJobGroup("sas-diff-jobs", "diff job-count pin")
+        try:
+            rows = sas.evaluate_table_ddl_diffs().collect()
+            column_ddl = sas.generate_column_ddl()
+            spark_column_ddl = sas.generate_spark_column_ddl()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup("sas-diff-jobs") == []
+        assert {r["field"]: r["reason"] for r in rows} == {
+            "n_regionkey": "MISSING",
+            "gone": "DEPRECATED",
+        }
+        assert "ADD COLUMN n_regionkey int4;" in column_ddl
+        assert spark_column_ddl.startswith("ALTER TABLE sas_jobs_test.nation ADD COLUMNS (")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sas_jobs_test.nation")
+        spark.sql("DROP DATABASE IF EXISTS sas_jobs_test")
+
+
 def test_empty_file_returns_none_ddl(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

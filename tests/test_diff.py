@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from spark_auto_schema.diff import evaluate_diffs, missing_columns
+from spark_auto_schema.diff import diff_rows, evaluate_diffs, missing_columns
 from spark_auto_schema.types import classify_type
 
 
@@ -96,6 +96,84 @@ def test_diff_unknown_types_both_class0_no_mismatch(spark):
     proposed = _mk(spark, [("a", "weird1")], "proposed_type")
     deployed = _mk(spark, [("a", "weird2")], "deployed_type")
     assert evaluate_diffs(proposed, deployed).count() == 0
+
+
+# ------------------------------------------------------- diff parity pins
+# Every case the full-outer-join rule decides (RAS.py:217-225), as
+# (proposed rows, deployed rows, expected diff rows).
+PARITY_CASES = {
+    "proposed_only_is_missing": (
+        [("a", "int4")], [("z", "int4")],
+        [("a", "int4", None, "MISSING"), ("z", None, "int4", "DEPRECATED")],
+    ),
+    "deployed_only_is_deprecated": (
+        [], [("d", "date")], [("d", None, "date", "DEPRECATED")],
+    ),
+    "class_mismatch": (
+        [("b", "int4")], [("b", "varchar(256)")],
+        [("b", "int4", "varchar(256)", "TYPE MISMATCH")],
+    ),
+    "alias_equal_is_absent": (
+        [("a", "int4"), ("t", "timestamp")],
+        [("a", "INTEGER"), ("t", "timestamp without time zone")],
+        [],
+    ),
+    "notype_dropped": (
+        [("e", "notype"), ("f", "notype")], [("f", "int4")], [],
+    ),
+    "deployed_only_null_type_dropped": ([], [("d", None)], []),
+    "present_field_null_deployed_type_is_missing": (
+        [("a", "int4")], [("a", None)], [("a", "int4", None, "MISSING")],
+    ),
+    "unknown_types_both_class0_absent": (
+        [("a", "weird1")], [("a", "weird2")], [],
+    ),
+    "empty_proposed": ([], [("d", "date")], [("d", None, "date", "DEPRECATED")]),
+    "empty_deployed": ([("a", "int4")], [], [("a", "int4", None, "MISSING")]),
+    "both_empty": ([], [], []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_diff_parity(spark, case):
+    proposed, deployed, want = PARITY_CASES[case]
+    diff = evaluate_diffs(
+        _mk(spark, proposed, "proposed_type"), _mk(spark, deployed, "deployed_type")
+    )
+    assert diff.columns == ["field", "proposed_type", "deployed_type", "reason"]
+    assert sorted(tuple(r) for r in diff.collect()) == sorted(want)
+    assert missing_columns(diff) == [
+        (f, p) for f, p, _, reason in want if reason == "MISSING"
+    ]
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_diff_rows_parity(case):
+    """The pure-Python rule decides every case without a session."""
+    proposed, deployed, want = PARITY_CASES[case]
+    assert diff_rows(proposed, deployed) == want
+
+
+def test_diff_row_order_proposed_then_deprecated(spark):
+    """Proposed columns in inference order, then deprecated columns in
+    catalog order."""
+    proposed = [("p1", "int4"), ("p2", "float8"), ("p3", "date"), ("p4", "bool"),
+                ("p5", "int8")]
+    deployed = [("z_dep", "int4"), ("p3", "timestamp"), ("a_dep", "date"),
+                ("p1", "integer"), ("m_dep", "bool")]
+    diff = evaluate_diffs(
+        _mk(spark, proposed, "proposed_type"), _mk(spark, deployed, "deployed_type")
+    )
+    assert [tuple(r) for r in diff.collect()] == [
+        ("p2", "float8", None, "MISSING"),
+        ("p3", "date", "timestamp", "TYPE MISMATCH"),
+        ("p4", "bool", None, "MISSING"),
+        ("p5", "int8", None, "MISSING"),
+        ("z_dep", None, "int4", "DEPRECATED"),
+        ("a_dep", None, "date", "DEPRECATED"),
+        ("m_dep", None, "bool", "DEPRECATED"),
+    ]
+    assert missing_columns(diff) == [("p2", "float8"), ("p4", "bool"), ("p5", "int8")]
 
 
 # ------------------------------------------------------- JDBC deployed path

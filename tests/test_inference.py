@@ -40,12 +40,12 @@ def test_single_pass_plan(spark, infer_probe_parquet):
     besides the single-row exchange."""
     from pyspark.sql import functions as F
 
-    from spark_auto_schema.inference import _stat_exprs
+    from spark_auto_schema.inference import _stat_sql
 
     df = load_file(spark, infer_probe_parquet)
     exprs = [F.count(F.lit(1)).alias("__nrows")]
     for i, field in enumerate(df.schema.fields):
-        exprs.extend(_stat_exprs(df, i, field.name, field.dataType))
+        exprs.extend(F.expr(e) for e in _stat_sql(i, field.name, field.dataType))
     plan = df.agg(*exprs)._jdf.queryExecution().executedPlan().toString()
     # one partial + one final HashAggregate/SortAggregate, single scan
     assert plan.count("Scan parquet") == 1
@@ -124,3 +124,56 @@ def test_sampling_is_opt_in(spark, infer_probe_parquet):
 def test_string_probe_cases(spark, values, expected):
     df = spark.createDataFrame(values, "c string")
     assert _types(infer_table_schema(df)) == {"c": expected}
+
+
+def test_guarded_date_probe_matches_unguarded_formats(spark):
+    """The prefix guards only skip parses that would fail: on every shape
+    below, the guarded probe picks the same timestamp (or NULL) as trying
+    every format in order."""
+    from pyspark.sql import functions as F
+
+    from spark_auto_schema.inference import (
+        COMPLETE_DATE_FORMATS,
+        DATEISH_RE,
+        _parsed_timestamp_sql,
+    )
+
+    values = [
+        "2019-01-02", "2019-1-2 3:4", "2019-01-02 03:04:05.123456789",
+        "2019-01-02T03:04", "2019-1-2t3:4:5", "2019/01/02", "2019/1/2 03:04",
+        "1/2/2020", "01/02/2020 3:4:5.5", "0012-5-2019", "12-31-2020 1:2",
+        "0001/2/3", "201-1-2", "12345/2/3", "1/2/2020 3:4",
+        "Jan 2, 2020", "jan 2, 2020 3:4", "JAN 2 2020", "January 2, 2020",
+        "2 Jan 2020", "002 Jan 2020", "Sept 3, 2020", "2019-13-45",
+        "2019-02-30", "03/2019", "Jan 2020", "2019", "hello", "", None,
+    ]
+    df = spark.createDataFrame([(v,) for v in values], "c string")
+    unguarded = F.when(
+        F.col("c").rlike(DATEISH_RE),
+        F.coalesce(*[F.try_to_timestamp("c", F.lit(f)) for f in COMPLETE_DATE_FORMATS]),
+    )
+    rows = df.select(
+        "c", unguarded.alias("want"), F.expr(_parsed_timestamp_sql("`c`")).alias("got")
+    ).collect()
+    assert [(r.c, r.got) for r in rows] == [(r.c, r.want) for r in rows]
+    assert sum(r.want is not None for r in rows) >= 15  # the shapes do parse
+
+
+def test_guarded_numeric_probe_matches_try_cast(spark):
+    """The numeric probe skips only text that cannot cast to a double."""
+    from pyspark.sql import functions as F
+
+    from spark_auto_schema.inference import NUMERIC_HINT_RE
+
+    values = [
+        "1", " 2 ", "\t3\n", "-4.5", "+.5", "1e3", "1E-3", "1d", "2f", "0x1p3",
+        "NaN", "-nan", "Infinity", "+INF", "-inf", "infinity", "1,000", "12abc",
+        "abc", "", "info", "banana", "2019-01-02", None,
+    ]
+    df = spark.createDataFrame([(v,) for v in values], "c string")
+    want = F.col("c").try_cast("double")
+    got = F.when(F.col("c").rlike(NUMERIC_HINT_RE), want)
+    rows = df.select("c", want.alias("want"), got.alias("got")).collect()
+    # repr: NaN never equals itself
+    assert [(r.c, repr(r.got)) for r in rows] == [(r.c, repr(r.want)) for r in rows]
+    assert sum(r.want is not None for r in rows) >= 10  # the shapes do cast

@@ -41,13 +41,13 @@ def test_inference_is_one_scan_no_wide_shuffle(spark):
     # collects internally, returning a local result frame)
     from pyspark.sql import functions as F
 
-    from spark_auto_schema.inference import _stat_exprs
+    from spark_auto_schema.inference import _stat_sql
     from spark_auto_schema.io import read_table
 
     li = read_table(spark, SF_DIR, "lineitem")
     exprs = []
     for i, field in enumerate(li.schema.fields):
-        exprs.extend(_stat_exprs(li, i, field.name, field.dataType))
+        exprs.extend(F.expr(e) for e in _stat_sql(i, field.name, field.dataType))
     plan = plan_of(li.agg(*exprs), "simple")
     assert plan.count("Scan parquet") == 1
     # partial + final aggregate, exchange only for the single result row
@@ -261,12 +261,15 @@ def test_max_df_hot_shingle_filter_is_broadcast_anti_join(spark):
     from spark_auto_schema.io import read_table
     from spark_auto_schema.ops import dedup
 
-    pairs = dedup.ngram_jaccard_pairs(
-        read_table(spark, SF_DIR, "documents"), threshold=0.8, max_df=100
-    )
-    plan = plan_of(pairs, "simple")
-    # the hot-shingle removal must not shuffle the corpus-sized side
+    docs = read_table(spark, SF_DIR, "documents")
+    # the testdata's max df is 25: a cap of 5 fires, so hot shingles exist
+    # and the hot-shingle removal must not shuffle the corpus-sized side
+    plan = plan_of(dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_df=5), "simple")
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    # a cap of 100 fires for no shingle: the anti-join is skipped entirely
+    plan = plan_of(dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_df=100), "simple")
+    assert "LeftAnti" not in plan
+    dedup.release_caches()
 
 
 def test_label_centroids_partial_aggregation(spark):
