@@ -75,56 +75,13 @@ def _family(name: str) -> str:
 
 
 def _release_op_caches() -> None:
-    """Drop DataFrames the dedup operators persisted for intra-query reuse —
-    measured queries should not accumulate cached blocks across the run."""
-    try:
-        from spark_auto_schema.ops import dedup
+    """Drop the frames operators persisted for intra-query reuse and the
+    streaming memory-sink views (temp views, not caches) — measured queries
+    should not accumulate cached blocks across the run."""
+    from spark_auto_schema import release_caches, streaming
 
-        dedup.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema import io as _io
-
-        _io.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema.ops import similarity as _sim
-
-        _sim.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema.ops import text as _text
-
-        _text.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema.ops import corpus as _corpus
-
-        _corpus.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema.ops import sampling as _sampling
-
-        _sampling.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema.ops import analytics as _analytics
-
-        _analytics.release_caches()
-    except Exception:
-        pass
-    try:
-        from spark_auto_schema import streaming as _streaming
-
-        _streaming.release_sinks()
-    except Exception:
-        pass
+    release_caches()
+    streaming.release_sinks()
 
 
 def _warm_python_workers(spark, cpus: str) -> None:

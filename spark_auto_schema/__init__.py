@@ -19,6 +19,7 @@ for the stream's lifetime.  ``io.read_parquet``/``io.load_file`` are
 side-effect-free.
 """
 
+from ._cache import release_caches
 from .core import SparkAutoSchema
 from .inference import ColumnInference, infer_table_schema, inference_to_df
 from .types import classify_type
@@ -29,6 +30,7 @@ __all__ = [
     "infer_table_schema",
     "inference_to_df",
     "classify_type",
+    "release_caches",
 ]
 
 __version__ = "0.2.0"

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._cache import persist, release_caches  # noqa: F401 re-export
+
 try:  # pyarrow is available in this environment; gate anyway
     import pyarrow.parquet as _pq
     import pyarrow as _pa
@@ -573,8 +575,8 @@ def read_csv_quarantine(
     disallows queries that prune down to only the internal corrupt-record
     column (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so the parsed frame is
     persisted before splitting; this also means draining both sinks costs
-    one file pass, not two.  Call :func:`release_caches` (bench and the
-    correctness mirror do) when done.
+    one file pass, not two.  Call ``spark_auto_schema.release_caches`` when
+    done.
     """
     full = f"{schema}, {corrupt_col} string"
     reader = (
@@ -587,8 +589,7 @@ def read_csv_quarantine(
     )
     if encoding:
         reader = reader.option("encoding", encoding)
-    df = reader.csv(path).persist()
-    _CACHED.append(df)
+    df = persist(reader.csv(path))
     good = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
     bad = df.where(F.col(corrupt_col).isNotNull())
     return good, bad
@@ -609,15 +610,3 @@ def write_text_lines(df: DataFrame, text_col: str, path: str) -> None:
             text_col
         )
     ).write.mode("overwrite").text(path)
-
-
-_CACHED: list[DataFrame] = []
-
-
-def release_caches() -> None:
-    """Unpersist frames cached by :func:`read_csv_quarantine` calls."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass

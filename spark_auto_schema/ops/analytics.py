@@ -34,26 +34,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._cache import persist, release_caches  # noqa: F401 re-export
+
 _BUCKET_DAYS = {"week": 7, "day": 1}
-
-# intra-query persisted frames (pagerank's edge aggregate and per-iteration
-# rank), released between measured queries like every other ops module
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every DataFrame cached by analytics operators."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
 
 
 def cohort_retention(
@@ -964,7 +947,7 @@ def pagerank(
     # O(2^iters) times through the growing lineage (guide §5; measured
     # 6.16 -> 3.18 s fresh-process median on pagerank_event_types at
     # sf0.1 together with the per-iteration rank persist below)
-    e = _persist(
+    e = persist(
         edges.select(src.alias("src"), dst.alias("dst"), w.cast("double").alias("w"))
     )
     nodes = (
@@ -995,7 +978,7 @@ def pagerank(
         )
         # per-iteration persist: the next iteration reads this frame twice
         # (dangling + inflow); the frame is |V| rows — model-sized
-        rank = _persist(
+        rank = persist(
             nodes.join(inflow, on="node", how="left")
             .crossJoin(F.broadcast(n_nodes))
             .crossJoin(F.broadcast(dangling))

@@ -40,28 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._cache import persist, release_caches  # noqa: F401 re-export
+
 # ASCII unit separator: joins fingerprint columns without colliding with
 # text content (documents are word-soup; real corpora could contain any
 # printable delimiter).
 _FS = "\x1f"
-
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every DataFrame cached by this module's operators."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-
 
 # ---------------------------------------------------------------- profiling
 def profile_table(
@@ -902,7 +886,7 @@ def post_dedup_mix_weights(
     # the survivorship frame is typically the full exact+near dedup
     # pipeline; three actions read it below (presence validation, the
     # budget scalar, the output) — persist once or pay the pipeline 3x
-    survivorship = _persist(survivorship)
+    survivorship = persist(survivorship)
     spark = survivorship.sparkSession
     shares = spark.createDataFrame(
         [(k, float(v)) for k, v in sorted(target_shares.items())],

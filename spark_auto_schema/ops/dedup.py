@@ -23,30 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# DataFrames persisted by the MinHash verification paths (candidate sets and
-# candidate-doc shingles are each read 2-3 times within one returned query).
-# Spark's CacheManager never garbage-collects persisted plans, so a
-# long-lived session calling these repeatedly would accumulate cached blocks;
-# call :func:`release_caches` between batches to drop them.
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every DataFrame cached by minhash_lsh_pairs[_md5] calls.
-
-    Safe to call any time after the results have been materialized; lazily
-    re-used results will recompute instead of reading cache."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
+from .._cache import local_checkpoint, persist, release_caches  # noqa: F401
 
 
 # ------------------------------------------------------------------ exact
@@ -187,12 +164,12 @@ def minhash_lsh_pairs(
         # shared by the signature aggregate AND the verify path (which
         # derives its hashed-shingle relation from the same base) — persist
         # so the scan+explode pipeline runs once, not twice (guide §5)
-        sh_base = _persist(sh_base)
+        sh_base = persist(sh_base)
     # persist the signature frame too: both sides of the band-bucket
     # self-join below read it, and under a cached child AQE's exchange
     # reuse is not reliable — measured ~0.4 s at sf0.1 on the md5 twin
     # (guide §5); |docs| x num_hashes longs, tiny relative to shingles
-    sig = _persist(_minhash_sig(sh_base, num_hashes, md5_grade=False))
+    sig = persist(_minhash_sig(sh_base, num_hashes, md5_grade=False))
     buckets = _band_buckets(sig, num_hashes, bands, md5_grade=False)
     a, b = buckets.alias("a"), buckets.alias("b")
     cand = (
@@ -201,7 +178,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    cand = _persist(cand)  # candidate set is tiny and read three times below
+    cand = persist(cand)  # candidate set is tiny and read three times below
     if verify_threshold is None:
         return cand
     # Exact-verify ONLY the candidate docs: semi-join the shingle relation
@@ -216,7 +193,7 @@ def minhash_lsh_pairs(
     # corpus's near-dup fraction (~30% on web crawls), so a hard hint would
     # force a multi-GB driver broadcast at 100 TB.  AQE converts the
     # semi-join to broadcast at runtime when the side is actually small.
-    sh = _persist(  # candidate-doc shingles: used by sizes + both join sides
+    sh = persist(  # candidate-doc shingles: used by sizes + both join sides
         sh_base.select("id", F.xxhash64("shingle").alias("shingle"))
         .join(cand_ids, on="id", how="left_semi")
     )
@@ -252,7 +229,7 @@ def _pair_jaccard(
     sz_a = sh_a.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     if not cross:
         sh_b = sh_a
-        sz_a = _persist(sz_a)
+        sz_a = persist(sz_a)
         sz_b = sz_a
     else:
         sz_b = sh_b.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
@@ -314,13 +291,13 @@ def _persisted_capped_shingles(
     the difference between one and two cached copies of the full shingle
     relation.  The returned relation is persisted either way (its three
     downstream consumers — sizes + both self-join sides — are why;
-    released via release_caches)."""
-    sh = _persist(sh)
+    released by ``spark_auto_schema.release_caches``)."""
+    sh = persist(sh)
     if max_df is None:
         return sh
     # persisted so the non-empty branch's anti-join broadcast build reads
     # the probe's result instead of re-running the aggregate
-    hot = _persist(
+    hot = persist(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > max_df)
@@ -328,7 +305,7 @@ def _persisted_capped_shingles(
     )
     if hot.isEmpty():
         return sh
-    return _persist(sh.join(F.broadcast(hot), on="shingle", how="left_anti"))
+    return persist(sh.join(F.broadcast(hot), on="shingle", how="left_anti"))
 
 
 def _jaccard_from_shingles(
@@ -354,7 +331,7 @@ def _jaccard_from_shingles(
     # persisted: the per-id size relation is probed by BOTH enrichment
     # joins below (one per self-join side) — without it the |shingles|
     # aggregation pass runs twice; the relation itself is |docs| rows
-    sizes = _persist(sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz")))
+    sizes = persist(sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz")))
     # Carry each side's set size THROUGH the pair aggregation instead of
     # joining the (much larger) pair relation against `sizes` twice
     # afterwards: the enrichment join touches |shingles| rows once per
@@ -447,14 +424,14 @@ def minhash_lsh_pairs_md5(
         # the shingle pipeline (scan -> segment/shingle explodes -> filter)
         # feeds BOTH the signature aggregate and the verify semi-join below;
         # un-persisted it executes twice — at corpus scale that is a second
-        # full scan+explode pass (guide §5: reuse > recompute; released via
-        # release_caches between queries)
-        sh = _persist(sh)
+        # full scan+explode pass (guide §5: reuse > recompute; released by
+        # spark_auto_schema.release_caches between queries)
+        sh = persist(sh)
     # signature frame persisted for the same reason as minhash_lsh_pairs:
     # the band self-join reads it on both sides and exchange reuse under a
     # cached child is unreliable (A/B: 3.60 -> 3.20 s on this engine at
     # sf0.1); the frame is |docs| x num_hashes 16-char prefixes
-    sig = _persist(_minhash_sig(sh, num_hashes, md5_grade=True))
+    sig = persist(_minhash_sig(sh, num_hashes, md5_grade=True))
     buckets = _band_buckets(sig, num_hashes, bands, md5_grade=True)
     a, b = buckets.alias("a"), buckets.alias("b")
     cand = (
@@ -465,7 +442,7 @@ def minhash_lsh_pairs_md5(
     )
     if verify_threshold is None:
         return cand
-    cand = _persist(cand)
+    cand = persist(cand)
     cand_ids = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))
@@ -473,7 +450,7 @@ def minhash_lsh_pairs_md5(
     )
     # Unhinted semi-join: candidate ids scale with the near-dup fraction, so
     # boundedness is NOT known by construction — AQE decides at runtime.
-    sh_c = _persist(sh.join(cand_ids, on="id", how="left_semi"))
+    sh_c = persist(sh.join(cand_ids, on="id", how="left_semi"))
     return _pair_jaccard(cand, sh_c).where(
         F.col("jaccard") >= verify_threshold
     )
@@ -534,7 +511,7 @@ def prepare_corpus_index(
     # verify relation derives from the same base (xxhash64 post-persist —
     # identical values to shingles(hashed=True)), not a second explode
     # (guide §5, same shape as the minhash pair engines / change #10)
-    sh = _persist(shingles(corpus_df, text_col, id_col, shingle_n))
+    sh = persist(shingles(corpus_df, text_col, id_col, shingle_n))
     buckets = _band_buckets(
         _minhash_sig(sh, num_hashes, md5_grade), num_hashes, bands, md5_grade
     )
@@ -583,14 +560,14 @@ def incremental_near_dedup(
         # the verify relations below) both _pair_jaccard consumers — three
         # executions un-persisted; persist so the scan+explode runs once
         # (guide §5, same shape as the minhash pair engines)
-        sh_new = _persist(sh_new)
+        sh_new = persist(sh_new)
     bk_new = _band_buckets(_minhash_sig(sh_new, num_hashes, md5_grade), num_hashes, bands, md5_grade)
     if corpus_index is not None:
         bk_cor, idx_verify_sh = corpus_index
     else:
         sh_cor = shingles(corpus_df, text_col, id_col, shingle_n)
         if verify_threshold is not None:
-            sh_cor = _persist(sh_cor)  # same triple-consumer shape as sh_new
+            sh_cor = persist(sh_cor)  # same triple-consumer shape as sh_new
         idx_verify_sh = None
         bk_cor = _band_buckets(_minhash_sig(sh_cor, num_hashes, md5_grade), num_hashes, bands, md5_grade)
     cand = (
@@ -602,7 +579,7 @@ def incremental_near_dedup(
     if verify_threshold is None:
         dup_ids = cand.select("id_new").distinct()
     else:
-        cand = _persist(cand)
+        cand = persist(cand)
         hashed_of = lambda base: base.select(
             "id", F.xxhash64("shingle").alias("shingle")
         )
@@ -622,8 +599,8 @@ def incremental_near_dedup(
         # to broadcast at runtime only when a side is actually small.
         # The semi-joined verify relations are candidate-sized and each
         # consumed twice by _pair_jaccard (sizes + intersection) — persist.
-        vn = _persist(vn.join(cand.select(F.col("id_new").alias("id")).distinct(), "id", "left_semi"))
-        vc = _persist(vc.join(cand.select(F.col("id_cor").alias("id")).distinct(), "id", "left_semi"))
+        vn = persist(vn.join(cand.select(F.col("id_new").alias("id")).distinct(), "id", "left_semi"))
+        vc = persist(vc.join(cand.select(F.col("id_cor").alias("id")).distinct(), "id", "left_semi"))
         dup_ids = (
             _pair_jaccard(cand, vn, vc, a_col="id_new", b_col="id_cor")
             .where(F.col("jaccard") >= verify_threshold)
@@ -883,7 +860,7 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # persist the symmetrized edge list: every propagation round joins it
     # (and the cutover below counts it), and without caching each round
     # would re-run the (expensive) upstream pair-generation lineage
-    edges = _persist(
+    edges = persist(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
@@ -936,12 +913,12 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # joins — on long chains (high diameter -> many rounds) the doubling
     # plan tree OOMs the analyzer long before the data is large.
     # Checkpointing truncates the lineage so every round plans against a
-    # constant-size tree; eager=True also caches the (id,label)-sized blocks.
-    labels = (
+    # constant-size tree; eager=True also caches the (id,label)-sized blocks,
+    # which every round registers so release_caches frees them.
+    labels = local_checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
     )
     # convergence via the label-sum invariant: propagation only ever LOWERS
     # labels, so sum(label) strictly decreases until the fixpoint — equal
@@ -965,19 +942,16 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         chase = propagated.select(
             F.col("id").alias("pid"), F.col("label").alias("plabel")
         )
-        new_labels = (
+        new_labels = local_checkpoint(
             propagated.join(chase, propagated["label"] == chase["pid"])
             .select(propagated["id"], F.col("plabel").alias("label"))
-            .localCheckpoint(eager=True)
         )
         cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
         labels = new_labels
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    out = labels.select("id", F.col("label").alias("cluster_id"))
-    _CACHED.append(labels)  # released via release_caches()
-    return out
+    return labels.select("id", F.col("label").alias("cluster_id"))
 
 
 # ----------------------------------------------------------- contamination
@@ -1198,8 +1172,8 @@ def lsh_config_sweep(
     # the shingle base feeds the signature aggregate AND the verify
     # semi-join below — persist so the scan+explode runs once (guide §5,
     # same shape as the minhash pair engines)
-    sh = _persist(shingles(df, text_col, id_col, shingle_n))
-    sig = _persist(_minhash_sig(sh, num_hashes, md5_grade=True))
+    sh = persist(shingles(df, text_col, id_col, shingle_n))
+    sig = persist(_minhash_sig(sh, num_hashes, md5_grade=True))
     entries = None
     for b in bands_sweep:
         e = _band_buckets(sig, num_hashes, b, md5_grade=True).withColumn(
@@ -1207,7 +1181,7 @@ def lsh_config_sweep(
         )
         entries = e if entries is None else entries.unionByName(e)
     a, bb = entries.alias("a"), entries.alias("b")
-    cand = _persist(
+    cand = persist(
         a.join(bb, on=["cfg", "band", "bucket"])
         .where(F.col("a.id") < F.col("b.id"))
         .select("cfg", F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
@@ -1226,7 +1200,7 @@ def lsh_config_sweep(
     # canonical session (session.py) sets it; without it the cached plan
     # pins a static shuffle join (measured 5.6x at sf0.1, BASELINE
     # round-12).
-    sh_c = _persist(sh.join(uids, on="id", how="left_semi"))
+    sh_c = persist(sh.join(uids, on="id", how="left_semi"))
     jac = _pair_jaccard(upairs, sh_c)
     judged = cand.join(jac, ["id_a", "id_b"], "left").select(
         "cfg",
@@ -1299,7 +1273,7 @@ def dedup_threshold_sweep(
     if not ts:
         raise ValueError("thresholds must be non-empty")
     sh = shingles(df, text_col, id_col, 3, hashed=True)
-    pairs = _persist(
+    pairs = persist(
         _jaccard_from_shingles(sh, threshold=ts[0], max_df=max_df)
     )
     spark = df.sparkSession
@@ -1360,7 +1334,7 @@ def lsh_empirical_detection(
     # persisted: the shingle relation feeds FOUR consumers (truth sizes,
     # both truth self-join sides, the minhash signatures) — without the
     # cache the split/explode lineage re-executes per consumer
-    sh = _persist(shingles(df, text_col, id_col, shingle_n))
+    sh = persist(shingles(df, text_col, id_col, shingle_n))
     truth = _jaccard_from_shingles(sh, threshold=min_jaccard)
     sig = _minhash_sig(sh, num_hashes, md5_grade=True)
     buckets = _band_buckets(sig, num_hashes, bands, md5_grade=True)
@@ -1501,7 +1475,7 @@ def contamination_diff(
     broadcast-semi-join + groupBy(doc), exactly contamination_check's
     cost; the final full-outer join is over the contaminated-doc frames
     only (<= hits rows, not corpora)."""
-    probe_sh = _persist(
+    probe_sh = persist(
         shingles(probe_df, text_col, id_col, n).select("shingle").distinct()
     )
     probe_ids = probe_df.select(F.col(id_col).alias("id")).distinct()
@@ -1951,7 +1925,7 @@ def containment_pairs(
     sh = _persisted_capped_shingles(sh, max_df)
     # persisted: probed by both enrichment joins, |docs| rows (see
     # _jaccard_from_shingles)
-    sizes = _persist(sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz")))
+    sizes = persist(sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz")))
     # Same tail shape as _jaccard_from_shingles: sizes ride the shingle
     # rows into the pair aggregation (min() of a per-group constant)
     # instead of re-joining the pair relation — the largest relation in
@@ -2574,7 +2548,7 @@ def dedup_provenance(
     # it for survivors would not pay: the id-keyed re-join is itself a
     # full-text exchange PLUS an extra id shuffle, so one text-carrying
     # window exchange is the minimum-traffic plan.
-    marked = _persist(
+    marked = persist(
         df.select(
             F.col(id_col), F.col(group_col), F.col(text_col), d.alias("__d")
         ).select(
@@ -2667,7 +2641,7 @@ def token_survivorship(
     # shingled downstream); a project-out-and-re-join variant would move
     # the same text bytes through an id-keyed join exchange AND add an id
     # shuffle, so this is the minimum-traffic shape, not an oversight.
-    marked = _persist(
+    marked = persist(
         df.select(
             F.col(id_col),
             F.col(group_col).alias("src"),
@@ -2926,7 +2900,7 @@ def paragraph_dedup_provenance(
         ).alias("__seg"),
     )
     w = Window.partitionBy("__dg").orderBy(F.col("__doc"), F.col("__s"))
-    marked = _persist(
+    marked = persist(
         segs.withColumn("__dg", F.md5(F.col("__seg")))
         .select(
             "__doc",

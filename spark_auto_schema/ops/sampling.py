@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .._cache import persist, release_caches  # noqa: F401 re-export
+
 # Width of the hex prefix compared against the threshold: 4 hex chars = a
 # uniform draw from [0, 65536) per key.  Threshold comparisons (hash_sample,
 # mix_by_column, split ordering) keep 4 digits — fraction resolution of
@@ -36,27 +38,6 @@ _SPACE = 16**_HEX_DIGITS
 # toward low keys; 2^32 values make equal-u ties vanishingly rare.
 _UNIFORM_HEX_DIGITS = 8
 _UNIFORM_SPACE = 16**_UNIFORM_HEX_DIGITS
-
-# Frames persisted for intra-query reuse (dsir_importance_sample's feature
-# stream feeds model fitting AND per-doc scoring); release_caches drops
-# them — bench, the mirror, and the scaling probe call it between queries.
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every DataFrame cached by this module's operators."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-
 
 def _hash_prefix(key: Column) -> Column:
     return F.substring(F.md5(key.cast("string")), 1, _HEX_DIGITS)
@@ -396,7 +377,7 @@ def dsir_importance_sample(
             n_pairs,
         ),
     )
-    feats = _persist(
+    feats = persist(
         df.select(
             F.col(id_col).alias("id"),
             F.coalesce(target.cast("boolean"), F.lit(False)).alias("is_t"),

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._cache import persist, release_caches  # noqa: F401 re-export
+
 try:
     import numpy as _np
 except Exception:  # pragma: no cover
@@ -39,25 +41,6 @@ def _vec_lit(vec) -> Column:
     if _np is None:  # pragma: no cover — numpy ships with PySpark
         return F.array(*[F.lit(x) for x in xs])
     return F.lit(_np.asarray(xs, dtype=_np.float64))
-
-
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist DataFrames cached by :func:`semantic_dedup` calls (bench
-    and the correctness mirror call this between queries)."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1524,7 +1507,7 @@ def _semantic_cluster_pairs(
     # (plan-literal row-local argmin vs broadcast-join argmin) selected by
     # nlist via _assign_nearest; results are bit-identical either way.
     # persisted: referenced by both pair-join sides plus the caller
-    assigned = _persist(
+    assigned = persist(
         _assign_nearest(
             df, cents, vec_col, id_col, metric="cos", probe=probe
         ).select(F.col(id_col), F.col(vec_col), F.col("cluster"))
@@ -1589,7 +1572,7 @@ def semantic_threshold_sweep(
     _, pairs = _semantic_cluster_pairs(
         df, nlist, vec_col, id_col, decimals, cents, min(thresholds), probe
     )
-    pairs = _persist(pairs)
+    pairs = persist(pairs)
     parts = []
     for t in thresholds:
         sel = pairs.where(F.col("cos") >= F.lit(t))
@@ -2240,7 +2223,7 @@ def retrieval_recall_eval(
             F.lit("has a zero-norm embedding — cosine is undefined for it")
         )
     )
-    qs = _persist(
+    qs = persist(
         panel.join(F.broadcast(qs_present), "qid", "left")
         .where(
             F.when(
@@ -2416,7 +2399,7 @@ def ivf_nprobe_sweep(
             F.lit("has a zero-norm embedding — cosine is undefined for it")
         )
     )
-    qs = _persist(
+    qs = persist(
         panel.join(F.broadcast(qs_present), "qid", "left")
         .where(
             F.when(
@@ -2441,7 +2424,7 @@ def ivf_nprobe_sweep(
         F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("vn")
     )
     # exact truth: persisted — every sweep value's hit join reads it
-    exact = _persist(
+    exact = persist(
         _salted_topk_per_qid(
             base.crossJoin(F.broadcast(qs))
             .where(F.col(id_col) != F.col("qid"))
@@ -2507,7 +2490,7 @@ def ivf_nprobe_sweep(
     )
     # persisted: |nprobes| filtered rollups + |nprobes| top-k cuts all
     # read this one candidate fan-out (cluster-pruned, never the corpus)
-    cand = _persist(
+    cand = persist(
         assigned.join(F.broadcast(probes), "cid")
         .where(F.col(id_col) != F.col("qid"))
         .select(
@@ -2632,7 +2615,7 @@ def lsh_recall_eval(
     # guarded, persisted <= |panel|-row frame: exact fan-out, candidate
     # fan-out, and the final join all read it (same pattern and reasons
     # as retrieval_recall_eval)
-    qs = _persist(
+    qs = persist(
         panel.join(F.broadcast(qs_present), "qid", "left")
         .where(
             F.when(
@@ -2669,7 +2652,7 @@ def lsh_recall_eval(
         collide = c if collide is None else (collide | c)
     # persisted: candidate sims feed BOTH the per-query candidate count
     # and the approx top-k cut — one bucket-collision fan-out, two reads
-    cand = _persist(
+    cand = persist(
         sigs.crossJoin(F.broadcast(qs))
         .where(collide & (F.col(id_col) != F.col("qid")))
         .select("qid", F.col(id_col), sim)
@@ -2755,7 +2738,7 @@ def quantized_recall_eval(
             F.lit("has a zero-norm embedding — cosine is undefined for it")
         )
     )
-    qs = _persist(
+    qs = persist(
         panel.join(F.broadcast(qs_present), "qid", "left")
         .where(
             F.when(

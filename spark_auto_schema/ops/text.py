@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._cache import persist, release_caches  # noqa: F401 re-export
+
 # Stopword profiles for the n-gram/stopword-hit language heuristic.
 # Deterministic and tiny by design: language ID at scale must stay JVM-side.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -64,27 +66,6 @@ _NFKC_WS_RUN_RE = r"[ \t\n\f\r\x0B]+"
 # chars-per-BPE-token proxy for tokenizer_fertility: ceil(len(word)/4)
 # subword units per word — the published ~4-chars/token English heuristic
 BPE_CHARS_PER_TOKEN = 4
-
-
-# Frames persisted for intra-query reuse (bigram_logprob's pair stream
-# feeds both model training and scoring); call :func:`release_caches`
-# between queries to drop them — bench and the correctness mirror do.
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every DataFrame cached by this module's operators."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
 
 
 def _n_words(text: Column) -> Column:
@@ -703,8 +684,8 @@ def bigram_logprob(
 
     Scale: pair generation is a row-local slide over the token array (no
     shuffle), PERSISTED because it feeds both model training and scoring
-    (the 3x win measured at sf0.1; :func:`release_caches` drops it —
-    bench and the mirror call that per query); the bigram and unigram
+    (the 3x win measured at sf0.1; ``spark_auto_schema.release_caches``
+    drops it); the bigram and unigram
     models are map-side-combined hash aggregates whose shuffles carry the
     VOCABULARY, not the corpus; the model-side join (bigram x
     history-count) is vocabulary-sized; the score join is left to AQE —
@@ -717,7 +698,7 @@ def bigram_logprob(
     pair_idx = F.when(
         F.size(words) >= 2, F.sequence(F.lit(1), F.size(words) - 1)
     ).otherwise(F.array().cast("array<int>"))
-    pairs = _persist(
+    pairs = persist(
         df.select(
             F.col(id_col),
             F.explode(pair_idx).alias("__i"),
@@ -1571,7 +1552,7 @@ def lm_kl_divergence(
     # persisted: the (group, term) frame feeds the per-source branch AND
     # derives the corpus counts — without the cache Catalyst would re-run
     # the corpus token scan once per consumer (3 scans of 100 TB)
-    sc = _persist(tok.groupBy("grp", "w").agg(F.count(F.lit(1)).alias("cs")))
+    sc = persist(tok.groupBy("grp", "w").agg(F.count(F.lit(1)).alias("cs")))
     cc = sc.groupBy("w").agg(F.sum("cs").alias("c"))
     scalars = cc.agg(
         F.sum("c").cast("double").alias("n_corpus"),

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import SparkSession
 from pyspark.sql.window import Window
+from spark_auto_schema import _cache
 from spark_auto_schema.ops import corpus
 from spark_auto_schema.ops import dedup
 from spark_auto_schema.ops import multimodal
@@ -1338,7 +1339,7 @@ def _q_dedup_cluster_stats(spark, sf_dir):
     # query construction and cluster_stats re-reads it (twice — one join
     # per edge endpoint) at collect time; un-persisted the full n-gram
     # pair pipeline would run three times (guide §5)
-    pairs = dedup._persist(
+    pairs = _cache.persist(
         dedup.ngram_jaccard_pairs(_spread_docs(spark, sf_dir), threshold=0.8)
     )
     return dedup.cluster_stats(pairs, dedup.dedup_clusters(pairs))
@@ -1898,7 +1899,7 @@ def _q_simhash_pigeonhole_check(spark, sf_dir):
     docs = sampling.hash_sample(
         read_table(spark, sf_dir, "documents"), "doc_id", 0.5
     )
-    sig = dedup._persist(dedup.simhash(docs))  # one signature job, both sides
+    sig = _cache.persist(dedup.simhash(docs))  # one signature job, both sides
     bucketed = dedup.simhash_near_dup_pairs(docs, max_hamming=3, sig=sig).select(
         "id_a", "id_b", F.col("hamming").alias("bh")
     )

@@ -24,6 +24,16 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_caches_after_module():
+    """Free what the library persisted for reuse once each test module ends,
+    so no module's cached blocks outlive it."""
+    yield
+    from spark_auto_schema import release_caches
+
+    release_caches()
+
+
 # One column per branch of the reference decision tree
 # (/root/reference/redshift_auto_schema/RedshiftAutoSchema.py:294-339).
 INFER_PROBE_COLUMNS: dict[str, tuple[list, str]] = {

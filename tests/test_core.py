@@ -451,6 +451,7 @@ def test_csv_quarantine_routes_bad_lines(spark, tmp_path):
 
 
 def test_csv_quarantine_clean_file_empty_bad_side(spark, tmp_path):
+    from spark_auto_schema import _cache
     from spark_auto_schema import io as sio
 
     p = tmp_path / "clean.csv"
@@ -459,7 +460,7 @@ def test_csv_quarantine_clean_file_empty_bad_side(spark, tmp_path):
     assert good.count() == 2
     assert bad.count() == 0
     sio.release_caches()
-    assert sio._CACHED == []
+    assert _cache._CACHED == []
 
 
 # ------------------------------------------------------- session builder

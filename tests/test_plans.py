@@ -1443,6 +1443,7 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     the plan and as registered intra-query caches (released afterwards)."""
     from pyspark.sql import functions as F
 
+    from spark_auto_schema import _cache
     from spark_auto_schema.io import read_table
     from spark_auto_schema.ops import dedup
 
@@ -1456,15 +1457,15 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     )
     # the batch and corpus shingle bases + cand + the two semi-joined
     # verify relations are persisted for reuse
-    assert len(dedup._CACHED) >= 4
+    assert len(_cache._CACHED) >= 4
     plan = plan_of(out, "simple")
     assert "InMemoryTableScan" in plan
     n = out.count()
     dedup.release_caches()
-    assert not dedup._CACHED
+    assert not _cache._CACHED
 
     out2 = dedup.minhash_lsh_pairs_md5(half, verify_threshold=0.5)
-    assert len(dedup._CACHED) >= 2  # shingle base + candidate set
+    assert len(_cache._CACHED) >= 2  # shingle base + candidate set
     assert "InMemoryTableScan" in plan_of(out2, "simple")
     out2.count()
     dedup.release_caches()
@@ -1472,7 +1473,7 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     # capped engine: the pre-cap relation (hot aggregate + anti-join input)
     # and the capped relation (sizes + both self-join sides) are both cached
     out3 = dedup.ngram_jaccard_pairs(half, threshold=0.0, max_df=10)
-    assert len(dedup._CACHED) >= 2
+    assert len(_cache._CACHED) >= 2
     out3.count()
     dedup.release_caches()
 
@@ -1484,6 +1485,7 @@ def test_prepare_corpus_index_single_shingle_pipeline(spark):
     never by a second corpus-wide scan+explode."""
     from pyspark.sql import functions as F
 
+    from spark_auto_schema import _cache
     from spark_auto_schema.io import read_table
     from spark_auto_schema.ops import dedup
 
@@ -1492,7 +1494,7 @@ def test_prepare_corpus_index_single_shingle_pipeline(spark):
     dedup.release_caches()
     buckets, verify_sh = dedup.prepare_corpus_index(docs)
     # exactly the one shared shingle base is cached
-    assert len(dedup._CACHED) == 1
+    assert len(_cache._CACHED) == 1
     assert "InMemoryTableScan" in plan_of(buckets, "simple")
     assert "InMemoryTableScan" in plan_of(verify_sh, "simple")
 
@@ -1502,7 +1504,7 @@ def test_prepare_corpus_index_single_shingle_pipeline(spark):
     assert verify_sh.exceptAll(twin).count() == 0
     assert twin.exceptAll(verify_sh).count() == 0
     dedup.release_caches()
-    assert not dedup._CACHED
+    assert not _cache._CACHED
 
 
 def test_jaccard_tail_carries_sizes_through_pair_agg(spark):
@@ -1513,6 +1515,7 @@ def test_jaccard_tail_carries_sizes_through_pair_agg(spark):
     containment and cross-relation variants."""
     from pyspark.sql import functions as F
 
+    from spark_auto_schema import _cache
     from spark_auto_schema.io import read_table
     from spark_auto_schema.ops import dedup
 
@@ -1538,14 +1541,14 @@ def test_jaccard_tail_carries_sizes_through_pair_agg(spark):
 
     # value identity against the replaced two-join tail, rebuilt inline
     sh = dedup.shingles(docs, hashed=True)
-    pre = dedup._persist(sh)
+    pre = _cache.persist(sh)
     hot = (
         pre.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > 100)
         .select("shingle")
     )
-    capped = dedup._persist(
+    capped = _cache.persist(
         pre.join(F.broadcast(hot), on="shingle", how="left_anti")
     )
     sizes = capped.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))

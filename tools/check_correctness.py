@@ -56,6 +56,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from spark_auto_schema import release_caches
 
     only = set(sys.argv[1:])
     spark = (
@@ -146,48 +147,7 @@ def main() -> int:
             failures += 1
         else:
             print(f"ok {name}: {len(srows)} rows")
-        try:
-            from spark_auto_schema.ops import dedup as _dedup
-
-            _dedup.release_caches()
-        except Exception:
-            pass
-        try:
-            from spark_auto_schema import io as _io
-
-            _io.release_caches()
-        except Exception:
-            pass
-        try:
-            from spark_auto_schema.ops import similarity as _sim
-
-            _sim.release_caches()
-        except Exception:
-            pass
-        try:
-            from spark_auto_schema.ops import text as _text
-
-            _text.release_caches()
-        except Exception:
-            pass
-        try:
-            from spark_auto_schema.ops import sampling as _sampling
-
-            _sampling.release_caches()
-        except Exception:
-            pass
-        try:
-            from spark_auto_schema.ops import corpus as _corpus
-
-            _corpus.release_caches()
-        except Exception:
-            pass
-        try:
-            from spark_auto_schema.ops import analytics as _analytics
-
-            _analytics.release_caches()
-        except Exception:
-            pass
+        release_caches()
     spark.stop()
     print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0

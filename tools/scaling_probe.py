@@ -478,26 +478,11 @@ def _build_dir(spark, src: str, out: str, replicas: int) -> None:
     replicate("events", events_replica)
 
 
-def _release_caches() -> None:
-    for mod in ("dedup", "text", "similarity", "sampling", "corpus", "analytics"):
-        try:
-            import importlib
-
-            importlib.import_module(f"spark_auto_schema.ops.{mod}").release_caches()
-        except Exception:
-            pass
-    try:
-        from spark_auto_schema import io as _io
-
-        _io.release_caches()
-    except Exception:
-        pass
-
-
 def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from spark_auto_schema import release_caches
 
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -547,7 +532,7 @@ def main() -> None:
                     t0 = time.perf_counter()
                     rows = len(fn(spark, d).collect())
                     samples.append(time.perf_counter() - t0)
-                    _release_caches()
+                    release_caches()
                 times[n] = min(samples)
                 print(
                     f"  {name} @x{n}: {times[n]:.2f}s ({rows} rows)",

@@ -68,22 +68,11 @@ def _build_skew(spark, src_dir: str, out_dir: str) -> None:
     )
 
 
-def _release_caches() -> None:
-    import importlib
-
-    for mod in ("dedup", "corpus", "similarity", "analytics"):
-        try:
-            importlib.import_module(
-                f"spark_auto_schema.ops.{mod}"
-            ).release_caches()
-        except Exception:
-            pass
-
-
 def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from spark_auto_schema import release_caches
 
     base = os.environ.get("SCALE_BASE_DIR", "/tmp/scale_probe")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -130,7 +119,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 rows = len(fn(spark, d).collect())
                 samples.append(time.perf_counter() - t0)
-                _release_caches()
+                release_caches()
             times[n] = min(samples)
             print(f"  {name} @x{n}_skew30: {times[n]:.2f}s ({rows} rows)", file=sys.stderr)
         results[name] = {
