@@ -48,7 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import types as T
 
-from .io import local_df, sql_name
+from .io import local_df, spread_small_scan, sql_name
 
 BOOL_LITERALS = ("true", "false", "t", "f", "0", "1")
 INT4_MIN, INT4_MAX = -2147483648, 2147483647
@@ -271,8 +271,6 @@ def infer_table_schema(
     df: DataFrame,
     compat_nested: bool = True,
     sample_fraction: float | None = None,
-    max_cols_per_pass: int | None = None,
-    spread_small_scans: bool = True,
 ) -> list[ColumnInference] | None:
     """Infer a Redshift type for every column of ``df`` in one Spark job.
 
@@ -284,17 +282,11 @@ def infer_table_schema(
         sample_fraction: opt-in row sampling.  NOTE: inference semantics are
             forall-quantified (one bad row flips a type), so sampling *changes
             results*; it is off by default and documented as approximate.
-        max_cols_per_pass: split very wide tables (1000s of columns) into
-            multiple aggregation jobs of at most this many columns each to
-            bound codegen size.  Each pass is still one full-scan aggregate.
-        spread_small_scans: when the input has far fewer partitions than the
-            cluster has cores (single-row-group parquet files are unsplittable
-            below one task each), repartition to the default parallelism so
-            the probe expressions run on every core.  Only fires when
-            partitions < cores/4, i.e. for small or degenerately-laid-out
-            inputs where the extra shuffle is cheap; a 100 TB table already
-            has orders of magnitude more partitions than cores and is never
-            reshuffled.
+
+    An input with far fewer partitions than the cluster has cores is first
+    spread across the cores by :func:`~.io.spread_small_scan`, so the probe
+    expressions run on every core; a large table already has more
+    partitions than cores and is never reshuffled.
 
     Returns None for an empty (0-row) input, matching RAS.py:243-245 where an
     empty file produces no metadata.
@@ -302,33 +294,15 @@ def infer_table_schema(
     if sample_fraction is not None:
         df = df.sample(fraction=sample_fraction, seed=42)
 
-    if spread_small_scans:
-        from .io import spread_small_scan
-
-        df = spread_small_scan(df)
-
+    df = spread_small_scan(df)
     fields = list(df.schema.fields)
-    groups: list[list[tuple[int, T.StructField]]] = []
-    if max_cols_per_pass:
-        for start in range(0, len(fields), max_cols_per_pass):
-            groups.append(
-                [(i, f) for i, f in enumerate(fields)][start : start + max_cols_per_pass]
-            )
-    else:
-        groups = [list(enumerate(fields))]
-
-    stats: dict[str, object] = {}
-    nrows = None
-    for gi, group in enumerate(groups):
-        exprs = ["count(1) AS __nrows"] if gi == 0 else []
-        for i, field in group:
-            exprs.extend(_stat_sql(i, field.name, field.dataType))
-        # one struct: a list of expressions crosses into the JVM item by item
-        row: Row = df.selectExpr(f"struct({', '.join(exprs)}) AS stats").collect()[0]
-        d = row.stats.asDict()
-        if gi == 0:
-            nrows = d.pop("__nrows")
-        stats.update(d)
+    exprs = ["count(1) AS __nrows"]
+    for i, field in enumerate(fields):
+        exprs.extend(_stat_sql(i, field.name, field.dataType))
+    # one struct: a list of expressions crosses into the JVM item by item
+    row: Row = df.selectExpr(f"struct({', '.join(exprs)}) AS stats").collect()[0]
+    stats = row.stats.asDict()
+    nrows = stats.pop("__nrows")
 
     if not nrows:
         return None  # empty input => no metadata (RAS.py:243-245)

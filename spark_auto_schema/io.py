@@ -50,7 +50,9 @@ def sql_name(name: str) -> str:
 
 
 def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
-    """Lift catalog-sized driver rows into a DataFrame as a ``LocalRelation``.
+    """Lift driver-sized rows into a DataFrame as a ``LocalRelation``: rows
+    sized by the catalog, and results bounded by a driver budget such as
+    ``ops.dedup.dedup_clusters``' union-find labels.
 
     A list handed to ``createDataFrame`` is parallelized, so each collect of
     it is a Spark job; a ``pyarrow.Table`` becomes a ``LocalRelation``, whose

@@ -22,8 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .._cache import local_checkpoint, persist, release_caches  # noqa: F401
+from ..io import local_df
 
 
 # ------------------------------------------------------------------ exact
@@ -159,47 +161,76 @@ def minhash_lsh_pairs(
     bucket iff one band of their signatures matches exactly; candidates are
     generated by an equi-join on (band index, band hash) — bucket-local, not
     all-pairs."""
-    sh_base = shingles(df, text_col, id_col, shingle_n)
-    if verify_threshold is not None:
-        # shared by the signature aggregate AND the verify path (which
-        # derives its hashed-shingle relation from the same base) — persist
-        # so the scan+explode pipeline runs once, not twice (guide §5)
-        sh_base = persist(sh_base)
-    # persist the signature frame too: both sides of the band-bucket
-    # self-join below read it, and under a cached child AQE's exchange
-    # reuse is not reliable — measured ~0.4 s at sf0.1 on the md5 twin
-    # (guide §5); |docs| x num_hashes longs, tiny relative to shingles
-    sig = persist(_minhash_sig(sh_base, num_hashes, md5_grade=False))
-    buckets = _band_buckets(sig, num_hashes, bands, md5_grade=False)
+    return _lsh_pairs(
+        df, text_col, id_col, num_hashes, bands, shingle_n, verify_threshold,
+        md5_grade=False,
+    )
+
+
+def _verify_shingles(sh: DataFrame, md5_grade: bool) -> DataFrame:
+    """The exact-verify relation over a raw shingle relation: the raw
+    shingles on the md5 grade (what the oracles replay), else their
+    xxhash64 — 8-byte join keys derived from ``sh`` itself, so a persisted
+    base is not exploded a second time."""
+    if md5_grade:
+        return sh
+    return sh.select("id", F.xxhash64("shingle").alias("shingle"))
+
+
+def _band_candidates(buckets: DataFrame) -> DataFrame:
+    """(id_a, id_b) with id_a < id_b for every pair of docs sharing a band
+    bucket: an equi-join on (band index, band hash) — bucket-local, never
+    all-pairs — deduplicated across bands."""
     a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
+    return (
         a.join(b, on=["band", "bucket"])
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    cand = persist(cand)  # candidate set is tiny and read three times below
+
+
+def _lsh_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    verify_threshold: float | None,
+    md5_grade: bool,
+) -> DataFrame:
+    """The one banded MinHash-LSH pipeline behind :func:`minhash_lsh_pairs`
+    and :func:`minhash_lsh_pairs_md5`; ``md5_grade`` picks the hash
+    construction of every step."""
+    sh = shingles(df, text_col, id_col, shingle_n)
+    if verify_threshold is not None:
+        # shared by the signature aggregate AND the verify semi-join below;
+        # un-persisted the scan+explode pipeline runs twice
+        sh = persist(sh)
+    # both sides of the band self-join read the signature frame, and under
+    # a cached child AQE's exchange reuse is not reliable (A/B on the md5
+    # grade at sf0.1: 3.60 -> 3.20 s); |docs| x num_hashes values
+    sig = persist(_minhash_sig(sh, num_hashes, md5_grade))
+    cand = _band_candidates(_band_buckets(sig, num_hashes, bands, md5_grade))
     if verify_threshold is None:
         return cand
+    cand = persist(cand)  # read by cand_ids and by both _pair_jaccard joins
     # Exact-verify ONLY the candidate docs: semi-join the shingle relation
-    # down to ids appearing in candidate pairs before computing Jaccard —
-    # verification cost tracks the candidate count, not the corpus.
+    # down to ids appearing in candidate pairs, so verification cost tracks
+    # the candidate count, not the corpus.  No broadcast hint: the candidate
+    # set scales with the corpus's near-dup fraction, so boundedness is not
+    # known by construction — AQE converts to broadcast at runtime when the
+    # side is actually small.
     cand_ids = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    # No broadcast hint on cand_ids: the candidate set scales with the
-    # corpus's near-dup fraction (~30% on web crawls), so a hard hint would
-    # force a multi-GB driver broadcast at 100 TB.  AQE converts the
-    # semi-join to broadcast at runtime when the side is actually small.
-    sh = persist(  # candidate-doc shingles: used by sizes + both join sides
-        sh_base.select("id", F.xxhash64("shingle").alias("shingle"))
-        .join(cand_ids, on="id", how="left_semi")
+    sh_c = persist(  # candidate-doc shingles: sizes + both join sides
+        _verify_shingles(sh, md5_grade).join(cand_ids, on="id", how="left_semi")
     )
-    return _pair_jaccard(cand, sh).where(
-        F.col("jaccard") >= verify_threshold
-    )
+    return _pair_jaccard(cand, sh_c).where(F.col("jaccard") >= verify_threshold)
 
 
 def _pair_jaccard(
@@ -419,40 +450,9 @@ def minhash_lsh_pairs_md5(
     groupBy(id), bucket-local candidate join); xxhash64 stays the fast
     default for production, this variant is the verification-grade twin.
     """
-    sh = shingles(df, text_col, id_col, shingle_n)
-    if verify_threshold is not None:
-        # the shingle pipeline (scan -> segment/shingle explodes -> filter)
-        # feeds BOTH the signature aggregate and the verify semi-join below;
-        # un-persisted it executes twice — at corpus scale that is a second
-        # full scan+explode pass (guide §5: reuse > recompute; released by
-        # spark_auto_schema.release_caches between queries)
-        sh = persist(sh)
-    # signature frame persisted for the same reason as minhash_lsh_pairs:
-    # the band self-join reads it on both sides and exchange reuse under a
-    # cached child is unreliable (A/B: 3.60 -> 3.20 s on this engine at
-    # sf0.1); the frame is |docs| x num_hashes 16-char prefixes
-    sig = persist(_minhash_sig(sh, num_hashes, md5_grade=True))
-    buckets = _band_buckets(sig, num_hashes, bands, md5_grade=True)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, on=["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    if verify_threshold is None:
-        return cand
-    cand = persist(cand)
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    # Unhinted semi-join: candidate ids scale with the near-dup fraction, so
-    # boundedness is NOT known by construction — AQE decides at runtime.
-    sh_c = persist(sh.join(cand_ids, on="id", how="left_semi"))
-    return _pair_jaccard(cand, sh_c).where(
-        F.col("jaccard") >= verify_threshold
+    return _lsh_pairs(
+        df, text_col, id_col, num_hashes, bands, shingle_n, verify_threshold,
+        md5_grade=True,
     )
 
 
@@ -510,17 +510,11 @@ def prepare_corpus_index(
     # scan+explode runs once across the caller's two writes; the hashed
     # verify relation derives from the same base (xxhash64 post-persist —
     # identical values to shingles(hashed=True)), not a second explode
-    # (guide §5, same shape as the minhash pair engines / change #10)
     sh = persist(shingles(corpus_df, text_col, id_col, shingle_n))
     buckets = _band_buckets(
         _minhash_sig(sh, num_hashes, md5_grade), num_hashes, bands, md5_grade
     )
-    verify_sh = (
-        sh
-        if md5_grade
-        else sh.select("id", F.xxhash64("shingle").alias("shingle"))
-    )
-    return buckets, verify_sh
+    return buckets, _verify_shingles(sh, md5_grade)
 
 
 def incremental_near_dedup(
@@ -563,12 +557,12 @@ def incremental_near_dedup(
         sh_new = persist(sh_new)
     bk_new = _band_buckets(_minhash_sig(sh_new, num_hashes, md5_grade), num_hashes, bands, md5_grade)
     if corpus_index is not None:
-        bk_cor, idx_verify_sh = corpus_index
+        bk_cor, vc = corpus_index
     else:
         sh_cor = shingles(corpus_df, text_col, id_col, shingle_n)
         if verify_threshold is not None:
             sh_cor = persist(sh_cor)  # same triple-consumer shape as sh_new
-        idx_verify_sh = None
+        vc = _verify_shingles(sh_cor, md5_grade)
         bk_cor = _band_buckets(_minhash_sig(sh_cor, num_hashes, md5_grade), num_hashes, bands, md5_grade)
     cand = (
         bk_new.alias("n")
@@ -580,20 +574,7 @@ def incremental_near_dedup(
         dup_ids = cand.select("id_new").distinct()
     else:
         cand = persist(cand)
-        hashed_of = lambda base: base.select(
-            "id", F.xxhash64("shingle").alias("shingle")
-        )
-        if md5_grade:
-            vn = sh_new
-            vc = idx_verify_sh if idx_verify_sh is not None else sh_cor
-        else:  # hashed shingles: 8-byte join keys for the verify stage —
-            # derived from the persisted bases so no second explode runs
-            vn = hashed_of(sh_new)
-            vc = (
-                idx_verify_sh
-                if idx_verify_sh is not None
-                else hashed_of(sh_cor)
-            )
+        vn = _verify_shingles(sh_new, md5_grade)
         # Unhinted semi-joins: the candidate-id sets grow with the batch's
         # overlap against the corpus (unbounded at 100 TB) — AQE converts
         # to broadcast at runtime only when a side is actually small.
@@ -847,26 +828,24 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     cluster by definition and joining them in would just re-shuffle the
     corpus.
 
-    Path cutover: at or below ``_DRIVER_CC_EDGE_BUDGET`` symmetrized edges
-    the components are computed with a driver-side union-find over the
-    collected (already-persisted) edge list — near-dup graphs are usually
-    a few edges per clustered doc, so the edge count a single machine
-    handles in milliseconds costs several distributed rounds of
+    Path cutover: one collect of at most ``_DRIVER_CC_EDGE_BUDGET // 2 + 1``
+    pairs decides it.  When the symmetrized edge count (2 x pairs) fits
+    the budget, those pairs feed a driver-side union-find and the result
+    is a local relation — near-dup graphs are usually a few edges per
+    clustered doc, so the edge count a single machine handles in
+    milliseconds costs several distributed rounds of
     join+checkpoint+collect fixed overhead (measured ~7 s for a 477-node
     graph at sf0.1, vs <1 s collected).  Above the budget the iterative
-    min-label propagation runs unchanged — the 100 TB path.  Both paths
-    produce the identical (id, min-component-id) labeling (law-tested);
-    the budget bounds driver memory at ~tens of MB."""
-    # persist the symmetrized edge list: every propagation round joins it
-    # (and the cutover below counts it), and without caching each round
-    # would re-run the (expensive) upstream pair-generation lineage
-    edges = persist(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-    )
-    if edges.count() <= _DRIVER_CC_EDGE_BUDGET:
-        rows = edges.collect()
+    min-label propagation runs — the 100 TB path.  Both paths produce the
+    identical (id, min-component-id) labeling (law-tested); the budget
+    bounds driver memory at ~tens of MB."""
+    src = pairs.select("id_a", "id_b")
+    if not pairs.isLocal():
+        # read by the bounded collect and, above the budget, by both
+        # directions of the edge union: the caller's lineage runs once
+        src = persist(src)
+    rows = src.limit(_DRIVER_CC_EDGE_BUDGET // 2 + 1).collect()
+    if 2 * len(rows) <= _DRIVER_CC_EDGE_BUDGET:
         parent: dict = {}
 
         def find(x):
@@ -877,8 +856,7 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
                 parent[x], x = r, parent[x]
             return r
 
-        for row in rows:
-            s, d = row["src"], row["dst"]
+        for s, d in rows:
             if s not in parent:
                 parent[s] = s
             if d not in parent:
@@ -892,22 +870,22 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             m = comp_min.get(r)
             if m is None or node < m:
                 comp_min[r] = node
-        from pyspark.sql import types as T
-
-        id_type = edges.schema["src"].dataType
+        id_type = pairs.schema["id_a"].dataType
         schema = T.StructType(
             [
                 T.StructField("id", id_type, True),
                 T.StructField("cluster_id", id_type, True),
             ]
         )
-        spark = pairs.sparkSession
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(n, comp_min[find(n)]) for n in parent], 1
-            ),
-            schema,
+        return local_df(
+            pairs.sparkSession, [(n, comp_min[find(n)]) for n in parent], schema
         )
+    # every propagation round joins the symmetrized edge list
+    edges = persist(
+        src.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
+            src.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
+    )
     # localCheckpoint (not persist) between rounds: persisting caches the
     # DATA but each round's logical plan still nests every previous round's
     # joins — on long chains (high diameter -> many rounds) the doubling
@@ -1337,15 +1315,9 @@ def lsh_empirical_detection(
     sh = persist(shingles(df, text_col, id_col, shingle_n))
     truth = _jaccard_from_shingles(sh, threshold=min_jaccard)
     sig = _minhash_sig(sh, num_hashes, md5_grade=True)
-    buckets = _band_buckets(sig, num_hashes, bands, md5_grade=True)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, on=["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-        .withColumn("__det", F.lit(1))
-    )
+    cand = _band_candidates(
+        _band_buckets(sig, num_hashes, bands, md5_grade=True)
+    ).withColumn("__det", F.lit(1))
     units = int(round(bin_width * 10_000))
     bin_idx = (
         F.round(F.col("jaccard") * F.lit(10_000)).cast("long") / F.lit(units)

@@ -1335,8 +1335,8 @@ def _q_dedup_cluster_stats(spark, sf_dir):
     the same cluster, and edge-free clusters are kept at density 0.0
     (r10-advice fix).  The oracle extends the shared closure CTE with
     the same two |clusters|-row aggregates."""
-    # persist the pair set: dedup_clusters' edge build executes it during
-    # query construction and cluster_stats re-reads it (twice — one join
+    # persist the pair set: dedup_clusters' bounded collect executes it
+    # during query construction and cluster_stats re-reads it (twice — one join
     # per edge endpoint) at collect time; un-persisted the full n-gram
     # pair pipeline would run three times (guide §5)
     pairs = _cache.persist(

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from spark_auto_schema import SparkAutoSchema
 from pyspark.sql import SparkSession
+from spark_auto_schema.io import local_df
 from spark_auto_schema.types import TYPE_CLASSES
 from spark_auto_schema.diff import evaluate_diffs
 
@@ -45,9 +47,13 @@ def _classify_sql(col: str) -> str:
     return f"CASE {whens} ELSE 0 END"
 
 
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
 def _diff_stub_dfs(spark: SparkSession):
-    p = spark.createDataFrame(_DIFF_PROPOSED, "field string, proposed_type string")
-    d = spark.createDataFrame(_DIFF_DEPLOYED, "field string, deployed_type string")
+    p = local_df(spark, _DIFF_PROPOSED, _strings("field", "proposed_type"))
+    d = local_df(spark, _DIFF_DEPLOYED, _strings("field", "deployed_type"))
     return p, d
 
 
@@ -103,6 +109,6 @@ def _q_column_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     sas = SparkAutoSchema(
         schema="s", table="lineitem", file=f"{sf_dir}/lineitem.parquet", spark=spark
     )
-    return spark.createDataFrame([(c,) for c in sas.get_column_list()], "field string")
+    return local_df(spark, [(c,) for c in sas.get_column_list()], _strings("field"))
 
 

@@ -51,13 +51,6 @@ def test_single_pass_plan(spark, infer_probe_parquet):
     assert plan.count("Scan parquet") == 1
 
 
-def test_chunked_passes_match_single_pass(spark, infer_probe_parquet):
-    df = load_file(spark, infer_probe_parquet)
-    single = _types(infer_table_schema(df))
-    chunked = _types(infer_table_schema(df, max_cols_per_pass=4))
-    assert single == chunked
-
-
 def test_bool_column_dtype(spark):
     df = spark.createDataFrame([(True,), (False,), (None,)], "flag boolean")
     got = _types(infer_table_schema(df))

@@ -99,10 +99,21 @@ def test_ngram_jaccard_finds_clones(spark, docs_with_dups):
     assert {(i, i + 100000) for i in range(3)} <= got
 
 
-def test_minhash_lsh_finds_clones(spark, docs_with_dups):
-    pairs = dedup.minhash_lsh_pairs(docs_with_dups, verify_threshold=0.9)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert {(i, i + 100000) for i in range(3)} <= got
+@pytest.mark.parametrize("engine", ["minhash_lsh_pairs", "minhash_lsh_pairs_md5"])
+def test_minhash_lsh_finds_clones(spark, docs_with_dups, engine):
+    from spark_auto_schema import _cache
+
+    lsh = getattr(dedup, engine)
+    clones = {(i, i + 100000) for i in range(3)}
+    dedup.release_caches()
+    cand = lsh(docs_with_dups, verify_threshold=None)
+    # without verify the caller is the candidates' only reader: the one
+    # cached frame is the signatures, read by both sides of the band join
+    assert [df.columns[:2] for df, _ in _cache._CACHED] == [["id", "h0"]]
+    assert clones <= {(r["id_a"], r["id_b"]) for r in cand.collect()}
+    pairs = lsh(docs_with_dups, verify_threshold=0.9)
+    assert clones <= {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    dedup.release_caches()
 
 
 def test_ngram_jaccard_max_df_caps_hot_shingle(spark):
@@ -339,12 +350,6 @@ def test_contamination_check_finds_probe_overlap(spark):
     assert 0 not in got  # probes excluded
 
 
-def test_minhash_md5_finds_clones(spark, docs_with_dups):
-    pairs = dedup.minhash_lsh_pairs_md5(docs_with_dups, verify_threshold=0.9)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert {(i, i + 100000) for i in range(3)} <= got
-
-
 def test_simhash_md5_identical_docs_collide(spark):
     df = spark.createDataFrame(
         [
@@ -371,6 +376,29 @@ def test_dedup_clusters_transitive_and_disjoint(spark):
     got = {r["id"]: r["cluster_id"] for r in dedup.dedup_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
     dedup.release_caches()
+
+
+def test_dedup_clusters_of_local_pairs_runs_no_spark_job(spark):
+    """A pair set under the driver budget is one bounded collect, and the
+    labels come back as a local relation: a driver-built pair set is
+    clustered and read without launching a Spark job."""
+    from pyspark.sql import types as T
+
+    from spark_auto_schema.io import local_df
+
+    schema = T.StructType(
+        [T.StructField("id_a", T.LongType()), T.StructField("id_b", T.LongType())]
+    )
+    pairs = local_df(spark, [(2, 3), (1, 2), (7, 9)], schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("sas-cluster-jobs", "local clustering job-count pin")
+    try:
+        got = {r["id"]: r["cluster_id"] for r in dedup.dedup_clusters(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("sas-cluster-jobs") == []
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
 
 def test_dedup_clusters_recovers_clone_groups(spark, docs_with_dups):

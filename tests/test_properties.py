@@ -57,7 +57,7 @@ _column = st.one_of(
 
 def _infer_one(spark, dtype: str, values: list):
     df = spark.createDataFrame([(v,) for v in values], f"v {dtype}")
-    out = infer_table_schema(df, spread_small_scans=False)
+    out = infer_table_schema(df)
     return None if out is None else out[0].proposed_type
 
 
