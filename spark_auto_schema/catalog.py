@@ -16,15 +16,12 @@ behaves exactly like the reference's ``udt_name || '(len)'`` strings.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .ddl import _check_ident
 from .io import local_df, sql_name
 from .types import spark_to_redshift_type
-
-_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_$]*$")
 
 
 def schema_exists(spark: SparkSession, schema: str) -> bool:
@@ -73,9 +70,8 @@ def deployed_columns_query(
     length on every character cast (Derby, DB2), which is what the embedded
     Derby integration test exercises through the real ``spark.read.jdbc``
     path."""
-    for name in (schema, table):
-        if not _IDENT_RE.match(name or ""):
-            raise ValueError(f"not a plain SQL identifier: {name!r}")
+    _check_ident(schema, "schema")
+    _check_ident(table, "table")
     if dialect == "redshift":
         len_expr = "CAST(character_maximum_length AS VARCHAR)"
     elif dialect == "ansi":

@@ -8,6 +8,8 @@ Scale design (100 TB):
 * MinHash+LSH — shingle explode -> per-doc signatures (one shuffle on doc id)
   -> band buckets -> candidate pairs only *within* buckets.  Never an
   all-pairs cross join; candidate count scales with collision rate, not n^2.
+  Exact verify scores each candidate pair from the two docs' shingle sets,
+  collected by that same doc-id shuffle.
 * SimHash — 64-bit signatures via one explode + groupBy; near-dup pairs by
   pigeonhole chunk bucketing (hamming <= 3 guarantees one of 4 equal 16-bit
   chunks -> 65,536 buckets), exact hamming check only inside buckets.
@@ -87,13 +89,19 @@ def shingles(
 
 
 # ------------------------------------------------------------- minhash+LSH
-def _minhash_sig(sh: DataFrame, num_hashes: int, md5_grade: bool) -> DataFrame:
+def _minhash_sig(
+    sh: DataFrame, num_hashes: int, md5_grade: bool, with_set: bool = False
+) -> DataFrame:
     """(id, h0..h{H-1}) minhash signature over a shingle relation.
 
     Production form: h_i = min over shingles of xxhash64(i, shingle).
     ``md5_grade``: h_i = min 16-hex-char prefix of md5("i:shingle")
     (lexicographic min over uniform strings is a valid minhash) — every step
-    reproducible in any engine with md5, so DuckDB oracles can verify it."""
+    reproducible in any engine with md5, so DuckDB oracles can verify it.
+
+    ``with_set`` appends ``set``, the doc's exact-verify shingle set, built
+    by the same ``groupBy("id")``: the raw shingles on the md5 grade (what
+    the oracles replay), else their xxhash64 (8-byte set members)."""
     if md5_grade:
         aggs = [
             F.min(
@@ -106,6 +114,9 @@ def _minhash_sig(sh: DataFrame, num_hashes: int, md5_grade: bool) -> DataFrame:
             F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
             for i in range(num_hashes)
         ]
+    if with_set:
+        key = F.col("shingle") if md5_grade else F.xxhash64("shingle")
+        aggs.append(F.collect_set(key).alias("set"))
     return sh.groupBy("id").agg(*aggs)
 
 
@@ -167,16 +178,6 @@ def minhash_lsh_pairs(
     )
 
 
-def _verify_shingles(sh: DataFrame, md5_grade: bool) -> DataFrame:
-    """The exact-verify relation over a raw shingle relation: the raw
-    shingles on the md5 grade (what the oracles replay), else their
-    xxhash64 — 8-byte join keys derived from ``sh`` itself, so a persisted
-    base is not exploded a second time."""
-    if md5_grade:
-        return sh
-    return sh.select("id", F.xxhash64("shingle").alias("shingle"))
-
-
 def _band_candidates(buckets: DataFrame) -> DataFrame:
     """(id_a, id_b) with id_a < id_b for every pair of docs sharing a band
     bucket: an equi-join on (band index, band hash) — bucket-local, never
@@ -203,97 +204,71 @@ def _lsh_pairs(
     """The one banded MinHash-LSH pipeline behind :func:`minhash_lsh_pairs`
     and :func:`minhash_lsh_pairs_md5`; ``md5_grade`` picks the hash
     construction of every step."""
-    sh = shingles(df, text_col, id_col, shingle_n)
-    if verify_threshold is not None:
-        # shared by the signature aggregate AND the verify semi-join below;
-        # un-persisted the scan+explode pipeline runs twice
-        sh = persist(sh)
-    # both sides of the band self-join read the signature frame, and under
-    # a cached child AQE's exchange reuse is not reliable (A/B on the md5
-    # grade at sf0.1: 3.60 -> 3.20 s); |docs| x num_hashes values
-    sig = persist(_minhash_sig(sh, num_hashes, md5_grade))
+    verify = verify_threshold is not None
+    # the one cached frame: both sides of the band self-join read it, and
+    # so do both set joins of the verify; under a cached child AQE's
+    # exchange reuse is not reliable (A/B on the md5 grade at sf0.1:
+    # 3.60 -> 3.20 s); |docs| x (num_hashes + |set|) values
+    sig = persist(
+        _minhash_sig(
+            shingles(df, text_col, id_col, shingle_n), num_hashes, md5_grade,
+            with_set=verify,
+        )
+    )
     cand = _band_candidates(_band_buckets(sig, num_hashes, bands, md5_grade))
-    if verify_threshold is None:
+    if not verify:
         return cand
-    cand = persist(cand)  # read by cand_ids and by both _pair_jaccard joins
-    # Exact-verify ONLY the candidate docs: semi-join the shingle relation
-    # down to ids appearing in candidate pairs, so verification cost tracks
-    # the candidate count, not the corpus.  No broadcast hint: the candidate
-    # set scales with the corpus's near-dup fraction, so boundedness is not
-    # known by construction — AQE converts to broadcast at runtime when the
-    # side is actually small.
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sh_c = persist(  # candidate-doc shingles: sizes + both join sides
-        _verify_shingles(sh, md5_grade).join(cand_ids, on="id", how="left_semi")
-    )
-    return _pair_jaccard(cand, sh_c).where(F.col("jaccard") >= verify_threshold)
+    return _pair_jaccard(cand, sig).where(F.col("jaccard") >= verify_threshold)
+
+
+def _jaccard(inter: Column, sz_a: Column, sz_b: Column) -> Column:
+    """Jaccard from an intersection and the two set sizes, snapped through
+    DECIMAL(18,12) before the 4-decimal round: plain round(double, 4)
+    half-rounds differently from DuckDB on half-ulp boundaries (the
+    dup_frac divergence class), and a bounded fraction cannot overflow
+    18,12.  The one formula of every exact-Jaccard path, so they stay in
+    lockstep with the oracles."""
+    return F.round(
+        (inter / (sz_a + sz_b - inter)).cast("decimal(18,12)"), 4
+    ).cast("double")
 
 
 def _pair_jaccard(
     pairs: DataFrame,
-    sh_a: DataFrame,
-    sh_b: DataFrame | None = None,
+    sets_a: DataFrame,
+    sets_b: DataFrame | None = None,
     a_col: str = "id_a",
     b_col: str = "id_b",
 ) -> DataFrame:
     """Exact shingle Jaccard for EXACTLY the ``(a_col, b_col)`` pairs given:
     ``(a_col, b_col, jaccard)``, inner — pairs sharing zero shingles are
     absent (identical to joining the co-shingle engine's full output
-    against the pair set, which is what every verify tail used to do).
+    against the pair set).
 
-    Candidate-driven verify (guide §1.2/§3): the co-shingle SELF-join
-    scores every pair of candidate docs that shares any shingle —
-    Σ_s df(s)² rows, most of which the band join never proposed — and the
-    verify tail then threw the extras away.  Here the pair set drives the
-    work: join each side's shingles onto the pairs (rows =
-    Σ_pairs |shingles(doc)|) and count matches, so verify cost tracks the
-    CANDIDATE count.  Set sizes ride the pair aggregation as min() of a
-    per-group constant (the #14 tail shape).  ``sh_b=None`` means both
-    ids draw from the one relation ``sh_a`` (its sizes aggregate is then
-    probed by both side joins and persisted); joins are unhinted — AQE
-    picks broadcast when the pair set is actually small."""
-    cross = sh_b is not None
-    sz_a = sh_a.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    if not cross:
-        sh_b = sh_a
-        sz_a = persist(sz_a)
-        sz_b = sz_a
-    else:
-        sz_b = sh_b.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    left = sh_a.join(sz_a, on="id").select(
-        F.col("id").alias(a_col), "shingle", F.col("sz").alias("__sza")
-    )
-    right = sh_b.join(sz_b, on="id").select(
-        F.col("id").alias(b_col), "shingle", F.col("sz").alias("__szb")
-    )
-    inter = (
-        pairs.join(left, on=a_col)
-        .join(right, on=[b_col, "shingle"])
-        .groupBy(a_col, b_col)
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.min("__sza").alias("__sza"),
-            F.min("__szb").alias("__szb"),
+    ``sets_a``/``sets_b`` carry ``(id, set)``: each doc's shingle set, as
+    :func:`_minhash_sig` builds it with ``with_set``; ``sets_b=None`` means
+    both ids draw from ``sets_a``.  The pair set drives the work: one join
+    per side attaches the two sets, and ``size(array_intersect)`` scores
+    the pair in the row — no shingle explode, no pair aggregate — so
+    verify cost tracks the CANDIDATE count.  Rows that share a doc id
+    merge into one set, as they merge into one signature.  Joins are
+    unhinted — AQE picks broadcast when a side is actually small."""
+    sets_b = sets_a if sets_b is None else sets_b
+    a = sets_a.select(F.col("id").alias(a_col), F.col("set").alias("__a"))
+    b = sets_b.select(F.col("id").alias(b_col), F.col("set").alias("__b"))
+    inter, sz_a, sz_b = F.col("inter"), F.col("sz_a"), F.col("sz_b")
+    return (
+        pairs.join(a, on=a_col)
+        .join(b, on=b_col)
+        .select(
+            a_col,
+            b_col,
+            F.size(F.array_intersect("__a", "__b")).alias("inter"),
+            F.size("__a").alias("sz_a"),
+            F.size("__b").alias("sz_b"),
         )
-    )
-    return inter.select(
-        a_col,
-        b_col,
-        # same DECIMAL(18,12) snap as _jaccard_from_shingles (bounded
-        # fraction; keeps every verify tail in lockstep with the oracles)
-        F.round(
-            (
-                F.col("inter")
-                / (F.col("__sza") + F.col("__szb") - F.col("inter"))
-            ).cast("decimal(18,12)"),
-            4,
-        )
-        .cast("double")
-        .alias("jaccard"),
+        .where(inter > 0)
+        .select(a_col, b_col, _jaccard(inter, sz_a, sz_b).alias("jaccard"))
     )
 
 
@@ -302,8 +277,7 @@ def _persisted_capped_shingles(
     sh: DataFrame, max_df: int | None
 ) -> DataFrame:
     """Persist a shingle relation and apply the ``max_df`` hot-shingle cap
-    to it — the shared head of :func:`_jaccard_from_shingles` and
-    :func:`containment_pairs`.
+    to it — the head of :func:`_co_shingle_pairs`.
 
     The cap exists to stop a hot shingle going quadratic in the pair
     self-join; on a corpus with NO shingle over the cap (the common
@@ -339,20 +313,20 @@ def _persisted_capped_shingles(
     return persist(sh.join(F.broadcast(hot), on="shingle", how="left_anti"))
 
 
-def _jaccard_from_shingles(
-    sh: DataFrame, threshold: float = 0.0, max_df: int | None = None
-) -> DataFrame:
-    """(id_a, id_b, jaccard) for every pair in ``sh`` sharing a shingle.
+def _co_shingle_pairs(sh: DataFrame, max_df: int | None) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b), id_a < id_b, for every pair in
+    ``sh`` sharing a shingle: the co-shingle self-join behind
+    :func:`_jaccard_from_shingles` and :func:`containment_pairs`.
 
     ``max_df`` drops shingles occurring in more than that many documents
     BEFORE the self-join (standard fuzzy-dedup practice): one hot shingle
     shared by m documents alone generates m^2/2 pairs, so without a cap a
     single boilerplate phrase goes quadratic at corpus scale.  The dropped
     shingles are excluded from both the intersection and the set sizes, so
-    the result is the exact Jaccard over the capped shingle space.  The
-    hot-shingle set (shingles with df > max_df) is tiny by construction and
-    is removed with a broadcast anti-join (skipped via a plan-build-time
-    probe when no shingle exceeds the cap — see
+    every score over this aggregate is exact over the capped shingle
+    space.  The hot-shingle set (shingles with df > max_df) is tiny by
+    construction and is removed with a broadcast anti-join (skipped via a
+    plan-build-time probe when no shingle exceeds the cap — see
     :func:`_persisted_capped_shingles`)."""
     # persisted + capped: the relation is consumed THREE times below — the
     # per-id sizes and both sides of the self-join — and its producer
@@ -374,7 +348,7 @@ def _jaccard_from_shingles(
     # eliminated joins over every candidate pair.
     shz = sh.join(sizes, on="id")
     a, b = shz.alias("a"), shz.alias("b")
-    inter = (
+    return (
         a.join(b, on="shingle")
         .where(F.col("a.id") < F.col("b.id"))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
@@ -384,23 +358,18 @@ def _jaccard_from_shingles(
             F.min(F.col("b.sz")).alias("sz_b"),
         )
     )
+
+
+def _jaccard_from_shingles(
+    sh: DataFrame, threshold: float = 0.0, max_df: int | None = None
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for every pair in ``sh`` sharing a shingle,
+    over the ``max_df``-capped shingle space of :func:`_co_shingle_pairs`."""
+    jac = _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b"))
     return (
-        inter.withColumn(
-            "jaccard",
-            # snapped through DECIMAL(18,12) before the 4-decimal round:
-            # plain round(double, 4) half-rounds differently from DuckDB on
-            # half-ulp boundaries (the dup_frac divergence class) — jaccard
-            # is a bounded fraction so 18,12 cannot overflow
-            F.round(
-                (
-                    F.col("inter")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-                ).cast("decimal(18,12)"),
-                4,
-            ).cast("double"),
-        )
+        _co_shingle_pairs(sh, max_df)
+        .select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -421,7 +390,7 @@ def ngram_jaccard_pairs(
     joins on 8-byte shingle hashes instead of strings (identical Jaccard
     w.h.p., much smaller shuffle).  ``max_df`` (default 10,000) caps the
     document frequency of join-eligible shingles so a single hot shingle
-    cannot go quadratic — see :func:`_jaccard_from_shingles`; pass ``None``
+    cannot go quadratic — see :func:`_co_shingle_pairs`; pass ``None``
     for the uncapped exact semantics.  Not plan-only: the call persists the
     shingles and, with ``max_df`` set, runs one Spark job (the
     ``hot.isEmpty()`` probe of :func:`_persisted_capped_shingles`)."""
@@ -495,26 +464,31 @@ def prepare_corpus_index(
     md5_grade: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the reusable corpus side of :func:`incremental_near_dedup`:
-    ``(band_buckets, verify_shingles)``.
+    ``(band_buckets, verify_sets)``.
+
+    ``verify_sets`` is ``(id, set)``: one row per corpus doc holding its
+    exact-verify shingle set (raw shingles on the md5 grade, else their
+    xxhash64).  Before this format it was an ``(id, shingle)`` row per
+    shingle; an index written in that format must be rebuilt.
 
     This is the "compute once, persist, reuse per batch" half of the
     incremental workflow: write both frames out (band_buckets bucketed on
-    ``(band, bucket)``, shingles on ``id``) and pass them back via
+    ``(band, bucket)``, verify_sets on ``id``) and pass them back via
     ``corpus_index=`` on every ingest — each increment then only shingles
     the NEW batch, the 100 TB cost model the operator's docstring
     promises.  Arguments must match the ones later passed to
     :func:`incremental_near_dedup` (band layout and hash construction are
     baked into the frames)."""
-    # one shingle pipeline feeds BOTH outputs (signature aggregate and the
-    # verify relation) — persist the shared base so the corpus-wide
-    # scan+explode runs once across the caller's two writes; the hashed
-    # verify relation derives from the same base (xxhash64 post-persist —
-    # identical values to shingles(hashed=True)), not a second explode
-    sh = persist(shingles(corpus_df, text_col, id_col, shingle_n))
-    buckets = _band_buckets(
-        _minhash_sig(sh, num_hashes, md5_grade), num_hashes, bands, md5_grade
+    # one aggregate feeds BOTH outputs — persisted so the corpus-wide
+    # scan+explode+groupBy runs once across the caller's two reads
+    sig = persist(
+        _minhash_sig(
+            shingles(corpus_df, text_col, id_col, shingle_n), num_hashes,
+            md5_grade, with_set=True,
+        )
     )
-    return buckets, _verify_shingles(sh, md5_grade)
+    buckets = _band_buckets(sig, num_hashes, bands, md5_grade)
+    return buckets, sig.select("id", "set")
 
 
 def incremental_near_dedup(
@@ -535,7 +509,7 @@ def incremental_near_dedup(
     subsumes: an exact clone matches every band and verifies at jaccard
     1.0).  Candidates come from an equi-join of the batch's LSH band
     buckets against the corpus's — bucket-local, never batch x corpus — and
-    are exact-Jaccard-verified on the candidate docs only, so cost tracks
+    are exact-Jaccard-verified on the candidate pairs only, so cost tracks
     the collision count, not corpus size.  At 100 TB the corpus band-bucket
     relation is computed once and persisted (bucketed on (band, bucket));
     each increment only shingles the new batch.
@@ -548,42 +522,34 @@ def incremental_near_dedup(
     :func:`prepare_corpus_index` (built with the SAME band/hash
     arguments); the corpus is then never re-shingled here — the per-batch
     cost is the batch's own shingling plus bucket-local joins."""
-    sh_new = shingles(new_df, text_col, id_col, shingle_n)
-    if verify_threshold is not None:
-        # the batch shingle pipeline feeds the signature aggregate AND (via
-        # the verify relations below) both _pair_jaccard consumers — three
-        # executions un-persisted; persist so the scan+explode runs once
-        # (guide §5, same shape as the minhash pair engines)
-        sh_new = persist(sh_new)
-    bk_new = _band_buckets(_minhash_sig(sh_new, num_hashes, md5_grade), num_hashes, bands, md5_grade)
-    if corpus_index is not None:
-        bk_cor, vc = corpus_index
-    else:
-        sh_cor = shingles(corpus_df, text_col, id_col, shingle_n)
-        if verify_threshold is not None:
-            sh_cor = persist(sh_cor)  # same triple-consumer shape as sh_new
-        vc = _verify_shingles(sh_cor, md5_grade)
-        bk_cor = _band_buckets(_minhash_sig(sh_cor, num_hashes, md5_grade), num_hashes, bands, md5_grade)
+    verify = verify_threshold is not None
+
+    def index(d: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+        # with verify, each side's one signature+set aggregate is read by
+        # its band buckets and by _pair_jaccard: prepare_corpus_index
+        # persists it
+        if verify:
+            return prepare_corpus_index(
+                d, text_col, id_col, num_hashes, bands, shingle_n, md5_grade
+            )
+        sig = _minhash_sig(
+            shingles(d, text_col, id_col, shingle_n), num_hashes, md5_grade
+        )
+        return _band_buckets(sig, num_hashes, bands, md5_grade), None
+
+    bk_new, sets_new = index(new_df)
+    bk_cor, sets_cor = corpus_index or index(corpus_df)
     cand = (
         bk_new.alias("n")
         .join(bk_cor.alias("c"), on=["band", "bucket"])
         .select(F.col("n.id").alias("id_new"), F.col("c.id").alias("id_cor"))
         .distinct()
     )
-    if verify_threshold is None:
+    if not verify:
         dup_ids = cand.select("id_new").distinct()
     else:
-        cand = persist(cand)
-        vn = _verify_shingles(sh_new, md5_grade)
-        # Unhinted semi-joins: the candidate-id sets grow with the batch's
-        # overlap against the corpus (unbounded at 100 TB) — AQE converts
-        # to broadcast at runtime only when a side is actually small.
-        # The semi-joined verify relations are candidate-sized and each
-        # consumed twice by _pair_jaccard (sizes + intersection) — persist.
-        vn = persist(vn.join(cand.select(F.col("id_new").alias("id")).distinct(), "id", "left_semi"))
-        vc = persist(vc.join(cand.select(F.col("id_cor").alias("id")).distinct(), "id", "left_semi"))
         dup_ids = (
-            _pair_jaccard(cand, vn, vc, a_col="id_new", b_col="id_cor")
+            _pair_jaccard(cand, sets_new, sets_cor, a_col="id_new", b_col="id_cor")
             .where(F.col("jaccard") >= verify_threshold)
             .select("id_new")
             .distinct()
@@ -1147,11 +1113,14 @@ def lsh_config_sweep(
         raise ValueError(
             f"bands_sweep must be non-empty ascending, got {bands_sweep}"
         )
-    # the shingle base feeds the signature aggregate AND the verify
-    # semi-join below — persist so the scan+explode runs once (guide §5,
-    # same shape as the minhash pair engines)
-    sh = persist(shingles(df, text_col, id_col, shingle_n))
-    sig = persist(_minhash_sig(sh, num_hashes, md5_grade=True))
+    # read by every config's band buckets and by both set joins of the
+    # verify
+    sig = persist(
+        _minhash_sig(
+            shingles(df, text_col, id_col, shingle_n), num_hashes,
+            md5_grade=True, with_set=True,
+        )
+    )
     entries = None
     for b in bands_sweep:
         e = _band_buckets(sig, num_hashes, b, md5_grade=True).withColumn(
@@ -1159,27 +1128,14 @@ def lsh_config_sweep(
         )
         entries = e if entries is None else entries.unionByName(e)
     a, bb = entries.alias("a"), entries.alias("b")
+    # read by the verify and by the per-config candidate rollup
     cand = persist(
         a.join(bb, on=["cfg", "band", "bucket"])
         .where(F.col("a.id") < F.col("b.id"))
         .select("cfg", F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    upairs = cand.select("id_a", "id_b").distinct()
-    uids = (
-        upairs.select(F.col("id_a").alias("id"))
-        .union(upairs.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    # Unhinted semi-join on the union of all configs' candidate ids — the
-    # worst-scaling relation in the sweep; AQE decides the join strategy
-    # at runtime.  This join sits under a persist() boundary, where AQE
-    # applies only with canChangeCachedPlanOutputPartitioning=true — the
-    # canonical session (session.py) sets it; without it the cached plan
-    # pins a static shuffle join (measured 5.6x at sf0.1, BASELINE
-    # round-12).
-    sh_c = persist(sh.join(uids, on="id", how="left_semi"))
-    jac = _pair_jaccard(upairs, sh_c)
+    jac = _pair_jaccard(cand.select("id_a", "id_b").distinct(), sig)
     judged = cand.join(jac, ["id_a", "id_b"], "left").select(
         "cfg",
         (F.coalesce("jaccard", F.lit(0.0)) >= F.lit(verify_threshold))
@@ -1891,28 +1847,8 @@ def containment_pairs(
     the pair aggregate, no extra shuffle.  Not plan-only, like
     :func:`ngram_jaccard_pairs`: the call persists the shingles and, with
     ``max_df`` set, runs the one-job ``hot.isEmpty()`` probe."""
-    sh = shingles(df, text_col, id_col, n, hashed=hashed)
-    # persisted + capped (anti-join skipped when no shingle exceeds the
-    # cap — see _persisted_capped_shingles); consumed three times below
-    sh = _persisted_capped_shingles(sh, max_df)
-    # persisted: probed by both enrichment joins, |docs| rows (see
-    # _jaccard_from_shingles)
-    sizes = persist(sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz")))
-    # Same tail shape as _jaccard_from_shingles: sizes ride the shingle
-    # rows into the pair aggregation (min() of a per-group constant)
-    # instead of re-joining the pair relation — the largest relation in
-    # this pipeline — against `sizes` twice afterwards.
-    shz = sh.join(sizes, on="id")
-    a, b = shz.alias("a"), shz.alias("b")
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.min(F.col("a.sz")).alias("sz_a"),
-            F.min(F.col("b.sz")).alias("sz_b"),
-        )
+    inter = _co_shingle_pairs(
+        shingles(df, text_col, id_col, n, hashed=hashed), max_df
     )
     small_is_a = (F.col("sz_a") < F.col("sz_b")) | (
         (F.col("sz_a") == F.col("sz_b")) & (F.col("id_a") < F.col("id_b"))

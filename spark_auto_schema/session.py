@@ -19,10 +19,9 @@ and their rationale:
   tables) and on skew-split for hot keys (cluster-local pair joins,
   salted fallbacks).
 * ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``: extends
-  that runtime conversion INTO cached subtrees — the dedup verify
-  semi-joins are deliberately unhinted (candidate-id sets are unbounded
-  at corpus scale) and sit under ``persist()`` boundaries, which would
-  otherwise pin a static shuffle join at cache-compile time.
+  that runtime conversion INTO cached subtrees, where a ``persist()``
+  boundary would otherwise pin a static shuffle join at cache-compile
+  time (see the note at the setting for which joins that still covers).
 * ``spark.sql.shuffle.partitions``: sized so a post-shuffle partition is
   ~128-200 MB.  At 100 TB input with ~10x reduction before the wide
   stages, 20k-40k is a sane starting range — set it per job from data
@@ -56,15 +55,16 @@ _COMMON = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # AQE under persist() boundaries: without this, a cached plan pins a
-    # STATIC join strategy at compile time, so the engine's unhinted
-    # candidate-verify semi-joins (dedup.py — deliberately unhinted
-    # because candidate-id sets are unbounded at scale, r11 verdict)
-    # degrade to full shuffle joins inside cached subtrees (measured
-    # 5.6x on lsh_config_sweep at sf0.1, BASELINE round-12).  The
-    # trade-off — consumers of a cached relation may re-shuffle because
-    # its output partitioning is no longer pinned — is the right one for
-    # this engine: every cached relation here is a small candidate/stat
-    # frame, not a co-partitioning anchor.
+    # STATIC join strategy at compile time, so an unhinted join inside a
+    # cached subtree stays a full shuffle join.  It was set for the
+    # candidate-id semi-joins the near-dup verify once cached (measured
+    # 5.6x on lsh_config_sweep at sf0.1, BASELINE round-12); those are
+    # gone.  Unhinted joins still sit under persist() (lsh_config_sweep's
+    # cached band self-join is one), but whether they need this has not
+    # been measured.  The trade-off — consumers of a cached relation may
+    # re-shuffle because its output partitioning is no longer pinned — is
+    # the right one for this engine: every cached relation here is a small
+    # candidate/stat frame, not a co-partitioning anchor.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",

@@ -111,7 +111,14 @@ def test_minhash_lsh_finds_clones(spark, docs_with_dups, engine):
     # cached frame is the signatures, read by both sides of the band join
     assert [df.columns[:2] for df, _ in _cache._CACHED] == [["id", "h0"]]
     assert clones <= {(r["id_a"], r["id_b"]) for r in cand.collect()}
+    dedup.release_caches()
     pairs = lsh(docs_with_dups, verify_threshold=0.9)
+    # with verify the one cached frame is still the signature aggregate,
+    # now carrying each doc's verify set: no shingle base, candidate set
+    # or size frame is cached beside it
+    assert len(_cache._CACHED) == 1
+    (sig, _), = _cache._CACHED
+    assert sig.columns[:2] == ["id", "h0"] and "set" in sig.columns
     assert clones <= {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     dedup.release_caches()
 
@@ -2331,13 +2338,17 @@ def test_pair_jaccard_identical_to_co_shingle_verify_tail(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     sh = dedup.shingles(df, "text", "doc_id", 3)
+
+    def sets(rel):
+        return rel.groupBy("id").agg(F.collect_set("shingle").alias("set"))
+
     # candidate set: two true near-dup pairs, one zero-overlap pair
     pairs = spark.createDataFrame(
         [(1, 2), (3, 4), (1, 5)], "id_a long, id_b long"
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup._pair_jaccard(pairs, sh).collect()
+        for r in dedup._pair_jaccard(pairs, sets(sh)).collect()
     )
     ref = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
@@ -2356,7 +2367,7 @@ def test_pair_jaccard_identical_to_co_shingle_verify_tail(spark):
     got_x = sorted(
         (r["id_new"], r["id_cor"], r["jaccard"])
         for r in dedup._pair_jaccard(
-            cpairs, sh_new, sh_cor, a_col="id_new", b_col="id_cor"
+            cpairs, sets(sh_new), sets(sh_cor), a_col="id_new", b_col="id_cor"
         ).collect()
     )
     # reference: full cross co-shingle pairs, inner-joined to the pair set

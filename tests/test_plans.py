@@ -1440,7 +1440,10 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     """r14 recompute cuts: relations consumed by BOTH the signature/hot
     aggregate and a verify/anti-join path must be persisted so the
     scan+explode producer runs once — visible as InMemoryRelation nodes in
-    the plan and as registered intra-query caches (released afterwards)."""
+    the plan and as registered intra-query caches (released afterwards).
+    The LSH engines fold the verify sets into the signature aggregate, so
+    there the shingle relation has one reader and only that aggregate is
+    cached."""
     from pyspark.sql import functions as F
 
     from spark_auto_schema import _cache
@@ -1455,9 +1458,15 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     out = dedup.incremental_near_dedup(
         half, other, verify_threshold=0.5, md5_grade=True
     )
-    # the batch and corpus shingle bases + cand + the two semi-joined
-    # verify relations are persisted for reuse
-    assert len(_cache._CACHED) >= 4
+    # the shingle relation of each side has one reader, the fused
+    # signature+set aggregate, so the scan+explode runs once by
+    # construction; the one cached frame per side is that aggregate,
+    # read by the band buckets and by the set join
+    assert len(_cache._CACHED) == 2
+    assert all(
+        df.columns[:2] == ["id", "h0"] and "set" in df.columns
+        for df, _ in _cache._CACHED
+    )
     plan = plan_of(out, "simple")
     assert "InMemoryTableScan" in plan
     n = out.count()
@@ -1465,7 +1474,11 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     assert not _cache._CACHED
 
     out2 = dedup.minhash_lsh_pairs_md5(half, verify_threshold=0.5)
-    assert len(_cache._CACHED) >= 2  # shingle base + candidate set
+    assert len(_cache._CACHED) == 1  # the signature+set aggregate
+    assert all(
+        df.columns[:2] == ["id", "h0"] and "set" in df.columns
+        for df, _ in _cache._CACHED
+    )
     assert "InMemoryTableScan" in plan_of(out2, "simple")
     out2.count()
     dedup.release_caches()
@@ -1479,10 +1492,10 @@ def test_pair_engines_persist_shared_shingle_base(spark):
 
 
 def test_prepare_corpus_index_single_shingle_pipeline(spark):
-    """r14: prepare_corpus_index's two outputs (band buckets + verify
-    shingles) must share ONE persisted shingle base — the non-md5 verify
-    relation is derived by hashing the shared base (xxhash64 post-persist),
-    never by a second corpus-wide scan+explode."""
+    """prepare_corpus_index's two outputs (band buckets + verify sets)
+    must share ONE persisted aggregate — the non-md5 verify sets are
+    built by the signature groupBy itself (xxhash64 per shingle), never
+    by a second corpus-wide scan+explode."""
     from pyspark.sql import functions as F
 
     from spark_auto_schema import _cache
@@ -1493,16 +1506,22 @@ def test_prepare_corpus_index_single_shingle_pipeline(spark):
 
     dedup.release_caches()
     buckets, verify_sh = dedup.prepare_corpus_index(docs)
-    # exactly the one shared shingle base is cached
+    # exactly the one shared signature+set aggregate is cached
     assert len(_cache._CACHED) == 1
     assert "InMemoryTableScan" in plan_of(buckets, "simple")
     assert "InMemoryTableScan" in plan_of(verify_sh, "simple")
 
-    # value identity: the derived verify relation equals the twin-build it
-    # replaced (shingles(hashed=True) over the same corpus)
-    twin = dedup.shingles(docs, hashed=True)
-    assert verify_sh.exceptAll(twin).count() == 0
-    assert twin.exceptAll(verify_sh).count() == 0
+    # value identity: the verify sets equal the hashed shingles collected
+    # per doc (set order is not part of the value)
+    twin = (
+        dedup.shingles(docs, hashed=True)
+        .groupBy("id")
+        .agg(F.collect_set("shingle").alias("set"))
+    )
+    got = verify_sh.select("id", F.array_sort("set").alias("set"))
+    twin = twin.select("id", F.array_sort("set").alias("set"))
+    assert got.exceptAll(twin).count() == 0
+    assert twin.exceptAll(got).count() == 0
     dedup.release_caches()
     assert not _cache._CACHED
 
