@@ -29,9 +29,13 @@ def schema_exists(spark: SparkSession, schema: str) -> bool:
     return spark.catalog.databaseExists(schema)
 
 
+def _table_name(schema: str, table: str) -> str:
+    return f"{sql_name(schema)}.{sql_name(table)}"
+
+
 def table_exists(spark: SparkSession, schema: str, table: str) -> bool:
     """RAS.py:109-123 — table OR view existence (tableExists covers both)."""
-    return spark.catalog.tableExists(f"{schema}.{table}")
+    return spark.catalog.tableExists(_table_name(schema, table))
 
 
 _DEPLOYED_SCHEMA = T.StructType(
@@ -45,11 +49,14 @@ def deployed_schema_df(spark: SparkSession, schema: str, table: str) -> DataFram
     Mirrors the reference's information_schema query (RAS.py:215-216) against
     the Spark catalog.  Resolving the table's schema is driver-local metadata
     work; the result is a local relation, so the diff reads it without a
-    Spark job.
+    Spark job.  A table that does not exist has no deployed columns, as the
+    reference's query returns no rows for it, so every proposed column
+    diffs as MISSING.
     """
-    name = f"{sql_name(schema)}.{sql_name(table)}"
-    columns = spark.table(name).schema
-    rows = [(c.name, spark_to_redshift_type(c.dataType)) for c in columns]
+    rows = []
+    if table_exists(spark, schema, table):
+        columns = spark.table(_table_name(schema, table)).schema
+        rows = [(c.name, spark_to_redshift_type(c.dataType)) for c in columns]
     return local_df(spark, rows, _DEPLOYED_SCHEMA)
 
 

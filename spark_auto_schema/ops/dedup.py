@@ -1463,13 +1463,63 @@ def simhash(
     4.22 -> 2.08 s, bit-identical).  Lane safety: counters can only
     collide after 2^32 tokens in one document, and the packed sum stays
     below 2^63 until ~2^31 tokens — far beyond any real document."""
+    return _simhash_sig(df, text_col, id_col, md5_grade=False)
+
+
+def simhash_md5(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Verification-grade SimHash twin: 64-bit signature as a '0'/'1' string
+    where bit i < 32 = majority vote of (hex digit i of md5(token) >= 8) and
+    bit i >= 32 draws from md5('x:' || token) (md5 yields 32 hex digits, so
+    the upper half re-keys the hash).
+
+    Same dataflow as :func:`simhash` (one explode + one groupBy(id)); every
+    primitive (md5, substr, conditional sum) exists in DuckDB, so the driver
+    oracle reproduces signatures exactly.  xxhash64 stays the fast default.
+    """
+    sig = _simhash_sig(df, text_col, id_col, md5_grade=True)
+    # bin() is the two's-complement bit string, most significant bit first
+    return sig.select(
+        "id", F.reverse(F.lpad(F.bin("simhash"), SIMHASH_BITS, "0")).alias("simhash")
+    )
+
+
+def _md5_token_word(tok: Column) -> Column:
+    """The md5 grade's 64-bit token word: bit ``i`` is set iff hex digit
+    ``i`` is >= 8, digits 0-31 from ``md5(tok)`` and 32-63 from
+    ``md5('x:' || tok)``.  Each 8-digit slice is one 32-bit ``conv`` word
+    ``v``, and digit ``k`` of it is >= 8 iff bit ``31 - 4k`` of ``v`` is
+    set (measured faster than 64 one-digit ``substr`` tests)."""
+    halves = (F.md5(tok), F.md5(F.concat(F.lit("x:"), tok)))
+    h = None
+    for j in range(8):
+        hexes = F.substring(halves[j // 4], 8 * (j % 4) + 1, 8)
+        v = F.conv(hexes, 16, 10).cast("long")
+        for k in range(8):
+            bit = F.shiftleft(
+                F.shiftright(v, 31 - 4 * k).bitwiseAND(F.lit(1)), 8 * j + k
+            )
+            h = bit if h is None else h.bitwiseOR(bit)
+    return h
+
+
+def _simhash_sig(
+    df: DataFrame, text_col: str, id_col: str, md5_grade: bool
+) -> DataFrame:
+    """The one SimHash signature pipeline behind :func:`simhash` and
+    :func:`simhash_md5`: ``(id, simhash)`` with a long signature.
+    ``md5_grade`` only picks the per-token 64-bit word; the packed
+    majority vote (see :func:`simhash`) is shared."""
     tokens = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
     ).where(F.length("tok") > 0)
-    h = F.xxhash64(F.col("tok"))
+    # one word per token, projected once: the 32 lane sums all read it
+    word = _md5_token_word(F.col("tok")) if md5_grade else F.xxhash64(F.col("tok"))
+    h = F.col("h")
     lane_mask = (1 << 32) | 1
-    tallies = tokens.groupBy("id").agg(
+    tallies = tokens.select("id", word.alias("h")).groupBy("id").agg(
         F.count(F.lit(1)).alias("__n"),
         *[
             F.sum(F.shiftright(h, j).bitwiseAND(F.lit(lane_mask))).alias(f"s{j}")
@@ -1494,52 +1544,6 @@ def simhash(
     return tallies.select("id", sig.alias("simhash"))
 
 
-def simhash_md5(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Verification-grade SimHash twin: 64-bit signature as a '0'/'1' string
-    where bit i < 32 = majority vote of (hex digit i of md5(token) >= 8) and
-    bit i >= 32 draws from md5('x:' || token) (md5 yields 32 hex digits, so
-    the upper half re-keys the hash).
-
-    Same dataflow as :func:`simhash` (one explode + one groupBy(id)); every
-    primitive (md5, substr, conditional sum) exists in DuckDB, so the driver
-    oracle reproduces signatures exactly.  xxhash64 stays the fast default.
-    """
-    tokens = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    ).where(F.length("tok") > 0)
-    h_lo = F.md5(F.col("tok"))
-    h_hi = F.md5(F.concat(F.lit("x:"), F.col("tok")))
-
-    def _digit(i: int):
-        return (
-            F.substring(h_lo, i + 1, 1)
-            if i < 32
-            else F.substring(h_hi, i - 31, 1)
-        )
-
-    # digit >= '8' IS the "high hex digit" test: md5 hex is lowercase, and
-    # '0'-'7' < '8' <= '8','9' < 'a'-'f' in UTF8 order — identical truth
-    # value to isin('8'..'f'), but ONE comparison instead of an 8-literal
-    # In() per aggregate (64 of them here: measured 2.5-3.3 s -> 1.85 s
-    # on the aggregate, and ~3x cheaper first-plan codegen)
-    tallies = tokens.groupBy("id").agg(
-        *[
-            F.sum(F.when(_digit(i) >= "8", 1).otherwise(-1)).alias(f"b{i}")
-            for i in range(SIMHASH_BITS)
-        ]
-    )
-    sig = F.concat(
-        *[
-            F.when(F.col(f"b{i}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for i in range(SIMHASH_BITS)
-        ]
-    )
-    return tallies.select("id", sig.alias("simhash"))
-
-
 def simhash_md5_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1549,58 +1553,10 @@ def simhash_md5_near_dup_pairs(
     """Near-dup pairs over :func:`simhash_md5` signatures — pigeonhole chunk
     bucketing (4 x 16-bit chunks, 2^16 buckets each) then exact string
     hamming, all oracle-reproducible."""
-    sig = simhash_md5(df, text_col, id_col)
-    chunks = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.substring(
-                            "simhash", c * _CHUNK_BITS + 1, _CHUNK_BITS
-                        ).alias("ck"),
-                    )
-                    for c in range(SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("cc"),
-    ).select(
-        "id", "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.ck").alias("ck")
-    )
-    a, b = chunks.alias("a"), chunks.alias("b")
-
-    # Hamming over the '0'/'1' signature strings via bit_count(xor) on two
-    # conv()-parsed 32-bit halves — identical count to the former 64-term
-    # per-character comparison sum (each differing char is one differing
-    # bit), but a 6-node expression instead of 256: measured 2x on the
-    # whole pair pipeline (6.0 -> 2.9 s at sf0.1), values identical.
-    def _half(col: Column, lo: int) -> Column:
-        return F.conv(F.substring(col, lo, 32), 2, 10).cast("long")
-
-    hamming = (
-        F.bit_count(
-            _half(F.col("a.simhash"), 1).bitwiseXOR(
-                _half(F.col("b.simhash"), 1)
-            )
-        )
-        + F.bit_count(
-            _half(F.col("a.simhash"), 33).bitwiseXOR(
-                _half(F.col("b.simhash"), 33)
-            )
-        )
-    )
-    return (
-        a.join(b, on=["chunk", "ck"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    # the long's bits [16c, 16c+16) are the string's chars [16c, 16c+16),
+    # so the shared join buckets and counts exactly as on the strings
+    return _pigeonhole_pairs(
+        _simhash_sig(df, text_col, id_col, md5_grade=True), max_hamming
     )
 
 
@@ -1624,6 +1580,13 @@ def simhash_near_dup_pairs(
     once per ingest and re-bucketed cheaply thereafter."""
     if sig is None:
         sig = simhash(df, text_col, id_col)
+    return _pigeonhole_pairs(sig, max_hamming)
+
+
+def _pigeonhole_pairs(sig: DataFrame, max_hamming: int) -> DataFrame:
+    """The one SimHash pair join: ``(id_a, id_b, hamming)`` with id_a < id_b
+    for every pair of long ``(id, simhash)`` signatures that share one of
+    the 4 16-bit chunks and lie within ``max_hamming`` bits."""
     chunks = sig.select(
         "id",
         "simhash",

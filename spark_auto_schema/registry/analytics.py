@@ -21,6 +21,7 @@ from spark_auto_schema.ops import sampling
 from spark_auto_schema.ops import similarity
 from spark_auto_schema.ops import text
 from spark_auto_schema.registry.inference import (_infer_table_sql)
+from spark_auto_schema.registry.schema_ddl import _classify_sql
 from spark_auto_schema.registry.extensions import (_spread_docs, _spread_embs, _stop_pat)
 
 # ---------------------------------------------------------------------------
@@ -1476,10 +1477,11 @@ def _q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     is inferred per microbatch (the same single-pass aggregate as the
     flagship) and diffed against a deliberately-drifted baseline —
     ``value`` declared int4 (actual float8 -> TYPE MISMATCH), ``props``
-    omitted (-> MISSING), phantom ``ghost_col`` (-> DEPRECATED).  The
-    oracle recomputes the expected drift by running the generated
-    inference SQL over the same table and joining the same baseline
-    literals (streaming.SchemaDriftMonitor, streaming.py)."""
+    omitted (-> MISSING), phantom ``ghost_col`` (-> DEPRECATED, with its
+    deployed type).  The oracle recomputes the expected drift by running
+    the generated inference SQL over the same table and applying the
+    catalog diff's rule (13-class types, ``notype`` dropped) to the same
+    baseline literals (streaming.SchemaDriftMonitor, streaming.py)."""
     from spark_auto_schema.streaming import SchemaDriftMonitor, read_event_stream
 
     baseline = {
@@ -1514,11 +1516,11 @@ SELECT coalesce(i.field, b.field) AS field,
             WHEN i.field IS NULL THEN 'DEPRECATED'
             ELSE 'TYPE MISMATCH' END AS reason,
        i.proposed_type AS proposed,
-       CASE WHEN i.field IS NULL THEN CAST(NULL AS VARCHAR)
-            ELSE b.deployed END AS deployed
+       b.deployed AS deployed
 FROM inferred i FULL OUTER JOIN base b USING (field)
-WHERE b.field IS NULL OR i.field IS NULL
-   OR (i.proposed_type <> b.deployed AND i.proposed_type <> 'notype')
+WHERE i.proposed_type IS DISTINCT FROM 'notype'
+  AND (b.field IS NULL OR i.field IS NULL
+       OR {_classify_sql('i.proposed_type')} <> {_classify_sql('b.deployed')})
 """
 
 

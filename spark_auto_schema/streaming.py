@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .diff import diff_rows
 from .inference import ColumnInference, infer_table_schema
 
 # memory-sink temp views drained by run_to_memory; release_sinks() drops
@@ -369,7 +370,9 @@ class SchemaDriftMonitor:
     """Detect schema drift in a stream of file drops via foreachBatch.
 
     Each microbatch runs the single-pass inference aggregate and diffs the
-    proposed types against the baseline; drift records are handed to
+    proposed types against the baseline ``{field: deployed_type}`` with the
+    catalog diff's rule (:func:`spark_auto_schema.diff.diff_rows`); drift
+    records ``{field, reason, proposed, deployed}`` are handed to
     ``on_drift`` (e.g. alerting, a Delta audit table).
     """
 
@@ -385,27 +388,14 @@ class SchemaDriftMonitor:
         inferred: list[ColumnInference] | None = infer_table_schema(batch_df)
         if inferred is None:  # empty microbatch
             return
-        drift: list[dict] = []
-        seen = set()
-        for ci in inferred:
-            seen.add(ci.name)
-            expected = self.baseline.get(ci.name)
-            if expected is None:
-                drift.append(
-                    {"field": ci.name, "reason": "MISSING", "proposed": ci.proposed_type}
-                )
-            elif expected != ci.proposed_type and ci.proposed_type != "notype":
-                drift.append(
-                    {
-                        "field": ci.name,
-                        "reason": "TYPE MISMATCH",
-                        "proposed": ci.proposed_type,
-                        "deployed": expected,
-                    }
-                )
-        for name in self.baseline:
-            if name not in seen:
-                drift.append({"field": name, "reason": "DEPRECATED"})
+        rows = diff_rows(
+            [(ci.name, ci.proposed_type) for ci in inferred],
+            list(self.baseline.items()),
+        )
+        drift = [
+            {"field": f, "reason": reason, "proposed": p, "deployed": d}
+            for f, p, d, reason in rows
+        ]
         if drift:
             self.on_drift(batch_id, drift)
 

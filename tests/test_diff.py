@@ -239,3 +239,25 @@ def test_deployed_schema_df_jdbc_stubbed(spark, monkeypatch):
         for r in evaluate_diffs(proposed, deployed).collect()
     }
     assert got == {"b": "TYPE MISMATCH", "c": "MISSING", "d": "DEPRECATED"}
+
+
+def test_missing_catalog_table_diffs_every_column_as_missing(spark, tmp_path):
+    """A table absent from the catalog has no deployed columns (the
+    reference's information_schema query returns no rows), so every proposed
+    column is MISSING and the column DDL adds each one."""
+    from spark_auto_schema import SparkAutoSchema
+    from spark_auto_schema.catalog import deployed_schema_df
+
+    assert deployed_schema_df(spark, "sas_absent_db", "nope").collect() == []
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        [(1, "a", 2.5), (2, "b", None)], "id int, name string, x double"
+    ).write.parquet(path)
+    sas = SparkAutoSchema(schema="sas_absent_db", table="nope", file=path, spark=spark)
+    proposed = [(ci.name, ci.proposed_type) for ci in sas._ensure_metadata()]
+    rows = sas.evaluate_table_ddl_diffs().collect()
+    assert [tuple(r) for r in rows] == [(f, t, None, "MISSING") for f, t in proposed]
+    alter = sas.generate_column_ddl()
+    assert alter.count("ALTER TABLE") == len(proposed)
+    for f, t in proposed:
+        assert f"ALTER TABLE sas_absent_db.nope ADD COLUMN {f} {t};" in alter

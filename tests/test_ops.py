@@ -175,6 +175,72 @@ def test_simhash_identical_and_near(spark):
     assert {(r["id_a"], r["id_b"]) for r in reused.collect()} == got
 
 
+def _near_dup_corpus(spark):
+    # 8 base texts of 40 words and 4 edits of each (1-4 words replaced):
+    # edits land a few bits from their base, unrelated docs ~32 bits apart
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
+    for b in range(8):
+        words = [rng.choice(vocab) for _ in range(40)]
+        rows.append((b * 10, " ".join(words)))
+        for e in range(1, 5):
+            edited = list(words)
+            for _ in range(e):
+                edited[rng.randrange(40)] = rng.choice(vocab)
+            rows.append((b * 10 + e, " ".join(edited)))
+    rows.append((99, rows[0][1]))  # an exact copy: hamming 0
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("md5_grade", [False, True], ids=["xxhash64", "md5"])
+def test_simhash_pairs_equal_brute_force_hamming(spark, md5_grade):
+    df = _near_dup_corpus(spark)
+    if md5_grade:
+        sig_fn, pair_fn = dedup.simhash_md5, dedup.simhash_md5_near_dup_pairs
+    else:
+        sig_fn, pair_fn = dedup.simhash, dedup.simhash_near_dup_pairs
+
+    def bits(s):  # md5 grade: char i of the string is bit i
+        return int(s[::-1], 2) if md5_grade else s & (2**64 - 1)
+
+    sigs = {r["id"]: bits(r["simhash"]) for r in sig_fn(df).collect()}
+    dist = {
+        (a, b): bin(sigs[a] ^ sigs[b]).count("1")
+        for a in sigs
+        for b in sigs
+        if a < b
+    }
+    assert any(1 <= d <= 3 for d in dist.values())  # k > 0 is exercised
+    for k in range(4):
+        got = {
+            (r["id_a"], r["id_b"]): r["hamming"]
+            for r in pair_fn(df, max_hamming=k).collect()
+        }
+        assert got == {p: d for p, d in dist.items() if d <= k}
+
+
+def test_simhash_pigeonhole_finds_pairs_equal_on_one_chunk(spark):
+    # hamming 3 with one flipped bit in each of three chunks: the pair
+    # agrees on chunk c only, for each c — every chunk's bucket must join
+    def signed(v):
+        return v - 2**64 if v >= 2**63 else v
+
+    base = 0x9E3779B97F4A7C15
+    rows = [(0, signed(base))]
+    for c in range(dedup.SIMHASH_CHUNKS):
+        flips = sum(1 << (16 * o + 5) for o in range(4) if o != c)
+        rows.append((c + 1, signed(base ^ flips)))
+    sig = spark.createDataFrame(rows, "id long, simhash long")
+    pairs = dedup.simhash_near_dup_pairs(None, max_hamming=3, sig=sig)
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
+    want = {(0, c): 3 for c in range(1, 5)}
+    want.update({(c, d): 2 for c in range(1, 5) for d in range(c + 1, 5)})
+    assert got == want
+
+
 # -------------------------------------------------------------- similarity
 def test_cosine_topk_matches_numpy(spark, emb):
     import numpy as np

@@ -4,13 +4,15 @@ DuckDB mirror cannot express or degenerate inputs it never sees.
 * contamination_ngram_sweep's per-n row contract on an eval side that
   produces zero grams for some n (the r14 ADVICE low — the r14 rewrite
   silently dropped those rows; the fix densifies over the swept ns).
-* simhash packed-lane tallies vs the former per-bit CASE-WHEN sums —
-  bit-identical signatures on adversarial tie/short-doc inputs (the
-  sf0.1 A/B pinned the corpus; this pins the edge cases).
+* simhash packed-lane tallies vs the former per-bit CASE-WHEN sums, for
+  both hash grades — bit-identical signatures on adversarial
+  tie/short-doc inputs (the sf0.1 A/B pinned the corpus; this pins the
+  edge cases).
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_auto_schema.ops import dedup
@@ -62,7 +64,34 @@ def test_contamination_sweep_mixed_gramless_n(spark):
     assert rows[8]["n_eval_grams_hit"] == 0
 
 
-def test_simhash_packed_lanes_tie_and_short_docs(spark):
+def _pre_r15_md5_tallies(tok):
+    # the md5 grade's former formulation: one +/-1 sum per hex digit
+    h_lo = F.md5(tok)
+    h_hi = F.md5(F.concat(F.lit("x:"), tok))
+    return [
+        F.sum(
+            F.when(
+                (F.substring(h_lo, i + 1, 1) if i < 32 else F.substring(h_hi, i - 31, 1))
+                >= "8",
+                1,
+            ).otherwise(-1)
+        ).alias(f"b{i}")
+        for i in range(64)
+    ]
+
+
+def _pre_r15_xxhash_tallies(tok):
+    h = F.xxhash64(tok)
+    return [
+        F.sum(
+            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+        ).alias(f"b{i}")
+        for i in range(64)
+    ]
+
+
+@pytest.mark.parametrize("md5_grade", [False, True], ids=["xxhash64", "md5"])
+def test_simhash_packed_lanes_tie_and_short_docs(spark, md5_grade):
     # ties (2*cnt == n) must NOT set the bit (the former sum(+/-1) > 0
     # rule); single-token and repeated-token docs exercise cnt in {0, n}
     docs = spark.createDataFrame(
@@ -71,33 +100,34 @@ def test_simhash_packed_lanes_tie_and_short_docs(spark):
             (2, "x"),
             (3, "x x x x x"),  # cnt is 0 or n on every bit
             (4, "a b c d e f g h"),
+            (5, " lead  and trail "),  # empty split tokens are dropped
         ],
         "doc_id long, text string",
     )
-    got = {r["id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
+    fn = dedup.simhash_md5 if md5_grade else dedup.simhash
+    got = {r["id"]: r["simhash"] for r in fn(docs).collect()}
 
     # reference: recompute with the pre-r15 formulation inline
     tokens = docs.select(
         F.col("doc_id").alias("id"),
         F.explode(F.split(F.col("text"), " ")).alias("tok"),
     ).where(F.length("tok") > 0)
-    h = F.xxhash64(F.col("tok"))
-    tallies = tokens.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(64)
-        ]
-    )
-    sig = None
-    for i in range(64):
-        bit = F.when(
-            F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = bit if sig is None else sig.bitwiseOR(bit)
+    tally = _pre_r15_md5_tallies if md5_grade else _pre_r15_xxhash_tallies
+    tallies = tokens.groupBy("id").agg(*tally(F.col("tok")))
+    if md5_grade:
+        sig = F.concat(
+            *[
+                F.when(F.col(f"b{i}") > 0, F.lit("1")).otherwise(F.lit("0"))
+                for i in range(64)
+            ]
+        )
+    else:
+        sig = None
+        for i in range(64):
+            bit = F.when(
+                F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
+            ).otherwise(F.lit(0).cast("long"))
+            sig = bit if sig is None else sig.bitwiseOR(bit)
     want = {
         r["id"]: r["ref"]
         for r in tallies.select("id", sig.alias("ref")).collect()

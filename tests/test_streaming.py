@@ -96,6 +96,20 @@ def test_drift_monitor_silent_when_clean(spark, events_dir):
     assert seen == []
 
 
+def test_drift_monitor_uses_catalog_diff_rule(spark):
+    # alias spellings of one type class are not drift, an all-null column
+    # (notype) is not MISSING, and DEPRECATED rows carry the deployed type
+    batch = spark.createDataFrame(
+        [(1, "a", None), (2, "b", None)], "id int, name string, empty string"
+    )
+    baseline = {"id": "integer", "name": "character varying(256)", "old": "date"}
+    seen: list = []
+    SchemaDriftMonitor(baseline, lambda bid, drift: seen.append((bid, drift)))(batch, 7)
+    assert seen == [
+        (7, [{"field": "old", "reason": "DEPRECATED", "proposed": None, "deployed": "date"}])
+    ]
+
+
 def test_running_user_stats_stateful(spark, events_dir):
     from spark_auto_schema.streaming import running_user_stats_stream
 
