@@ -60,6 +60,18 @@ def hash_dedup(
 
 
 # ------------------------------------------------------------- shingling
+def _word_ngrams(text: Column, n: int) -> Column:
+    """Word ``n``-grams of ``text`` split on single spaces, in order,
+    duplicates kept: for each word start, the ``n`` words from there joined
+    by single spaces.  One ``regexp_extract_all`` with a literal (compiled
+    once) pattern: a zero-width match at each word start whose lookahead
+    captures the next ``n`` words.  A text of fewer than ``n`` words yields
+    itself (the short-doc clamp); a NULL text yields ``['']``."""
+    t = F.coalesce(text, F.lit(""))
+    g = F.regexp_extract_all(t, F.lit("(?<=^| )(?=([^ ]*" + " [^ ]*" * (n - 1) + "))"), 1)
+    return F.when(F.size(g) == 0, F.array(t)).otherwise(g)
+
+
 def shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -69,16 +81,13 @@ def shingles(
 ) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).
 
-    Built-ins only: split -> transform over an index sequence -> explode.
+    Built-ins only: one ``regexp_extract_all`` (:func:`_word_ngrams`) ->
+    array_distinct -> explode.
     With ``hashed=True`` the shingle column is its xxhash64 (a long): joins
     and set sizes are collision-free w.h.p. while the shuffle moves 8-byte
     keys instead of strings — the 100 TB configuration.
     """
-    words = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
+    grams = _word_ngrams(F.col(text_col), n)
     out = (
         df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(grams)).alias("shingle"))
         .where(F.length("shingle") > 0)
@@ -640,6 +649,32 @@ def repeated_ngram_coverage(
 
 
 # ------------------------------------------------- segment-level dedup
+def _word_segments(
+    df: DataFrame, text: Column, seg_words: int, *keep: Column
+) -> DataFrame:
+    """Fixed ``seg_words``-word segments of ``text`` split on single spaces:
+    ``(*keep, __s, __seg)`` with ``__s`` the 0-based segment index, one row
+    per segment and at least one per input row (an empty or NULL text
+    yields segment 0 = '').  One narrow explode, no shuffle."""
+    words = F.split(F.coalesce(text, F.lit("")), " ")
+    starts = F.sequence(
+        F.lit(0),
+        F.greatest(
+            F.ceil(F.size(words) / F.lit(seg_words)).cast("int") - 1, F.lit(0)
+        ),
+    )
+    return (
+        df.select(*keep, F.explode(starts).alias("__s"), words.alias("__w"))
+        .withColumn(
+            "__seg",
+            F.concat_ws(
+                " ", F.slice(F.col("__w"), F.col("__s") * seg_words + 1, seg_words)
+            ),
+        )
+        .drop("__w")
+    )
+
+
 def segment_dedup(
     df: DataFrame,
     seg_words: int = 8,
@@ -666,24 +701,9 @@ def segment_dedup(
     re-shuffles only (doc_id, kept flag, digest-sized rows).  No joins, no
     pair generation; cost is linear in corpus word count.
     """
-    words = F.split(F.col(text_col), " ")
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.ceil(F.size(words) / F.lit(seg_words)).cast("int") - 1, F.lit(0)
-        ),
-    )
-    segs = df.select(
-        F.col(id_col).alias("id"), F.explode(starts).alias("seg_idx"), words.alias("__w")
-    ).select(
-        "id",
-        "seg_idx",
-        F.concat_ws(
-            " ", F.slice(F.col("__w"), F.col("seg_idx") * seg_words + 1, seg_words)
-        ).alias("seg"),
-    )
+    segs = _word_segments(df, F.col(text_col), seg_words, F.col(id_col).alias("id"))
     first = F.row_number().over(
-        Window.partitionBy(F.md5(F.col("seg"))).orderBy("id", "seg_idx")
+        Window.partitionBy(F.md5(F.col("__seg"))).orderBy("id", "__s")
     )
     kept = segs.withColumn("keep", first == 1)
     return (
@@ -698,11 +718,11 @@ def segment_dedup(
                         F.collect_list(
                             F.when(
                                 F.col("keep"),
-                                F.struct(F.col("seg_idx"), F.col("seg")),
+                                F.struct(F.col("__s"), F.col("__seg")),
                             )
                         )
                     ),
-                    lambda s: s["seg"],
+                    lambda s: s["__seg"],
                 ),
             ).alias("clean_text"),
         )
@@ -950,37 +970,31 @@ def contamination_ngram_sweep(
     the eval gram universe also changes with n.
 
     Scale: ONE in-scan gram explode of each side carrying every sweep
-    value as an n-tag (the per-n gram arrays are concatenated row-locally
-    before a single explode, so the corpus is scanned ONCE for the whole
-    sweep, not once per n), the eval side collapsed to a DISTINCT
-    broadcast set (the eval corpus is small BY CONTRACT — it is a
-    benchmark), one broadcast (n, shingle) join over the tagged train
+    value as an n-tag (one row-local ``(n, grams)`` struct per swept n,
+    exploded and then its grams exploded inside the same scan stage, so
+    the corpus is scanned ONCE for the whole sweep, not once per n), the
+    eval side collapsed to a DISTINCT broadcast set (the eval corpus is
+    small BY CONTRACT — it is a benchmark), one broadcast (n, shingle) join over the tagged train
     grams, and one pair of per-n count-distinct aggregates; never an
     all-pairs or train-side distinct-gram materialization.  The final
     result is |ns| rows."""
     snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
 
     def tagged_grams(df: DataFrame) -> DataFrame:
-        # identical per-n gram construction to shingles(); tagged structs
-        # concatenated so one scan+explode serves every n in the sweep
-        words = F.split(F.col(text_col), " ")
-
-        def per_n(n: int):
-            grams = F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-            )
-            return F.transform(
-                F.array_distinct(grams),
-                lambda g: F.struct(F.lit(n).alias("n"), g.alias("shingle")),
-            )
-
+        # identical per-n gram construction to shingles(); one (n, grams)
+        # struct per swept n, so one scan+explode serves every n in the sweep
+        per_n = F.array(
+            *[
+                F.struct(
+                    F.lit(n).alias("n"),
+                    F.array_distinct(_word_ngrams(F.col(text_col), n)).alias("gs"),
+                )
+                for n in ns
+            ]
+        )
         return (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.explode(F.concat(*[per_n(n) for n in ns])).alias("g"),
-            )
-            .select("id", F.col("g.n").alias("n"), F.col("g.shingle").alias("shingle"))
+            df.select(F.col(id_col).alias("id"), F.explode(per_n).alias("g"))
+            .select("id", F.col("g.n").alias("n"), F.explode("g.gs").alias("shingle"))
             .where(F.length("shingle") > 0)
         )
 
@@ -1733,24 +1747,9 @@ def remove_boilerplate(
     usually tiny, but the join is digest-keyed and safe even when it is
     not.  No pair generation anywhere; linear in corpus word count.
     """
-    words = F.split(F.col(text_col), " ")
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.ceil(F.size(words) / F.lit(seg_words)).cast("int") - 1, F.lit(0)
-        ),
-    )
-    segs = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(starts).alias("seg_idx"),
-        words.alias("__w"),
-    ).select(
-        "id",
-        "seg_idx",
-        F.concat_ws(
-            " ", F.slice(F.col("__w"), F.col("seg_idx") * seg_words + 1, seg_words)
-        ).alias("seg"),
-    ).withColumn("__d", F.md5(F.col("seg")))
+    segs = _word_segments(
+        df, F.col(text_col), seg_words, F.col(id_col).alias("id")
+    ).withColumn("__d", F.md5(F.col("__seg")))
     boiler = (
         segs.groupBy("__d")
         .agg(F.count_distinct("id").alias("__df"))
@@ -1772,11 +1771,11 @@ def remove_boilerplate(
                         F.collect_list(
                             F.when(
                                 F.col("keep"),
-                                F.struct(F.col("seg_idx"), F.col("seg")),
+                                F.struct(F.col("__s"), F.col("__seg")),
                             )
                         )
                     ),
-                    lambda s: s["seg"],
+                    lambda s: s["__seg"],
                 ),
             ).alias("clean_text"),
         )
@@ -2665,22 +2664,10 @@ def paragraph_minhash_pairs(
     linear in corpus size); pair generation stays bucket-local, never
     all-pairs; the doc-pair rollup is one aggregate over the verified
     segment pairs (each <= the near-dup volume, not the corpus)."""
-    words = F.split(F.col(text_col), " ")
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.ceil(F.size(words) / F.lit(seg_words)).cast("int") - 1, F.lit(0)
-        ),
-    )
-    segs = df.select(
-        F.col(id_col).cast("string").alias("__d"),
-        F.explode(starts).alias("__s"),
-        words.alias("__w"),
+    segs = _word_segments(
+        df, F.col(text_col), seg_words, F.col(id_col).cast("string").alias("__d")
     ).select(
-        F.concat_ws(":", "__d", "__s").alias("sid"),
-        F.concat_ws(
-            " ", F.slice(F.col("__w"), F.col("__s") * seg_words + 1, seg_words)
-        ).alias("seg"),
+        F.concat_ws(":", "__d", "__s").alias("sid"), F.col("__seg").alias("seg")
     )
     pairs = minhash_lsh_pairs_md5(
         segs,
@@ -2750,25 +2737,8 @@ def paragraph_dedup_provenance(
     min-(doc, seg)-per-victim attribution (pair-sized) and joined back
     unhinted.  Output is |segments| rows; every intermediate is the
     paragraph-dedup pipeline the corpus already pays for."""
-    words = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(
-            F.ceil(F.size(words) / F.lit(seg_words)).cast("int") - 1, F.lit(0)
-        ),
-    )
-    segs = df.select(
-        F.col(id_col).alias("__doc"),
-        F.col(group_col),
-        F.explode(starts).alias("__s"),
-        words.alias("__w"),
-    ).select(
-        F.col("__doc"),
-        F.col(group_col),
-        F.col("__s"),
-        F.concat_ws(
-            " ", F.slice(F.col("__w"), F.col("__s") * seg_words + 1, seg_words)
-        ).alias("__seg"),
+    segs = _word_segments(
+        df, F.col(text_col), seg_words, F.col(id_col).alias("__doc"), F.col(group_col)
     )
     w = Window.partitionBy("__dg").orderBy(F.col("__doc"), F.col("__s"))
     marked = persist(

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
+from .dedup import _word_ngrams
 
 # Stopword profiles for the n-gram/stopword-hit language heuristic.
 # Deterministic and tiny by design: language ID at scale must stay JVM-side.
@@ -236,13 +237,10 @@ def repetition_ratio(
     word 3-grams within the document.  1.0 - distinct/total; 0 for text with
     no repeated 3-grams, approaching 1 for highly repetitive boilerplate.
 
-    Computed with array higher-order functions on the row — no explode, no
+    Computed with array functions on the row (one ``regexp_extract_all``
+    for the grams, then ``size`` and ``array_distinct``) — no explode, no
     shuffle: the per-document gram list never leaves its row."""
-    words = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)),
-    )
+    grams = _word_ngrams(F.col(text_col), 3)
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
     return df.select(
@@ -420,11 +418,7 @@ def tfidf_top_pairs(
     term text, so the rewrite is semantics-preserving up to 64-bit hash
     collisions (~n_terms^2 / 2^64 — negligible at any corpus size where
     this operator is usable)."""
-    words = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
+    grams = _word_ngrams(F.col(text_col), n)
     toks = (
         df.select(F.col(id_col).alias("id"), F.explode(grams).alias("__g"))
         .where(F.length("__g") > 0)

@@ -92,6 +92,43 @@ def test_shingles(spark):
     assert got == {"a b c", "b c d"}
 
 
+_NGRAM_EDGE_TEXTS = [
+    None, "", " ", "  ", "a", "a b", "a b c", "a b c d e f g h i j",
+    " lead", "trail ", "  both  ", "a  b", "a   b  c", "a\tb c", "x\ny z w",
+    "é ü 北京 ß", "ab cd ab cd ab cd", "a a a a a a a a a",
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5, 8])
+def test_word_ngrams_matches_lambda_form(spark, n):
+    import random
+
+    rng = random.Random(n)
+    vocab = ["", "", "a", "bb", "cé", "d\te", "f\ng", "北"]
+    rand = [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 12)))
+        for _ in range(300)
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(_NGRAM_EDGE_TEXTS + rand)],
+        "i long, text string",
+    )
+    # reference: the per-element lambda form the regex replaced
+    words = F.split(F.col("text"), " ")
+    ref = F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+    )
+    got = dedup._word_ngrams(F.col("text"), n)
+    assert df.where(~got.eqNullSafe(ref)).count() == 0
+
+
+def test_repetition_ratio_null_and_empty_text_is_zero(spark):
+    df = spark.createDataFrame([(1, None), (2, "")], "doc_id long, text string")
+    got = {r["doc_id"]: r["rep_ratio"] for r in text.repetition_ratio(df).collect()}
+    assert got == {1: 0.0, 2: 0.0}
+
+
 def test_ngram_jaccard_finds_clones(spark, docs_with_dups):
     pairs = dedup.ngram_jaccard_pairs(docs_with_dups, threshold=0.999)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}

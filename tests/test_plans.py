@@ -1599,3 +1599,20 @@ def test_jaccard_tail_carries_sizes_through_pair_agg(spark):
     assert out.exceptAll(ref).count() == 0
     assert ref.exceptAll(out).count() == 0
     dedup.release_caches()
+
+
+def test_word_ngrams_are_one_regex_not_a_lambda(spark):
+    # word n-grams come from one compiled regexp_extract_all; a per-element
+    # transform(sequence, i -> concat_ws(slice)) lambda must not come back
+    from spark_auto_schema.ops import dedup, text
+
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    for out in (
+        dedup.shingles(df),
+        text.repetition_ratio(df),
+        dedup.contamination_ngram_sweep(df, df, ns=(2, 3)),
+    ):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "regexp_extract_all" in plan
+        assert "lambdafunction" not in plan
+    dedup.release_caches()
