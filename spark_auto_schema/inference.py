@@ -168,7 +168,6 @@ def _stat_sql(i: int, name: str, dtype: T.DataType) -> list[str]:
 
     exprs = [f"count({c}) AS {a}cnt"]
     if isinstance(dtype, _INTEGRAL_TYPES):
-        exprs.append(f"bool_and({c} IN (0, 1)) AS {a}b01")
         exprs.append(f"CAST(min({c}) AS BIGINT) AS {a}mn")
         exprs.append(f"CAST(max({c}) AS BIGINT) AS {a}mx")
     elif isinstance(dtype, T.DecimalType):
@@ -234,7 +233,8 @@ def _decide(
         return "int4" if identifier else "bool"
 
     if isinstance(dtype, _INTEGRAL_TYPES):
-        if s.get("b01") and not identifier:
+        # every non-null integer is 0 or 1 exactly when min >= 0 and max <= 1
+        if s["mn"] >= 0 and s["mx"] <= 1 and not identifier:
             return "bool"  # 0/1 columns are swallowed by the bool rule
         return _int_range(s.get("mn"), s.get("mx"))
 

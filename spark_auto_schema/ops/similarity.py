@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 
@@ -41,6 +42,12 @@ def _vec_lit(vec) -> Column:
     if _np is None:  # pragma: no cover — numpy ships with PySpark
         return F.array(*[F.lit(x) for x in xs])
     return F.lit(_np.asarray(xs, dtype=_np.float64))
+
+
+def _snap(c: Column) -> Column:
+    """A reported ratio snapped to 6 decimals through DECIMAL(18,12), so
+    the value is engine-stable."""
+    return F.round(c.cast("decimal(18,12)"), 6).cast("double")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -66,6 +73,76 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _qsim(vec: Column, vn: Column) -> Column:
+    """Cosine of a corpus vector (norm ``vn``) against the query vector of
+    the joined query row ``(qvec, qn)`` — the one similarity every search
+    and recall path ranks by."""
+    return dot(vec, F.col("qvec")) / (vn * F.col("qn"))
+
+
+def _with_norm(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """``(id, vec, vn)``: each corpus vector's norm once per row, before
+    any fan-out, so the per-pair work is one dot product."""
+    return df.select(
+        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("vn")
+    )
+
+
+def _query_rows(
+    df: DataFrame, match: Column, vec_col: str, id_col: str, *carry: Column
+) -> DataFrame:
+    """``(qid, qvec, qn, *carry)`` for the query rows ``match`` selects:
+    the query-side frame every search broadcasts into the corpus scan."""
+    return df.where(match).select(
+        F.col(id_col).alias("qid"),
+        F.col(vec_col).alias("qvec"),
+        norm(F.col(vec_col)).alias("qn"),
+        *carry,
+    )
+
+
+def _panel_sims(
+    base: DataFrame,
+    qs: DataFrame,
+    vec_col: str,
+    id_col: str,
+    keep: Column | None = None,
+) -> DataFrame:
+    """``(qid, id, sim)``: the cosine of every ``base`` row ``(id, vec,
+    vn)`` against every query row of ``qs`` but itself, optionally only
+    where ``keep`` holds.  The query side is a broadcast frame, so the
+    fan-out never shuffles the corpus."""
+    pair = F.col(id_col) != F.col("qid")
+    return (
+        base.crossJoin(F.broadcast(qs))
+        .where(pair if keep is None else keep & pair)
+        .select(
+            "qid",
+            F.col(id_col),
+            _qsim(F.col(vec_col), F.col("vn")).alias("sim"),
+        )
+    )
+
+
+def _topk_one(
+    base: DataFrame,
+    q: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    keep: Column | None = None,
+) -> DataFrame:
+    """``(id, cos_sim)`` for the single-query searches: the k ``base`` rows
+    most cosine-similar to the one-row query frame ``q``, cos_sim rounded
+    to 4, ties broken by id — a TakeOrdered k-heap, never a global sort."""
+    return (
+        _panel_sims(base, q, vec_col, id_col, keep)
+        .select(F.col(id_col), F.round(F.col("sim"), 4).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query_id: int,
@@ -80,18 +157,12 @@ def cosine_topk(
     one row — no data-sized shuffle."""
     # query norm is computed once in the broadcast row; each corpus vector's
     # norm once per row — the per-row work is one dot product + one norm
-    q = df.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("q"), norm(F.col(vec_col)).alias("qn")
-    )
-    sim = F.round(
-        dot(F.col(vec_col), F.col("q")) / (norm(F.col(vec_col)) * F.col("qn")), 4
-    )
-    return (
-        df.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _topk_one(
+        _with_norm(df, vec_col, id_col),
+        _query_rows(df, F.col(id_col) == query_id, vec_col, id_col),
+        k,
+        vec_col,
+        id_col,
     )
 
 
@@ -114,6 +185,39 @@ def lsh_signature(
     return sig.cast("int")
 
 
+def _lsh_tables(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    num_planes: int,
+    num_tables: int,
+    dim: int,
+    seed: int,
+) -> tuple[DataFrame, Column]:
+    """The multi-table random-hyperplane index of the LSH searches:
+    ``(id, vec, vn, sig0..)`` — one in-scan signature column per table —
+    and the collision predicate a row meets when it shares the query row's
+    bucket (``qsig{t}``) in ANY table."""
+    sigs = _with_norm(df, vec_col, id_col).select(
+        "*",
+        *[
+            lsh_signature(
+                F.col(vec_col), _hyperplanes(dim, num_planes, seed + 1000 * t)
+            ).alias(f"sig{t}")
+            for t in range(num_tables)
+        ],
+    )
+    collide = None
+    for t in range(num_tables):
+        c = F.col(f"sig{t}") == F.col(f"qsig{t}")
+        collide = c if collide is None else (collide | c)
+    return sigs, collide
+
+
+def _query_sigs(num_tables: int) -> list[Column]:
+    return [F.col(f"sig{t}").alias(f"qsig{t}") for t in range(num_tables)]
+
+
 def ann_lsh_topk(
     df: DataFrame,
     query_id: int,
@@ -131,35 +235,91 @@ def ann_lsh_topk(
     tables; they are reranked with exact cosine.  Recall improves with
     ``num_tables``; cost per query is the union of bucket sizes (corpus /
     2^num_planes expected per table), not the corpus."""
-    tables = [
-        _hyperplanes(dim, num_planes, seed + 1000 * t) for t in range(num_tables)
-    ]
-    sigs = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        *[
-            lsh_signature(F.col(vec_col), tables[t]).alias(f"sig{t}")
-            for t in range(num_tables)
-        ],
+    sigs, collide = _lsh_tables(
+        df, vec_col, id_col, num_planes, num_tables, dim, seed
     )
-    q = sigs.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("q"),
-        norm(F.col(vec_col)).alias("qn"),
-        *[F.col(f"sig{t}").alias(f"qsig{t}") for t in range(num_tables)],
+    q = _query_rows(
+        sigs, F.col(id_col) == query_id, vec_col, id_col, *_query_sigs(num_tables)
     )
-    collide = None
-    for t in range(num_tables):
-        c = F.col(f"sig{t}") == F.col(f"qsig{t}")
-        collide = c if collide is None else (collide | c)
-    sim = F.round(
-        dot(F.col(vec_col), F.col("q")) / (norm(F.col(vec_col)) * F.col("qn")), 4
-    )
+    return _topk_one(sigs, q, k, vec_col, id_col, collide)
+
+
+def _md5_sample(df: DataFrame, vec_col: str, id_col: str, n: int) -> DataFrame:
+    """``(cid, cvec)``: the deterministic FIXED-SIZE hash sample every
+    sampled coarse quantizer starts from — the ``n`` rows with the
+    smallest md5(id), ties broken by id; a TakeOrdered (k-heap per
+    partition), no full sort."""
     return (
-        sigs.crossJoin(F.broadcast(q))
-        .where(collide & (F.col(id_col) != query_id))
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+        df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        .orderBy(F.md5(F.col("cid").cast("string")), F.col("cid"))
+        .limit(n)
+    )
+
+
+def _sampled_cents(
+    df: DataFrame, vec_col: str, id_col: str, n: int
+) -> list[tuple[int, list[float]]]:
+    """The :func:`_md5_sample` centroids as the driver-side list the
+    assignment ops take, cids numbered 0.. in sample order."""
+    return [
+        (i, [float(x) for x in r["cvec"]])
+        for i, r in enumerate(_md5_sample(df, vec_col, id_col, n).collect())
+    ]
+
+
+def _ivf_quantizer(
+    df: DataFrame, vec_col: str, id_col: str, nlist: int
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF coarse quantizer: ``(cents, assigned)`` where ``cents`` =
+    ``(cid, cvec, cn)`` is the :func:`_md5_sample` of ``nlist`` vectors and
+    ``assigned`` = ``(id, vec, vn, cid)`` puts every vector in its
+    argmax-cosine list (ties to the smaller cid) through one window over
+    the broadcast |corpus| x nlist fan-out; vector norms are computed once
+    per row before the fan-out."""
+    cents = _md5_sample(df, vec_col, id_col, nlist).withColumn(
+        "cn", norm(F.col("cvec"))
+    )
+    scored = (
+        _with_norm(df, vec_col, id_col)
+        .crossJoin(F.broadcast(cents))
+        .select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.col("vn"),
+            F.col("cid"),
+            (
+                dot(F.col(vec_col), F.col("cvec")) / (F.col("vn") * F.col("cn"))
+            ).alias("csim"),
+        )
+    )
+    w = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cid"))
+    assigned = (
+        scored.withColumn("__rk", F.row_number().over(w))
+        .where(F.col("__rk") == 1)
+        .select(id_col, vec_col, "vn", "cid")
+    )
+    return cents, assigned
+
+
+def _probe_ranks(qs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """``(qid, qvec, qn, cid, crank)``: each query's ``nprobe`` nearest IVF
+    lists by cosine, ``crank`` 1 = nearest, ties to the smaller cid — one
+    rank window over the |queries| x nlist frame, no per-query loop."""
+    w = Window.partitionBy("qid").orderBy(F.col("csim").desc(), F.col("cid"))
+    return (
+        qs.crossJoin(F.broadcast(cents))
+        .select(
+            "qid",
+            "qvec",
+            "qn",
+            "cid",
+            (
+                dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
+            ).alias("csim"),
+        )
+        .withColumn("crank", F.row_number().over(w))
+        .where(F.col("crank") <= nprobe)
+        .select("qid", "qvec", "qn", "cid", "crank")
     )
 
 
@@ -188,58 +348,45 @@ def ivf_topk(
     |corpus| * nprobe / nlist rows, not the corpus.  Persisting the assigned
     table partitioned by ``centroid`` makes the probe a partition-pruned
     scan."""
-    from pyspark.sql.window import Window
-
-    cents = (
-        df.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            norm(F.col(vec_col)).alias("cn"),
-        )
-        .orderBy(F.md5(F.col("cid").cast("string")), F.col("cid"))
-        .limit(nlist)
-    )
-    # assignment: broadcast the (tiny) centroid table, argmin by cosine;
-    # vector norms computed once per row before the fan-out to |centroids|
-    scored = (
-        df.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("vn"))
-        .crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("cid"),
-            (
-                dot(F.col(vec_col), F.col("cvec")) / (F.col("vn") * F.col("cn"))
-            ).alias("csim"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cid"))
-    assigned = (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") == 1)
-        .select(id_col, vec_col, "cid")
-    )
+    cents, assigned = _ivf_quantizer(df, vec_col, id_col, nlist)
+    q = _query_rows(df, F.col(id_col) == query_id, vec_col, id_col)
     probe_cids = [
-        r["cid"]
-        for r in scored.where(F.col(id_col) == query_id)
-        .orderBy(F.col("csim").desc(), F.col("cid"))
-        .limit(nprobe)
-        .select("cid")
-        .collect()
+        r["cid"] for r in _probe_ranks(q, cents, nprobe).select("cid").collect()
     ]
-    q = df.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("q"), norm(F.col(vec_col)).alias("qn")
+    return _topk_one(
+        assigned.where(F.col("cid").isin(probe_cids)), q, k, vec_col, id_col
     )
-    sim = F.round(
-        dot(F.col(vec_col), F.col("q")) / (norm(F.col(vec_col)) * F.col("qn")), 4
-    )
+
+
+def _block_pairs(
+    df: DataFrame, block_col: str, vec_col: str, id_col: str, decimals: int
+) -> DataFrame:
+    """``(id_a, id_b, cos)``: every ``id_a < id_b`` pair of rows sharing
+    ``block_col``, with its cosine rounded to ``decimals`` — one hash
+    equi-join on the block key, each pair computed exactly once.  Norms
+    are computed ONCE per vector before the join (n rows), not once per
+    pair (n^2/blocks rows), so pair work is a single dot product."""
+
+    def side(s: str) -> DataFrame:
+        return df.select(
+            F.col(block_col).alias("blk"),
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(vec_col).alias(f"v{s}"),
+            norm(F.col(vec_col)).alias(f"n{s}"),
+        )
+
     return (
-        assigned.where(F.col("cid").isin(probe_cids))
-        .crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+        side("a")
+        .join(side("b"), "blk")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
+                decimals,
+            ).alias("cos"),
+        )
     )
 
 
@@ -258,30 +405,9 @@ def label_blocked_near_dup(
     n^2 cross join.  This is the exact-answer complement to the LSH path in
     :func:`embedding_near_dup_pairs` for corpora with natural block keys
     (class, source shard, language)."""
-    # norms are computed ONCE per vector before the join (n rows), not once
-    # per pair (n^2/blocks rows) — pair work is a single dot product
-    a = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        norm(F.col(vec_col)).alias("na"),
-    )
-    b = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col)).alias("nb"),
-    )
     return (
-        a.join(b, on="blk")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4
-            ).alias("cos_sim"),
-        )
+        _block_pairs(df, block_col, vec_col, id_col, 4)
+        .select("id_a", "id_b", F.col("cos").alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
 
@@ -344,6 +470,15 @@ def embedding_near_dup_pairs(
     )
 
 
+def _pos_sorted(field: str) -> Column:
+    """Reassemble a vector from exploded ``(pos, field)`` rows inside an
+    aggregate: the ``field`` values in position order."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("pos", field))),
+        lambda s: s[field],
+    )
+
+
 def _quant_coded(
     df: DataFrame, vec_col: str, id_col: str, levels: int
 ) -> DataFrame:
@@ -382,6 +517,18 @@ def _quant_coded(
     )
 
 
+def _dequantized(
+    df: DataFrame, vec_col: str, id_col: str, levels: int
+) -> DataFrame:
+    """``(id, vec)``: every vector as its dequantized :func:`_quant_coded`
+    codes — the corpus the quantized evals search and assign."""
+    return (
+        _quant_coded(df, vec_col, id_col, levels)
+        .groupBy(id_col)
+        .agg(_pos_sorted("dq").alias(vec_col))
+    )
+
+
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -405,10 +552,7 @@ def quantize_embeddings(
         "err", F.abs(F.col("v") - F.col("dq"))
     )
     return coded.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "code"))),
-            lambda s: s["code"],
-        ).alias("codes"),
+        _pos_sorted("code").alias("codes"),
         F.round(F.avg("err").cast("decimal(18,10)"), 6)
         .cast("double")
         .alias("mean_abs_err"),
@@ -437,6 +581,54 @@ def _sq_dist(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+def _scored_literal(
+    cents: list[tuple[int, list[float]]], vec_col: str, metric: str, key: str
+) -> Column:
+    """array<struct<d, key>>: the row's vector scored against every
+    literal centroid — the literal form of the centroid score.  ``d`` is
+    ``-cosine`` (``metric='cos'``) or squared L2 (``metric='l2'``), so the
+    smallest ``(d, key)`` struct is the nearest centroid, ties to the
+    smaller id.  The join form (:func:`_join_score`) evaluates the same
+    arithmetic, so both forms yield bit-identical doubles."""
+    v = F.col(vec_col)
+    if metric == "cos":
+        vn = norm(v)
+
+        def score(c: Column) -> Column:
+            return -(dot(v, c) / (vn * norm(c)))
+
+    else:
+
+        def score(c: Column) -> Column:
+            return _sq_dist(v, c)
+
+    return F.transform(
+        _centroid_literal(cents),
+        lambda s: F.struct(score(s["cvec"]).alias("d"), s["cid"].alias(key)),
+    )
+
+
+def _join_score(
+    left: DataFrame, cents: DataFrame, vec_col: str, metric: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The join form of the centroid score: ``(left, cents, d)`` for a
+    fan-out of ``left``'s vectors against the centroid frame's ``__cvec``,
+    ``d`` as in :func:`_scored_literal`.  For cosine the norms are added
+    once per side BEFORE the fan-out; norm() here is the identical
+    expression the literal form evaluates inline, so the downstream
+    products/divisions see bit-identical doubles."""
+    if metric == "cos":
+        left = left.withColumn("__vn", norm(F.col(vec_col)))
+        cents = cents.withColumn("__cn", norm(F.col("__cvec")))
+        d = -(
+            dot(F.col(vec_col), F.col("__cvec"))
+            / (F.col("__vn") * F.col("__cn"))
+        )
+    else:
+        d = _sq_dist(F.col(vec_col), F.col("__cvec"))
+    return left, cents, d
 
 
 # Centroid-assignment path cutover, as a LITERAL-NODE budget: at or below
@@ -504,12 +696,17 @@ def _two_level_params(k: int) -> tuple[int, int, int]:
     return m, gsz, -(-k // gsz)
 
 
-def _super_centroids(
-    ordered: list[tuple[int, list[float]]], gsz: int, ngroups: int
-) -> list[tuple[int, list[float]]]:
-    """Per-group mean super-centroids over cid-ORDERED members — a plain
-    left-to-right Python sum, the fold the oracles replay via
-    ``list_sum`` over cid-ordered lists (cross-engine stable)."""
+def _two_level_groups(
+    cents: list[tuple[int, list[float]]],
+) -> tuple[list[tuple[int, list[float]]], int, list[tuple[int, list[float]]]]:
+    """``(ordered, group_size, supers)`` for the two-level tier: the
+    cid-sorted centroids, cut into :func:`_two_level_params` contiguous
+    groups, and each group's mean super-centroid ``(gid, vector)`` — a
+    plain left-to-right Python sum over the cid-ORDERED members, the fold
+    the oracles replay via ``list_sum`` over cid-ordered lists
+    (cross-engine stable)."""
+    ordered = sorted(cents, key=lambda c: c[0])
+    _, gsz, ngroups = _two_level_params(len(ordered))
     dim = len(ordered[0][1])
     supers: list[tuple[int, list[float]]] = []
     for g in range(ngroups):
@@ -523,7 +720,7 @@ def _super_centroids(
                 ],
             )
         )
-    return supers
+    return ordered, gsz, supers
 
 
 def _centroid_frame(
@@ -532,8 +729,6 @@ def _centroid_frame(
     """k-row (``__cid`` int, ``__cvec`` array<double>) DataFrame from a
     driver-side centroid list — the join-path twin of
     :func:`_centroid_literal`."""
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("__cid", T.IntegerType(), False),
@@ -544,6 +739,91 @@ def _centroid_frame(
     )
     return df.sparkSession.createDataFrame(
         [(int(cid), [float(x) for x in vec]) for cid, vec in cents], schema
+    )
+
+
+def _coarse_fanout(
+    left: DataFrame,
+    supers: list[tuple[int, list[float]]],
+    vec_col: str,
+    metric: str,
+) -> tuple[DataFrame, Column]:
+    """The two-level tier's coarse step above the literal-node budget:
+    ``left``'s vectors fanned out against the m-row broadcast
+    super-centroid frame (``__gid``, ``__cvec``), with the score
+    column."""
+    sdf = _centroid_frame(left, supers).withColumnRenamed("__cid", "__gid")
+    left, sdf, d = _join_score(left, sdf, vec_col, metric)
+    return left.crossJoin(F.broadcast(sdf)), d
+
+
+def _refine_pairs(
+    probed: DataFrame,
+    ordered: list[tuple[int, list[float]]],
+    gsz: int,
+    vec_col: str,
+    id_col: str,
+    metric: str,
+    *carry: Column,
+) -> DataFrame:
+    """The two-level tier's refine step: ``(id, *carry, __d, __cid)`` —
+    every probed ``(id, vec, __gid)`` row scored against the centroids of
+    its group through a hash EQUI-join on the group id.  The
+    ``(__cid, __cvec, __gid)`` frame (``__gid`` = position in the
+    cid-sorted list // ``gsz``) is broadcast when it fits
+    ``_CENTROID_BROADCAST_BYTE_BUDGET``, otherwise left unhinted so the
+    planner/AQE may shuffle on the group id instead."""
+    schema = T.StructType(
+        [
+            T.StructField("__cid", T.IntegerType(), False),
+            T.StructField("__cvec", T.ArrayType(T.DoubleType(), False), False),
+            T.StructField("__gid", T.IntegerType(), False),
+        ]
+    )
+    cdf = probed.sparkSession.createDataFrame(
+        [
+            (int(cid), [float(x) for x in vec], idx // gsz)
+            for idx, (cid, vec) in enumerate(ordered)
+        ],
+        schema,
+    )
+    probed, cdf, d = _join_score(probed, cdf, vec_col, metric)
+    right = (
+        F.broadcast(cdf)
+        if _centroid_bytes(ordered) <= _CENTROID_BROADCAST_BYTE_BUDGET
+        else cdf
+    )
+    return probed.join(right, "__gid").select(
+        F.col(id_col), *carry, d.alias("__d"), F.col("__cid")
+    )
+
+
+def _argmin(
+    pairs: DataFrame, vec_col: str, id_col: str, keep_vec: bool
+) -> DataFrame:
+    """``(id, [vector,] cluster, __score)`` from a scored
+    ``(id, __d, __cid[, vector])`` fan-out: one ``min(struct(score, cid,
+    ...))`` hash aggregate keyed on id — smallest score, ties to the
+    smallest cid; map-side partial combine collapses the fan-out before
+    the exchange, so the shuffle carries one row per input vector.
+
+    Callers project the score to the NARROW ``__d`` column first:
+    min(struct) compiles to SortAggregate, whose sort runs on the
+    aggregate's CHILD rows — with the score inline those rows carry both
+    full vector arrays (the fan-out spilled ~1 KB/row at n=60k x k=4096
+    in the r14 probe); pre-projected, the sort rows are (id, double,
+    int) [+ the kept vec], bit-identical results."""
+    fields = [F.col("__d").alias("d"), F.col("__cid").alias("cid")]
+    cols = [F.col(id_col)]
+    if keep_vec:
+        fields.append(F.col(vec_col).alias("v"))
+        cols.append(F.col("b.v").alias(vec_col))
+    return (
+        pairs.groupBy(id_col)
+        .agg(F.min(F.struct(*fields)).alias("b"))
+        .select(
+            *cols, F.col("b.cid").alias("cluster"), F.col("b.d").alias("__score")
+        )
     )
 
 
@@ -617,72 +897,25 @@ def _assign_nearest(
             df, cents, vec_col, id_col, metric, keep_vec, probe
         )
 
+    keep = [F.col(vec_col)] if keep_vec else []
     if _literal_nodes(cents) <= _LITERAL_ASSIGN_NODE_BUDGET:
-        if metric == "cos":
-            vn = norm(F.col(vec_col))
-
-            def score(cvec: Column) -> Column:
-                return -(dot(F.col(vec_col), cvec) / (vn * norm(cvec)))
-
-        else:
-
-            def score(cvec: Column) -> Column:
-                return _sq_dist(F.col(vec_col), cvec)
-
-        lit = _centroid_literal(cents)
-        scored = F.transform(
-            lit,
-            lambda s: F.struct(
-                score(s["cvec"]).alias("d"), s["cid"].alias("cid")
-            ),
-        )
-        best = F.array_min(scored)
-        cols = [F.col(id_col)]
-        if keep_vec:
-            cols.append(F.col(vec_col))
+        best = F.array_min(_scored_literal(cents, vec_col, metric, "cid"))
         return df.select(
-            *cols,
+            F.col(id_col),
+            *keep,
             best["cid"].alias("cluster"),
             best["d"].alias("__score"),
         )
-    cdf = _centroid_frame(df, cents)
-    left = df.select(F.col(id_col), F.col(vec_col))
-    if metric == "cos":
-        # norms once per side BEFORE the n*k fan-out; norm() here is the
-        # identical expression the literal path evaluates inline, so the
-        # downstream products/divisions see bit-identical doubles
-        cdf = cdf.withColumn("__cn", norm(F.col("__cvec")))
-        left = left.withColumn("__vn", norm(F.col(vec_col)))
-        d = -(
-            dot(F.col(vec_col), F.col("__cvec"))
-            / (F.col("__vn") * F.col("__cn"))
-        )
-    else:
-        d = _sq_dist(F.col(vec_col), F.col("__cvec"))
-    # project the score to a NARROW column before the argmin aggregate:
-    # min(struct) compiles to SortAggregate, whose sort runs on the
-    # aggregate's CHILD rows — with the score inline those rows carry
-    # both full vector arrays (the fan-out spilled ~1 KB/row at
-    # n=60k x k=4096 in the r14 probe); pre-projected, the sort rows are
-    # (id, double, int) [+ the kept vec], bit-identical results
-    proj = [F.col(id_col), d.alias("__d"), F.col("__cid")]
-    if keep_vec:
-        proj.append(F.col(vec_col))
-    fields = [F.col("__d").alias("d"), F.col("__cid").alias("cid")]
-    if keep_vec:
-        fields.append(F.col(vec_col).alias("v"))
-    best = (
-        left.crossJoin(F.broadcast(cdf))
-        .select(*proj)
-        .groupBy(id_col)
-        .agg(F.min(F.struct(*fields)).alias("b"))
+    left, cdf, d = _join_score(
+        df.select(F.col(id_col), F.col(vec_col)),
+        _centroid_frame(df, cents),
+        vec_col,
+        metric,
     )
-    cols = [F.col(id_col)]
-    if keep_vec:
-        cols.append(F.col("b.v").alias(vec_col))
-    return best.select(
-        *cols, F.col("b.cid").alias("cluster"), F.col("b.d").alias("__score")
+    pairs = left.crossJoin(F.broadcast(cdf)).select(
+        F.col(id_col), d.alias("__d"), F.col("__cid"), *keep
     )
+    return _argmin(pairs, vec_col, id_col, keep_vec)
 
 
 def _assign_nearest_two_level(
@@ -728,10 +961,8 @@ def _assign_nearest_two_level(
     ``ceil(m * _TWO_LEVEL_DEFAULT_PROBE_FRAC)``."""
     import math
 
-    ordered = sorted(cents, key=lambda c: c[0])
-    k = len(ordered)
-    m, gsz, ngroups = _two_level_params(k)
-    supers = _super_centroids(ordered, gsz, ngroups)
+    ordered, gsz, supers = _two_level_groups(cents)
+    ngroups = len(supers)
     if probe is None:
         probe = max(1, math.ceil(ngroups * _TWO_LEVEL_DEFAULT_PROBE_FRAC))
     probe = min(int(probe), ngroups)
@@ -739,70 +970,27 @@ def _assign_nearest_two_level(
     left = df.select(F.col(id_col), F.col(vec_col))
     if _literal_nodes(supers) <= _LITERAL_ASSIGN_NODE_BUDGET:
         # zero-shuffle coarse: literal super array, row-local top-probe
-        if metric == "cos":
-            vn = norm(F.col(vec_col))
-
-            def cscore(gvec: Column) -> Column:
-                return -(dot(F.col(vec_col), gvec) / (vn * norm(gvec)))
-
-        else:
-
-            def cscore(gvec: Column) -> Column:
-                return _sq_dist(F.col(vec_col), gvec)
-
-        # one ndarray literal per super-centroid (_vec_lit: a single
-        # Literal node vs d CreateArray children — 2x cheaper to plan,
-        # bit-identical doubles)
-        slit = F.array(
-            *[
-                F.struct(
-                    F.lit(g).alias("gid"),
-                    _vec_lit(gv).alias("gvec"),
-                )
-                for g, gv in supers
-            ]
+        probes = F.slice(
+            F.array_sort(_scored_literal(supers, vec_col, metric, "gid")),
+            1,
+            probe,
         )
-        scored = F.transform(
-            slit,
-            lambda s: F.struct(
-                cscore(s["gvec"]).alias("d"), s["gid"].alias("gid")
-            ),
-        )
-        probes = F.slice(F.array_sort(scored), 1, probe)
         probed = left.withColumn(
             "__gid", F.explode(F.transform(probes, lambda p: p["gid"]))
         )
     else:
-        sdf = _centroid_frame(df, supers).withColumnRenamed(
-            "__cid", "__gid"
-        )
-        if metric == "cos":
-            sdf = sdf.withColumn("__sn", norm(F.col("__cvec")))
-            cleft = left.withColumn("__vn", norm(F.col(vec_col)))
-            cd = -(
-                dot(F.col(vec_col), F.col("__cvec"))
-                / (F.col("__vn") * F.col("__sn"))
-            )
-        else:
-            cleft = left
-            cd = _sq_dist(F.col(vec_col), F.col("__cvec"))
-        top = (
-            cleft.crossJoin(F.broadcast(sdf))
-            .groupBy(id_col)
-            .agg(
-                F.first(F.col(vec_col)).alias(vec_col),
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                cd.alias("d"), F.col("__gid").alias("gid")
-                            )
-                        )
-                    ),
-                    1,
-                    probe,
-                ).alias("__probes"),
-            )
+        fan, cd = _coarse_fanout(left, supers, vec_col, metric)
+        top = fan.groupBy(id_col).agg(
+            F.first(F.col(vec_col)).alias(vec_col),
+            F.slice(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(cd.alias("d"), F.col("__gid").alias("gid"))
+                    )
+                ),
+                1,
+                probe,
+            ).alias("__probes"),
         )
         probed = top.select(
             F.col(id_col),
@@ -811,60 +999,9 @@ def _assign_nearest_two_level(
                 F.transform(F.col("__probes"), lambda p: p["gid"])
             ).alias("__gid"),
         )
-
-    from pyspark.sql import types as T
-
-    cschema = T.StructType(
-        [
-            T.StructField("__cid", T.IntegerType(), False),
-            T.StructField("__cvec", T.ArrayType(T.DoubleType(), False), False),
-            T.StructField("__gid", T.IntegerType(), False),
-        ]
-    )
-    cdf = df.sparkSession.createDataFrame(
-        [
-            (int(cid), [float(x) for x in vec], idx // gsz)
-            for idx, (cid, vec) in enumerate(ordered)
-        ],
-        cschema,
-    )
-    if metric == "cos":
-        # identical refine expression to the flat join path: norms once
-        # per side, one dot per pair — bit-identical doubles
-        cdf = cdf.withColumn("__cn", norm(F.col("__cvec")))
-        probed = probed.withColumn("__vn", norm(F.col(vec_col)))
-        d = -(
-            dot(F.col(vec_col), F.col("__cvec"))
-            / (F.col("__vn") * F.col("__cn"))
-        )
-    else:
-        d = _sq_dist(F.col(vec_col), F.col("__cvec"))
-    right = (
-        F.broadcast(cdf)
-        if _centroid_bytes(cents) <= _CENTROID_BROADCAST_BYTE_BUDGET
-        else cdf
-    )
-    # same narrow pre-projection as the flat path (see the comment
-    # there): evaluate the refine score before the SortAggregate so its
-    # sort rows drop the centroid array
-    proj = [F.col(id_col), d.alias("__d"), F.col("__cid")]
-    if keep_vec:
-        proj.append(F.col(vec_col))
-    fields = [F.col("__d").alias("d"), F.col("__cid").alias("cid")]
-    if keep_vec:
-        fields.append(F.col(vec_col).alias("v"))
-    best = (
-        probed.join(right, "__gid")
-        .select(*proj)
-        .groupBy(id_col)
-        .agg(F.min(F.struct(*fields)).alias("b"))
-    )
-    cols = [F.col(id_col)]
-    if keep_vec:
-        cols.append(F.col("b.v").alias(vec_col))
-    return best.select(
-        *cols, F.col("b.cid").alias("cluster"), F.col("b.d").alias("__score")
-    )
+    keep = [F.col(vec_col)] if keep_vec else []
+    pairs = _refine_pairs(probed, ordered, gsz, vec_col, id_col, metric, *keep)
+    return _argmin(pairs, vec_col, id_col, keep_vec)
 
 
 def save_centroids(
@@ -886,8 +1023,6 @@ def save_centroids(
     regardless of corpus size."""
     if not cents:
         raise ValueError("save_centroids: empty centroid list")
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("cid", T.IntegerType(), False),
@@ -970,47 +1105,15 @@ def two_level_probe_sweep(
     corpus at 100 TB), exactly like the recall panels."""
     if metric not in ("cos", "l2"):
         raise ValueError(f"metric must be 'cos' or 'l2', got {metric!r}")
-    ordered = sorted(cents, key=lambda c: c[0])
-    k = len(ordered)
-    m, gsz, ngroups = _two_level_params(k)
-    supers = _super_centroids(ordered, gsz, ngroups)
+    ordered, gsz, supers = _two_level_groups(cents)
+    ngroups = len(supers)
     plist = sorted(
         {min(int(p), ngroups) for p in probes if int(p) > 0} | {ngroups}
     )
 
     left = df.select(F.col(id_col), F.col(vec_col))
     if _literal_nodes(supers) <= _LITERAL_ASSIGN_NODE_BUDGET:
-        if metric == "cos":
-            vn = norm(F.col(vec_col))
-
-            def cscore(gvec: Column) -> Column:
-                return -(dot(F.col(vec_col), gvec) / (vn * norm(gvec)))
-
-        else:
-
-            def cscore(gvec: Column) -> Column:
-                return _sq_dist(F.col(vec_col), gvec)
-
-        # one ndarray literal per super-centroid (_vec_lit: a single
-        # Literal node vs d CreateArray children — 2x cheaper to plan,
-        # bit-identical doubles)
-        slit = F.array(
-            *[
-                F.struct(
-                    F.lit(g).alias("gid"),
-                    _vec_lit(gv).alias("gvec"),
-                )
-                for g, gv in supers
-            ]
-        )
-        scored_arr = F.array_sort(
-            F.transform(
-                slit,
-                lambda s: F.struct(
-                    cscore(s["gvec"]).alias("d"), s["gid"].alias("gid")
-                ),
-            )
-        )
+        scored_arr = F.array_sort(_scored_literal(supers, vec_col, metric, "gid"))
         ranked = left.select(
             F.col(id_col),
             F.col(vec_col),
@@ -1022,63 +1125,16 @@ def two_level_probe_sweep(
             F.col("__g.gid").alias("__gid"),
         )
     else:
-        sdf = _centroid_frame(df, supers).withColumnRenamed("__cid", "__gid")
-        if metric == "cos":
-            sdf = sdf.withColumn("__sn", norm(F.col("__cvec")))
-            cleft = left.withColumn("__vn", norm(F.col(vec_col)))
-            cd = -(
-                dot(F.col(vec_col), F.col("__cvec"))
-                / (F.col("__vn") * F.col("__sn"))
-            )
-        else:
-            cleft = left
-            cd = _sq_dist(F.col(vec_col), F.col("__cvec"))
+        fan, cd = _coarse_fanout(left, supers, vec_col, metric)
         rw = Window.partitionBy(id_col).orderBy(cd.asc(), F.col("__gid"))
-        ranked = (
-            cleft.crossJoin(F.broadcast(sdf))
-            .select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.row_number().over(rw).alias("__crank"),
-                F.col("__gid"),
-            )
+        ranked = fan.select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.row_number().over(rw).alias("__crank"),
+            F.col("__gid"),
         )
-
-    from pyspark.sql import types as T
-
-    cschema = T.StructType(
-        [
-            T.StructField("__cid", T.IntegerType(), False),
-            T.StructField("__cvec", T.ArrayType(T.DoubleType(), False), False),
-            T.StructField("__gid", T.IntegerType(), False),
-        ]
-    )
-    cdf = df.sparkSession.createDataFrame(
-        [
-            (int(cid), [float(x) for x in vec], idx // gsz)
-            for idx, (cid, vec) in enumerate(ordered)
-        ],
-        cschema,
-    )
-    if metric == "cos":
-        cdf = cdf.withColumn("__cn", norm(F.col("__cvec")))
-        ranked = ranked.withColumn("__vn", norm(F.col(vec_col)))
-        d = -(
-            dot(F.col(vec_col), F.col("__cvec"))
-            / (F.col("__vn") * F.col("__cn"))
-        )
-    else:
-        d = _sq_dist(F.col(vec_col), F.col("__cvec"))
-    right = (
-        F.broadcast(cdf)
-        if _centroid_bytes(cents) <= _CENTROID_BROADCAST_BYTE_BUDGET
-        else cdf
-    )
-    scored = ranked.join(right, "__gid").select(
-        F.col(id_col),
-        F.col("__crank"),
-        d.alias("__d"),
-        F.col("__cid"),
+    scored = _refine_pairs(
+        ranked, ordered, gsz, vec_col, id_col, metric, F.col("__crank")
     )
     # collapse the fan-out to n x m per-rank level rows, then one per-id
     # RUNNING min gives the prefix argmin at EVERY probe simultaneously
@@ -1100,7 +1156,6 @@ def two_level_probe_sweep(
         F.min("lv").over(run).alias("__best"),
         F.min("lv").over(full).alias("__exact"),
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         cum.where(F.col("__crank").isin([int(p) for p in plist]))
         .groupBy(F.col("__crank").alias("probe"))
@@ -1114,7 +1169,7 @@ def two_level_probe_sweep(
             "probe",
             "n_vecs",
             "n_match",
-            snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
+            _snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
         )
     )
 
@@ -1177,15 +1232,7 @@ def kmeans_lloyd(
     and a k*d-row shuffle — the canonical distributed Lloyd's step;
     iterations are a small fixed constant.  Centroid means are rounded to
     ``decimals`` so runs reproduce across engines and partitionings."""
-    init = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    cents = [
-        (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-    ]
+    cents = _sampled_cents(df, vec_col, id_col, k)
     history: list[float] = []
     for _ in range(iters):
         assigned = kmeans_assign(df, cents, vec_col, id_col)
@@ -1204,10 +1251,7 @@ def kmeans_lloyd(
             )
             .groupBy("cluster")
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("centroid"),
+                _pos_sorted("m").alias("centroid"),
                 F.sum("i0").alias("inertia"),
             )
             .collect()
@@ -1264,10 +1308,7 @@ def label_centroids(
     return (
         per_pos.groupBy("label")
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("centroid"),
+            _pos_sorted("m").alias("centroid"),
             F.max("n").alias("n_vectors"),
         )
     )
@@ -1493,15 +1534,7 @@ def _semantic_cluster_pairs(
     sweep can never drift from the dedup rule it prices (same
     drift-proofing as :func:`_quant_coded`)."""
     if cents is None:
-        init = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-            .limit(nlist)
-            .collect()
-        )
-        cents = [
-            (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-        ]
+        cents = _sampled_cents(df, vec_col, id_col, nlist)
     # argmax cosine: min over struct(-cos, cid) == max cos, then smallest
     # cid on exact ties — replayed by ORDER BY csim DESC, cid.  Path
     # (plan-literal row-local argmin vs broadcast-join argmin) selected by
@@ -1512,26 +1545,8 @@ def _semantic_cluster_pairs(
             df, cents, vec_col, id_col, metric="cos", probe=probe
         ).select(F.col(id_col), F.col(vec_col), F.col("cluster"))
     )
-    a = assigned.select(
-        F.col("cluster").alias("blk"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        norm(F.col(vec_col)).alias("na"),
-    )
-    b = assigned.select(
-        F.col("cluster").alias("blk"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col)).alias("nb"),
-    )
-    cos = F.round(
-        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), decimals
-    )
-    pairs = (
-        a.join(b, ["blk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos.alias("cos"))
-        .where(F.col("cos") >= F.lit(min_cos))
+    pairs = _block_pairs(assigned, "cluster", vec_col, id_col, decimals).where(
+        F.col("cos") >= F.lit(min_cos)
     )
     return assigned, pairs
 
@@ -1636,15 +1651,7 @@ def incremental_semantic_dedup(
     (id, cluster).
     """
     if cents is None:
-        init = (
-            corpus_df.select(F.col(id_col), F.col(vec_col))
-            .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-            .limit(nlist)
-            .collect()
-        )
-        cents = [
-            (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-        ]
+        cents = _sampled_cents(corpus_df, vec_col, id_col, nlist)
     def _assign(df: DataFrame) -> DataFrame:
         # path-selected (literal vs broadcast-join) argmax cosine; both
         # sides MUST route through the same helper so batch and corpus
@@ -1769,8 +1776,6 @@ def rrf_fuse(
     the inputs are k-sized pools, never corpus-sized — the corpus-scale
     work (scan, score, top-k heap) already happened inside the
     retrievers."""
-    from pyspark.sql.window import Window
-
     parts = []
     for r in rankings:
         score_cols = [c for c in r.columns if c != id_col]
@@ -1788,10 +1793,7 @@ def rrf_fuse(
     for p in parts[1:]:
         u = u.unionByName(p)
     fused = u.groupBy("id").agg(
-        F.round(
-            F.sum(F.lit(1.0) / (F.lit(k0) + F.col("rank"))).cast("decimal(18,12)"),
-            6,
-        ).cast("double").alias("rrf"),
+        _snap(F.sum(F.lit(1.0) / (F.lit(k0) + F.col("rank")))).alias("rrf"),
         F.count(F.lit(1)).alias("n_lists"),
     )
     return (
@@ -1835,8 +1837,6 @@ def cross_rerank(
     reranker never touches the corpus, and the rank windows run on k
     rows (single-partition by design, same justification as
     :func:`rrf_fuse`).  Ranks are longs on both engines."""
-    from pyspark.sql.window import Window
-
     q = sorted(set(query_terms))
     if not q:
         raise ValueError("query_terms must be non-empty")
@@ -1856,9 +1856,8 @@ def cross_rerank(
         ce = (
             F.lit(2.0) * m / (F.lit(len(q)) + F.size(toks))
         )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     scored = joined.select(
-        "id", "pool_rank", snap(ce).alias("ce_score")
+        "id", "pool_rank", _snap(ce).alias("ce_score")
     )
     w_ce = Window.orderBy(F.col("ce_score").desc(), F.col("id"))
     return scored.select(
@@ -1901,15 +1900,7 @@ def topic_shares(
     it runs over that k-row frame — output and state are O(nlist)
     regardless of corpus size."""
     if cents is None:
-        init = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-            .limit(nlist)
-            .collect()
-        )
-        cents = [
-            (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-        ]
+        cents = _sampled_cents(df, vec_col, id_col, nlist)
         if len(cents) != nlist:
             raise ValueError(
                 f"topic_shares: table has only {len(cents)} rows, fewer "
@@ -1929,12 +1920,11 @@ def topic_shares(
     # the corpus total rides a window over the k-row aggregate frame (the
     # documented aggregate-frame exception) — no second scan, no join
     total = F.sum("n_vecs").over(Window.partitionBy())
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return counts.select(
         "cluster",
         "n_vecs",
-        snapped(F.col("n_vecs") / total).alias("share"),
-        snapped(F.col("n_vecs") * len(cents) / total).alias("balance_ratio"),
+        _snap(F.col("n_vecs") / total).alias("share"),
+        _snap(F.col("n_vecs") * len(cents) / total).alias("balance_ratio"),
         F.row_number()
         .over(Window.orderBy(F.col("n_vecs").desc(), F.col("cluster")))
         .cast("int")
@@ -1977,15 +1967,7 @@ def topic_share_drift(
     aggregate-frame exception) — output and every post-assignment frame
     is O(nlist) regardless of corpus size."""
     if cents is None:
-        init = (
-            df_a.select(F.col(id_col), F.col(vec_col))
-            .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-            .limit(nlist)
-            .collect()
-        )
-        cents = [
-            (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-        ]
+        cents = _sampled_cents(df_a, vec_col, id_col, nlist)
         if len(cents) != nlist:
             raise ValueError(
                 f"topic_share_drift: snapshot A has only {len(cents)} "
@@ -2011,7 +1993,6 @@ def topic_share_drift(
     )
     tot_a = F.sum("n_a").over(Window.partitionBy())
     tot_b = F.sum("n_b").over(Window.partitionBy())
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     # an EMPTY snapshot (possible only with trained `cents` supplied —
     # the sampled path raises above) has total 0; 0/0 would emit NULL
     # shares, so pin the share to 0.0: "everything in the other snapshot
@@ -2022,9 +2003,9 @@ def topic_share_drift(
         "cluster",
         "n_a",
         "n_b",
-        snap(share_a).alias("share_a"),
-        snap(share_b).alias("share_b"),
-        snap(share_b - share_a).alias("share_delta"),
+        _snap(share_a).alias("share_a"),
+        _snap(share_b).alias("share_b"),
+        _snap(share_b - share_a).alias("share_delta"),
     )
 
 
@@ -2062,15 +2043,7 @@ def quantized_assign_agreement(
     id-keyed equi-join of two (id, cluster) frames + a k-row aggregate
     — no pairwise anything."""
     if cents is None:
-        init = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-            .limit(nlist)
-            .collect()
-        )
-        cents = [
-            (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-        ]
+        cents = _sampled_cents(df, vec_col, id_col, nlist)
         if len(cents) != nlist:
             raise ValueError(
                 f"quantized_assign_agreement: corpus has only "
@@ -2080,20 +2053,14 @@ def quantized_assign_agreement(
     ref = _assign_nearest(
         df, cents, vec_col, id_col, metric="cos", keep_vec=False
     ).select(F.col(id_col), F.col("cluster"))
-    dv = (
-        _quant_coded(df, vec_col, id_col, levels)
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "dq"))),
-                lambda s: s["dq"],
-            ).alias("__dvec")
-        )
-    )
     qa = _assign_nearest(
-        dv, cents, "__dvec", id_col, metric="cos", keep_vec=False
+        _dequantized(df, vec_col, id_col, levels),
+        cents,
+        vec_col,
+        id_col,
+        metric="cos",
+        keep_vec=False,
     ).select(F.col(id_col), F.col("cluster").alias("__qcluster"))
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         ref.join(qa, on=id_col)
         .groupBy("cluster")
@@ -2107,7 +2074,7 @@ def quantized_assign_agreement(
             "cluster",
             "n_vecs",
             "n_match",
-            snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
+            _snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
         )
     )
 
@@ -2144,6 +2111,138 @@ def _salted_topk_per_qid(
     )
 
 
+def _query_panel(
+    src: DataFrame,
+    query_ids: list[int],
+    vec_col: str,
+    id_col: str,
+    who: str,
+    *carry: Column,
+) -> DataFrame:
+    """The recall evaluators' guarded query panel: the persisted
+    ``(qid, qvec, qn, *carry)`` frame, one row per requested id.
+
+    The ``isin`` filter PUSHES to the parquet scan (an earlier guard built
+    the panel as panel-join-corpus, which un-pushed the filter and
+    re-scanned the full table once per consumer — measured 2.5x); the
+    requested ids then left-join the TINY filtered frame, and a requested
+    id that is absent, or whose embedding is NULL or of norm 0, fails
+    with its own ``"<who>: query id <q> ..."`` message instead of
+    silently shrinking the panel (keying the message on qn IS NULL alone
+    misdiagnosed a NULL embedding as a missing row).  raise_error lives in
+    an in-plan filter, so construction stays lazy.  Persisted: the exact
+    fan-out, the approximate side and the final rollup all read it."""
+    panel = F.broadcast(
+        src.sparkSession.createDataFrame(
+            [(int(q),) for q in query_ids], "qid long"
+        )
+    )
+    present = _query_rows(
+        src,
+        F.col(id_col).isin(list(query_ids)),
+        vec_col,
+        id_col,
+        *carry,
+        F.lit(True).alias("__present"),
+    )
+    diag = (
+        F.when(
+            F.col("__present").isNull(),
+            F.lit("not present in the corpus — fix query_ids"),
+        )
+        .when(
+            F.col("qn").isNull(),
+            F.lit("has a NULL embedding — cosine is undefined for it"),
+        )
+        .otherwise(
+            F.lit("has a zero-norm embedding — cosine is undefined for it")
+        )
+    )
+    ok = (
+        F.col("__present").isNotNull()
+        & F.col("qn").isNotNull()
+        & (F.col("qn") > 0)
+    )
+    return persist(
+        panel.join(F.broadcast(present), "qid", "left")
+        .where(
+            F.when(ok, F.lit(True)).otherwise(
+                F.raise_error(
+                    F.concat_ws(
+                        " ",
+                        F.lit(f"{who}: query id"),
+                        F.col("qid").cast("string"),
+                        diag,
+                    )
+                ).cast("boolean")
+            )
+        )
+        .drop("__present")
+    )
+
+
+def _exact_topk(
+    base: DataFrame, qs: DataFrame, vec_col: str, id_col: str, k: int
+) -> DataFrame:
+    """``(qid, id)``: each panel query's exact cosine top-k over ``base`` =
+    ``(id, vec, vn)`` — the |corpus| x |panel| broadcast fan-out the eval
+    contract pays (the panel is a broadcast frame, so no shuffle), cut by
+    :func:`_salted_topk_per_qid`."""
+    return _salted_topk_per_qid(
+        _panel_sims(base, qs, vec_col, id_col), id_col, k
+    )
+
+
+def _ivf_candidates(
+    df: DataFrame,
+    qs: DataFrame,
+    vec_col: str,
+    id_col: str,
+    nlist: int,
+    nprobe: int,
+) -> DataFrame:
+    """``(qid, id, sim, crank)``: every vector in the ``nprobe`` IVF lists
+    nearest each panel query, with its cosine to the query and the list's
+    probe rank ``crank`` for that query — cluster-pruned (|corpus| *
+    nprobe / nlist rows per query), never the corpus."""
+    cents, assigned = _ivf_quantizer(df, vec_col, id_col, nlist)
+    return (
+        assigned.join(F.broadcast(_probe_ranks(qs, cents, nprobe)), "cid")
+        .where(F.col(id_col) != F.col("qid"))
+        .select(
+            "qid",
+            F.col(id_col),
+            _qsim(F.col(vec_col), F.col("vn")).alias("sim"),
+            "crank",
+        )
+    )
+
+
+def _recall_rollup(
+    qs: DataFrame, exact: DataFrame, approx: DataFrame, id_col: str, k: int
+) -> DataFrame:
+    """``(qid, n_hits, recall_at_k)`` for every panel query: how many of its
+    exact top-k ``(qid, id)`` rows the approximate top-k recovers (0 when
+    none), recall snapped to 6 decimals.  Both sides are <= k * |queries|
+    rows at runtime; plan-time stats cannot see through the rank windows,
+    so the joins are broadcast-hinted."""
+    hits = (
+        exact.join(F.broadcast(approx), ["qid", id_col])
+        .groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+    n = F.coalesce("n_hits", F.lit(0))
+    return (
+        qs.select("qid")
+        .join(F.broadcast(hits), "qid", "left")
+        .select(
+            "qid",
+            n.cast("long").alias("n_hits"),
+            _snap(n / F.lit(float(k))).alias("recall_at_k"),
+        )
+    )
+
+
 def retrieval_recall_eval(
     df: DataFrame,
     query_ids: list[int],
@@ -2170,172 +2269,17 @@ def retrieval_recall_eval(
     |corpus| x |queries| broadcast fan-out (queries are a broadcast
     k-row frame, so no shuffle); the IVF side is one |corpus| x nlist
     assignment pass plus candidate rerank restricted to probed clusters
-    (|corpus| * nprobe / nlist rows per query).  Both top-k cuts are
-    TWO-PHASE salted ranks (the round-9 verdict's finding: a plain
-    ``row_number() over partitionBy(qid)`` puts the ENTIRE corpus-sized
-    candidate set of one query into a single sort partition — the
-    classic skew/scale killer): phase 1 ranks over ``(qid, salt)``
-    where salt = xxhash64(id) % n_salts (deterministic, plan-internal —
-    the output is salt-invariant) and keeps k rows per salt, phase 2
-    ranks the surviving <= k * n_salts rows per qid.  Any member of the
-    true top-k is necessarily in the top-k of its own salt partition
-    (the ordering (sim desc, id) is total), so the two-phase cut is
-    EXACT, and no single sort partition ever exceeds
-    max(|candidates| / n_salts, k * n_salts) rows.  The final join is
+    (|corpus| * nprobe / nlist rows per query).  Both top-k cuts ride
+    :func:`_salted_topk_per_qid` (two-phase salted ranks; its docstring
+    has the argument that the cut is exact), so no single sort partition
+    is ever one query's corpus-sized candidate set.  The final join is
     k-row by k-row per query."""
-    from pyspark.sql.window import Window
-
-    spark = df.sparkSession
-    panel = F.broadcast(
-        spark.createDataFrame([(int(q),) for q in query_ids], "qid long")
+    qs = _query_panel(df, query_ids, vec_col, id_col, "retrieval_recall_eval")
+    exact = _exact_topk(_with_norm(df, vec_col, id_col), qs, vec_col, id_col, k)
+    approx = _salted_topk_per_qid(
+        _ivf_candidates(df, qs, vec_col, id_col, nlist, nprobe), id_col, k
     )
-    # the isin filter PUSHES to the parquet scan (an earlier guard built
-    # qs as panel-join-corpus, which un-pushed the filter and re-scanned
-    # the full table once per consumer — measured 2.5x on this query);
-    # the absent-qid guard then left-joins the literal panel against the
-    # TINY filtered frame: a requested qid absent from df must FAIL, not
-    # silently shrink the panel (same guard class as topic_shares' nlist
-    # check).  raise_error lives in an in-plan filter so construction
-    # stays lazy.
-    qs_present = df.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.lit(True).alias("__present"),
-    )
-    # persisted: the guarded panel frame (<= |query_ids| rows) feeds four
-    # consumers (exact fan-out, probe ranking, rerank, final join); without
-    # the cache each re-executes the scan+join subtree.  The guard
-    # distinguishes the three failure modes (round-9 advice: keying the
-    # message on qn IS NULL misdiagnosed a NULL embedding as a missing
-    # row): join miss (qid absent), NULL embedding, zero-norm embedding —
-    # each fails with its own in-plan message; construction stays lazy.
-    diag = (
-        F.when(
-            F.col("__present").isNull(),
-            F.lit("not present in the corpus — fix query_ids"),
-        )
-        .when(
-            F.col("qn").isNull(),
-            F.lit("has a NULL embedding — cosine is undefined for it"),
-        )
-        .otherwise(
-            F.lit("has a zero-norm embedding — cosine is undefined for it")
-        )
-    )
-    qs = persist(
-        panel.join(F.broadcast(qs_present), "qid", "left")
-        .where(
-            F.when(
-                F.col("__present").isNotNull()
-                & F.col("qn").isNotNull()
-                & (F.col("qn") > 0),
-                F.lit(True),
-            ).otherwise(
-                F.raise_error(
-                    F.concat_ws(
-                        " ",
-                        F.lit("retrieval_recall_eval: query id"),
-                        F.col("qid").cast("string"),
-                        diag,
-                    )
-                ).cast("boolean")
-            )
-        )
-        .drop("__present")
-    )
-    base = df.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("vn")
-    )
-
-    def topk_per_qid(scored: DataFrame) -> DataFrame:
-        return _salted_topk_per_qid(scored, id_col, k)
-
-    sims = (
-        base.crossJoin(F.broadcast(qs))
-        .where(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col),
-            (
-                dot(F.col(vec_col), F.col("qvec"))
-                / (F.col("vn") * F.col("qn"))
-            ).alias("sim"),
-        )
-    )
-    exact = topk_per_qid(sims)
-    cents = df.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("cn"),
-    ).orderBy(F.md5(F.col("cid").cast("string")), F.col("cid")).limit(nlist)
-    cscore = base.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("cid"),
-        (
-            dot(F.col(vec_col), F.col("cvec")) / (F.col("vn") * F.col("cn"))
-        ).alias("csim"),
-    )
-    wa = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cid"))
-    assigned = (
-        cscore.withColumn("__rk", F.row_number().over(wa))
-        .where(F.col("__rk") == 1)
-        .select(id_col, vec_col, "cid")
-    )
-    # probe lists for every query in one frame: rank the query-x-centroid
-    # scores (|queries| x nlist rows) instead of collecting per query
-    probes = (
-        qs.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            "qvec",
-            "qn",
-            "cid",
-            (
-                dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
-            ).alias("csim"),
-        )
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("csim").desc(), F.col("cid")
-                )
-            ),
-        )
-        .where(F.col("__rk") <= nprobe)
-        .select("qid", "qvec", "qn", "cid")
-    )
-    approx = topk_per_qid(
-        assigned.join(F.broadcast(probes), "cid")
-        .where(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col),
-            (
-                dot(F.col(vec_col), F.col("qvec"))
-                / (norm(F.col(vec_col)) * F.col("qn"))
-            ).alias("sim"),
-        )
-    )
-    # both sides are <= k * |queries| rows at runtime; plan-time stats
-    # cannot see through the rank windows, so hint the broadcast
-    hits = exact.join(F.broadcast(approx), ["qid", id_col]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
-    return (
-        qs.select("qid")
-        .join(F.broadcast(hits), "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            snapped(F.coalesce("n_hits", F.lit(0)) / F.lit(float(k))).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    return _recall_rollup(qs, exact, approx, id_col, k)
 
 
 def ivf_nprobe_sweep(
@@ -2367,8 +2311,6 @@ def ivf_nprobe_sweep(
     cached frame — the dedup_threshold_sweep pattern.  Both top-k cuts
     ride :func:`_salted_topk_per_qid`; the final result is |nprobes|
     rows unioned from 1-row aggregates."""
-    from pyspark.sql.window import Window
-
     if not nprobes or sorted(nprobes) != list(nprobes):
         raise ValueError(f"nprobes must be non-empty ascending, got {nprobes}")
     if nprobes[-1] > nlist:
@@ -2376,158 +2318,34 @@ def ivf_nprobe_sweep(
             f"max nprobe {nprobes[-1]} exceeds nlist {nlist} — probing more "
             "lists than exist"
         )
-    spark = df.sparkSession
-    panel = F.broadcast(
-        spark.createDataFrame([(int(q),) for q in query_ids], "qid long")
-    )
-    qs_present = df.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.lit(True).alias("__present"),
-    )
-    diag = (
-        F.when(
-            F.col("__present").isNull(),
-            F.lit("not present in the corpus — fix query_ids"),
-        )
-        .when(
-            F.col("qn").isNull(),
-            F.lit("has a NULL embedding — cosine is undefined for it"),
-        )
-        .otherwise(
-            F.lit("has a zero-norm embedding — cosine is undefined for it")
-        )
-    )
-    qs = persist(
-        panel.join(F.broadcast(qs_present), "qid", "left")
-        .where(
-            F.when(
-                F.col("__present").isNotNull()
-                & F.col("qn").isNotNull()
-                & (F.col("qn") > 0),
-                F.lit(True),
-            ).otherwise(
-                F.raise_error(
-                    F.concat_ws(
-                        " ",
-                        F.lit("ivf_nprobe_sweep: query id"),
-                        F.col("qid").cast("string"),
-                        diag,
-                    )
-                ).cast("boolean")
-            )
-        )
-        .drop("__present")
-    )
-    base = df.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("vn")
-    )
+    qs = _query_panel(df, query_ids, vec_col, id_col, "ivf_nprobe_sweep")
     # exact truth: persisted — every sweep value's hit join reads it
     exact = persist(
-        _salted_topk_per_qid(
-            base.crossJoin(F.broadcast(qs))
-            .where(F.col(id_col) != F.col("qid"))
-            .select(
-                "qid",
-                F.col(id_col),
-                (
-                    dot(F.col(vec_col), F.col("qvec"))
-                    / (F.col("vn") * F.col("qn"))
-                ).alias("sim"),
-            ),
-            id_col,
-            k,
-        )
+        _exact_topk(_with_norm(df, vec_col, id_col), qs, vec_col, id_col, k)
     )
-    cents = (
-        df.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            norm(F.col(vec_col)).alias("cn"),
-        )
-        .orderBy(F.md5(F.col("cid").cast("string")), F.col("cid"))
-        .limit(nlist)
-    )
-    cscore = base.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("cid"),
-        (
-            dot(F.col(vec_col), F.col("cvec")) / (F.col("vn") * F.col("cn"))
-        ).alias("csim"),
-    )
-    wa = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cid"))
-    assigned = (
-        cscore.withColumn("__rk", F.row_number().over(wa))
-        .where(F.col("__rk") == 1)
-        .select(id_col, vec_col, "cid")
-    )
-    # probe lists ranked once up to max(nprobes); crank = the list's probe
-    # rank for that query, carried into the candidate frame so every
-    # sweep value is a filter, not a re-rank
-    probes = (
-        qs.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            "qvec",
-            "qn",
-            "cid",
-            (
-                dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
-            ).alias("csim"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("csim").desc(), F.col("cid")
-                )
-            ),
-        )
-        .where(F.col("crank") <= nprobes[-1])
-        .select("qid", "qvec", "qn", "cid", "crank")
-    )
-    # persisted: |nprobes| filtered rollups + |nprobes| top-k cuts all
-    # read this one candidate fan-out (cluster-pruned, never the corpus)
+    # persisted: probe lists ranked once up to max(nprobes), so each sweep
+    # value is a crank filter, not a re-rank; |nprobes| filtered rollups +
+    # |nprobes| top-k cuts all read this one candidate fan-out
     cand = persist(
-        assigned.join(F.broadcast(probes), "cid")
-        .where(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col),
-            (
-                dot(F.col(vec_col), F.col("qvec"))
-                / (norm(F.col(vec_col)) * F.col("qn"))
-            ).alias("sim"),
-            "crank",
-        )
+        _ivf_candidates(df, qs, vec_col, id_col, nlist, nprobes[-1])
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     parts = []
     for p in nprobes:
         sel = cand.where(F.col("crank") <= p)
-        approx = _salted_topk_per_qid(sel.select("qid", id_col, "sim"), id_col, k)
-        hits = (
-            exact.join(F.broadcast(approx), ["qid", id_col])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("__h"))
-        )
+        approx = _salted_topk_per_qid(sel, id_col, k)
         ncand = sel.groupBy("qid").agg(F.count(F.lit(1)).alias("__c"))
-        per_q = (
-            qs.select("qid")
-            .join(F.broadcast(hits), "qid", "left")
-            .join(F.broadcast(ncand), "qid", "left")
+        per_q = _recall_rollup(qs, exact, approx, id_col, k).join(
+            F.broadcast(ncand), "qid", "left"
         )
         parts.append(
             per_q.agg(
                 F.count(F.lit(1)).alias("n_queries"),
-                snapped(F.avg(F.coalesce("__c", F.lit(0)))).alias(
+                _snap(F.avg(F.coalesce("__c", F.lit(0)))).alias(
                     "avg_candidates"
                 ),
-                snapped(
-                    F.avg(F.coalesce("__h", F.lit(0)) / F.lit(float(k)))
-                ).alias("avg_recall_at_k"),
+                _snap(F.avg(F.col("n_hits") / F.lit(float(k)))).alias(
+                    "avg_recall_at_k"
+                ),
             ).select(
                 F.lit(p).cast("long").alias("nprobe"),
                 F.col("n_queries").cast("long").alias("n_queries"),
@@ -2575,107 +2393,29 @@ def lsh_recall_eval(
     production-index shape, not this eval's.)  Both top-k cuts ride
     :func:`_salted_topk_per_qid`, so no single sort partition is ever
     one query's corpus-sized candidate set."""
-    tables = [
-        _hyperplanes(dim, num_planes, seed + 1000 * t)
-        for t in range(num_tables)
-    ]
-    sigs = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        norm(F.col(vec_col)).alias("vn"),
-        *[
-            lsh_signature(F.col(vec_col), tables[t]).alias(f"sig{t}")
-            for t in range(num_tables)
-        ],
+    sigs, collide = _lsh_tables(
+        df, vec_col, id_col, num_planes, num_tables, dim, seed
     )
-    spark = df.sparkSession
-    panel = F.broadcast(
-        spark.createDataFrame([(int(q),) for q in query_ids], "qid long")
+    qs = _query_panel(
+        sigs, query_ids, vec_col, id_col, "lsh_recall_eval",
+        *_query_sigs(num_tables),
     )
-    qs_present = sigs.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.col("vn").alias("qn"),
-        *[F.col(f"sig{t}").alias(f"qsig{t}") for t in range(num_tables)],
-        F.lit(True).alias("__present"),
-    )
-    diag = (
-        F.when(
-            F.col("__present").isNull(),
-            F.lit("not present in the corpus — fix query_ids"),
-        )
-        .when(
-            F.col("qn").isNull(),
-            F.lit("has a NULL embedding — cosine is undefined for it"),
-        )
-        .otherwise(
-            F.lit("has a zero-norm embedding — cosine is undefined for it")
-        )
-    )
-    # guarded, persisted <= |panel|-row frame: exact fan-out, candidate
-    # fan-out, and the final join all read it (same pattern and reasons
-    # as retrieval_recall_eval)
-    qs = persist(
-        panel.join(F.broadcast(qs_present), "qid", "left")
-        .where(
-            F.when(
-                F.col("__present").isNotNull()
-                & F.col("qn").isNotNull()
-                & (F.col("qn") > 0),
-                F.lit(True),
-            ).otherwise(
-                F.raise_error(
-                    F.concat_ws(
-                        " ",
-                        F.lit("lsh_recall_eval: query id"),
-                        F.col("qid").cast("string"),
-                        diag,
-                    )
-                ).cast("boolean")
-            )
-        )
-        .drop("__present")
-    )
-    sim = (
-        dot(F.col(vec_col), F.col("qvec")) / (F.col("vn") * F.col("qn"))
-    ).alias("sim")
-    exact = _salted_topk_per_qid(
-        sigs.crossJoin(F.broadcast(qs))
-        .where(F.col(id_col) != F.col("qid"))
-        .select("qid", F.col(id_col), sim),
-        id_col,
-        k,
-    )
-    collide = None
-    for t in range(num_tables):
-        c = F.col(f"sig{t}") == F.col(f"qsig{t}")
-        collide = c if collide is None else (collide | c)
+    exact = _exact_topk(sigs, qs, vec_col, id_col, k)
     # persisted: candidate sims feed BOTH the per-query candidate count
     # and the approx top-k cut — one bucket-collision fan-out, two reads
-    cand = persist(
-        sigs.crossJoin(F.broadcast(qs))
-        .where(collide & (F.col(id_col) != F.col("qid")))
-        .select("qid", F.col(id_col), sim)
-    )
+    cand = persist(_panel_sims(sigs, qs, vec_col, id_col, collide))
     n_cand = cand.groupBy("qid").agg(F.count(F.lit(1)).alias("n_candidates"))
     approx = _salted_topk_per_qid(cand, id_col, k)
-    hits = exact.join(F.broadcast(approx), ["qid", id_col]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
-        qs.select("qid")
+        _recall_rollup(qs, exact, approx, id_col, k)
         .join(F.broadcast(n_cand), "qid", "left")
-        .join(F.broadcast(hits), "qid", "left")
         .select(
             "qid",
             F.coalesce("n_candidates", F.lit(0)).cast("long").alias(
                 "n_candidates"
             ),
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            snapped(F.coalesce("n_hits", F.lit(0)) / F.lit(float(k))).alias(
-                "recall_at_k"
-            ),
+            "n_hits",
+            "recall_at_k",
         )
     )
 
@@ -2705,103 +2445,8 @@ def quantized_recall_eval(
     the op it measures); both recall sides are the
     |corpus| x |panel| broadcast fan-out the eval contract pays, cut by
     :func:`_salted_topk_per_qid` two-phase ranks."""
-    dv = (
-        _quant_coded(df, vec_col, id_col, levels)
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "dq"))),
-                lambda s: s["dq"],
-            ).alias("dvec")
-        )
-    )
-    spark = df.sparkSession
-    panel = F.broadcast(
-        spark.createDataFrame([(int(q),) for q in query_ids], "qid long")
-    )
-    qs_present = df.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.lit(True).alias("__present"),
-    )
-    diag = (
-        F.when(
-            F.col("__present").isNull(),
-            F.lit("not present in the corpus — fix query_ids"),
-        )
-        .when(
-            F.col("qn").isNull(),
-            F.lit("has a NULL embedding — cosine is undefined for it"),
-        )
-        .otherwise(
-            F.lit("has a zero-norm embedding — cosine is undefined for it")
-        )
-    )
-    qs = persist(
-        panel.join(F.broadcast(qs_present), "qid", "left")
-        .where(
-            F.when(
-                F.col("__present").isNotNull()
-                & F.col("qn").isNotNull()
-                & (F.col("qn") > 0),
-                F.lit(True),
-            ).otherwise(
-                F.raise_error(
-                    F.concat_ws(
-                        " ",
-                        F.lit("quantized_recall_eval: query id"),
-                        F.col("qid").cast("string"),
-                        diag,
-                    )
-                ).cast("boolean")
-            )
-        )
-        .drop("__present")
-    )
-    base = df.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("vn")
-    )
-    exact = _salted_topk_per_qid(
-        base.crossJoin(F.broadcast(qs))
-        .where(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col),
-            (
-                dot(F.col(vec_col), F.col("qvec"))
-                / (F.col("vn") * F.col("qn"))
-            ).alias("sim"),
-        ),
-        id_col,
-        k,
-    )
-    approx = _salted_topk_per_qid(
-        dv.crossJoin(F.broadcast(qs))
-        .where(F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col),
-            (
-                dot(F.col("dvec"), F.col("qvec"))
-                / (norm(F.col("dvec")) * F.col("qn"))
-            ).alias("sim"),
-        ),
-        id_col,
-        k,
-    )
-    hits = exact.join(F.broadcast(approx), ["qid", id_col]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
-    return (
-        qs.select("qid")
-        .join(F.broadcast(hits), "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            snapped(F.coalesce("n_hits", F.lit(0)) / F.lit(float(k))).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    qs = _query_panel(df, query_ids, vec_col, id_col, "quantized_recall_eval")
+    exact = _exact_topk(_with_norm(df, vec_col, id_col), qs, vec_col, id_col, k)
+    dv = _dequantized(df, vec_col, id_col, levels)
+    approx = _exact_topk(_with_norm(dv, vec_col, id_col), qs, vec_col, id_col, k)
+    return _recall_rollup(qs, exact, approx, id_col, k)

@@ -3,6 +3,9 @@ library's operators persisted or checkpointed, whichever module ran them."""
 
 from __future__ import annotations
 
+import pytest
+
+
 def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
@@ -52,3 +55,31 @@ def test_one_release_frees_every_module_cache(spark, tmp_path, monkeypatch):
     assert _cache._CACHED == []
     assert dedup.release_caches is analytics.release_caches is sio.release_caches
 
+
+_RECALL_EVALS = {
+    # evaluator -> (kwargs, frames it persists: the guarded query panel,
+    # plus the nprobe sweep's exact truth and candidate fan-out, plus the
+    # LSH panel's candidate fan-out)
+    "retrieval_recall_eval": (dict(k=10, nlist=16, nprobe=5), 1),
+    "ivf_nprobe_sweep": (dict(nprobes=(1, 2, 4), k=10, nlist=16), 3),
+    "lsh_recall_eval": (dict(k=10, num_planes=3, num_tables=6), 2),
+    "quantized_recall_eval": (dict(k=10), 1),
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_RECALL_EVALS))
+def test_recall_eval_persists_a_fixed_frame_count(spark, fn):
+    """Each recall evaluator caches exactly the frames its consumers
+    share, no more and no fewer, and one release frees all of them."""
+    from spark_auto_schema import release_caches
+    from spark_auto_schema.io import read_table
+    from spark_auto_schema.ops import similarity
+
+    kwargs, persisted = _RECALL_EVALS[fn]
+    emb = read_table(spark, "/root/testdata/sf0.01", "embeddings")
+    release_caches()
+    before = _persistent_rdds(spark)
+    getattr(similarity, fn)(emb, query_ids=list(range(8)), **kwargs).collect()
+    assert _persistent_rdds(spark) - before == persisted
+    release_caches()
+    assert _persistent_rdds(spark) == before

@@ -64,6 +64,24 @@ def test_bool_dtype_identifier_becomes_int4(spark):
     assert got == {"x_id": "int4"}
 
 
+@pytest.mark.parametrize("dtype", ["tinyint", "int", "bigint"])
+@pytest.mark.parametrize(
+    "name,values,expected",
+    [
+        ("x", [0, 1, None], "bool"),
+        ("x", [-1, 0, 1], "int4"),
+        ("x", [0, 1, 2], "int4"),
+        ("x", [0, 0], "bool"),
+        ("x_id", [0, 1], "int4"),  # _id escape skips the bool branch
+    ],
+)
+def test_integral_01_columns(spark, dtype, name, values, expected):
+    """An integer column is bool exactly when its non-null values all lie
+    in {0, 1}, whatever its width; an _id column never is."""
+    df = spark.createDataFrame([(v,) for v in values], f"{name} {dtype}")
+    assert _types(infer_table_schema(df)) == {name: expected}
+
+
 def test_date_dtype(spark):
     import datetime
 

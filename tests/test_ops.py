@@ -1777,21 +1777,43 @@ def test_canonicalize_urls_rejects_unsupported_psl_rules(spark):
     assert ok["registered_domain"] == "b.example.com"
 
 
-def test_retrieval_recall_eval_raises_on_missing_query_id(spark):
-    """A requested query id absent from the corpus fails loudly instead of
-    silently shrinking the eval panel (review finding, round 9)."""
-    import pytest
+_GUARD_CALLS = {
+    "retrieval_recall_eval": dict(k=2, nlist=2, nprobe=2),
+    "ivf_nprobe_sweep": dict(nprobes=(1, 2), k=2, nlist=2),
+    "lsh_recall_eval": dict(k=2, num_planes=2, num_tables=2, dim=2),
+    "quantized_recall_eval": dict(k=2),
+}
 
-    from spark_auto_schema.ops import similarity
+
+@pytest.mark.parametrize(
+    "qid,diagnosis",
+    [
+        (99, "not present in the corpus — fix query_ids"),
+        (6, "has a NULL embedding — cosine is undefined for it"),
+        (7, "has a zero-norm embedding — cosine is undefined for it"),
+    ],
+    ids=["absent", "null", "zero_norm"],
+)
+@pytest.mark.parametrize("fn", sorted(_GUARD_CALLS))
+def test_recall_eval_panel_guard_names_the_bad_query_id(spark, fn, qid, diagnosis):
+    """Every recall evaluator fails loudly on a bad panel id instead of
+    silently shrinking the panel (review finding, round 9), and the
+    message tells the three failure modes apart: an id absent from the
+    corpus, a NULL embedding, a zero-norm embedding."""
+    import re
 
     df = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(5)],
+        [(i, [float(i + 1), 1.0]) for i in range(6)]
+        + [(6, None), (7, [0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    with pytest.raises(Exception, match="not present in the corpus"):
-        similarity.retrieval_recall_eval(
-            df, query_ids=[0, 99], k=2, nlist=2, nprobe=2
+    with pytest.raises(
+        Exception, match=re.escape(f"{fn}: query id {qid} {diagnosis}")
+    ):
+        getattr(similarity, fn)(
+            df, query_ids=[0, qid], **_GUARD_CALLS[fn]
         ).collect()
+    similarity.release_caches()
 
 
 def test_paragraph_minhash_handles_string_and_colon_ids(spark):
@@ -1897,23 +1919,6 @@ def test_lsh_recall_eval_laws(spark):
         ).collect()
     }
     assert six[0]["n_hits"] == len(exact_ids & lsh_ids)
-
-
-def test_lsh_recall_eval_raises_on_missing_query_id(spark):
-    """Same loud-failure guard as retrieval_recall_eval: an absent panel
-    id must raise, not silently shrink the panel."""
-    import pytest
-
-    from spark_auto_schema.ops import similarity
-
-    df = spark.createDataFrame(
-        [(i, [float(i + 1), 1.0]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    with pytest.raises(Exception, match="not present in the corpus"):
-        similarity.lsh_recall_eval(
-            df, query_ids=[0, 99], k=2, num_planes=2, num_tables=2, dim=2
-        ).collect()
 
 
 def test_contamination_diff_statuses(spark):
@@ -2189,10 +2194,8 @@ def test_quantized_recall_eval_laws(spark):
     (binary dims: lo=0, hi=1, codes 0/255 dequantize losslessly) the
     quantized ranking equals the exact one, so recall@k == 1.0 for every
     query; on arbitrary data recall stays in [0,1] with
-    recall == n_hits/k; a missing panel id raises loudly."""
+    recall == n_hits/k."""
     import random
-
-    import pytest
 
     from spark_auto_schema.ops import similarity
 
@@ -2219,10 +2222,6 @@ def test_quantized_recall_eval_laws(spark):
     for r in coarse:
         assert 0 <= r["n_hits"] <= 5
         assert r["recall_at_k"] == round(r["n_hits"] / 5.0, 6)
-    with pytest.raises(Exception, match="not present in the corpus"):
-        similarity.quantized_recall_eval(
-            binary, query_ids=[0, 999], k=2
-        ).collect()
 
 
 def test_chunk_reconstruction_check_laws(spark):
