@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
+from .._snap import snap
 
 _BUCKET_DAYS = {"week": 7, "day": 1}
 
@@ -126,6 +127,17 @@ def funnel_counts(
     )
 
 
+def _equi_width_bin(x: Column, nbins: int, lo: Column, hi: Column) -> Column:
+    """The int bin of ``x`` among ``nbins`` equal-width bins over
+    ``[lo, hi]``: ``floor((x - lo) * nbins / (hi - lo))`` clamped into
+    ``[0, nbins - 1]``, so ``hi`` lands in the last bin and values outside
+    the range in the edge bins.  A zero-width range divides to NULL
+    (``try_divide``, DuckDB's NULL on double/0) and the NULL-skipping
+    ``least`` puts every row in the last bin."""
+    pos = F.try_divide((x - lo) * nbins, hi - lo)
+    return F.greatest(F.least(F.floor(pos), F.lit(nbins - 1)), F.lit(0)).cast("int")
+
+
 def value_histogram(df: DataFrame, col: str, nbins: int = 20) -> DataFrame:
     """Equi-width histogram of ``col`` over its observed [min, max] range:
     ``(bin, lo, hi, n)`` with the max value clamped into the last bin.
@@ -148,16 +160,7 @@ def value_histogram(df: DataFrame, col: str, nbins: int = 20) -> DataFrame:
     )
     x = F.col(col).cast("double")
     binned = df.crossJoin(F.broadcast(stats)).select(
-        F.least(
-            F.floor(
-                F.try_divide(
-                    (x - F.col("__mn")) * nbins, F.col("__mx") - F.col("__mn")
-                )
-            ),
-            F.lit(nbins - 1),
-        )
-        .cast("int")
-        .alias("bin"),
+        _equi_width_bin(x, nbins, F.col("__mn"), F.col("__mx")).alias("bin"),
         F.col("__mn"),
         F.col("__mx"),
     )
@@ -378,6 +381,51 @@ def collapse_bursts(
     ).drop("__burst")
 
 
+def _binned_drift_counts(
+    base: DataFrame, curr: DataFrame, col: str, nbins: int
+) -> tuple[DataFrame, DataFrame]:
+    """The binned counts both drift tests read: ``(counts, totals)`` with
+    ``counts`` = ``(bin, base_n, curr_n)`` on the full ``nbins``-row spine
+    and ``totals`` the 1-row non-null side totals ``(__bt, __ct)``.  NULL
+    values drop first; the BASELINE's [min, max] owns the bin edges."""
+    base = base.where(F.col(col).isNotNull())
+    curr = curr.where(F.col(col).isNotNull())
+    stats = base.agg(
+        F.min(col).cast("double").alias("__mn"),
+        F.max(col).cast("double").alias("__mx"),
+        F.count(F.lit(1)).alias("__bt"),
+    )
+    edges = F.broadcast(stats.select("__mn", "__mx"))
+    x = F.col(col).cast("double")
+    b = _equi_width_bin(x, nbins, F.col("__mn"), F.col("__mx"))
+
+    def binned(df: DataFrame, out: str) -> DataFrame:
+        # <= nbins rows BY CONSTRUCTION (the aggregate key is the bin), so
+        # broadcasting it is safe at any data scale: the spine join never
+        # shuffles
+        return F.broadcast(
+            df.crossJoin(edges)
+            .select(b.alias("bin"))
+            .groupBy("bin")
+            .agg(F.count(F.lit(1)).alias(out))
+        )
+
+    spine = base.sparkSession.range(nbins).select(F.col("id").cast("int").alias("bin"))
+    counts = (
+        spine.join(binned(base, "base_n"), ["bin"], "left")
+        .join(binned(curr, "curr_n"), ["bin"], "left")
+        .select(
+            "bin",
+            F.coalesce("base_n", F.lit(0)).alias("base_n"),
+            F.coalesce("curr_n", F.lit(0)).alias("curr_n"),
+        )
+    )
+    totals = stats.select("__bt").crossJoin(
+        curr.agg(F.count(F.lit(1)).alias("__ct"))
+    )
+    return counts, totals
+
+
 def psi_drift(
     base: DataFrame,
     curr: DataFrame,
@@ -421,52 +469,7 @@ def psi_drift(
     is scanned once per side (plus the baseline stats pass); nothing
     data-sized is collected, sorted, or windowed.
     """
-    base = base.where(F.col(col).isNotNull())
-    curr = curr.where(F.col(col).isNotNull())
-    stats = base.agg(
-        F.min(col).cast("double").alias("__mn"),
-        F.max(col).cast("double").alias("__mx"),
-        F.count(F.lit(1)).alias("__bt"),
-    )
-    curr_total = curr.agg(F.count(F.lit(1)).alias("__ct"))
-
-    def _binned_counts(df: DataFrame, out: str) -> DataFrame:
-        x = F.col(col).cast("double")
-        b = F.greatest(
-            F.least(
-                F.floor(
-                    F.try_divide(
-                        (x - F.col("__mn")) * nbins, F.col("__mx") - F.col("__mn")
-                    )
-                ),
-                F.lit(nbins - 1),
-            ),
-            F.lit(0),
-        ).cast("int")
-        return (
-            df.crossJoin(F.broadcast(stats.select("__mn", "__mx")))
-            .select(b.alias("bin"))
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(out))
-        )
-
-    spine = (
-        base.sparkSession.range(nbins)
-        .select(F.col("id").cast("int").alias("bin"))
-    )
-    # the per-side count frames are <= nbins rows BY CONSTRUCTION (their
-    # aggregate key is the bin), so broadcasting them is safe at any data
-    # scale — the spine join never shuffles
-    counts = (
-        spine.join(F.broadcast(_binned_counts(base, "base_n")), ["bin"], "left")
-        .join(F.broadcast(_binned_counts(curr, "curr_n")), ["bin"], "left")
-        .select(
-            "bin",
-            F.coalesce("base_n", F.lit(0)).alias("base_n"),
-            F.coalesce("curr_n", F.lit(0)).alias("curr_n"),
-        )
-    )
-    totals = stats.select("__bt").crossJoin(curr_total)
+    counts, totals = _binned_drift_counts(base, curr, col, nbins)
     pa = F.greatest(F.try_divide(F.col("base_n"), F.col("__bt")), F.lit(floor))
     pb = F.greatest(F.try_divide(F.col("curr_n"), F.col("__ct")), F.lit(floor))
     term = (pa - pb) * F.log(pa / pb)
@@ -474,9 +477,9 @@ def psi_drift(
         "bin",
         "base_n",
         "curr_n",
-        F.round(pa.cast("decimal(18,12)"), 6).cast("double").alias("base_p"),
-        F.round(pb.cast("decimal(18,12)"), 6).cast("double").alias("curr_p"),
-        F.round(term.cast("decimal(18,12)"), 6).cast("double").alias("psi_term"),
+        snap(pa).alias("base_p"),
+        snap(pb).alias("curr_p"),
+        snap(term).alias("psi_term"),
     )
 
 
@@ -622,58 +625,18 @@ def ks_drift(
     (``try_divide`` by a zero total) — validate non-emptiness upstream
     if either state is reachable.
 
-    Scale: identical shape to psi_drift — one 1-row stats aggregate on the
-    baseline (broadcast back), one nbins-key hash aggregate per side, a
-    bin-spine join of two nbins-row frames.  The cumulative sum is a
+    Scale: psi_drift's counts (:func:`_binned_drift_counts`) — one 1-row
+    stats aggregate on the baseline (broadcast back), one nbins-key hash
+    aggregate per side, a bin-spine join of two nbins-row frames.  The cumulative sum is a
     window over the nbins-row RESULT frame (bins, not data) — tiny by
     construction, so its single-partition sort is a constant, never a
     data-sized global sort.
     """
     from pyspark.sql.window import Window
 
-    base = base.where(F.col(col).isNotNull())
-    curr = curr.where(F.col(col).isNotNull())
-    stats = base.agg(
-        F.min(col).cast("double").alias("__mn"),
-        F.max(col).cast("double").alias("__mx"),
-        F.count(F.lit(1)).alias("__bt"),
-    )
-    curr_total = curr.agg(F.count(F.lit(1)).alias("__ct"))
-
-    def _binned_counts(df: DataFrame, out: str) -> DataFrame:
-        x = F.col(col).cast("double")
-        b = F.greatest(
-            F.least(
-                F.floor(
-                    F.try_divide(
-                        (x - F.col("__mn")) * nbins, F.col("__mx") - F.col("__mn")
-                    )
-                ),
-                F.lit(nbins - 1),
-            ),
-            F.lit(0),
-        ).cast("int")
-        return (
-            df.crossJoin(F.broadcast(stats.select("__mn", "__mx")))
-            .select(b.alias("bin"))
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(out))
-        )
-
-    spine = base.sparkSession.range(nbins).select(F.col("id").cast("int").alias("bin"))
-    counts = (
-        spine.join(F.broadcast(_binned_counts(base, "base_n")), ["bin"], "left")
-        .join(F.broadcast(_binned_counts(curr, "curr_n")), ["bin"], "left")
-        .select(
-            "bin",
-            F.coalesce("base_n", F.lit(0)).alias("base_n"),
-            F.coalesce("curr_n", F.lit(0)).alias("curr_n"),
-        )
-    )
+    counts, totals = _binned_drift_counts(base, curr, col, nbins)
     # the window frame is the nbins-row counts table, never the data
     cum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    totals = stats.select("__bt").crossJoin(curr_total)
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     pa = snap(F.try_divide(F.sum("base_n").over(cum), F.col("__bt")))
     pb = snap(F.try_divide(F.sum("curr_n").over(cum), F.col("__ct")))
     return counts.crossJoin(F.broadcast(totals)).select(
@@ -793,10 +756,7 @@ def transition_counts(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     norm = Window.partitionBy("prev_state")
-    p = F.round(
-        F.try_divide(F.col("n"), F.sum("n").over(norm)).cast("decimal(18,12)"),
-        6,
-    ).cast("double")
+    p = snap(F.try_divide(F.col("n"), F.sum("n").over(norm)))
     return counts.select("prev_state", "next_state", "n", p.alias("p"))
 
 
@@ -836,10 +796,7 @@ def expectation_suite(df: DataFrame, expectations: list[tuple]) -> DataFrame:
         if kind == "not_null":
             col = spec[1]
             aggs.append(
-                F.round(
-                    F.avg(F.col(col).isNull().cast("double")).cast("decimal(18,12)"),
-                    6,
-                ).cast("double").alias(a)
+                snap(F.avg(F.col(col).isNull().cast("double"))).alias(a)
             )
             # exact violation count — the verdict source (never the
             # rounded ratio above, which saturates at ~2M rows)
@@ -852,12 +809,7 @@ def expectation_suite(df: DataFrame, expectations: list[tuple]) -> DataFrame:
         elif kind == "unique":
             col = spec[1]
             aggs.append(
-                F.round(
-                    (
-                        F.count_distinct(F.col(col)) / F.count(F.lit(1))
-                    ).cast("decimal(18,12)"),
-                    6,
-                ).cast("double").alias(a)
+                snap(F.count_distinct(F.col(col)) / F.count(F.lit(1))).alias(a)
             )
             aggs.append(
                 (F.count(F.lit(1)) - F.count_distinct(F.col(col))).alias(v)
@@ -877,10 +829,7 @@ def expectation_suite(df: DataFrame, expectations: list[tuple]) -> DataFrame:
             # counts as a violation (the docstring's contract), not a skip
             ok = F.coalesce(F.col(col).isin(vals), F.lit(False))
             aggs.append(
-                F.round(
-                    F.avg(ok.cast("double")).cast("decimal(18,12)"),
-                    6,
-                ).cast("double").alias(a)
+                snap(F.avg(ok.cast("double"))).alias(a)
             )
             aggs.append(
                 F.coalesce(F.sum((~ok).cast("long")), F.lit(0)).alias(v)
@@ -996,7 +945,7 @@ def pagerank(
         )
     return rank.select(
         "node",
-        F.round(F.col("rank").cast("decimal(18,12)"), 6).cast("double").alias("rank"),
+        snap(F.col("rank")).alias("rank"),
     )
 
 
@@ -1030,12 +979,10 @@ def recency_weighted_stats(
         86400.0 * 1e6
     )
     w = F.pow(F.lit(2.0), -age_days / F.lit(float(half_life_days)))
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     # weighted_count is an UNBOUNDED corpus-growing sum (unlike the repo's
     # usual decimal(18,12) fractions): 18,12 leaves 6 integer digits, so a
     # group with >= 1e6 recent events would overflow — NULL on Spark's
     # non-ANSI cast, an error on DuckDB's.  38,12 holds 26 integer digits.
-    snapped_sum = lambda c: F.round(c.cast("decimal(38,12)"), 6).cast("double")
     return (
         df.crossJoin(F.broadcast(ref))
         .select(
@@ -1046,11 +993,11 @@ def recency_weighted_stats(
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            snapped_sum(F.sum("__w")).alias("weighted_count"),
-            snapped(
+            snap(F.sum("__w"), precision=38).alias("weighted_count"),
+            snap(
                 F.sum(F.col("__v") * F.col("__w")) / F.sum("__w")
             ).alias("weighted_value"),
-            snapped(F.sum("__w") / F.count(F.lit(1))).alias(
+            snap(F.sum("__w") / F.count(F.lit(1))).alias(
                 "effective_fraction"
             ),
         )

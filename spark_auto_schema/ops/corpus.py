@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
+from .._snap import snap
 
 # ASCII unit separator: joins fingerprint columns without colliding with
 # text content (documents are word-soup; real corpora could contain any
@@ -583,13 +584,12 @@ def waterfill_allocation(
     level = ranked.agg(
         F.min(F.when(valid, cand)).alias("level")  # unique when budget < total
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         g.crossJoin(F.broadcast(level))
         .select(
             F.col("grp").alias(group_col),
             F.col("t").cast("long").alias("n_tokens"),
-            snapped(F.least(F.col("t"), F.coalesce(F.col("level"), F.col("t")))).alias(
+            snap(F.least(F.col("t"), F.coalesce(F.col("level"), F.col("t")))).alias(
                 "allocation"
             ),
             (F.col("level").isNotNull() & (F.col("t") > F.col("level"))).alias(
@@ -697,7 +697,6 @@ def gini_concentration(
         .over(Window.orderBy(F.col("w").desc(), F.col("grp")))
         .alias("ri"),
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return ranked.agg(
         F.count(F.lit(1)).alias("n_groups"),
         # round() first: Spark's double->long cast truncates, and DuckDB's
@@ -705,16 +704,16 @@ def gini_concentration(
         # this half-away F.round, so the oracle rounds (half-away) before
         # its cast too; identical for integral weights below 2^53
         F.round(F.sum("w")).cast("long").alias("total"),
-        snapped(
+        snap(
             F.lit(2.0) * F.sum(F.col("i") * F.col("w"))
             / (F.count(F.lit(1)) * F.sum("w"))
             - (F.count(F.lit(1)) + F.lit(1.0)) / F.count(F.lit(1))
         ).alias("gini"),
-        snapped(
+        snap(
             F.sum(F.when(F.col("ri") <= 1, F.col("w")).otherwise(F.lit(0.0)))
             / F.sum("w")
         ).alias("top1_share"),
-        snapped(
+        snap(
             F.sum(F.when(F.col("ri") <= 5, F.col("w")).otherwise(F.lit(0.0)))
             / F.sum("w")
         ).alias("top5_share"),
@@ -760,7 +759,6 @@ def mix_drift(
     tot = j.groupBy("grp").agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb")
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         j.join(tot, "grp")
         .where((F.col("na") > 0) & (F.col("nb") > 0))
@@ -809,7 +807,6 @@ def curriculum_phases(
     if n_phases < 2:
         raise ValueError(f"n_phases must be >= 2, got {n_phases}")
     probs = [i / n_phases for i in range(1, n_phases)]
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     bounds = df.agg(
         F.transform(
             F.percentile(F.col(score_col), F.array(*[F.lit(p) for p in probs])),
@@ -919,7 +916,6 @@ def post_dedup_mix_weights(
     budget = s.where(F.col("target_share") > 0).agg(
         F.min(ratio).alias("__b")
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     out = s.crossJoin(F.broadcast(budget)).select(
         group_col,
         "surviving_tokens",

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .._cache import local_checkpoint, persist, release_caches  # noqa: F401
+from .._snap import snap
 from ..io import local_df
 
 
@@ -237,9 +238,7 @@ def _jaccard(inter: Column, sz_a: Column, sz_b: Column) -> Column:
     dup_frac divergence class), and a bounded fraction cannot overflow
     18,12.  The one formula of every exact-Jaccard path, so they stay in
     lockstep with the oracles."""
-    return F.round(
-        (inter / (sz_a + sz_b - inter)).cast("decimal(18,12)"), 4
-    ).cast("double")
+    return snap(inter / (sz_a + sz_b - inter), 4)
 
 
 def _pair_jaccard(
@@ -453,13 +452,31 @@ def incremental_exact_dedup(
     at 100 TB the anti-join is a shuffled hash join on md5 keys (store the
     corpus hash set as a bucketed table on ``content_hash`` and the corpus
     side needs no shuffle at all)."""
-    h = F.md5(F.col(content_col))
-    batch = (
-        new_df.select(F.col(id_col), h.alias("content_hash"))
+    return _absent_from(
+        _batch_keep_ids(new_df, content_col, id_col), corpus_df, content_col
+    )
+
+
+def _batch_keep_ids(new_df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+    """A batch's own exact dedup: one ``(content_hash, keep_id)`` row per
+    distinct ``md5(content)``, keeping the smallest id.  A NULL content is
+    one group with a NULL hash."""
+    return (
+        new_df.select(F.col(id_col), F.md5(F.col(content_col)).alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.min(id_col).alias("keep_id"))
     )
-    corpus = corpus_df.select(h.alias("content_hash")).distinct()
+
+
+def _absent_from(
+    batch: DataFrame, corpus_df: DataFrame, content_col: str
+) -> DataFrame:
+    """The ``batch`` rows whose ``content_hash`` the corpus does not hold:
+    a left-anti join on the corpus's distinct md5 hashes.  A NULL hash
+    matches nothing, so a NULL-content row always passes."""
+    corpus = corpus_df.select(
+        F.md5(F.col(content_col)).alias("content_hash")
+    ).distinct()
     return batch.join(corpus, on="content_hash", how="left_anti")
 
 
@@ -617,11 +634,9 @@ def repeated_ngram_coverage(
         return marked.groupBy(F.col("id").alias(id_col)).agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(F.col("__rep").cast("long")).alias("n_dup_grams"),
-            F.round(
-                (F.sum(F.col("__rep").cast("long")) / F.count(F.lit(1)))
-                .cast("decimal(18,12)"),
-                4,
-            ).cast("double").alias("dup_frac"),
+            snap(
+                F.sum(F.col("__rep").cast("long")) / F.count(F.lit(1)), 4
+            ).alias("dup_frac"),
         )
     rep = (
         pos.groupBy("g")
@@ -639,11 +654,9 @@ def repeated_ngram_coverage(
             F.col("id").alias(id_col),
             "n_grams",
             F.coalesce("n_dup_grams", F.lit(0)).alias("n_dup_grams"),
-            F.round(
-                (F.coalesce("n_dup_grams", F.lit(0)) / F.col("n_grams"))
-                .cast("decimal(18,12)"),
-                4,
-            ).cast("double").alias("dup_frac"),
+            snap(
+                F.coalesce("n_dup_grams", F.lit(0)) / F.col("n_grams"), 4
+            ).alias("dup_frac"),
         )
     )
 
@@ -705,7 +718,13 @@ def segment_dedup(
     first = F.row_number().over(
         Window.partitionBy(F.md5(F.col("__seg"))).orderBy("id", "__s")
     )
-    kept = segs.withColumn("keep", first == 1)
+    return _keep_rollup(segs.withColumn("keep", first == 1), id_col)
+
+
+def _keep_rollup(kept: DataFrame, id_col: str) -> DataFrame:
+    """Per-document rollup of flagged segments ``(id, __s, __seg, keep)``:
+    ``(id_col, n_segments, n_kept, clean_text)`` with the kept segments
+    rejoined in segment order."""
     return (
         kept.groupBy(F.col("id").alias(id_col))
         .agg(
@@ -978,7 +997,6 @@ def contamination_ngram_sweep(
     grams, and one pair of per-n count-distinct aggregates; never an
     all-pairs or train-side distinct-gram materialization.  The final
     result is |ns| rows."""
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
 
     def tagged_grams(df: DataFrame) -> DataFrame:
         # identical per-n gram construction to shingles(); one (n, grams)
@@ -1073,7 +1091,6 @@ def band_occupancy(
     sig = _minhash_sig(sh, num_hashes, md5_grade=True)
     b = _band_buckets(sig, num_hashes, bands, md5_grade=True)
     sz = b.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("sz"))
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return sz.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.max("sz").alias("max_bucket"),
@@ -1156,7 +1173,6 @@ def lsh_config_sweep(
         .cast("long")
         .alias("__ok"),
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     spark = df.sparkSession
     est = F.broadcast(
         spark.createDataFrame(
@@ -1293,7 +1309,6 @@ def lsh_empirical_detection(
         F.round(F.col("jaccard") * F.lit(10_000)).cast("long") / F.lit(units)
     ).cast("long")
     r = num_hashes // bands
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         truth.join(cand, ["id_a", "id_b"], "left")
         .groupBy(bin_idx.alias("__bin"))
@@ -1371,7 +1386,6 @@ def cluster_stats(pairs: DataFrame, clusters: DataFrame) -> DataFrame:
     m = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members")
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return m.join(e, "cluster_id", "left").select(
         "cluster_id",
         "n_members",
@@ -1759,27 +1773,7 @@ def remove_boilerplate(
     kept = segs.join(boiler, ["__d"], "left").withColumn(
         "keep", F.col("__boiler").isNull()
     )
-    return (
-        kept.groupBy(F.col("id").alias(id_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_segments"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("keep"),
-                                F.struct(F.col("__s"), F.col("__seg")),
-                            )
-                        )
-                    ),
-                    lambda s: s["__seg"],
-                ),
-            ).alias("clean_text"),
-        )
-    )
+    return _keep_rollup(kept, id_col)
 
 
 def containment_pairs(
@@ -1887,12 +1881,7 @@ def bloom_incremental_dedup(
     filter.  Correctness does not depend on the filter's quality: the
     verify join restores exactness, so num_bits/num_hashes tune only the
     pruning rate."""
-    h = F.md5(F.col(content_col))
-    batch = (
-        new_df.select(F.col(id_col), h.alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"))
-    )
+    batch = _batch_keep_ids(new_df, content_col, id_col)
     bits = (
         corpus_bits
         if corpus_bits is not None
@@ -1923,14 +1912,16 @@ def bloom_incremental_dedup(
         .agg(F.count(F.lit(1)).alias("set_bits"))
     )
     positive = hits.where(F.col("set_bits") == num_hashes).drop("set_bits")
+    # null-safe: concat_ws skips a NULL hash, so a NULL-text row probes
+    # the bits of the bare index and is positive whenever the corpus holds
+    # a NULL text too; an equi-anti-join cannot match its NULL key and
+    # would put the row on both sides
     negative = batch.join(
-        positive.select("content_hash"), on="content_hash", how="left_anti"
+        positive.select(F.col("content_hash").alias("__pos")),
+        F.col("content_hash").eqNullSafe(F.col("__pos")),
+        "left_anti",
     )
-    corpus_hashes = corpus_df.select(
-        F.md5(F.col(content_col)).alias("content_hash")
-    ).distinct()
-    verified_novel = positive.join(corpus_hashes, on="content_hash", how="left_anti")
-    return negative.unionByName(verified_novel)
+    return negative.unionByName(_absent_from(positive, corpus_df, content_col))
 
 
 def cdc_chunks(
@@ -2018,16 +2009,11 @@ def cdc_dedup_stats(
     return ch.agg(
         F.count(F.lit(1)).alias("n_chunks"),
         F.count_distinct(F.col("chunk_hash")).alias("n_distinct"),
-        F.round(
-            (
-                F.lit(1.0)
-                - F.count_distinct(F.col("chunk_hash")) / F.count(F.lit(1))
-            ).cast("decimal(18,12)"),
-            6,
-        ).cast("double").alias("dup_ratio"),
-        F.round(
-            F.avg(F.col("n_tokens")).cast("decimal(18,12)"), 6
-        ).cast("double").alias("avg_tokens"),
+        snap(
+            F.lit(1.0)
+            - F.count_distinct(F.col("chunk_hash")) / F.count(F.lit(1))
+        ).alias("dup_ratio"),
+        snap(F.avg(F.col("n_tokens"))).alias("avg_tokens"),
     )
 
 
@@ -2121,9 +2107,7 @@ def token_window_dup_coverage(
     return per_run.groupBy("id").agg(
         F.sum("n_all").alias("n_windows"),
         F.sum("n_rep").alias("n_dup_windows"),
-        F.round(
-            (F.sum("n_rep") / F.sum("n_all")).cast("decimal(18,12)"), 4
-        ).cast("double").alias("dup_frac"),
+        snap(F.sum("n_rep") / F.sum("n_all"), 4).alias("dup_frac"),
         F.max("n_rep").cast("long").alias("max_dup_run"),
     ).withColumnRenamed("id", id_col)
 
@@ -2270,7 +2254,7 @@ def cross_source_duplication(
     (pair branch + each totals side), no digest self-join anywhere."""
     sets = (
         df.select(
-            F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("d"),
+            _content_digest(F.col(text_col)).alias("d"),
             F.col(group_col).alias("src"),
         )
         .groupBy("d")
@@ -2305,7 +2289,6 @@ def cross_source_duplication(
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("n_distinct"))
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     ta = totals.select(
         F.col("src").alias("source_a"), F.col("n_distinct").alias("na")
     )
@@ -2319,9 +2302,73 @@ def cross_source_duplication(
             "source_a",
             "source_b",
             "n_shared",
-            snapped(F.col("n_shared") / F.col("na")).alias("share_of_a"),
-            snapped(F.col("n_shared") / F.col("nb")).alias("share_of_b"),
+            snap(F.col("n_shared") / F.col("na")).alias("share_of_a"),
+            snap(F.col("n_shared") / F.col("nb")).alias("share_of_b"),
         )
+    )
+
+
+def _content_digest(text: Column) -> Column:
+    """The exact-content key of the survivorship operators:
+    ``md5(coalesce(text, ''))``, so NULL and empty texts are one content."""
+    return F.md5(F.coalesce(text, F.lit("")))
+
+
+def _exact_winners(
+    df: DataFrame, text_col: str, id_col: str, group_col: str, *carry: Column
+) -> DataFrame:
+    """Exact-dedup survivorship under the keep-lowest-id rule: each row's
+    ``id_col``, ``group_col`` (renamed ``src``) and ``carry`` columns plus
+    ``__winner`` (the smallest id sharing its :func:`_content_digest`),
+    ``__kept`` (the row is its digest's winner) and ``__ext`` (the
+    winner's ``src`` differs from the row's).  One digest-partition window:
+    a single 16-byte-key exchange, no join.  A caller selects what it
+    reads; the optimizer prunes the window columns it drops.
+
+    A caller that shingles the survivors carries the text in ``carry``,
+    so the text rides the window's exchange.  Projecting it out and
+    re-joining it for the survivors would not pay: the id-keyed re-join
+    is itself a full-text exchange plus an extra id shuffle."""
+    w = Window.partitionBy("__d").orderBy(F.col(id_col))
+    return (
+        df.select(
+            F.col(id_col),
+            F.col(group_col).alias("src"),
+            *carry,
+            _content_digest(F.col(text_col)).alias("__d"),
+        )
+        .withColumn("__winner", F.first(id_col).over(w))
+        .withColumn("__kept", F.col(id_col) == F.col("__winner"))
+        .withColumn("__ext", F.first("src").over(w) != F.col("src"))
+        .drop("__d")
+    )
+
+
+def _near_winners(
+    marked: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    max_df: int | None,
+) -> DataFrame:
+    """The near stage of exact-then-near dedup over the ``__kept`` rows of
+    ``marked`` (:func:`_exact_winners`): ``(id_col, __near_winner)`` for
+    each exact survivor with a verified :func:`ngram_jaccard_pairs`
+    partner of smaller id, that smallest partner as its winner.  The pair
+    set is bucketed and capped, never all-pairs; the rollup is pair-sized."""
+    return (
+        ngram_jaccard_pairs(
+            marked.where(F.col("__kept")),
+            text_col=text_col,
+            id_col=id_col,
+            n=n,
+            threshold=threshold,
+            hashed=True,
+            max_df=max_df,
+        )
+        .groupBy(F.col("id_b").alias(id_col))
+        .agg(F.min("id_a").alias("__near_winner"))
     )
 
 
@@ -2349,16 +2396,7 @@ def dedup_loss_by_source(
     exchange) marks each row's winner id and winner source
     (lexicographic-first by id), then one hash aggregate to source
     granularity — no join, no distinct, one scan."""
-    d = F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    w = Window.partitionBy("__d").orderBy(F.col(id_col))
-    marked = df.select(
-        F.col(id_col), F.col(group_col).alias("src"), d.alias("__d")
-    ).select(
-        "src",
-        (F.col(id_col) == F.first(id_col).over(w)).alias("__kept"),
-        (F.first("src").over(w) != F.col("src")).alias("__ext"),
-    )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
+    marked = _exact_winners(df, text_col, id_col, group_col)
     return (
         marked.groupBy(F.col("src").alias(group_col))
         .agg(
@@ -2375,7 +2413,7 @@ def dedup_loss_by_source(
             "n_kept",
             "n_dropped",
             "n_lost_to_other",
-            snapped(F.col("n_dropped") / F.col("n_docs")).alias("loss_frac"),
+            snap(F.col("n_dropped") / F.col("n_docs")).alias("loss_frac"),
         )
     )
 
@@ -2404,56 +2442,27 @@ def dedup_provenance(
     training manifest (takedown tracing, syndication disputes, dedup
     regression triage between releases).
 
-    Dataflow: the same one digest window + survivor-side bucketed
-    shingle equi-join as the rollup twin; the near winner is one
+    Dataflow: the one digest window of :func:`_exact_winners` and the
+    bucketed near stage of :func:`_near_winners`, whose winner is one
     ``min(id_a) GROUP BY id_b`` over the verified pair set (pair-sized),
     joined back unhinted — the output stays |corpus|-row but every
     intermediate is the dedup pipeline the corpus already pays for."""
-    d = F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    w = Window.partitionBy("__d").orderBy(F.col(id_col))
-    # NOTE(what rides the exchange): the full text column goes through the
-    # digest-window shuffle — uniquely in this family, which otherwise
-    # ships digests/ids only — because the SURVIVOR side is shingled
-    # downstream and needs the text.  Projecting text out and re-joining
-    # it for survivors would not pay: the id-keyed re-join is itself a
-    # full-text exchange PLUS an extra id shuffle, so one text-carrying
-    # window exchange is the minimum-traffic plan.
     marked = persist(
-        df.select(
-            F.col(id_col), F.col(group_col), F.col(text_col), d.alias("__d")
-        ).select(
-            F.col(id_col),
-            F.col(group_col),
-            F.col(text_col),
-            F.first(id_col).over(w).alias("__winner"),
+        _exact_winners(df, text_col, id_col, group_col, F.col(text_col)).select(
+            id_col, "src", text_col, "__winner", "__kept"
         )
     )
-    survivors = marked.where(F.col(id_col) == F.col("__winner"))
-    near_winner = (
-        ngram_jaccard_pairs(
-            survivors,
-            text_col=text_col,
-            id_col=id_col,
-            n=shingle_n,
-            threshold=threshold,
-            hashed=True,
-            max_df=max_df,
-        )
-        .groupBy(F.col("id_b").alias(id_col))
-        .agg(F.min("id_a").alias("__near_winner"))
-    )
+    near = _near_winners(marked, text_col, id_col, shingle_n, threshold, max_df)
     return (
-        marked.join(near_winner, on=id_col, how="left")
+        marked.join(near, on=id_col, how="left")
         .select(
             F.col(id_col),
-            F.col(group_col),
-            F.when(F.col(id_col) != F.col("__winner"), F.lit("exact"))
+            F.col("src").alias(group_col),
+            F.when(~F.col("__kept"), F.lit("exact"))
             .when(F.col("__near_winner").isNotNull(), F.lit("near"))
             .otherwise(F.lit("kept"))
             .alias("stage"),
-            F.when(
-                F.col(id_col) != F.col("__winner"), F.col("__winner")
-            )
+            F.when(~F.col("__kept"), F.col("__winner"))
             .otherwise(F.col("__near_winner"))
             .alias("winner_id"),
         )
@@ -2491,60 +2500,25 @@ def token_survivorship(
 
     Dataflow: token counts are ROW-LOCAL (size over the split array — no
     explode); exact survivorship is the one digest-partition window of
-    :func:`dedup_loss_by_source`; the near stage is
-    :func:`ngram_jaccard_pairs` over the exact survivors (bucketed
-    shingle equi-join, ``max_df`` hot-shingle cap — never all-pairs)
-    collapsed to a drop-id set joined back with an unhinted left
-    semi/anti pattern (AQE picks the strategy; the drop set scales with
-    the near-dup fraction, so no hard broadcast).  One final hash
-    aggregate to |sources| rows."""
-    d = F.md5(F.coalesce(F.col(text_col), F.lit("")))
+    :func:`_exact_winners`; the near stage is :func:`_near_winners`
+    (bucketed shingle equi-join, ``max_df`` hot-shingle cap — never
+    all-pairs) joined back unhinted (AQE picks the strategy; the drop set
+    scales with the near-dup fraction, so no hard broadcast).  One final
+    hash aggregate to |sources| rows."""
     tk = F.size(
         F.filter(
             F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
             lambda w: F.length(w) > 0,
         )
     ).cast("long")
-    w = Window.partitionBy("__d").orderBy(F.col(id_col))
-    # NOTE(what rides the exchange): as in dedup_provenance, the full text
-    # column rides the digest-window shuffle (the survivor side is
-    # shingled downstream); a project-out-and-re-join variant would move
-    # the same text bytes through an id-keyed join exchange AND add an id
-    # shuffle, so this is the minimum-traffic shape, not an oversight.
     marked = persist(
-        df.select(
-            F.col(id_col),
-            F.col(group_col).alias("src"),
-            F.col(text_col),
-            d.alias("__d"),
-            tk.alias("__tk"),
-        ).select(
-            F.col(id_col),
-            "src",
-            F.col(text_col),
-            "__tk",
-            (F.col(id_col) == F.first(id_col).over(w)).alias("__kept"),
-            (F.first("src").over(w) != F.col("src")).alias("__ext"),
-        )
+        _exact_winners(
+            df, text_col, id_col, group_col, F.col(text_col), tk.alias("__tk")
+        ).drop("__winner")
     )
-    survivors = marked.where(F.col("__kept"))
-    near_drop = (
-        ngram_jaccard_pairs(
-            survivors,
-            text_col=text_col,
-            id_col=id_col,
-            n=shingle_n,
-            threshold=threshold,
-            hashed=True,
-            max_df=max_df,
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-        .withColumn("__near_dropped", F.lit(True))
-    )
-    flagged = marked.join(near_drop, on=id_col, how="left")
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
-    kept_near = F.col("__kept") & F.col("__near_dropped").isNull()
+    near = _near_winners(marked, text_col, id_col, shingle_n, threshold, max_df)
+    flagged = marked.join(near, on=id_col, how="left")
+    kept_near = F.col("__kept") & F.col("__near_winner").isNull()
     return (
         flagged.groupBy(F.col("src").alias(group_col))
         .agg(
@@ -2569,7 +2543,7 @@ def token_survivorship(
             "tokens_kept_exact",
             "tokens_lost_to_other_exact",
             "tokens_kept_near",
-            snapped(
+            snap(
                 F.lit(1.0) - F.col("tokens_kept_near") / F.col("n_tokens")
             ).alias("token_loss_frac"),
         )
@@ -2604,7 +2578,6 @@ def dedup_rate_drift(
     window + one source-granularity aggregate; the compare join is
     |sources| x |sources| on the group key — nothing new touches row
     data, and the drift math runs on two |sources|-row frames."""
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
 
     def side(df: DataFrame, tag: str) -> DataFrame:
         s = dedup_loss_by_source(df, group_col, text_col, id_col)
@@ -2612,7 +2585,7 @@ def dedup_rate_drift(
             group_col,
             F.col("n_docs").alias(f"n_docs_{tag}"),
             F.col("loss_frac").alias(f"loss_frac_{tag}"),
-            snapped(F.col("n_lost_to_other") / F.col("n_docs")).alias(
+            snap(F.col("n_lost_to_other") / F.col("n_docs")).alias(
                 f"__xl_{tag}"
             ),
         )
@@ -2626,12 +2599,53 @@ def dedup_rate_drift(
             "n_docs_b",
             "loss_frac_a",
             "loss_frac_b",
-            snapped(F.col("loss_frac_b") - F.col("loss_frac_a")).alias(
+            snap(F.col("loss_frac_b") - F.col("loss_frac_a")).alias(
                 "loss_drift"
             ),
-            snapped(F.col("__xl_b") - F.col("__xl_a")).alias("xloss_drift"),
+            snap(F.col("__xl_b") - F.col("__xl_a")).alias("xloss_drift"),
         )
     )
+
+
+def _segment_pairs(
+    segs: DataFrame,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    verify_threshold: float,
+) -> DataFrame:
+    """Verified md5 MinHash-LSH pairs between the segments
+    ``(__doc, __s, __seg)`` of :func:`_word_segments`: ``(a, b, jaccard)``
+    with each side a ``(d, s)`` struct of doc id and segment index.
+
+    Each segment is keyed ``'doc:seg'`` for :func:`minhash_lsh_pairs_md5`,
+    so a < b in STRING order of the keys, not numerically.  Decoding strips
+    only the trailing ``:<seg>`` suffix, so a ':' inside a string doc id
+    survives (split-on-':' would truncate it), and casts the doc back to
+    its source type (a bare cast to long would NULL out string ids)."""
+    id_type = segs.schema["__doc"].dataType.simpleString()
+    pairs = minhash_lsh_pairs_md5(
+        segs.select(
+            F.concat_ws(
+                ":", F.col("__doc").cast("string"), F.col("__s").cast("string")
+            ).alias("sid"),
+            F.col("__seg").alias("seg"),
+        ),
+        text_col="seg",
+        id_col="sid",
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        verify_threshold=verify_threshold,
+    )
+
+    def side(key: str) -> Column:
+        return F.struct(
+            F.regexp_replace(key, r":[0-9]+$", "").cast(id_type).alias("d"),
+            F.regexp_extract(key, r":([0-9]+)$", 1).cast("int").alias("s"),
+        )
+
+    return pairs.select(side("id_a").alias("a"), side("id_b").alias("b"), "jaccard")
 
 
 def paragraph_minhash_pairs(
@@ -2665,29 +2679,13 @@ def paragraph_minhash_pairs(
     all-pairs; the doc-pair rollup is one aggregate over the verified
     segment pairs (each <= the near-dup volume, not the corpus)."""
     segs = _word_segments(
-        df, F.col(text_col), seg_words, F.col(id_col).cast("string").alias("__d")
-    ).select(
-        F.concat_ws(":", "__d", "__s").alias("sid"), F.col("__seg").alias("seg")
+        df, F.col(text_col), seg_words, F.col(id_col).alias("__doc")
     )
-    pairs = minhash_lsh_pairs_md5(
-        segs,
-        text_col="seg",
-        id_col="sid",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        verify_threshold=verify_threshold,
-    )
-    # recover the doc id by stripping the ':<seg_idx>' suffix we appended
-    # (robust to ':' INSIDE the original id — split-on-':' would truncate
-    # it) and cast back to the source id type; a bare cast-to-long would
-    # NULL out string ids and the != filter would silently drop every pair
-    id_type = df.schema[id_col].dataType.simpleString()
-    doc_of = lambda c: F.regexp_replace(c, r":[0-9]+$", "").cast(id_type)
-    da = doc_of(F.col("id_a"))
-    db = doc_of(F.col("id_b"))
+    pairs = _segment_pairs(segs, num_hashes, bands, shingle_n, verify_threshold)
     return (
-        pairs.select(da.alias("__da"), db.alias("__db"), "jaccard")
+        pairs.select(
+            F.col("a.d").alias("__da"), F.col("b.d").alias("__db"), "jaccard"
+        )
         .where(F.col("__da") != F.col("__db"))
         .groupBy(
             F.least("__da", "__db").alias("doc_a"),
@@ -2728,11 +2726,11 @@ def paragraph_dedup_provenance(
     inside an otherwise-unique page never trips doc-level dedup, but its
     segment rows here carry the attribution a takedown traces).
 
-    Dataflow: the segment explode of :func:`paragraph_minhash_pairs`
+    Dataflow: the segment explode of :func:`_word_segments`
     (|segments| ~ corpus words / seg_words, linear); ONE segment-digest
-    window for the exact stage (the text rides that exchange, same
-    documented trade-off as :func:`dedup_provenance`); the near stage is
-    :func:`minhash_lsh_pairs_md5` over the exact SURVIVORS only
+    window for the exact stage (the text rides that exchange, the
+    trade-off :func:`_exact_winners` documents); the near stage is
+    :func:`_segment_pairs` over the exact SURVIVORS only
     (banded, bucket-local, never all-pairs) collapsed to a
     min-(doc, seg)-per-victim attribution (pair-sized) and joined back
     unhinted.  Output is |segments| rows; every intermediate is the
@@ -2755,34 +2753,11 @@ def paragraph_dedup_provenance(
     survivors = marked.where(
         (F.col("__doc") == F.col("__wdoc")) & (F.col("__s") == F.col("__wseg"))
     )
-    sid = survivors.select(
-        F.concat_ws(
-            ":", F.col("__doc").cast("string"), F.col("__s").cast("string")
-        ).alias("sid"),
-        F.col("__seg").alias("seg"),
-    )
-    pairs = minhash_lsh_pairs_md5(
-        sid,
-        text_col="seg",
-        id_col="sid",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        verify_threshold=verify_threshold,
-    )
-    # recover numeric (doc, seg) from 'doc:seg' (strip only the trailing
-    # segment suffix — robust to ':' inside string doc ids) and
-    # RE-canonicalize numerically: minhash pairs are id_a < id_b by STRING
-    # order, but the keep/drop rule is the numeric (doc_id, seg_idx) order
-    id_type = df.schema[id_col].dataType.simpleString()
-    doc_of = lambda c: F.regexp_replace(c, r":[0-9]+$", "").cast(id_type)
-    seg_of = lambda c: F.regexp_extract(c, r":([0-9]+)$", 1).cast("int")
-    pa = F.struct(
-        doc_of(F.col("id_a")).alias("d"), seg_of(F.col("id_a")).alias("s")
-    )
-    pb = F.struct(
-        doc_of(F.col("id_b")).alias("d"), seg_of(F.col("id_b")).alias("s")
-    )
+    pairs = _segment_pairs(survivors, num_hashes, bands, shingle_n, verify_threshold)
+    # RE-canonicalize numerically: the pairs are a < b by STRING order of
+    # their 'doc:seg' keys, but the keep/drop rule is the numeric
+    # (doc_id, seg_idx) order
+    pa, pb = F.col("a"), F.col("b")
     near_winner = (
         pairs.select(
             F.when(pa < pb, pb).otherwise(pa).alias("__victim"),
@@ -2843,17 +2818,13 @@ def lsh_s_curve(
     r = num_hashes // bands
     if r * bands != num_hashes:
         raise ValueError("bands must divide num_hashes")
-    s = F.round(
-        ((F.col("id") + 1) / F.lit(float(grid_points))).cast("decimal(18,12)"),
-        6,
-    ).cast("double")
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
+    s = snap((F.col("id") + 1) / F.lit(float(grid_points)))
     p = 1 - F.pow(1 - F.pow(s, F.lit(float(r))), F.lit(float(bands)))
     s_star = F.pow(F.lit(1.0 / bands), F.lit(1.0 / r))
     return spark.range(grid_points).select(
         s.alias("s"),
-        snapped(p).alias("p_detect"),
-        snapped(s_star).alias("s_star"),
+        snap(p).alias("p_detect"),
+        snap(s_star).alias("s_star"),
         F.lit(r).cast("int").alias("band_rows"),
         F.lit(bands).cast("int").alias("n_bands"),
     )

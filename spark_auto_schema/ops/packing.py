@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._snap import snap
 from .sampling import _hash_prefix, _hash_prefix_int, fraction_threshold
 
 # Bucket-local pack ids are composed as bucket * _PACK_STRIDE + local_seq so
@@ -366,65 +367,58 @@ def span_corruption(
     in_piece = F.when(~F.col("m"), F.col("tok")).when(F.col("run_head"), sentinel)
     # target stream: run-head sentinel (priority 0) then the span's tokens
     tgt_piece = F.when(F.col("m"), F.col("tok"))
+
+    def in_order(pieces: Column) -> Column:
+        # (pos, prio, piece) structs sorted, their pieces space-joined
+        return F.array_join(F.transform(F.array_sort(pieces), lambda s: s.piece), " ")
+
     assembled = spanned.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            in_piece.isNotNull(),
+        in_order(
+            F.collect_list(
+                F.when(
+                    in_piece.isNotNull(),
+                    F.struct(
+                        F.col("pos"),
+                        F.when(F.col("run_head") & F.col("m"), F.lit(0))
+                        .otherwise(F.lit(1))
+                        .alias("prio"),
+                        in_piece.alias("piece"),
+                    ),
+                )
+            )
+        ).alias("input"),
+        in_order(
+            F.flatten(
+                F.collect_list(
+                    # a run head contributes TWO target pieces — its
+                    # sentinel (prio 0) then its own token (prio 1) — so
+                    # rows emit ARRAYS of structs
+                    F.when(
+                        F.col("run_head"),
+                        F.array(
                             F.struct(
                                 F.col("pos"),
-                                F.when(F.col("run_head") & F.col("m"), F.lit(0))
-                                .otherwise(F.lit(1))
-                                .alias("prio"),
-                                in_piece.alias("piece"),
+                                F.lit(0).alias("prio"),
+                                sentinel.alias("piece"),
                             ),
-                        )
-                    )
-                ),
-                lambda s: s.piece,
-            ),
-            " ",
-        ).alias("input"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.flatten(
-                        F.collect_list(
-                            # a run head contributes TWO target pieces —
-                            # its sentinel (prio 0) then its own token
-                            # (prio 1) — so rows emit ARRAYS of structs
-                            F.when(
-                                F.col("run_head"),
-                                F.array(
-                                    F.struct(
-                                        F.col("pos"),
-                                        F.lit(0).alias("prio"),
-                                        sentinel.alias("piece"),
-                                    ),
-                                    F.struct(
-                                        F.col("pos"),
-                                        F.lit(1).alias("prio"),
-                                        tgt_piece.alias("piece"),
-                                    ),
-                                ),
-                            ).when(
-                                F.col("m"),
-                                F.array(
-                                    F.struct(
-                                        F.col("pos"),
-                                        F.lit(1).alias("prio"),
-                                        tgt_piece.alias("piece"),
-                                    )
-                                ),
+                            F.struct(
+                                F.col("pos"),
+                                F.lit(1).alias("prio"),
+                                tgt_piece.alias("piece"),
                             ),
-                        )
-                    )
-                ),
-                lambda s: s.piece,
-            ),
-            " ",
+                        ),
+                    ).when(
+                        F.col("m"),
+                        F.array(
+                            F.struct(
+                                F.col("pos"),
+                                F.lit(1).alias("prio"),
+                                tgt_piece.alias("piece"),
+                            )
+                        ),
+                    ),
+                )
+            )
         ).alias("target"),
         (F.max(F.col("span_k")) + 1).cast("long").alias("n_spans"),
     )
@@ -482,7 +476,6 @@ def packing_length_sweep(
         .groupBy("budget", "bucket", "local")
         .agg(F.sum(token_col).alias("pt"))
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return packs.groupBy("budget").agg(
         F.count(F.lit(1)).alias("n_packs"),
         F.sum("pt").cast("long").alias("total_tokens"),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
+from .._snap import snap
 
 # Width of the hex prefix compared against the threshold: 4 hex chars = a
 # uniform draw from [0, 65536) per key.  Threshold comparisons (hash_sample,
@@ -415,12 +416,11 @@ def dsir_importance_sample(
         float(_UNIFORM_SPACE) + 1.0
     )
     g = -F.log(-F.log(u))
-    snapped = lambda c: F.round(c.cast("decimal(18,10)"), 4).cast("double")
     return (
         per_doc.select(
             F.col("id").alias(id_col),
-            snapped(F.col("logw")).alias("log_weight"),
-            snapped(F.col("logw") + g).alias("gumbel_score"),
+            snap(F.col("logw"), 4, scale=10).alias("log_weight"),
+            snap(F.col("logw") + g, 4, scale=10).alias("gumbel_score"),
         )
         .orderBy(F.col("gumbel_score").desc(), F.col(id_col))
         .limit(n)
@@ -461,7 +461,6 @@ def sample_bias_audit(
             f"{_HEX_DIGITS} hex digits — rel_deviation is undefined"
         )
     keep = (_hash_prefix(F.col(key_col)) < F.lit(thr)).cast("long")
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         df.select(F.col(group_col).alias("grp"), keep.alias("__k"))
         .groupBy("grp")

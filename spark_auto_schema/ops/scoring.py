@@ -39,8 +39,11 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .._snap import snap
+from .analytics import _equi_width_bin
 
 # Stopword list shared with ops.text quality scoring: a small closed set
 # keeps the ratio deterministic and cheap (broadcast as a literal array).
@@ -154,8 +157,7 @@ def calibration_bins(
     # both edges clamp: scores are documented [0, 1] but a defensive clamp
     # keeps a stray out-of-range score IN the spine instead of silently
     # dropping it at the join
-    b = F.greatest(F.least(F.floor(s * nbins), F.lit(nbins - 1)), F.lit(0)).cast("int")
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
+    b = _equi_width_bin(s, nbins, F.lit(0.0), F.lit(1.0))
     counts = (
         scored.where(s.isNotNull())
         .select(b.alias("bin"), s.alias("__s"), F.col(label_col).cast("int").alias("__y"))
@@ -200,7 +202,7 @@ def binned_roc(
     from pyspark.sql.window import Window
 
     s = F.col(score_col).cast("double")
-    b = F.greatest(F.least(F.floor(s * nbins), F.lit(nbins - 1)), F.lit(0)).cast("int")
+    b = _equi_width_bin(s, nbins, F.lit(0.0), F.lit(1.0))
     y = F.col(label_col).cast("int")
     counts = (
         scored.where(s.isNotNull())
@@ -226,18 +228,15 @@ def binned_roc(
     tot = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     tpr = snap(F.try_divide(F.sum("n_pos").over(desc), F.sum("n_pos").over(tot)))
     fpr = snap(F.try_divide(F.sum("n_neg").over(desc), F.sum("n_neg").over(tot)))
     curve = full.select("bin", "n_pos", "n_neg", tpr.alias("tpr"), fpr.alias("fpr"))
     lag_w = Window.orderBy(F.col("bin").desc())
     prev_tpr = F.coalesce(F.lag("tpr").over(lag_w), F.lit(0.0))
     prev_fpr = F.coalesce(F.lag("fpr").over(lag_w), F.lit(0.0))
-    auc_term = F.round(
-        ((F.col("fpr") - prev_fpr) * (F.col("tpr") + prev_tpr) / F.lit(2.0))
-        .cast("decimal(18,12)"),
-        6,
-    ).cast("double")
+    auc_term = snap(
+        (F.col("fpr") - prev_fpr) * (F.col("tpr") + prev_tpr) / F.lit(2.0)
+    )
     return curve.select(
         "bin", "n_pos", "n_neg", "tpr", "fpr", auc_term.alias("auc_term")
     )
@@ -274,11 +273,8 @@ def agreement_kappa(
     pe = pa1 * pb1 + (1 - pa1) * (1 - pb1)
     kappa = F.try_divide(po - pe, F.lit(1.0) - pe)
 
-    def _snap(c: Column) -> Column:
-        return F.round(c.cast("decimal(18,12)"), 6).cast("double")
-
     return cnt.select(
-        "n", _snap(po).alias("po"), _snap(pe).alias("pe"), _snap(kappa).alias("kappa")
+        "n", snap(po).alias("po"), snap(pe).alias("pe"), snap(kappa).alias("kappa")
     )
 
 
@@ -328,7 +324,6 @@ def quantile_normalize(
     lo = F.element_at(F.col("__g"), i + 1)
     hi = F.element_at(F.col("__g"), F.least(i + F.lit(2), F.lit(grid)))
     interp = lo + (hi - lo) * frac
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return ranked.select(
         F.col(id_col),
         F.col(group_col),
@@ -375,7 +370,6 @@ def score_drift(
         )
 
     diffs = F.zip_with("q_a", "q_b", lambda x, y: F.abs(x - y))
-    snap = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         grids(df_a, "a")
         .join(grids(df_b, "b"), "grp")

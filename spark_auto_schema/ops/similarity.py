@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
+from .._snap import snap
 
 try:
     import numpy as _np
@@ -42,12 +43,6 @@ def _vec_lit(vec) -> Column:
     if _np is None:  # pragma: no cover — numpy ships with PySpark
         return F.array(*[F.lit(x) for x in xs])
     return F.lit(_np.asarray(xs, dtype=_np.float64))
-
-
-def _snap(c: Column) -> Column:
-    """A reported ratio snapped to 6 decimals through DECIMAL(18,12), so
-    the value is engine-stable."""
-    return F.round(c.cast("decimal(18,12)"), 6).cast("double")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -553,9 +548,7 @@ def quantize_embeddings(
     )
     return coded.groupBy(id_col).agg(
         _pos_sorted("code").alias("codes"),
-        F.round(F.avg("err").cast("decimal(18,10)"), 6)
-        .cast("double")
-        .alias("mean_abs_err"),
+        snap(F.avg("err"), scale=10).alias("mean_abs_err"),
     )
 
 
@@ -1169,7 +1162,7 @@ def two_level_probe_sweep(
             "probe",
             "n_vecs",
             "n_match",
-            _snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
+            snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
         )
     )
 
@@ -1793,7 +1786,7 @@ def rrf_fuse(
     for p in parts[1:]:
         u = u.unionByName(p)
     fused = u.groupBy("id").agg(
-        _snap(F.sum(F.lit(1.0) / (F.lit(k0) + F.col("rank")))).alias("rrf"),
+        snap(F.sum(F.lit(1.0) / (F.lit(k0) + F.col("rank")))).alias("rrf"),
         F.count(F.lit(1)).alias("n_lists"),
     )
     return (
@@ -1857,7 +1850,7 @@ def cross_rerank(
             F.lit(2.0) * m / (F.lit(len(q)) + F.size(toks))
         )
     scored = joined.select(
-        "id", "pool_rank", _snap(ce).alias("ce_score")
+        "id", "pool_rank", snap(ce).alias("ce_score")
     )
     w_ce = Window.orderBy(F.col("ce_score").desc(), F.col("id"))
     return scored.select(
@@ -1923,8 +1916,8 @@ def topic_shares(
     return counts.select(
         "cluster",
         "n_vecs",
-        _snap(F.col("n_vecs") / total).alias("share"),
-        _snap(F.col("n_vecs") * len(cents) / total).alias("balance_ratio"),
+        snap(F.col("n_vecs") / total).alias("share"),
+        snap(F.col("n_vecs") * len(cents) / total).alias("balance_ratio"),
         F.row_number()
         .over(Window.orderBy(F.col("n_vecs").desc(), F.col("cluster")))
         .cast("int")
@@ -2003,9 +1996,9 @@ def topic_share_drift(
         "cluster",
         "n_a",
         "n_b",
-        _snap(share_a).alias("share_a"),
-        _snap(share_b).alias("share_b"),
-        _snap(share_b - share_a).alias("share_delta"),
+        snap(share_a).alias("share_a"),
+        snap(share_b).alias("share_b"),
+        snap(share_b - share_a).alias("share_delta"),
     )
 
 
@@ -2074,7 +2067,7 @@ def quantized_assign_agreement(
             "cluster",
             "n_vecs",
             "n_match",
-            _snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
+            snap(F.col("n_match") / F.col("n_vecs")).alias("agreement"),
         )
     )
 
@@ -2238,7 +2231,7 @@ def _recall_rollup(
         .select(
             "qid",
             n.cast("long").alias("n_hits"),
-            _snap(n / F.lit(float(k))).alias("recall_at_k"),
+            snap(n / F.lit(float(k))).alias("recall_at_k"),
         )
     )
 
@@ -2340,10 +2333,10 @@ def ivf_nprobe_sweep(
         parts.append(
             per_q.agg(
                 F.count(F.lit(1)).alias("n_queries"),
-                _snap(F.avg(F.coalesce("__c", F.lit(0)))).alias(
+                snap(F.avg(F.coalesce("__c", F.lit(0)))).alias(
                     "avg_candidates"
                 ),
-                _snap(F.avg(F.col("n_hits") / F.lit(float(k)))).alias(
+                snap(F.avg(F.col("n_hits") / F.lit(float(k)))).alias(
                     "avg_recall_at_k"
                 ),
             ).select(

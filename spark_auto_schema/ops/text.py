@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
+from .._snap import snap
 from .dedup import _word_ngrams
 
 # Stopword profiles for the n-gram/stopword-hit language heuristic.
@@ -162,7 +163,7 @@ def quality_score(
     # double-round through DECIMAL(18,10): engines disagree on round() of
     # doubles sitting one ulp below a half boundary (e.g. 0.49124999...96);
     # snapping to 10 decimal digits first makes the 4-digit round portable
-    quality = F.round(score.cast("decimal(18,10)"), 4).cast("double")
+    quality = snap(score, 4, scale=10)
     extra = [F.col(c) for c in (keep_cols or [])]
     return df.select(F.col(id_col), *extra, quality.alias("quality"))
 
@@ -339,9 +340,7 @@ def unigram_logprob(
         toks.join(F.broadcast(logp), "w")
         .groupBy(id_col)
         .agg(
-            F.round(F.avg("lp").cast("decimal(18,10)"), 4)
-            .cast("double")
-            .alias("avg_logprob"),
+            snap(F.avg("lp"), 4, scale=10).alias("avg_logprob"),
             F.count(F.lit(1)).alias("n_tokens"),
         )
     )
@@ -722,9 +721,7 @@ def bigram_logprob(
         pairs.join(model, ["w1", "w2"])
         .groupBy(id_col)
         .agg(
-            F.round(F.avg("lp").cast("decimal(18,10)"), 4)
-            .cast("double")
-            .alias("avg_bigram_logprob"),
+            snap(F.avg("lp"), 4, scale=10).alias("avg_bigram_logprob"),
             F.count(F.lit(1)).alias("n_pairs"),
         )
     )
@@ -759,7 +756,7 @@ def token_entropy(
     return counts.groupBy("grp").agg(
         n.alias("n_tokens"),
         F.count(F.lit(1)).alias("vocab_size"),
-        F.round(h.cast("decimal(18,10)"), 4).cast("double").alias("entropy"),
+        snap(h, 4, scale=10).alias("entropy"),
     )
 
 
@@ -824,7 +821,7 @@ def bm25_topk(
         )
     )
     scored = contrib.groupBy("id").agg(
-        F.round(F.sum("w").cast("decimal(18,12)"), 4).cast("double").alias("bm25")
+        snap(F.sum("w"), 4).alias("bm25")
     )
     return (
         scored.orderBy(F.col("bm25").desc(), F.col("id"))
@@ -994,14 +991,14 @@ def cooccurrence_pmi(
             "term_a",
             "term_b",
             "n_docs",
-            F.round(
+            snap(
                 F.log(
                     F.col("n_corpus")
                     * F.col("n_docs")
                     / (F.col("na") * F.col("nb"))
-                ).cast("decimal(18,12)"),
+                ),
                 4,
-            ).cast("double").alias("pmi"),
+            ).alias("pmi"),
         )
     )
 
@@ -1070,7 +1067,6 @@ def tokenizer_fertility(
         lambda acc, w: acc
         + F.ceil(F.length(w) / F.lit(float(BPE_CHARS_PER_TOKEN))),
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         df.groupBy(F.col(group_col).alias("grp"))
         .agg(
@@ -1087,13 +1083,13 @@ def tokenizer_fertility(
             "n_chars",
             "n_ws_tokens",
             "n_bpe_tokens",
-            snapped(F.try_divide(F.col("n_bytes"), F.col("n_bpe_tokens"))).alias(
+            snap(F.try_divide(F.col("n_bytes"), F.col("n_bpe_tokens"))).alias(
                 "bytes_per_token"
             ),
-            snapped(F.try_divide(F.col("n_chars"), F.col("n_bpe_tokens"))).alias(
+            snap(F.try_divide(F.col("n_chars"), F.col("n_bpe_tokens"))).alias(
                 "chars_per_token"
             ),
-            snapped(
+            snap(
                 F.try_divide(F.col("n_bpe_tokens"), F.col("n_ws_tokens"))
             ).alias("fertility"),
         )
@@ -1360,15 +1356,16 @@ def zipf_slope(
         F.log(F.col("r").cast("double")).alias("x"),
         F.log(F.col("c").cast("double")).alias("y"),
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,10)"), 4).cast("double")
     n = F.count(F.lit(1)).cast("double")
     return xy.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_terms"),
-        snapped(
+        snap(
             F.try_divide(
                 n * F.sum(F.col("x") * F.col("y")) - F.sum("x") * F.sum("y"),
                 n * F.sum(F.col("x") * F.col("x")) - F.sum("x") * F.sum("x"),
-            )
+            ),
+            4,
+            scale=10,
         ).alias("zipf_slope"),
     )
 
@@ -1398,13 +1395,12 @@ def lang_confusion(
         .groupBy("lang_true", "lang_pred")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     row_total = F.sum("n").over(Window.partitionBy("lang_true"))
     return counts.select(
         "lang_true",
         "lang_pred",
         "n",
-        snapped(F.col("n") / row_total).alias("row_frac"),
+        snap(F.col("n") / row_total).alias("row_frac"),
     )
 
 
@@ -1432,7 +1428,6 @@ def pii_density(
     t = F.coalesce(F.col(text_col), F.lit(""))
     ne = F.regexp_count(t, F.lit(EMAIL_RE))
     np_ = F.regexp_count(t, F.lit(PHONE_RE))
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         df.select(
             F.col(group_col).alias("grp"),
@@ -1448,7 +1443,7 @@ def pii_density(
             ),
             F.sum("__e").cast("long").alias("n_emails"),
             F.sum("__p").cast("long").alias("n_phones"),
-            snapped(
+            snap(
                 F.lit(1000.0)
                 * (F.sum("__e") + F.sum("__p"))
                 / F.sum("__c")
@@ -1484,7 +1479,6 @@ def redaction_audit(
     after = F.regexp_count(red, F.lit(EMAIL_RE)) + F.regexp_count(
         red, F.lit(PHONE_RE)
     )
-    snapped = lambda c: F.round(c.cast("decimal(18,12)"), 6).cast("double")
     return (
         df.select(
             F.col(group_col).alias("grp"),
@@ -1498,7 +1492,7 @@ def redaction_audit(
             F.sum("__b").cast("long").alias("n_matches_before"),
             F.sum("__a").cast("long").alias("n_matches_after"),
             (F.sum("__a") == 0).alias("all_clean"),
-            snapped(F.lit(1000.0) * F.sum("__a") / F.sum("__c")).alias(
+            snap(F.lit(1000.0) * F.sum("__a") / F.sum("__c")).alias(
                 "residual_per_kchar"
             ),
         )
@@ -1577,9 +1571,7 @@ def lm_kl_divergence(
         "grp",
         F.col("ns").cast("long").alias("n_tokens"),
         F.col("vs").cast("long").alias("vocab_seen"),
-        F.round((seen + unseen).cast("decimal(18,10)"), 4)
-        .cast("double")
-        .alias("kl_nats"),
+        snap(seen + unseen, 4, scale=10).alias("kl_nats"),
     )
 
 
@@ -1646,9 +1638,5 @@ def lm_kl_between(
         F.max("na").cast("long").alias("n_tokens_a"),
         F.max("nb").cast("long").alias("n_tokens_b"),
         F.count(F.lit(1)).alias("vocab_union"),
-        F.round(
-            F.sum(pa * (F.log(pa) - F.log(pb))).cast("decimal(18,10)"), 4
-        )
-        .cast("double")
-        .alias("kl_nats"),
+        snap(F.sum(pa * (F.log(pa) - F.log(pb))), 4, scale=10).alias("kl_nats"),
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._snap import snap
 from .diff import diff_rows
 from .inference import ColumnInference, infer_table_schema
 
@@ -366,6 +367,15 @@ def running_user_stats_stream(events: DataFrame) -> DataFrame:
     )
 
 
+def _attach(monitor, stream_df: DataFrame, checkpoint_dir: str | None = None):
+    """Run the ``foreachBatch`` callable ``monitor`` over ``stream_df`` once
+    (availableNow trigger), resumable from ``checkpoint_dir`` if given."""
+    w = stream_df.writeStream.foreachBatch(monitor)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    return w.trigger(availableNow=True).start()
+
+
 class SchemaDriftMonitor:
     """Detect schema drift in a stream of file drops via foreachBatch.
 
@@ -401,11 +411,7 @@ class SchemaDriftMonitor:
 
     def attach(self, stream_df: DataFrame):
         """Start the monitor on a streaming DataFrame (availableNow)."""
-        return (
-            stream_df.writeStream.foreachBatch(self)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return _attach(self, stream_df)
 
 
 def attribution_join_stream(
@@ -567,11 +573,7 @@ class DataDriftMonitor:
 
     def attach(self, stream_df: DataFrame):
         """Start the monitor on a streaming DataFrame (availableNow)."""
-        return (
-            stream_df.writeStream.foreachBatch(self)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return _attach(self, stream_df)
 
 
 NOVELTY_SCHEMA = T.StructType(
@@ -924,7 +926,7 @@ class LateDataRateMonitor:
             )
             .withColumn(
                 "drop_rate",
-                F.round(rate.cast("decimal(18,12)"), 6).cast("double"),
+                snap(rate),
             )
             .withColumn("alert", rate >= F.lit(self.threshold))
         )
@@ -1176,7 +1178,4 @@ class TopicDriftMonitor:
         ``__init__`` (the md5 hash sample and the assignment are
         deterministic), so its fire/no-fire decisions match an
         uninterrupted run — pinned by a restart law test."""
-        w = stream_df.writeStream.foreachBatch(self)
-        if checkpoint_dir is not None:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        return w.trigger(availableNow=True).start()
+        return _attach(self, stream_df, checkpoint_dir)

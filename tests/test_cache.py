@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pytest
 
+SF_DIR = "/root/testdata/sf0.01"
+
 
 def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -80,6 +82,46 @@ def test_recall_eval_persists_a_fixed_frame_count(spark, fn):
     release_caches()
     before = _persistent_rdds(spark)
     getattr(similarity, fn)(emb, query_ids=list(range(8)), **kwargs).collect()
+    assert _persistent_rdds(spark) - before == persisted
+    release_caches()
+    assert _persistent_rdds(spark) == before
+
+
+_DEDUP_OPS = {
+    # operator -> (arguments from sf0.01 documents and their even-id half,
+    # frames it persists).  The survivorship pair persists its digest
+    # window plus ngram_jaccard_pairs' shingle frames; the paragraph pair
+    # persists its segment signatures, and the provenance also its
+    # segment-digest window; the rest persist nothing.
+    "dedup_provenance": (lambda d, even: (d,), 4),
+    "token_survivorship": (lambda d, even: (d,), 4),
+    "paragraph_minhash_pairs": (lambda d, even: (d,), 1),
+    "paragraph_dedup_provenance": (lambda d, even: (d,), 2),
+    "dedup_loss_by_source": (lambda d, even: (d,), 0),
+    "dedup_rate_drift": (lambda d, even: (d, even), 0),
+    "segment_dedup": (lambda d, even: (d,), 0),
+    "remove_boilerplate": (lambda d, even: (d,), 0),
+    "incremental_exact_dedup": (lambda d, even: (d, even), 0),
+    "bloom_incremental_dedup": (lambda d, even: (d, even), 0),
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_DEDUP_OPS))
+def test_dedup_op_persists_a_fixed_frame_count(spark, fn):
+    """Each survivorship, segment and incremental dedup operator caches
+    exactly the frames its consumers share, and one release frees them."""
+    from pyspark.sql import functions as F
+
+    from spark_auto_schema import release_caches
+    from spark_auto_schema.io import read_table
+    from spark_auto_schema.ops import dedup
+
+    args, persisted = _DEDUP_OPS[fn]
+    docs = read_table(spark, SF_DIR, "documents")
+    even = docs.where(F.col("doc_id") % 2 == 0)
+    release_caches()
+    before = _persistent_rdds(spark)
+    getattr(dedup, fn)(*args(docs, even)).collect()
     assert _persistent_rdds(spark) - before == persisted
     release_caches()
     assert _persistent_rdds(spark) == before

@@ -1133,33 +1133,33 @@ def test_token_entropy_matches_direct_formula(spark):
 def test_bloom_incremental_dedup_exact_under_any_filter_quality(spark):
     """The bloom prune NEVER changes the answer — only the work: results
     equal incremental_exact_dedup under a good filter, a saturated 8-bit
-    filter (everything bloom-positive), and a precomputed corpus_bits."""
+    filter (everything bloom-positive), and a precomputed corpus_bits.
+    NULL texts on both sides: the NULL hash matches nothing in the exact
+    anti-join, so its batch row survives, and exactly once."""
     from spark_auto_schema.ops import dedup
 
     batch = spark.createDataFrame(
-        [(10, "aa"), (11, "bb"), (12, "bb"), (13, "cc"), (14, "dd")],
+        [(10, "aa"), (11, "bb"), (12, "bb"), (13, "cc"), (14, "dd"),
+         (15, None), (16, None)],
         "doc_id long, text string",
     )
     corpus = spark.createDataFrame(
-        [(1, "bb"), (2, "dd"), (3, "ee")], "doc_id long, text string"
+        [(1, "bb"), (2, "dd"), (3, "ee"), (4, None)], "doc_id long, text string"
     )
-    want = sorted(map(tuple, dedup.incremental_exact_dedup(batch, corpus).collect()))
-    got = sorted(map(tuple, dedup.bloom_incremental_dedup(batch, corpus).collect()))
-    assert got == want and [k for _, k in want] == [10, 13]
+
+    def rows(df):  # by keep_id: a NULL content_hash does not sort against str
+        return sorted(map(tuple, df.collect()), key=lambda r: r[1])
+
+    want = rows(dedup.incremental_exact_dedup(batch, corpus))
+    got = rows(dedup.bloom_incremental_dedup(batch, corpus))
+    assert got == want and [k for _, k in want] == [10, 13, 15]
 
     # saturated filter: num_bits=8 forces false positives; verify restores
-    tiny = sorted(
-        map(tuple, dedup.bloom_incremental_dedup(batch, corpus, num_bits=8).collect())
-    )
+    tiny = rows(dedup.bloom_incremental_dedup(batch, corpus, num_bits=8))
     assert tiny == want
 
     bits = dedup.bloom_bitset(corpus)
-    pre = sorted(
-        map(
-            tuple,
-            dedup.bloom_incremental_dedup(batch, corpus, corpus_bits=bits).collect(),
-        )
-    )
+    pre = rows(dedup.bloom_incremental_dedup(batch, corpus, corpus_bits=bits))
     assert pre == want
 
 
