@@ -74,16 +74,6 @@ def _family(name: str) -> str:
     return "relational"
 
 
-def _release_op_caches() -> None:
-    """Drop the frames operators persisted for intra-query reuse and the
-    streaming memory-sink views (temp views, not caches) — measured queries
-    should not accumulate cached blocks across the run."""
-    from spark_auto_schema import release_caches, streaming
-
-    release_caches()
-    streaming.release_sinks()
-
-
 def _warm_python_workers(spark, cpus: str) -> None:
     """Throwaway mapInPandas job: spin up (or revive) the Arrow Python
     workers on every core so their cold start never lands inside a timed
@@ -107,6 +97,8 @@ def _warm_python_workers(spark, cpus: str) -> None:
 
 def main() -> None:
     from pyspark.sql import SparkSession
+
+    from spark_auto_schema import release_caches
 
     import __spark_entry__ as entrymod
 
@@ -170,10 +162,11 @@ def main() -> None:
                 n = -1
                 break
             finally:
-                # Always drop operator-persisted frames — even when a rep
-                # fails mid-query — so a failed query's cached blocks can't
-                # leak into the next query's timing (round-5 ADVICE).
-                _release_op_caches()
+                # Always drop operator-persisted frames and memory-sink
+                # views — even when a rep fails mid-query — so a failed
+                # query's cached blocks can't leak into the next query's
+                # timing.
+                release_caches()
             samples.append(time.perf_counter() - t0)
         if n < 0:
             # Failed queries contribute 0 to the total rather than a median

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ._cache import persist, release_caches  # noqa: F401 re-export
+from .session import _scoped_conf
 
 try:  # pyarrow is available in this environment; gate anyway
     import pyarrow.parquet as _pq
@@ -87,52 +88,55 @@ def override_columns(df: DataFrame, columns: list[str] | None) -> DataFrame:
     return df.toDF(*columns)
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Names of int64 timestamp[ns] columns per the parquet footer
-    (metadata-only).
+def _timestamp_encodings(path: str) -> tuple[str, dict[str, str]]:
+    """``(probe, {column: encoding})`` for every timestamp column of the
+    parquet footer of ``path`` (metadata-only); ``probe`` is the file read,
+    ``path`` itself or, for a dataset directory, its first ``*.parquet``
+    part (one writer per dataset, so the encoding is uniform).  Raises
+    ``FileNotFoundError`` for a directory without parquet files.
 
-    Only int64 columns annotated timestamp(NANOS) need Spark's
-    ``nanosAsLong`` legacy read + manual ns→us conversion.  INT96
-    timestamps (classic Spark/Hive writers — Spark 4's default
-    ``spark.sql.parquet.outputTimestampType`` is still INT96) ALSO surface
-    as ``timestamp[ns]`` in the arrow-level schema, but Spark decodes them
-    natively as TIMESTAMP — converting those would try ``div 1000`` on a
-    timestamp column and fail analysis, so the physical type must be
-    checked, not just the arrow type.  For a multi-file dataset directory
-    the first part file's footer is probed (one writer per dataset ⇒
-    uniform encoding)."""
-    if _pq is None:
-        return []
+    Encodings: ``'ns'`` (int64 NANOS: Spark reads it only as a long, under
+    the legacy ``nanosAsLong`` flag), ``'ntz'`` (isAdjustedToUTC=false,
+    read as TIMESTAMP_NTZ) and ``'utc'`` (an instant: isAdjustedToUTC=true,
+    or INT96).  INT96 timestamps (classic Spark/Hive writers; Spark 4's
+    default ``spark.sql.parquet.outputTimestampType`` is still INT96) also
+    surface as ``timestamp[ns]`` in the arrow schema, but Spark decodes
+    them natively as TIMESTAMP, so the physical type decides, not the
+    arrow unit."""
+    import glob
+    import os
+
     probe = path
-    try:
-        import os
-
-        if os.path.isdir(path):
-            parts = sorted(
-                f for f in os.listdir(path) if f.endswith(".parquet")
-            )
-            if not parts:
-                return []
-            probe = os.path.join(path, parts[0])
-        pf = _pq.ParquetFile(probe)
-        arrow_schema = pf.schema_arrow
-        physical = {
-            pf.schema.column(i).name: pf.schema.column(i).physical_type
-            for i in range(len(pf.schema))
-        }
-    except Exception:
-        return []
-    out = []
-    for field in arrow_schema:
+    if os.path.isdir(path):
+        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if not parts:
+            raise FileNotFoundError(f"no parquet files in {path!r}")
+        probe = parts[0]
+    pf = _pq.ParquetFile(probe)
+    physical = {
+        pf.schema.column(i).name: pf.schema.column(i).physical_type
+        for i in range(len(pf.schema))
+    }
+    out = {}
+    for field in pf.schema_arrow:
         t = field.type
-        if (
-            _pa is not None
-            and _pa.types.is_timestamp(t)
-            and t.unit == "ns"
-            and physical.get(field.name) == "INT64"
-        ):
-            out.append(field.name)
-    return out
+        if not _pa.types.is_timestamp(t):
+            continue
+        if t.unit == "ns" and physical.get(field.name) == "INT64":
+            out[field.name] = "ns"
+        else:
+            out[field.name] = "utc" if t.unit == "ns" or t.tz is not None else "ntz"
+    return probe, out
+
+
+def _nanos_to_instant(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Convert each long-nanos column in ``cols`` to a microsecond instant.
+    Integer ``div``, NOT ``/``: float division of ~1.7e18 ns epoch values
+    loses sub-microsecond precision (double ulp at that magnitude is
+    256 ns)."""
+    for c in cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"{sql_name(c)} div 1000")))
+    return df
 
 
 def normalize_ntz_columns(df: DataFrame) -> DataFrame:
@@ -147,48 +151,37 @@ def normalize_ntz_columns(df: DataFrame) -> DataFrame:
     reads the same parquet value, so downstream ``unix_micros``/windowing
     agree across engines.  A pure projection: pushdown/pruning on other
     columns is unaffected."""
-    from pyspark.sql import types as T
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
-    for c in ntz:
-        quoted = "`" + c.replace("`", "``") + "`"
-        df = df.withColumn(
-            c,
-            F.timestamp_micros(
-                F.expr(
-                    f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {quoted})"
-                )
-            ),
-        )
+    for f in df.schema.fields:
+        if isinstance(f.dataType, T.TimestampNTZType):
+            df = df.withColumn(
+                f.name,
+                F.timestamp_micros(
+                    F.expr(
+                        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ "
+                        f"'1970-01-01 00:00:00', {sql_name(f.name)})"
+                    )
+                ),
+            )
     return df
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (RAS.py:228-229), tolerant of timestamp[ns] columns and
     of ``isAdjustedToUTC=false`` (NTZ) timestamp columns."""
-    nanos_cols = _nanos_timestamp_columns(path)
-    if not nanos_cols:
-        return normalize_ntz_columns(spark.read.parquet(path))
+    try:
+        nanos_cols = [
+            c for c, enc in _timestamp_encodings(path)[1].items() if enc == "ns"
+        ]
+    except Exception:  # unreadable footer (or no pyarrow): no nanos columns
+        nanos_cols = []
     # Scope the legacy flag to this read: the schema conversion happens at
     # analysis time (the .parquet() call), so the prior value is restored
     # immediately after — later actions on the returned frame don't need it,
     # and the session's global config is left untouched for other readers.
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    flag = "true" if nanos_cols else None
+    with _scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", flag):
         df = spark.read.parquet(path)
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-    for c in nanos_cols:
-        # long nanos -> microsecond timestamp.  Integer `div`, NOT `/`:
-        # float division of ~1.7e18 ns epoch values loses sub-microsecond
-        # precision (double ulp at that magnitude is 256 ns).
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return normalize_ntz_columns(df)
+    return normalize_ntz_columns(_nanos_to_instant(df, nanos_cols))
 
 
 def read_csv(

@@ -32,27 +32,22 @@ from ..io import local_df
 
 
 # ------------------------------------------------------------------ exact
-def exact_dedup(
-    df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact duplicate groups: one row per distinct content value with the
-    surviving (minimum) id and the duplicate count.
-
-    Single hash aggregate on the content key — the canonical scale-safe
-    exact dedup (map-side combine, one shuffle)."""
-    return df.groupBy(content_col).agg(
-        F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count")
-    )
+def _content_digest(text: Column) -> Column:
+    """The exact-content key of every exact-dedup operator:
+    ``md5(coalesce(text, ''))``, so NULL and empty texts are one content
+    and the key is never NULL."""
+    return F.md5(F.coalesce(text, F.lit("")))
 
 
 def hash_dedup(
     df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Content-hash dedup: md5 fingerprint as the group key.
+    """Content-hash dedup: the :func:`_content_digest` md5 fingerprint as
+    the group key (NULL and empty texts are one content).
 
     Hashing first keeps the shuffle key small (16 bytes instead of full
     documents) — at 100 TB the shuffle moves hashes, not texts."""
-    h = F.md5(F.col(content_col))
+    h = _content_digest(F.col(content_col))
     return (
         df.select(F.col(id_col), h.alias("content_hash"))
         .groupBy("content_hash")
@@ -446,36 +441,25 @@ def incremental_exact_dedup(
 
     The incremental form a continuously-ingesting pipeline needs — new data
     arrives, the corpus is already deduplicated, and only novel content
-    should pass.  Batch-internal duplicates collapse to the min id first,
-    then a left-anti join on the 16-byte content hash removes anything the
-    corpus already holds.  Both sides shuffle compact hashes, never texts:
+    should pass.  Batch-internal duplicates collapse to the min id first
+    (:func:`hash_dedup`), then a left-anti join on the 16-byte content hash
+    removes anything the corpus already holds; a NULL text is the empty
+    content on both sides.  Both sides shuffle compact hashes, never texts:
     at 100 TB the anti-join is a shuffled hash join on md5 keys (store the
     corpus hash set as a bucketed table on ``content_hash`` and the corpus
     side needs no shuffle at all)."""
-    return _absent_from(
-        _batch_keep_ids(new_df, content_col, id_col), corpus_df, content_col
-    )
-
-
-def _batch_keep_ids(new_df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """A batch's own exact dedup: one ``(content_hash, keep_id)`` row per
-    distinct ``md5(content)``, keeping the smallest id.  A NULL content is
-    one group with a NULL hash."""
-    return (
-        new_df.select(F.col(id_col), F.md5(F.col(content_col)).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"))
-    )
+    batch = hash_dedup(new_df, content_col, id_col).drop("dup_count")
+    return _absent_from(batch, corpus_df, content_col)
 
 
 def _absent_from(
     batch: DataFrame, corpus_df: DataFrame, content_col: str
 ) -> DataFrame:
     """The ``batch`` rows whose ``content_hash`` the corpus does not hold:
-    a left-anti join on the corpus's distinct md5 hashes.  A NULL hash
-    matches nothing, so a NULL-content row always passes."""
+    a left-anti join on the corpus's distinct :func:`_content_digest`
+    hashes."""
     corpus = corpus_df.select(
-        F.md5(F.col(content_col)).alias("content_hash")
+        _content_digest(F.col(content_col)).alias("content_hash")
     ).distinct()
     return batch.join(corpus, on="content_hash", how="left_anti")
 
@@ -1840,17 +1824,23 @@ def bloom_bitset(
     future batch without re-shuffling the corpus.  Deliberately md5-based
     so the construction is exactly replayable by an ANSI-SQL oracle
     (Spark's BloomFilter sketch is not)."""
-    h = F.md5(F.col(content_col))
-    pos = [
-        (
+    h = _content_digest(F.col(content_col))
+    bits = _bloom_bits(h, num_bits, num_hashes)
+    return df.select(F.explode(bits).alias("bit")).distinct()
+
+
+def _bloom_bits(h: Column, num_bits: int, num_hashes: int) -> Column:
+    """The ``num_hashes`` Bloom bit positions of content hash ``h``, as an
+    array: position i is the first 8 hex digits of ``md5('i:' || h)``,
+    mod ``num_bits``."""
+    return F.array(
+        *[
             F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), h)), 1, 8), 16, 10)
             .cast("long")
             % num_bits
-        ).alias("bit")
-        for i in range(num_hashes)
-    ]
-    stacked = df.select(F.explode(F.array(*pos)).alias("bit"))
-    return stacked.distinct()
+            for i in range(num_hashes)
+        ]
+    )
 
 
 def bloom_incremental_dedup(
@@ -1881,28 +1871,14 @@ def bloom_incremental_dedup(
     filter.  Correctness does not depend on the filter's quality: the
     verify join restores exactness, so num_bits/num_hashes tune only the
     pruning rate."""
-    batch = _batch_keep_ids(new_df, content_col, id_col)
+    batch = hash_dedup(new_df, content_col, id_col).drop("dup_count")
     bits = (
         corpus_bits
         if corpus_bits is not None
         else bloom_bitset(corpus_df, content_col, num_bits, num_hashes)
     )
-    probe = [
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.lit(str(i)), F.col("content_hash"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % num_bits
-        ).alias("bit")
-        for i in range(num_hashes)
-    ]
-    probed = batch.select(
-        "content_hash", "keep_id", F.explode(F.array(*probe)).alias("bit")
-    )
+    probe = _bloom_bits(F.col("content_hash"), num_bits, num_hashes)
+    probed = batch.select("content_hash", "keep_id", F.explode(probe).alias("bit"))
     # A row is bloom-positive iff ALL of its k probe bits are set: count
     # semi-join hits per hash and compare to k.  The bit relation is tiny
     # (<= num_bits rows) -- broadcast it so the probe never shuffles.
@@ -1912,14 +1888,8 @@ def bloom_incremental_dedup(
         .agg(F.count(F.lit(1)).alias("set_bits"))
     )
     positive = hits.where(F.col("set_bits") == num_hashes).drop("set_bits")
-    # null-safe: concat_ws skips a NULL hash, so a NULL-text row probes
-    # the bits of the bare index and is positive whenever the corpus holds
-    # a NULL text too; an equi-anti-join cannot match its NULL key and
-    # would put the row on both sides
     negative = batch.join(
-        positive.select(F.col("content_hash").alias("__pos")),
-        F.col("content_hash").eqNullSafe(F.col("__pos")),
-        "left_anti",
+        positive.select("content_hash"), on="content_hash", how="left_anti"
     )
     return negative.unionByName(_absent_from(positive, corpus_df, content_col))
 
@@ -2306,12 +2276,6 @@ def cross_source_duplication(
             snap(F.col("n_shared") / F.col("nb")).alias("share_of_b"),
         )
     )
-
-
-def _content_digest(text: Column) -> Column:
-    """The exact-content key of the survivorship operators:
-    ``md5(coalesce(text, ''))``, so NULL and empty texts are one content."""
-    return F.md5(F.coalesce(text, F.lit("")))
 
 
 def _exact_winners(

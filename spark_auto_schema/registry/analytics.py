@@ -1172,10 +1172,11 @@ def _q_incremental_dedup(spark, sf_dir):
 _INCREMENTAL_DEDUP_SQL = f"""
 WITH batch AS (SELECT doc_id, text FROM documents WHERE {_INCR_SPLIT}),
 corpus AS (SELECT text FROM documents WHERE NOT ({_INCR_SPLIT})),
-b AS (SELECT md5(text) AS content_hash, min(doc_id) AS keep_id
+b AS (SELECT md5(coalesce(text, '')) AS content_hash, min(doc_id) AS keep_id
       FROM batch GROUP BY 1)
 SELECT content_hash, keep_id FROM b
-WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE md5(c.text) = b.content_hash)
+WHERE NOT EXISTS (SELECT 1 FROM corpus c
+                  WHERE md5(coalesce(c.text, '')) = b.content_hash)
 """
 
 

@@ -425,7 +425,7 @@ gated AS (
   SELECT d.* FROM d JOIN thr USING (lang_pred)
   WHERE round(quality, 4) >= thr.t
 ),
-keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
+keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(coalesce(text, ''))),
 final AS (
   SELECT g.lang_pred, g.quality,
          CASE WHEN substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 4) < '{t10}'

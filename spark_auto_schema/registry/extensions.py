@@ -311,7 +311,7 @@ FROM documents
 """
 
 _HASH_DEDUP_SQL = """
-SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
+SELECT md5(coalesce(text, '')) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
 FROM documents GROUP BY 1
 """
 

@@ -48,6 +48,9 @@ per-pipeline from observed volumes.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import SparkSession
 
 _COMMON = {
@@ -111,3 +114,24 @@ def build_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def _scoped_conf(
+    spark: SparkSession, key: str, value: str | int | None
+) -> Iterator[None]:
+    """Set the session conf ``key`` to ``value`` for the ``with`` body, then
+    restore its prior value, or unset it if it had none.  ``value=None``
+    leaves the conf alone."""
+    if value is None:
+        yield
+        return
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

@@ -20,37 +20,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._cache import _SINKS
 from ._snap import snap
 from .diff import diff_rows
 from .inference import ColumnInference, infer_table_schema
-
-# memory-sink temp views drained by run_to_memory; release_sinks() drops
-# them so a long-lived session (the 264-query bench) does not accumulate
-# one in-memory result table per drained stream for its whole lifetime
-_MEMORY_SINKS: list[str] = []
-
-
-def release_sinks() -> None:
-    """Drop every memory-sink temp view registered by :func:`run_to_memory`.
-
-    Safe once the sink's results have been read: the view (and the rows the
-    memory sink holds on the driver) is released; a re-run re-drains.  Also
-    clears the terminated-query references the StreamingQueryManager keeps
-    for ``awaitAnyTermination`` bookkeeping."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        _MEMORY_SINKS.clear()
-        return
-    while _MEMORY_SINKS:
-        name = _MEMORY_SINKS.pop()
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    try:
-        spark.streams.resetTerminated()
-    except Exception:  # pragma: no cover
-        pass
+from .io import (
+    _nanos_to_instant,
+    _timestamp_encodings,
+    normalize_ntz_columns,
+    pin_utc_session,
+)
+from .session import _scoped_conf
 
 
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
@@ -68,10 +48,11 @@ def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
 
 def _ts_unit(source_dir: str) -> str:
     """Physical encoding of the ``ts`` column per the parquet footer of the
-    first file in the drop-dir: ``'ns'`` (int64 nanos needing the legacy
+    first file in the drop-dir (:func:`spark_auto_schema.io.
+    _timestamp_encodings`): ``'ns'`` (int64 nanos needing the legacy
     nanosAsLong read), ``'ntz'`` (microsecond wall-clock,
     isAdjustedToUTC=false), or ``'utc'`` (microsecond instant,
-    isAdjustedToUTC=true).  Metadata-only read.
+    isAdjustedToUTC=true, or INT96).  Metadata-only read.
 
     A file stream locks its schema at setup, so the drop-dir must already
     hold at least one file, and every later drop must use the SAME encoding
@@ -79,33 +60,20 @@ def _ts_unit(source_dir: str) -> str:
     microbatch that delivers another.  Raises instead of guessing when the
     dir is empty or the footer is unreadable (a silent 'us' default here
     would lock in a schema that breaks the first ns drop)."""
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(f"{source_dir.rstrip('/')}/*.parquet"))
-    if not files:
+    try:
+        probe, encodings = _timestamp_encodings(source_dir.rstrip("/"))
+    except FileNotFoundError:
         raise FileNotFoundError(
             f"no parquet files in {source_dir!r}: a file stream locks its "
             "schema at setup, so the ts encoding must be probed from an "
             "existing drop — write the first file before starting the stream"
-        )
-    pf = pq.ParquetFile(files[0])
-    t = pf.schema_arrow.field("ts").type
-    if not pa.types.is_timestamp(t):
-        raise TypeError(f"ts column in {files[0]!r} is {t}, expected timestamp")
-    if t.unit == "ns":
-        # INT96 (classic Spark/Hive writers) also surfaces as ns at the
-        # arrow level but Spark decodes it natively as TIMESTAMP — only
-        # int64 NANOS needs the nanosAsLong long-typed stream schema
-        # (same distinction as io._nanos_timestamp_columns).
-        phys = {
-            pf.schema.column(i).name: pf.schema.column(i).physical_type
-            for i in range(len(pf.schema))
-        }
-        return "ns" if phys.get("ts") == "INT64" else "utc"
-    return "utc" if t.tz is not None else "ntz"
+        ) from None
+    if "ts" not in encodings:
+        import pyarrow.parquet as pq
+
+        t = pq.read_schema(probe).field("ts").type
+        raise TypeError(f"ts column in {probe!r} is {t}, expected timestamp")
+    return encodings["ts"]
 
 
 def read_event_stream(
@@ -147,37 +115,23 @@ def read_event_stream(
     at setup, so a mixed-encoding dir fails at its first divergent
     microbatch.  Also pins the session timezone to UTC (see
     :func:`spark_auto_schema.io.pin_utc_session`)."""
-    from .io import pin_utc_session
-
     pin_utc_session(spark)
     if ts_unit is not None and ts_unit not in ("ns", "ntz", "utc"):
         raise ValueError(f"ts_unit must be 'ns', 'ntz' or 'utc', got {ts_unit!r}")
     unit = ts_unit if ts_unit is not None else _ts_unit(source_dir)
-    def _with_trigger(reader):
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.parquet(source_dir)
-
+    ts_type = {
+        "ns": T.LongType(), "ntz": T.TimestampNTZType(), "utc": T.TimestampType()
+    }[unit]
+    reader = spark.readStream.schema(_events_stream_schema(ts_type))
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    raw = reader.parquet(source_dir)
     if unit == "ns":
+        # read by every microbatch's file scan, so set before the stream starts
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = _with_trigger(
-            spark.readStream.schema(_events_stream_schema(T.LongType()))
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if unit == "utc":
-        # isAdjustedToUTC=true microseconds: already an instant, no rebase.
-        return _with_trigger(
-            spark.readStream.schema(_events_stream_schema(T.TimestampType()))
-        )
-    raw = _with_trigger(
-        spark.readStream.schema(_events_stream_schema(T.TimestampNTZType()))
-    )
-    return raw.withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-        ),
-    )
+        return _nanos_to_instant(raw, ["ts"])
+    # a no-op for 'utc' (isAdjustedToUTC=true, or INT96): already an instant
+    return normalize_ntz_columns(raw)
 
 
 def windowed_event_counts(
@@ -282,12 +236,9 @@ def run_to_memory(
     because the driver awaits them sequentially; overlapped drains
     back-fill each other's idle micro-batch gaps).  Only valid when no
     drain's sink is read before every awaited query terminates."""
-    spark = stream_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(key)
-    if state_partitions is not None:
-        spark.conf.set(key, str(state_partitions))
-    try:
+    with _scoped_conf(
+        stream_df.sparkSession, "spark.sql.shuffle.partitions", state_partitions
+    ):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(table_name)
@@ -295,10 +246,7 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if state_partitions is not None:
-            spark.conf.set(key, prior)
-    _MEMORY_SINKS.append(table_name)
+    _SINKS.append(table_name)  # spark_auto_schema.release_caches drops it
     if wait:
         q.awaitTermination()
     return q
@@ -367,10 +315,16 @@ def running_user_stats_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def _attach(monitor, stream_df: DataFrame, checkpoint_dir: str | None = None):
+def _attach(
+    monitor,
+    stream_df: DataFrame,
+    checkpoint_dir: str | None = None,
+    output_mode: str = "append",
+):
     """Run the ``foreachBatch`` callable ``monitor`` over ``stream_df`` once
-    (availableNow trigger), resumable from ``checkpoint_dir`` if given."""
-    w = stream_df.writeStream.foreachBatch(monitor)
+    (availableNow trigger) in ``output_mode``, resumable from
+    ``checkpoint_dir`` if given."""
+    w = stream_df.writeStream.foreachBatch(monitor).outputMode(output_mode)
     if checkpoint_dir is not None:
         w = w.option("checkpointLocation", checkpoint_dir)
     return w.trigger(availableNow=True).start()
@@ -881,25 +835,15 @@ class LateDataRateMonitor:
         admitted, total = late_data_monitor(
             events, self.ts_col, self.window_duration, self.delay
         )
-        spark = events.sparkSession
-        key = "spark.sql.shuffle.partitions"
-        prior = spark.conf.get(key)
-        if state_partitions is not None:
-            spark.conf.set(key, str(state_partitions))
-        try:
+        with _scoped_conf(
+            events.sparkSession, "spark.sql.shuffle.partitions", state_partitions
+        ):
             for stream, mode, sink, sub in (
                 (admitted, "update", self._on_admitted, "adm"),
                 (total, "complete", self._on_totals, "tot"),
             ):
-                w = stream.writeStream.foreachBatch(sink).outputMode(mode)
-                if checkpoint_dir is not None:
-                    w = w.option(
-                        "checkpointLocation", f"{checkpoint_dir}/{sub}"
-                    )
-                w.trigger(availableNow=True).start().awaitTermination()
-        finally:
-            if state_partitions is not None:
-                spark.conf.set(key, prior)
+                ckpt = None if checkpoint_dir is None else f"{checkpoint_dir}/{sub}"
+                _attach(sink, stream, ckpt, mode).awaitTermination()
 
     def report(self, spark: SparkSession) -> DataFrame:
         """Final per-window accounting as a DataFrame: ``(window_start,
@@ -1022,12 +966,7 @@ class LatenessProfiler:
         no-op within one query, and an uncheckpointed re-drain (which
         restarts at batch 0 over ALL files) is skipped up to the highest
         batch id already seen instead of double-counting (r13-ADVICE)."""
-        w = events.writeStream.foreachBatch(self._on_batch).outputMode(
-            "append"
-        )
-        if checkpoint_dir is not None:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        w.trigger(availableNow=True).start().awaitTermination()
+        _attach(self._on_batch, events, checkpoint_dir).awaitTermination()
 
     def report(self, spark: SparkSession) -> DataFrame:
         """(window_start, bucket, n_events) — the accumulated mix."""
@@ -1086,18 +1025,9 @@ class TopicDriftMonitor:
                 f"threshold must be in (0, 2] (L1 of shares), got {threshold}"
             )
         if cents is None:
-            init = (
-                baseline.select(F.col(id_col), F.col(vec_col))
-                .orderBy(
-                    F.md5(F.col(id_col).cast("string")), F.col(id_col)
-                )
-                .limit(nlist)
-                .collect()
-            )
-            cents = [
-                (i, [float(x) for x in r[vec_col]])
-                for i, r in enumerate(init)
-            ]
+            from spark_auto_schema.ops.similarity import _sampled_cents
+
+            cents = _sampled_cents(baseline, vec_col, id_col, nlist)
             if len(cents) != nlist:
                 raise ValueError(
                     f"TopicDriftMonitor: baseline has only {len(cents)} "
@@ -1111,17 +1041,7 @@ class TopicDriftMonitor:
         self.id_col = id_col
         # baseline assigned ONCE; only the frozen k-row share vector is
         # kept — no baseline rescan ever happens after construction
-        from spark_auto_schema.ops.similarity import _assign_nearest
-
-        counts = {
-            r["cluster"]: r["n"]
-            for r in _assign_nearest(
-                baseline, cents, vec_col, id_col, metric="cos", keep_vec=False
-            )
-            .groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        counts = self._cluster_counts(baseline)
         total = sum(counts.values())
         if total == 0:
             # reachable only with trained `cents` supplied and an empty
@@ -1134,23 +1054,23 @@ class TopicDriftMonitor:
         self.baseline_shares = {c: n / total for c, n in counts.items()}
         self.history: list[tuple[int, float, list]] = []
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _cluster_counts(self, df: DataFrame) -> dict:
+        """``{cluster: rows}`` of ``df`` assigned to ``self.cents`` — a
+        k-row frame: model-sized collect, not data."""
         from spark_auto_schema.ops.similarity import _assign_nearest
 
-        counts = {
+        assigned = _assign_nearest(
+            df, self.cents, self.vec_col, self.id_col, metric="cos", keep_vec=False
+        )
+        return {
             r["cluster"]: r["n"]
-            for r in _assign_nearest(
-                batch_df,
-                self.cents,
-                self.vec_col,
-                self.id_col,
-                metric="cos",
-                keep_vec=False,
-            )
-            .groupBy("cluster")
+            for r in assigned.groupBy("cluster")
             .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # k-row frame: model-sized collect, not data
+            .collect()
         }
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        counts = self._cluster_counts(batch_df)
         total = sum(counts.values())
         if total == 0:
             # empty microbatch: same no-op as the old isEmpty() pre-check,

@@ -16,7 +16,6 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -241,11 +241,16 @@ def test_read_parquet_int96_vs_int64_nanos(spark, tmp_path):
     expected = int(
         wall.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000
     )
+    # the library scopes nanosAsLong to its own read: start without the
+    # key, and the ns read must neither need it nor leave it behind
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
     for path in (str(ns_file), str(int96_dir)):
         df = read_parquet(spark, path)
         assert dict(df.dtypes)["ts"] == "timestamp", path
         [row] = df.select(F.unix_micros("ts").alias("us")).collect()
         assert row["us"] == expected, path
+        assert spark.conf.get(key, None) is None, path
 
 
 def test_schema_evolution_merge_and_infer(spark, tmp_path):
@@ -384,6 +389,24 @@ def test_event_stream_ts_unit_detection(spark, tmp_path):
     assert dict(stream.dtypes)["ts"] == "timestamp"
     with pytest.raises(ValueError):
         read_event_stream(spark, str(empty_dir), ts_unit="ms")
+    # the stream and batch decoders yield identical instants per encoding
+    from pyspark.sql import functions as F
+
+    from spark_auto_schema import release_caches
+    from spark_auto_schema.io import read_parquet
+    from spark_auto_schema.streaming import run_to_memory
+
+    def micros(df):
+        return [r[0] for r in df.select(F.unix_micros("ts")).collect()]
+
+    for unit, d in (
+        ("ns", ns_dir), ("ntz", us_dir), ("utc", utc_dir), ("int96", int96_dir)
+    ):
+        run_to_memory(read_event_stream(spark, str(d)), f"ts_unit_{unit}")
+        streamed = micros(spark.table(f"ts_unit_{unit}"))
+        assert streamed == micros(read_parquet(spark, str(d))), unit
+        assert len(streamed) == 1, unit
+    release_caches()
     shutil.rmtree(str(us_dir))
 
 

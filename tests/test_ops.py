@@ -70,7 +70,7 @@ def docs_with_dups(spark, docs):
 
 def test_exact_dedup(spark, docs, docs_with_dups):
     base = docs.count()
-    out = dedup.exact_dedup(docs_with_dups)
+    out = dedup.hash_dedup(docs_with_dups)
     assert out.count() == base  # 3 clones collapse onto originals
     assert out.where(F.col("dup_count") > 1).count() == 3
     # survivor is the min id (the original)
@@ -82,7 +82,7 @@ def test_exact_dedup(spark, docs, docs_with_dups):
 def test_hash_dedup_matches_exact(spark, docs_with_dups):
     assert (
         dedup.hash_dedup(docs_with_dups).count()
-        == dedup.exact_dedup(docs_with_dups).count()
+        == docs_with_dups.groupBy("text").count().count()
     )
 
 
@@ -1134,8 +1134,8 @@ def test_bloom_incremental_dedup_exact_under_any_filter_quality(spark):
     """The bloom prune NEVER changes the answer — only the work: results
     equal incremental_exact_dedup under a good filter, a saturated 8-bit
     filter (everything bloom-positive), and a precomputed corpus_bits.
-    NULL texts on both sides: the NULL hash matches nothing in the exact
-    anti-join, so its batch row survives, and exactly once."""
+    NULL texts on both sides: a NULL text is the empty content, so the
+    corpus's NULL removes the batch's NULL group like any other clone."""
     from spark_auto_schema.ops import dedup
 
     batch = spark.createDataFrame(
@@ -1152,7 +1152,7 @@ def test_bloom_incremental_dedup_exact_under_any_filter_quality(spark):
 
     want = rows(dedup.incremental_exact_dedup(batch, corpus))
     got = rows(dedup.bloom_incremental_dedup(batch, corpus))
-    assert got == want and [k for _, k in want] == [10, 13, 15]
+    assert got == want and [k for _, k in want] == [10, 13]
 
     # saturated filter: num_bits=8 forces false positives; verify restores
     tiny = rows(dedup.bloom_incremental_dedup(batch, corpus, num_bits=8))

@@ -545,16 +545,16 @@ def test_domain_cap_stream_counts_and_flag(spark, tmp_path):
     assert final["cold"]["n_admitted"] == 2 and not final["cold"]["capped"]
 
 
-def test_release_sinks_drops_drained_memory_tables(spark, events_dir):
+def test_release_caches_drops_drained_memory_tables(spark, events_dir):
     """r14 session hygiene: run_to_memory registers its memory-sink view and
-    release_sinks drops it (and only then), so a long-lived session — the
+    release_caches drops it (and only then), so a long-lived session — the
     264-query bench — does not hold one in-memory result table per drained
     stream for its whole lifetime.  Results are unaffected: the view is
     dropped only after its rows were read, and a re-run re-drains."""
+    from spark_auto_schema import release_caches
+    from spark_auto_schema._cache import _SINKS
     from spark_auto_schema.streaming import (
-        _MEMORY_SINKS,
         read_event_stream,
-        release_sinks,
         windowed_event_counts,
     )
 
@@ -564,11 +564,11 @@ def test_release_sinks_drops_drained_memory_tables(spark, events_dir):
         "release_probe_sink",
         output_mode="complete",
     )
-    assert "release_probe_sink" in _MEMORY_SINKS
+    assert "release_probe_sink" in _SINKS
     n = len(spark.table("release_probe_sink").collect())
     assert n > 0
-    release_sinks()
-    assert "release_probe_sink" not in _MEMORY_SINKS
+    release_caches()
+    assert "release_probe_sink" not in _SINKS
     assert "release_probe_sink" not in [
         t.name for t in spark.catalog.listTables()
     ]
