@@ -96,9 +96,8 @@ def _warm_python_workers(spark, cpus: str) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from spark_auto_schema import release_caches
+    from spark_auto_schema.session import build_session
 
     import __spark_entry__ as entrymod
 
@@ -107,16 +106,14 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-auto-schema-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = build_session(
+        "local",
+        app_name="spark-auto-schema-bench",
+        master=f"local[{cpus}]",
+        overrides={
+            "spark.sql.shuffle.partitions": cpus,
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

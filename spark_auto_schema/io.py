@@ -190,14 +190,13 @@ def read_csv(
     delimiter: str = "|",
     quotechar: str = '"',
     encoding: str | None = None,
-    infer_schema: bool = True,
 ) -> DataFrame:
     """Delimited scan with the reference's defaults (RAS.py:231, 56-58)."""
     reader = (
         spark.read.option("header", True)
         .option("sep", delimiter)
         .option("quote", quotechar)
-        .option("inferSchema", infer_schema)
+        .option("inferSchema", True)
     )
     if encoding:
         reader = reader.option("encoding", encoding)
@@ -212,7 +211,6 @@ def load_file(
     encoding: str | None = None,
     fmt: str | None = None,
     columns: list[str] | None = None,
-    infer_schema: bool = True,
 ) -> DataFrame:
     """Load a flat file or parquet file and normalize column names.
 
@@ -223,7 +221,7 @@ def load_file(
     if resolved == "parquet":
         df = read_parquet(spark, path)
     elif resolved == "csv":
-        df = read_csv(spark, path, delimiter, quotechar, encoding, infer_schema)
+        df = read_csv(spark, path, delimiter, quotechar, encoding)
     else:
         df = spark.read.format(resolved).load(path)
     df = normalize_columns(df)

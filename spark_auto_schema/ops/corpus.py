@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 from .._snap import snap
+from ._tokens import _hex_int
 
 # ASCII unit separator: joins fingerprint columns without colliding with
 # text content (documents are word-soup; real corpora could contain any
@@ -168,9 +169,7 @@ def epoch_shuffle(
     ``num_shards`` (size it at ~4x the target cluster's core count).
     """
     h = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
-    shard = (
-        F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % F.lit(num_shards)
-    ).alias("shard")
+    shard = (_hex_int(h, 1, 4) % F.lit(num_shards)).alias("shard")
     w = Window.partitionBy("shard").orderBy("__h", id_col)
     return (
         df.select(F.col(id_col), shard, h.alias("__h"))
@@ -516,12 +515,8 @@ def table_checksum(
         F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols
     ]
     digest = F.md5(F.concat_ws("\x1f", *parts))
-    word = (
-        F.conv(F.substring(digest, 5, 8), 16, 10).cast("long") % (1 << 20)
-    )
-    shard = (
-        F.conv(F.substring(digest, 1, 4), 16, 10).cast("long") % n_shards
-    ).cast("int")
+    word = _hex_int(digest, 5, 8) % (1 << 20)
+    shard = (_hex_int(digest, 1, 4) % n_shards).cast("int")
     return (
         df.select(shard.alias("shard"), word.alias("__w"))
         .groupBy("shard")

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from .._cache import local_checkpoint, persist, release_caches  # noqa: F401
 from .._snap import snap
 from ..io import local_df
+from ._tokens import _hex_int, _word_ngrams, _word_rows, _words
 
 
 # ------------------------------------------------------------------ exact
@@ -56,18 +57,6 @@ def hash_dedup(
 
 
 # ------------------------------------------------------------- shingling
-def _word_ngrams(text: Column, n: int) -> Column:
-    """Word ``n``-grams of ``text`` split on single spaces, in order,
-    duplicates kept: for each word start, the ``n`` words from there joined
-    by single spaces.  One ``regexp_extract_all`` with a literal (compiled
-    once) pattern: a zero-width match at each word start whose lookahead
-    captures the next ``n`` words.  A text of fewer than ``n`` words yields
-    itself (the short-doc clamp); a NULL text yields ``['']``."""
-    t = F.coalesce(text, F.lit(""))
-    g = F.regexp_extract_all(t, F.lit("(?<=^| )(?=([^ ]*" + " [^ ]*" * (n - 1) + "))"), 1)
-    return F.when(F.size(g) == 0, F.array(t)).otherwise(g)
-
-
 def shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -1506,8 +1495,7 @@ def _md5_token_word(tok: Column) -> Column:
     halves = (F.md5(tok), F.md5(F.concat(F.lit("x:"), tok)))
     h = None
     for j in range(8):
-        hexes = F.substring(halves[j // 4], 8 * (j % 4) + 1, 8)
-        v = F.conv(hexes, 16, 10).cast("long")
+        v = _hex_int(halves[j // 4], 8 * (j % 4) + 1, 8)
         for k in range(8):
             bit = F.shiftleft(
                 F.shiftright(v, 31 - 4 * k).bitwiseAND(F.lit(1)), 8 * j + k
@@ -1523,12 +1511,9 @@ def _simhash_sig(
     :func:`simhash_md5`: ``(id, simhash)`` with a long signature.
     ``md5_grade`` only picks the per-token 64-bit word; the packed
     majority vote (see :func:`simhash`) is shared."""
-    tokens = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    ).where(F.length("tok") > 0)
+    tokens = _word_rows(df, text_col, F.col(id_col).alias("id"))
     # one word per token, projected once: the 32 lane sums all read it
-    word = _md5_token_word(F.col("tok")) if md5_grade else F.xxhash64(F.col("tok"))
+    word = _md5_token_word(F.col("w")) if md5_grade else F.xxhash64(F.col("w"))
     h = F.col("h")
     lane_mask = (1 << 32) | 1
     tallies = tokens.select("id", word.alias("h")).groupBy("id").agg(
@@ -1835,9 +1820,7 @@ def _bloom_bits(h: Column, num_bits: int, num_hashes: int) -> Column:
     mod ``num_bits``."""
     return F.array(
         *[
-            F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), h)), 1, 8), 16, 10)
-            .cast("long")
-            % num_bits
+            _hex_int(F.md5(F.concat_ws(":", F.lit(str(i)), h)), 1, 8) % num_bits
             for i in range(num_hashes)
         ]
     )
@@ -1922,11 +1905,7 @@ def cdc_chunks(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
     )
-    is_boundary = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("long")
-        % boundary_mod
-        == 0
-    ).cast("long")
+    is_boundary = (_hex_int(F.md5(F.col("tok")), 1, 4) % boundary_mod == 0).cast("long")
     w = (
         Window.partitionBy("id")
         .orderBy("pos")
@@ -1987,14 +1966,6 @@ def cdc_dedup_stats(
     )
 
 
-def _split_words(text_col: str) -> "F.Column":
-    """Non-empty whitespace tokens of a (possibly NULL) text column —
-    the shared tokenization of the token-window operators; the DuckDB
-    oracles replay it as list_filter(string_split(coalesce(...)))."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    return F.filter(F.split(t, " "), lambda w: F.length(w) > 0)
-
-
 def _window_positions(
     df: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
@@ -2006,7 +1977,7 @@ def _window_positions(
     DuckDB).  Shared by token_window_dup_coverage and
     top_repeated_substrings so the clamp, separator, and fingerprint
     stay in lockstep with each other and with both oracle replays."""
-    words = _split_words(text_col)
+    words = _words(F.col(text_col))
     return df.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -2121,7 +2092,7 @@ def top_repeated_substrings(
         .limit(top)
     )
     corpus = df.select(
-        F.col(id_col).alias("id"), _split_words(text_col).alias("__ws")
+        F.col(id_col).alias("id"), _words(F.col(text_col)).alias("__ws")
     )
     return (
         F.broadcast(winners)
@@ -2184,7 +2155,7 @@ def dup_span_extract(
         )
     )
     corpus = df.select(
-        F.col(id_col).alias("id"), _split_words(text_col).alias("__ws")
+        F.col(id_col).alias("id"), _words(F.col(text_col)).alias("__ws")
     )
     span_slice = F.slice(
         F.col("__ws"),
@@ -2469,12 +2440,7 @@ def token_survivorship(
     all-pairs) joined back unhinted (AQE picks the strategy; the drop set
     scales with the near-dup fraction, so no hard broadcast).  One final
     hash aggregate to |sources| rows."""
-    tk = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
-            lambda w: F.length(w) > 0,
-        )
-    ).cast("long")
+    tk = F.size(_words(F.col(text_col))).cast("long")
     marked = persist(
         _exact_winners(
             df, text_col, id_col, group_col, F.col(text_col), tk.alias("__tk")

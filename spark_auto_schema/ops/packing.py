@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._snap import snap
+from ._tokens import _hex_int
 from .sampling import _hash_prefix, _hash_prefix_int, fraction_threshold
 
 # Bucket-local pack ids are composed as bucket * _PACK_STRIDE + local_seq so
@@ -270,12 +271,9 @@ def fim_transform(
     toks = F.split(F.col(text_col), " ")
     n = F.size(toks)
     h = F.md5(F.col(id_col).cast("string"))
-    apply_fim = (
-        (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % fim_rate_mod == 0)
-        & (n >= min_tokens)
-    )
-    h1 = F.conv(F.substring(h, 5, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(h, 13, 8), 16, 10).cast("long")
+    apply_fim = (_hex_int(h, 1, 4) % fim_rate_mod == 0) & (n >= min_tokens)
+    h1 = _hex_int(h, 5, 8)
+    h2 = _hex_int(h, 13, 8)
     c1 = h1 % (n - 2) + 1
     c2 = c1 + (h2 % (n - c1 - 1)) + 1
     join_ = lambda arr: F.array_join(arr, " ")
@@ -321,23 +319,10 @@ def span_corruption(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
     )
-    masked = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col("id").cast("string"), F.col("pos").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % mask_mod
-        == 0
+    pos_key = F.concat_ws(
+        ":", F.col("id").cast("string"), F.col("pos").cast("string")
     )
+    masked = _hex_int(F.md5(pos_key), 1, 8) % mask_mod == 0
     w = Window.partitionBy("id").orderBy("pos")
     flagged = toks.select("id", "pos", "tok", masked.alias("m")).select(
         "id",

@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 from .._snap import snap
+from ._tokens import _hex_int, _words
 
 # Width of the hex prefix compared against the threshold: 4 hex chars = a
 # uniform draw from [0, 65536) per key.  Threshold comparisons (hash_sample,
@@ -147,11 +148,8 @@ def weighted_sample(
 
 def _hash_prefix_int(key: Column) -> Column:
     """The 8-hex-digit md5 prefix as an integer in [0, 2^32) — the shared
-    uniform-draw primitive (Spark: conv(hex,16,10); the DuckDB oracle
-    rebuilds it as CAST('0x' || prefix AS BIGINT))."""
-    return F.conv(
-        F.substring(F.md5(key.cast("string")), 1, _UNIFORM_HEX_DIGITS), 16, 10
-    ).cast("long")
+    uniform-draw primitive (:func:`_hex_int` of ``md5(key)``)."""
+    return _hex_int(F.md5(key.cast("string")), 1, _UNIFORM_HEX_DIGITS)
 
 
 def kfold_assign(df: DataFrame, key_col: str, k: int = 5) -> DataFrame:
@@ -301,7 +299,7 @@ def contrastive_negatives(
     complement, not a substitute: these PRE-COMPUTED pairs survive
     shuffling, resharding, and epoch re-runs."""
     h = F.md5(F.col(id_col).cast("string"))
-    bucket_of = lambda c: F.conv(F.substring(c, 1, 8), 16, 10).cast("long") % num_buckets
+    bucket_of = lambda c: _hex_int(c, 1, 8) % num_buckets
     reps = (
         df.select(F.col(id_col).alias("rep_id"), h.alias("__h"))
         .withColumn("bucket", bucket_of(F.col("__h")))
@@ -359,10 +357,7 @@ def dsir_importance_sample(
     TakeOrdered k-heap, never a full sort.  Nothing downstream of the
     feature aggregate touches corpus-sized data except the one weight
     shuffle."""
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
-        lambda w: F.length(w) > 0,
-    )
+    words = _words(F.col(text_col))
     # zip_with pads the shorter side with NULL and concat_ws would fold
     # that into a spurious trailing unigram — slice the pair array to n-1
     n_pairs = F.greatest(F.size(words) - 1, F.lit(0))

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 from .._snap import snap
-from .dedup import _word_ngrams
+from ._tokens import _term_key, _word_counts, _word_ngrams, _word_rows, _words
 
 # Stopword profiles for the n-gram/stopword-hit language heuristic.
 # Deterministic and tiny by design: language ID at scale must stay JVM-side.
@@ -171,17 +171,16 @@ def quality_score(
 def top_terms(
     df: DataFrame, k: int = 20, text_col: str = "text"
 ) -> DataFrame:
-    """Corpus-wide top-k terms by frequency: lowercase, strip non-[a-z0-9 ],
-    split on spaces, count, keep the k most frequent (term asc tie-break).
+    """Corpus-wide top-k terms by frequency: the :func:`_words` of each
+    text's :func:`_term_key` (lowercased, non-[a-z0-9 ] stripped), counted;
+    the k most frequent are kept (term asc tie-break).
 
     Explode + hash aggregate: the shuffle carries (term, partial_count)
     after map-side combine — the classic scale-safe wordcount.  The final
     top-k is a TakeOrdered over the aggregated term table."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", "")
     return (
-        df.select(F.explode(F.split(norm, " ")).alias("term"))
-        .where(F.length("term") > 0)
-        .groupBy("term")
+        _word_rows(df, _term_key(F.col(text_col)))
+        .groupBy(F.col("w").alias("term"))
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("term"))
         .limit(k)
@@ -251,10 +250,11 @@ def repetition_ratio(
 
 
 def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic document fingerprint: md5 of the lowercased text with
-    everything but [a-z0-9 ] stripped.  Identical content -> identical
-    fingerprint regardless of case/punctuation noise."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", "")
+    """Deterministic document fingerprint: md5 of the text's
+    :func:`_term_key` (lowercased, everything but [a-z0-9 ] stripped).
+    Identical content -> identical fingerprint regardless of
+    case/punctuation noise."""
+    norm = _term_key(F.col(text_col))
     return df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
 
 
@@ -325,9 +325,7 @@ def unigram_logprob(
     Returns (id, avg_logprob, n_tokens); avg_logprob = mean over tokens of
     ln((count + 1) / (N + V)), snapped through DECIMAL(18,10) then rounded
     to 4 digits so the DuckDB oracle agrees bit-for-bit."""
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
-    ).where(F.length("w") > 0)
+    toks = _word_rows(df, text_col, F.col(id_col))
     model = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     totals = model.agg(
         F.sum("c").alias("n"), F.count(F.lit(1)).alias("v")
@@ -362,9 +360,7 @@ def vocab_coverage(
     never shuffles for the membership test; the only wide exchange is the
     final per-document aggregate.  Returns (id, n_tokens, n_covered,
     coverage rounded to 4)."""
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
-    ).where(F.length("w") > 0)
+    toks = _word_rows(df, text_col, F.col(id_col))
     vocab = (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -584,8 +580,8 @@ def bigram_pmi(
     (Church & Hanks 1990) used to mine multi-word vocabulary entries from a
     pretraining corpus.
 
-    Tokenization matches :func:`top_terms` (lowercase, strip non-[a-z0-9 ],
-    split on spaces, drop empties) so the two ops share a vocabulary.  Only
+    Tokens are the :func:`_words` of the :func:`_term_key`, the same terms
+    :func:`top_terms` counts, so the two ops share a vocabulary.  Only
     bigrams seen at least ``min_count`` times are ranked (rare-pair PMI is
     noise); ties break on (w1, w2).
 
@@ -603,10 +599,7 @@ def bigram_pmi(
     Every exchange carries map-side-combined partials or the pruned bigram
     table, never raw tokens.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", "")
-    toks = df.select(
-        F.filter(F.split(norm, " "), lambda x: x != "").alias("__t")
-    )
+    toks = df.select(_words(_term_key(F.col(text_col))).alias("__t"))
     totals = toks.agg(
         F.sum(F.size("__t")).cast("double").alias("__nu"),
         F.sum(F.greatest(F.size("__t") - 1, F.lit(0)))
@@ -685,9 +678,7 @@ def bigram_logprob(
     it broadcasts a model that fits and co-partitions one that doesn't
     (no hard hint: a 100 TB corpus's bigram table outgrows broadcast);
     the only corpus-wide exchange is the final per-document average."""
-    words = F.filter(
-        F.split(F.col(text_col), " "), lambda x: F.length(x) > 0
-    )
+    words = _words(F.col(text_col))
     pair_idx = F.when(
         F.size(words) >= 2, F.sequence(F.lit(1), F.size(words) - 1)
     ).otherwise(F.array().cast("array<int>"))
@@ -746,11 +737,7 @@ def token_entropy(
     oracle (same identity, same order-insensitive sums) lands on the
     identical 4th decimal.
     """
-    tok = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    ).where(F.length("tok") > 0)
-    counts = tok.groupBy("grp", "tok").agg(F.count(F.lit(1)).alias("c"))
+    counts = _word_counts(df, text_col, F.col(group_col).alias("grp"))
     n = F.sum("c")
     h = F.log(n) - F.sum(F.col("c") * F.log("c")) / n
     return counts.groupBy("grp").agg(
@@ -880,7 +867,7 @@ def heavy_hitters_sketch(
     # Spark's DataSketches frequent-items aggregate rejects capacities
     # above this (approx_top_k maxItemsTracked limit)
     _SPARK_MAX_ITEMS_TRACKED = 1_000_000
-    toks = df.select(F.explode(F.split(F.col(text_col), " ")).alias("term"))
+    toks = _word_rows(df, text_col)
     if max_items_tracked is None:
         t_est = corpus_tokens_hint
         if t_est is None:
@@ -900,7 +887,7 @@ def heavy_hitters_sketch(
             )
     sk = toks.agg(
         F.expr(
-            f"approx_top_k(term, {int(max_items_tracked)}, {int(max_items_tracked)})"
+            f"approx_top_k(w, {int(max_items_tracked)}, {int(max_items_tracked)})"
         ).alias("tk"),
         F.count(F.lit(1)).alias("total_tokens"),
     )
@@ -960,29 +947,22 @@ def cooccurrence_pmi(
     fan-out per doc is bounded by (vocab terms present)^2, independent of
     corpus size.  Exactly the tfidf/shingle join discipline with the
     hot-term cap inverted: here the FREQUENT terms are the signal."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
-    counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-    vocab = counts.where(F.col("n") >= min_count).select("term")
-    member = (
-        toks.join(F.broadcast(vocab), on="term", how="left_semi").distinct()
-    )
-    dfreq = member.groupBy("term").agg(F.count(F.lit(1)).alias("n_docs_term"))
+    toks = _word_rows(df, text_col, F.col(id_col).alias("id"))
+    counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
+    vocab = counts.where(F.col("n") >= min_count).select("w")
+    member = toks.join(F.broadcast(vocab), on="w", how="left_semi").distinct()
+    dfreq = member.groupBy("w").agg(F.count(F.lit(1)).alias("n_docs_term"))
     n_total = df.agg(F.count(F.lit(1)).alias("n_corpus"))
     a, b = member.alias("a"), member.alias("b")
     pairs = (
         a.join(b, on="id")
-        .where(F.col("a.term") < F.col("b.term"))
-        .groupBy(
-            F.col("a.term").alias("term_a"), F.col("b.term").alias("term_b")
-        )
+        .where(F.col("a.w") < F.col("b.w"))
+        .groupBy(F.col("a.w").alias("term_a"), F.col("b.w").alias("term_b"))
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .where(F.col("n_docs") >= min_pair_docs)
     )
-    da = dfreq.select(F.col("term").alias("term_a"), F.col("n_docs_term").alias("na"))
-    db = dfreq.select(F.col("term").alias("term_b"), F.col("n_docs_term").alias("nb"))
+    da = dfreq.select(F.col("w").alias("term_a"), F.col("n_docs_term").alias("na"))
+    db = dfreq.select(F.col("w").alias("term_b"), F.col("n_docs_term").alias("nb"))
     return (
         pairs.join(F.broadcast(da), "term_a")
         .join(F.broadcast(db), "term_b")
@@ -1060,7 +1040,7 @@ def tokenizer_fertility(
     granularity: the shuffle carries |groups| partial rows, map-side
     combined.  All JVM built-ins, no UDF."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, " "), lambda w: F.length(w) > 0)
+    words = _words(F.col(text_col))
     bpe = F.aggregate(
         words,
         F.lit(0).cast("long"),
@@ -1338,17 +1318,11 @@ def zipf_slope(
     slope = (n*sum(xy) - sum(x)sum(y)) / (n*sum(x^2) - sum(x)^2).
     Ranks tie-break (count desc, term asc) so both engines rank
     identically."""
-    toks = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.coalesce(F.col(text_col), F.lit("")), " ")).alias(
-            "term"
-        ),
-    ).where(F.length("term") > 0)
-    counts = toks.groupBy("grp", "term").agg(F.count(F.lit(1)).alias("c"))
+    counts = _word_counts(df, text_col, F.col(group_col).alias("grp"))
     ranked = counts.withColumn(
         "r",
         F.row_number().over(
-            Window.partitionBy("grp").orderBy(F.col("c").desc(), F.col("term"))
+            Window.partitionBy("grp").orderBy(F.col("c").desc(), F.col("w"))
         ),
     ).where(F.col("r") <= top_n)
     xy = ranked.select(
@@ -1531,16 +1505,13 @@ def lm_kl_divergence(
     scan); the join is vocabulary-sized on term; the scalar frame is one
     broadcast row.  Nothing downstream of the first aggregate ever
     touches corpus-sized data."""
-    tok = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.coalesce(F.col(text_col), F.lit("")), " ")).alias(
-            "w"
-        ),
-    ).where(F.length("w") > 0)
     # persisted: the (group, term) frame feeds the per-source branch AND
     # derives the corpus counts — without the cache Catalyst would re-run
     # the corpus token scan once per consumer (3 scans of 100 TB)
-    sc = persist(tok.groupBy("grp", "w").agg(F.count(F.lit(1)).alias("cs")))
+    sc = persist(
+        _word_counts(df, text_col, F.col(group_col).alias("grp"))
+        .withColumnRenamed("c", "cs")
+    )
     cc = sc.groupBy("w").agg(F.sum("cs").alias("c"))
     scalars = cc.agg(
         F.sum("c").cast("double").alias("n_corpus"),
@@ -1605,17 +1576,8 @@ def lm_kl_between(
     Nothing after the wordcounts touches corpus-sized data."""
 
     def wc(df: DataFrame, out: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(group_col).alias("grp"),
-                F.explode(
-                    F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-                ).alias("w"),
-            )
-            .where(F.length("w") > 0)
-            .groupBy("grp", "w")
-            .agg(F.count(F.lit(1)).alias(out))
-        )
+        grp = F.col(group_col).alias("grp")
+        return _word_counts(df, text_col, grp).withColumnRenamed("c", out)
 
     both = (
         wc(df_a, "ca")

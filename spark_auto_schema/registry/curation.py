@@ -2351,6 +2351,7 @@ def _q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HEAVY_HITTERS_SQL = """
 SELECT term, count(*) AS n
 FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
+WHERE length(term) > 0
 GROUP BY 1 HAVING count(*) >= 500 ORDER BY n DESC, term
 """
 
@@ -2530,7 +2531,9 @@ def _q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COOCCURRENCE_PMI_SQL = """
 WITH toks AS (
-  SELECT doc_id AS id, unnest(string_split(text, ' ')) AS term FROM documents
+  SELECT * FROM (
+    SELECT doc_id AS id, unnest(string_split(text, ' ')) AS term FROM documents
+  ) WHERE length(term) > 0
 ), vocab AS (SELECT term FROM toks GROUP BY 1 HAVING count(*) >= 500),
 member AS (SELECT DISTINCT id, term FROM toks JOIN vocab USING (term)),
 dfreq AS (SELECT term, count(*) AS nd FROM member GROUP BY 1),

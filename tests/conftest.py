@@ -7,16 +7,13 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from spark_auto_schema.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("spark-auto-schema-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = build_session(
+        "local",
+        app_name="spark-auto-schema-tests",
+        master="local[4]",
+        overrides={"spark.sql.shuffle.partitions": "8"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark

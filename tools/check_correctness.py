@@ -53,20 +53,16 @@ def rows_to_multiset(cols: list[str], rows: list[tuple]) -> Counter:
 
 def main() -> int:
     import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
     from spark_auto_schema import release_caches
+    from spark_auto_schema.session import build_session
 
     only = set(sys.argv[1:])
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("correctness-check")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = build_session(
+        "local",
+        app_name="correctness-check",
+        master="local[8]",
+        overrides={"spark.sql.shuffle.partitions": "16"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
