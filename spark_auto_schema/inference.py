@@ -1,18 +1,31 @@
 """Single-pass, Spark-native column type inference.
 
-Reference algorithm: ``_evaluate_type`` at
-``/root/reference/redshift_auto_schema/RedshiftAutoSchema.py:294-339`` and its
+Reference algorithm: ``_evaluate_type`` in the reference library's
+``redshift_auto_schema/RedshiftAutoSchema.py`` (RAS.py:294-339) and its
 driver ``_generate_table_metadata`` (RAS.py:252-256).  The reference scans the
 full pandas DataFrame once **per column**, sequentially probing
 bool -> numeric -> date -> varchar.
 
 Spark-native redesign (SURVEY.md section 4.2): every statistic each column's
-decision needs is computed for **all columns in ONE global aggregate** — a
-shuffle-free two-phase HashAggregate (map-side partial aggregation, single-row
-exchange, final merge).  The branching decision tree then runs on the
-collected one-row statistics vector on the driver.  At 100 TB this is one
-linear scan with per-executor partial aggregation; the driver holds only
-O(columns) scalars.
+decision needs is computed for all columns in **one aggregate over one
+scan**, by one probe kernel (:func:`_probe_stats`).  A ``stack`` turns each
+input row into one row per column with fixed slots, and one ``groupBy`` on
+the column index spells each probe once: map-side partial aggregation, an
+exchange of one partial state per column and partition, a final merge.  The
+branching decision tree then runs on the collected per-column statistics on
+the driver, which holds only O(columns) scalars.
+
+Why a kernel rather than one wide aggregate: the wide form spelled every
+string column's bool, numeric and date probes into one generated class per
+table, which Janino compiled on each new table (thousands of lines, about
+half a second) and which then ran before the JIT had warmed it.  Past the
+stack, the kernel's expression text is the same for every input.  A file of
+few partitions (the landed-file case) is spread right after the stack, so
+its probe stage is a separate class that compiles once per JVM and stays
+warm across tables; an input already spread over the cores runs the probes
+in its scan stage, compiled per table, but with one copy of the probes
+rather than one per column.  The price is per cell: the long form carries
+one row per value, which a large table pays on every call.
 
 Semantics replicated exactly (SURVEY.md section 1.3):
 
@@ -45,7 +58,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .io import local_df, spread_small_scan, sql_name
@@ -142,64 +156,90 @@ def _parsed_timestamp_sql(c: str) -> str:
     return f"CASE WHEN {c} RLIKE {_sql_string(DATEISH_RE)} THEN coalesce({stamps}) END"
 
 
-def _stat_sql(i: int, name: str, dtype: T.DataType) -> list[str]:
-    """Aggregate expressions, as SQL text, producing column *i*'s statistics
-    vector.  Text keeps building a wide table's aggregate to one call into
-    the JVM, where composing Column objects costs thousands of round trips.
+def _cells_sql(i: int, name: str, dtype: T.DataType) -> str:
+    """Column *i*'s row of the probe kernel's ``stack``, as SQL text: the
+    slots ``k, s, x, g, nn`` (see :func:`_probe_stats`).
 
-    Null handling: the reference drops nulls before probing (RAS.py:309).
-    ``bool_and``/``min``/``max`` ignore NULL inputs; a comparison of a NULL
-    value is NULL already, and the ``IS NOT NULL`` probes are wrapped in
-    ``CASE WHEN value IS NOT NULL THEN probe END`` so null rows contribute
-    NULL (ignored) instead of false.  For float columns NaN counts as null
-    (pandas ``notnull`` semantics), hence the ``isnan`` guards.
+    Everything exact about a typed value is decided here, on the typed
+    column: ``g`` is a decimal's ``c % 1 = 0`` (a double would round above
+    2^53, and ``c = floor(c)`` widens a ``decimal(38, s)`` to scale
+    ``s - 1``, so 1.000001 compared equal to 1) and a timestamp's midnight
+    check in the session zone.  For float columns NaN counts as null (pandas
+    ``notnull`` semantics), hence the ``isnan`` guards; ``isnan(NULL)`` is
+    false, so ``nn`` tests for NULL as well.  A nested, binary or
+    other column sizes its stringified value (pandas stringifies objects
+    before the varchar branch, RAS.py:336-339), so ``x`` carries that
+    length.
     """
     c = sql_name(name)
-    a = f"c{i}__"
-
+    s = x = g = "NULL"
+    nn = f"{c} IS NOT NULL"
     if isinstance(dtype, _FRACTIONAL_TYPES):
-        valid = f"CASE WHEN NOT isnan({c}) THEN {c} END"
-        return [
-            f"count({valid}) AS {a}cnt",
-            f"bool_and(CASE WHEN NOT isnan({c}) THEN {c} = floor({c}) END) AS {a}intg",
-            f"CAST(min({valid}) AS DOUBLE) AS {a}mn",
-            f"CAST(max({valid}) AS DOUBLE) AS {a}mx",
-        ]
-
-    exprs = [f"count({c}) AS {a}cnt"]
-    if isinstance(dtype, _INTEGRAL_TYPES):
-        exprs.append(f"CAST(min({c}) AS BIGINT) AS {a}mn")
-        exprs.append(f"CAST(max({c}) AS BIGINT) AS {a}mx")
+        x = f"CASE WHEN NOT isnan({c}) THEN {c} END"
+        g = f"CASE WHEN NOT isnan({c}) THEN {c} = floor({c}) END"
+        nn = f"{c} IS NOT NULL AND NOT isnan({c})"
+    elif isinstance(dtype, _INTEGRAL_TYPES):
+        x = c
     elif isinstance(dtype, T.DecimalType):
-        exprs.append(f"bool_and({c} = floor({c})) AS {a}intg")
-        exprs.append(f"CAST(min({c}) AS DOUBLE) AS {a}mn")
-        exprs.append(f"CAST(max({c}) AS DOUBLE) AS {a}mx")
+        x, g = c, f"{c} % 1 = 0"
     elif isinstance(dtype, _TIMESTAMP_TYPES):
-        exprs.append(f"bool_and({c} = date_trunc('DAY', {c})) AS {a}mid")
+        g = f"{c} = date_trunc('DAY', {c})"
     elif isinstance(dtype, T.StringType):
-        # try_cast: ANSI-safe — malformed numeric text yields NULL, mirroring
-        # the reference's try/except around astype(float) (RAS.py:314-326)
-        d = f"CASE WHEN {c} RLIKE {_sql_string(NUMERIC_HINT_RE)} THEN try_cast({c} AS DOUBLE) END"
-        parsed = _parsed_timestamp_sql(c)
-        bools = ", ".join(_sql_string(b) for b in BOOL_LITERALS)
-        exprs += [
-            f"bool_and(lower({c}) IN ({bools})) AS {a}b01",
-            f"bool_and(CASE WHEN {c} IS NOT NULL THEN {d} IS NOT NULL END) AS {a}isnum",
-            f"bool_and({d} = floor({d})) AS {a}intg",
-            f"min({d}) AS {a}mn",
-            f"max({d}) AS {a}mx",
-            f"bool_and(CASE WHEN {c} IS NOT NULL THEN ({parsed}) IS NOT NULL END) AS {a}isdate",
-            f"bool_and(({parsed}) = date_trunc('DAY', {parsed})) AS {a}mid",
-            f"max(length({c})) AS {a}maxlen",
-        ]
-    elif isinstance(dtype, (T.BooleanType, T.DateType)):
-        pass  # dtype alone decides
-    else:
-        # nested / binary / other: reference-compat mode sizes the stringified
-        # value (pandas stringifies objects before the varchar branch,
-        # RAS.py:336-339)
-        exprs.append(f"max(length(CAST({c} AS STRING))) AS {a}maxlen")
-    return exprs
+        s = c
+    elif not isinstance(dtype, (T.BooleanType, T.DateType)):
+        x = f"length(CAST({c} AS STRING))"
+    return f"{i}, CAST({s} AS STRING), CAST({x} AS DOUBLE), CAST({g} AS BOOLEAN), {nn}"
+
+
+# The probes, spelled once for every input.  ``d`` and ``t`` are projected
+# ahead of the aggregate so each value is cast and parsed once.
+# try_cast: ANSI-safe — malformed numeric text yields NULL, mirroring the
+# reference's try/except around astype(float) (RAS.py:314-326).
+_PROBES = (
+    f"CASE WHEN s RLIKE {_sql_string(NUMERIC_HINT_RE)} THEN try_cast(s AS DOUBLE) END AS d",
+    f"{_parsed_timestamp_sql('s')} AS t",
+)
+# Null handling: the reference drops nulls before probing (RAS.py:309).
+# ``bool_and``/``min``/``max`` ignore NULL inputs, and the ``IS NOT NULL``
+# probes are wrapped in ``CASE WHEN s IS NOT NULL`` so null rows contribute
+# NULL (ignored) instead of false.  Only string cells carry ``s`` and so
+# ``d`` and ``t``; only typed cells carry ``x`` and ``g``.
+_STATS = (
+    "count_if(nn) AS cnt",
+    f"bool_and(lower(s) IN ({', '.join(_sql_string(b) for b in BOOL_LITERALS)})) AS b01",
+    "bool_and(CASE WHEN s IS NOT NULL THEN d IS NOT NULL END) AS isnum",
+    "bool_and(coalesce(g, d = floor(d))) AS intg",
+    "min(coalesce(x, d)) AS mn",
+    "max(coalesce(x, d)) AS mx",
+    "bool_and(CASE WHEN s IS NOT NULL THEN t IS NOT NULL END) AS isdate",
+    "bool_and(coalesce(g, t = date_trunc('DAY', t))) AS mid",
+    "max(length(s)) AS maxlen",
+)
+
+
+def _probe_stats(df: DataFrame) -> DataFrame:
+    """The statistics of every column of ``df``: one row per column index
+    ``k`` that holds a row, with the columns of :data:`_STATS`.
+
+    A ``stack`` in the scan stage turns each input row into one row per
+    column with fixed slots: ``k`` the column index, ``s`` a string value,
+    ``x`` a typed number as a double (a nested value: its text length),
+    ``g`` the exact per-row flag and ``nn`` the non-null mark.  From there
+    on the plan's expression text is the same for every input.  An input
+    with fewer partitions than :func:`~.io.spread_small_scan` wants is
+    spread at that point, so the probe stage behind the exchange is one
+    generated class per JVM, and a new table compiles only its scan stage.
+
+    The spread hashes the cell, so the copies of one value share a task.
+    On the ``drift_check`` tables that leaves the largest task with 1.06 to
+    1.37 times the mean cell count; adding a hash of the input row to the
+    key evens the counts but made the kernel slower (warm median 0.61 s ->
+    0.75 s over those tables, 4 cores), so the key stays the cell.
+    """
+    rows = ", ".join(_cells_sql(i, f.name, f.dataType) for i, f in enumerate(df.schema))
+    cells = df.selectExpr(f"stack({len(df.columns)}, {rows}) AS (k, s, x, g, nn)")
+    probed = spread_small_scan(cells).selectExpr("*", *_PROBES)
+    return probed.groupBy("k").agg(*(F.expr(e) for e in _STATS))
 
 
 def _int_range(mn: float | int | None, mx: float | int | None) -> str:
@@ -261,9 +301,9 @@ def _decide(
             return "date" if s.get("mid") else "timestamp"
         return _varchar(s.get("maxlen"))
 
-    # nested / binary / other
+    # nested / binary / other: the stringified length rides in x
     if compat_nested:
-        return _varchar(s.get("maxlen"))
+        return _varchar(s.get("mx"))
     return dtype.simpleString()
 
 
@@ -272,7 +312,7 @@ def infer_table_schema(
     compat_nested: bool = True,
     sample_fraction: float | None = None,
 ) -> list[ColumnInference] | None:
-    """Infer a Redshift type for every column of ``df`` in one Spark job.
+    """Infer a Redshift type for every column of ``df`` from one aggregate.
 
     Args:
         df: input DataFrame (columns already normalized).
@@ -283,39 +323,32 @@ def infer_table_schema(
             forall-quantified (one bad row flips a type), so sampling *changes
             results*; it is off by default and documented as approximate.
 
-    An input with far fewer partitions than the cluster has cores is first
-    spread across the cores by :func:`~.io.spread_small_scan`, so the probe
-    expressions run on every core; a large table already has more
-    partitions than cores and is never reshuffled.
+    The statistics come from :func:`_probe_stats`, one probe kernel whose
+    generated code does not depend on the schema: a table the JVM has not
+    seen compiles its scan stage only, not the probes.  The price is the
+    long form, about one row per cell instead of one per input row, which
+    a wide table pays on every call.
 
     Returns None for an empty (0-row) input, matching RAS.py:243-245 where an
     empty file produces no metadata.
     """
     if sample_fraction is not None:
         df = df.sample(fraction=sample_fraction, seed=42)
+    if not df.columns:
+        return [] if df.take(1) else None
 
-    df = spread_small_scan(df)
-    fields = list(df.schema.fields)
-    exprs = ["count(1) AS __nrows"]
-    for i, field in enumerate(fields):
-        exprs.extend(_stat_sql(i, field.name, field.dataType))
-    # one struct: a list of expressions crosses into the JVM item by item
-    row: Row = df.selectExpr(f"struct({', '.join(exprs)}) AS stats").collect()[0]
-    stats = row.stats.asDict()
-    nrows = stats.pop("__nrows")
-
-    if not nrows:
+    stats = {r.k: r.asDict() for r in _probe_stats(df).collect()}
+    if not stats:
         return None  # empty input => no metadata (RAS.py:243-245)
 
-    results = []
-    for i, field in enumerate(fields):
-        prefix = f"c{i}__"
-        s = {k[len(prefix) :]: v for k, v in stats.items() if k.startswith(prefix)}
-        proposed = _decide(field.name, field.dataType, s, compat_nested)
-        results.append(
-            ColumnInference(field.name, field.dataType.simpleString(), proposed)
+    return [
+        ColumnInference(
+            field.name,
+            field.dataType.simpleString(),
+            _decide(field.name, field.dataType, stats[i], compat_nested),
         )
-    return results
+        for i, field in enumerate(df.schema.fields)
+    ]
 
 
 _INFERENCE_SCHEMA = T.StructType(

@@ -353,7 +353,8 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     (lineitem sf0.1: 0.86 s round-robin vs 0.18 s hash on top of a 0.95 s
     scan).  A deterministic column hash needs no such sort — re-run tasks
     recompute the same placement from the data itself — and distinct rows
-    spread uniformly."""
+    spread uniformly.  Equal rows share a task, so an input holding many
+    copies of a few rows spreads unevenly."""
     try:
         cores = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < max(2, cores // 4):

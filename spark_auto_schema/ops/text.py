@@ -773,16 +773,14 @@ def bm25_topk(
     |query| x matching-docs slice, never the full posting space.  Corpus
     scalars (N, avgdl) ride a 1-row broadcast cross-join; per-term df
     (<= |query| rows) broadcasts onto the tf slice.  The final ordering is
-    a TakeOrdered top-k, never a full sort.  Tokenization matches the
-    corpus convention (whitespace split)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
+    a TakeOrdered top-k, never a full sort.  The terms are the words of
+    :func:`._tokens._word_rows`, so a double, leading or trailing space
+    adds nothing to a document's length ``dl``."""
+    toks = _word_rows(df, text_col, F.col(id_col).alias("id"))
     dl = toks.groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
-    qtoks = toks.where(F.col("term").isin(query_terms))
-    tf = qtoks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    qtoks = toks.where(F.col("w").isin(query_terms))
+    tf = qtoks.groupBy("id", "w").agg(F.count(F.lit(1)).alias("tf"))
+    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     stats = df.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
         dl.agg(F.avg("dl").alias("avgdl"))
     )
@@ -791,7 +789,7 @@ def bm25_topk(
         + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
     contrib = (
-        tf.join(F.broadcast(dfreq), on="term")
+        tf.join(F.broadcast(dfreq), on="w")
         .join(dl, on="id")
         .crossJoin(F.broadcast(stats))
         .select(

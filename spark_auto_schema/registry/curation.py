@@ -1987,8 +1987,8 @@ def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 lexical retrieval (`ops/text.py` bm25_topk): top-20
     documents for a 3-term query, Lucene idf, k1=1.2 / b=0.75 — the
     scorer behind hybrid RAG retrieval, beside the dense `embedding_topk`.
-    The oracle replays tokenization, tf/df, length norm, and the snapped
-    score."""
+    The oracle replays tokenization (the non-empty single-space tokens),
+    tf/df, length norm, and the snapped score."""
     return text.bm25_topk(
         read_table(spark, sf_dir, "documents"), ["merge", "window", "vector"], topk=20
     )
@@ -1996,7 +1996,9 @@ def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BM25_TOPK_SQL = """
 WITH toks AS (
-  SELECT doc_id AS id, unnest(string_split(text, ' ')) AS term FROM documents
+  SELECT doc_id AS id,
+         unnest(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS term
+  FROM documents
 ), dl AS (SELECT id, count(*) AS dl FROM toks GROUP BY 1),
 tf AS (SELECT id, term, count(*) AS tf FROM toks
        WHERE term IN ('merge', 'window', 'vector') GROUP BY 1, 2),
@@ -2197,7 +2199,9 @@ def _q_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # it with the pool-rank + lexical-F1 tail (single source, no drift)
 _RRF_POOL_CTE = """
 WITH toks AS (
-  SELECT doc_id AS id, unnest(string_split(text, ' ')) AS term FROM documents
+  SELECT doc_id AS id,
+         unnest(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS term
+  FROM documents
 ), dl AS (SELECT id, count(*) AS dl FROM toks GROUP BY 1),
 tf AS (SELECT id, term, count(*) AS tf FROM toks
        WHERE term IN ('merge', 'window', 'vector') GROUP BY 1, 2),

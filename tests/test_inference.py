@@ -35,20 +35,66 @@ def test_empty_input_returns_none(spark):
 
 
 def test_single_pass_plan(spark, infer_probe_parquet):
-    """The inference stats must be ONE aggregate job over one scan: the plan
-    contains exactly one HashAggregate pair (partial+final) and no shuffle
-    besides the single-row exchange."""
-    from pyspark.sql import functions as F
-
-    from spark_auto_schema.inference import _stat_sql
+    """The inference stats are ONE aggregate over one scan: the plan of the
+    frame ``infer_table_schema`` collects holds one parquet scan and exactly
+    one partial and one final HashAggregate."""
+    from spark_auto_schema.inference import _probe_stats
 
     df = load_file(spark, infer_probe_parquet)
-    exprs = [F.count(F.lit(1)).alias("__nrows")]
-    for i, field in enumerate(df.schema.fields):
-        exprs.extend(F.expr(e) for e in _stat_sql(i, field.name, field.dataType))
-    plan = df.agg(*exprs)._jdf.queryExecution().executedPlan().toString()
-    # one partial + one final HashAggregate/SortAggregate, single scan
+    plan = _probe_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
+    assert plan.count("HashAggregate") == 2
+    assert sum("partial_count(" in l for l in plan.splitlines()) == 1
+
+
+def test_new_table_compiles_no_probe_code(spark, tmp_path):
+    """The probe kernel's generated code does not depend on the schema.
+    After one table, a table with other column names, count and types
+    finds its probe stage in Spark's compile cache (the cache is keyed by
+    code text), so only its scan stage compiles."""
+    import datetime
+    from decimal import Decimal
+
+    from spark_auto_schema.inference import _probe_stats
+
+    def landed(name, rows, schema):  # one file, one partition: spread
+        path = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+        return load_file(spark, path)
+
+    def stage_code(df) -> dict[str, str]:
+        stats = _probe_stats(df)
+        stats.collect()
+        seq = stats._jdf.queryExecution().debug().codegenToSeq()
+        return {seq.apply(i)._2(): seq.apply(i)._1() for i in range(seq.size())}
+
+    first = landed(
+        "first", [("2020-01-01", 1, Decimal("1.50"))] * 20,
+        "name string, n int, amt decimal(10,2)",
+    )
+    second = landed(
+        "second", [(1.5, "x", "12", datetime.datetime(2020, 1, 1), True, None)] * 20,
+        "score double, label string, code string, ts timestamp, flag boolean, note string",
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    infer_table_schema(first)
+    before = compiles.getCount()
+    assert _types(infer_table_schema(second)) == {
+        "score": "float8", "label": "varchar(256)", "code": "int4",
+        "ts": "date", "flag": "bool", "note": "notype",
+    }
+    # only the scan stage's class, which Spark compiles twice; the wide
+    # per-table aggregate this kernel replaced compiled 7 or more
+    assert compiles.getCount() - before <= 2
+
+    seen, codes = stage_code(first), stage_code(second)
+    # the stage that projects the probes and partially aggregates them
+    probes = [c for c, tree in codes.items() if "partial_count(" in tree.splitlines()[0]]
+    assert len(probes) == 1 and "gettimestamp" in codes[probes[0]]
+    assert probes[0] in seen
+    new = [tree for code, tree in codes.items() if code not in seen]
+    assert len(new) == 1 and "Scan parquet" in new[0]
+    assert "RLIKE" not in new[0] and "gettimestamp" not in new[0]
 
 
 def test_bool_column_dtype(spark):

@@ -2,7 +2,7 @@
 
 Verifies the scale-critical properties hold in Catalyst's output:
 filter pushdown to the parquet scan, column pruning, broadcast joins for
-dims, and the single-scan shuffle-free shape of the inference aggregate.
+dims, and the single-scan shape of the inference aggregate.
 """
 
 from __future__ import annotations
@@ -35,26 +35,47 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def test_inference_is_one_scan_no_wide_shuffle(spark):
-    df = entry._infer_query("lineitem")(spark, SF_DIR)
-    # the stats job underneath: rebuild it to inspect (the registry function
-    # collects internally, returning a local result frame)
-    from pyspark.sql import functions as F
+def _probe_plan(df) -> list[str]:
+    """Lines of the physical plan of the stats frame ``infer_table_schema``
+    collects, top (final aggregate) to bottom (scan)."""
+    from spark_auto_schema.inference import _probe_stats
 
-    from spark_auto_schema.inference import _stat_sql
+    return plan_of(_probe_stats(df), "simple").splitlines()
+
+
+def _exchanges_below_partial_aggregate(lines: list[str]) -> list[str]:
+    partial = next(i for i, l in enumerate(lines) if "partial_count(" in l)
+    scan = next(i for i, l in enumerate(lines) if "Scan parquet" in l)
+    assert partial < scan
+    return [l for l in lines[partial:scan] if "Exchange" in l]
+
+
+def test_inference_is_one_scan_no_wide_shuffle(spark):
+    """One scan, one partial and one final aggregate, and the partial states
+    exchange by the column index ``k`` only.  Below the partial aggregate,
+    input rows cross no exchange, except the spread of an input with fewer
+    partitions than cores / 4: sf0.001 lineitem is one partition, sf0.1
+    lineitem three."""
+    from pathlib import Path
+
     from spark_auto_schema.io import read_table
 
-    li = read_table(spark, SF_DIR, "lineitem")
-    exprs = []
-    for i, field in enumerate(li.schema.fields):
-        exprs.extend(F.expr(e) for e in _stat_sql(i, field.name, field.dataType))
-    plan = plan_of(li.agg(*exprs), "simple")
-    assert plan.count("Scan parquet") == 1
-    # partial + final aggregate, exchange only for the single result row
-    assert plan.count("HashAggregate") == 2 or plan.count("SortAggregate") == 2
-    detail = plan_of(li.agg(*exprs))
-    assert "SinglePartition" in detail
-    assert "hashpartitioning" not in detail  # no wide shuffle anywhere
+    for sf_dir, spread in ((SF_DIR, True), (str(Path(SF_DIR).parent / "sf0.1"), False)):
+        lines = _probe_plan(read_table(spark, sf_dir, "lineitem"))
+        plan = "\n".join(lines)
+        assert plan.count("Scan parquet") == 1
+        assert plan.count("HashAggregate") == 2
+        assert sum("partial_count(" in l for l in lines) == 1
+        exchanges = [l for l in lines if "Exchange" in l]
+        below = _exchanges_below_partial_aggregate(lines)
+        assert len(exchanges) == 1 + len(below)
+        above = next(l for l in exchanges if l not in below)
+        assert "Exchange hashpartitioning(k#" in above
+        if spread:  # the one spread of the long rows, keyed on all five slots
+            assert len(below) == 1 and "xxhash64(k#" in below[0]
+            assert "REPARTITION_BY_NUM" in below[0]
+        else:
+            assert below == []
 
 
 def test_filter_pushdown_reaches_scan(spark):

@@ -14,8 +14,10 @@ Invariants (SURVEY.md section 5.6):
 
 from __future__ import annotations
 
+import datetime
 import math
 import random
+from decimal import Decimal
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -101,12 +103,113 @@ def test_int_widening(spark, values):
 
 def test_all_null_is_notype(spark):
     assert _infer_one(spark, "string", [None, None, None]) == "notype"
+    # NaN is null for a float column, and isnan(NULL) is false
+    for dtype in ("double", "float"):
+        assert _infer_one(spark, dtype, [None, None, None]) == "notype"
+        assert _infer_one(spark, dtype, [None, float("nan")]) == "notype"
 
 
 @pytest.mark.parametrize("n", [239, 240, 241])
 def test_varchar_threshold_boundary(spark, n):
     got = _infer_one(spark, "string", ["y" * n, "a"])
     assert got == ("varchar(256)" if n <= 240 else "varchar(65535)")
+
+
+# ------------------------------------------- multi-column inference property
+_ROWS = 5
+_MIDNIGHT = [datetime.datetime(2020, 1, 1), datetime.datetime(2021, 6, 3)]
+_BIG = Decimal(2**53 + 1)
+
+
+def _pool(dtype: str, values: list):
+    return st.tuples(
+        st.just(dtype), st.lists(st.sampled_from(values), min_size=_ROWS, max_size=_ROWS)
+    )
+
+
+# each pool mixes the values that flip its column between two or more types
+_POOLS = st.one_of(
+    _pool("string", [None, "true", "F", "t", "0", "1"]),
+    _pool("string", [None, "1", "-7", "2147483648", "1.5", "1e3", "NaN", "12abc"]),
+    _pool("string", [None, "2019-01-02", "2019-01-02 03:04", "Jan 5, 2020", "03/2019"]),
+    _pool("string", [None, "alpha", "20190101", "y" * 241]),
+    _pool("bigint", [None, 0, 1, 2**31, -(2**63), 2**63 - 1, 2**63 - 2]),
+    _pool("int", [None, 0, 1, -(2**31), 7]),
+    _pool("double", [None, float("nan"), 0.0, 1.0, 2.5, 2.0**53, -1e300]),
+    _pool("decimal(38,6)", [None, _BIG, _BIG + Decimal("0.000001"), Decimal("-2.5"), Decimal(1)]),
+    _pool("timestamp", [None, *_MIDNIGHT, datetime.datetime(2020, 1, 1, 0, 0, 1)]),
+    _pool("timestamp_ntz", [None, *_MIDNIGHT, datetime.datetime(2020, 1, 1, 12)]),
+    _pool("boolean", [None, True, False]),
+    _pool("date", [None, datetime.date(2020, 1, 1)]),
+    _pool("array<int>", [None, [], [1, 2], list(range(100))]),
+    _pool("string", [None]),
+)
+
+
+def _infer_columns(spark, cols: dict[str, tuple[str, list]]) -> dict[str, str]:
+    schema = ", ".join(f"{name} {dtype}" for name, (dtype, _) in cols.items())
+    rows = [tuple(vals[r] for _, vals in cols.values()) for r in range(_ROWS)]
+    out = infer_table_schema(spark.createDataFrame(rows, schema))
+    assert [ci.name for ci in out] == list(cols)
+    return {ci.name: ci.proposed_type for ci in out}
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    cols=st.lists(st.tuples(_POOLS, st.booleans()), min_size=2, max_size=6),
+    rnd=st.randoms(use_true_random=False),
+)
+def test_multi_column_inference_matches_each_column_alone(spark, cols, rnd):
+    """Inferring a table equals inferring each of its columns alone, in any
+    column order: a statistic read under the wrong column index shows up
+    as a difference."""
+    named = {
+        f"c{j}_id" if ident else f"c{j}": pool for j, (pool, ident) in enumerate(cols)
+    }
+    names = list(named)
+    rnd.shuffle(names)
+    table = _infer_columns(spark, {n: named[n] for n in names})
+    alone = {n: _infer_columns(spark, {n: named[n]})[n] for n in names}
+    assert table == alone
+
+
+def test_exact_slots_under_a_non_utc_zone(spark):
+    """The exact per-row statistics hold beside other columns: a decimal
+    above 2^53 is integral or not by its digits (its double rounds), longs
+    near +-2^63 stay int8, NaN and NULL are null, and the midnight check
+    reads a timestamp in the session zone and an NTZ value by its wall
+    clock."""
+    from zoneinfo import ZoneInfo
+
+    from spark_auto_schema.session import _scoped_conf
+
+    la, utc = ZoneInfo("America/Los_Angeles"), datetime.timezone.utc
+    five = [*_MIDNIGHT, *_MIDNIGHT, _MIDNIGHT[0]]
+    noon = datetime.datetime(2020, 1, 1, 12)
+    cols = {
+        "dec_int": ("decimal(38,6)", [_BIG, None, _BIG, Decimal(-1), _BIG]),
+        "dec_frac": ("decimal(38,6)", [_BIG + Decimal("0.000001"), _BIG, None, _BIG, _BIG]),
+        "big": ("bigint", [2**63 - 1, -(2**63), None, 0, 1]),
+        "flag": ("bigint", [0, 1, None, 1, 0]),
+        "whole": ("double", [float("nan"), 1.0, None, 2.0, -3.0]),
+        "nan_or_null": ("double", [float("nan"), None, float("nan"), None, None]),
+        "ts": ("timestamp", [m.replace(tzinfo=la) for m in five]),
+        "ts_utc_midnight": ("timestamp", [m.replace(tzinfo=utc) for m in five]),
+        "ntz": ("timestamp_ntz", [*_MIDNIGHT, None, *_MIDNIGHT]),
+        "ntz_noon": ("timestamp_ntz", [*_MIDNIGHT, None, _MIDNIGHT[0], noon]),
+    }
+    with _scoped_conf(spark, "spark.sql.session.timeZone", "America/Los_Angeles"):
+        got = _infer_columns(spark, cols)
+        assert got == {n: _infer_columns(spark, {n: c})[n] for n, c in cols.items()}
+    assert got == {
+        "dec_int": "int8", "dec_frac": "float8", "big": "int8", "flag": "bool",
+        "whole": "int4", "nan_or_null": "notype", "ts": "date",
+        "ts_utc_midnight": "timestamp", "ntz": "date", "ntz_noon": "timestamp",
+    }
 
 
 # ---------------------------------------------------- dedup_clusters property

@@ -261,3 +261,12 @@ def test_word_counters_skip_the_empty_token(spark):
     pmi = text.cooccurrence_pmi(df, min_count=6, min_pair_docs=6).collect()
     assert len(pmi) == 10
     assert all(r["term_a"] and r["term_b"] for r in pmi)
+
+
+def test_bm25_length_skips_the_empty_token(spark):
+    # the empty tokens of a double, leading or trailing space are no words,
+    # so they do not lengthen a document
+    texts = ["alpha beta", "alpha  beta", " alpha beta", "alpha beta "]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    rows = text.bm25_topk(df, ["alpha"]).collect()
+    assert len(rows) == 4 and len({r["bm25"] for r in rows}) == 1
