@@ -30,19 +30,14 @@ Spark-native differences:
 
 from __future__ import annotations
 
+import pyarrow as _pa
+import pyarrow.parquet as _pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ._cache import persist, release_caches  # noqa: F401 re-export
 from .session import _scoped_conf
-
-try:  # pyarrow is available in this environment; gate anyway
-    import pyarrow.parquet as _pq
-    import pyarrow as _pa
-except Exception:  # pragma: no cover
-    _pq = None
-    _pa = None
 
 
 def sql_name(name: str) -> str:
@@ -59,8 +54,6 @@ def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
     it is a Spark job; a ``pyarrow.Table`` becomes a ``LocalRelation``, whose
     collects, filters and projections run none (with or without Arrow
     execution enabled)."""
-    if _pa is None:  # pragma: no cover
-        return spark.createDataFrame(list(rows), schema)
     from pyspark.sql.pandas.types import to_arrow_schema
 
     table = _pa.Table.from_pylist(
@@ -172,7 +165,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         nanos_cols = [
             c for c, enc in _timestamp_encodings(path)[1].items() if enc == "ns"
         ]
-    except Exception:  # unreadable footer (or no pyarrow): no nanos columns
+    except Exception:  # unreadable footer: no nanos columns
         nanos_cols = []
     # Scope the legacy flag to this read: the schema conversion happens at
     # analysis time (the .parquet() call), so the prior value is restored

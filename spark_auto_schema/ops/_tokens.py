@@ -1,7 +1,11 @@
 """The text primitives the operators in ``ops/`` share, one home each.
 
 * :func:`_words` and its row form :func:`_word_rows`: the non-empty
-  single-space tokens of a text.
+  single-space tokens of a text, the only whitespace words in ``ops/``.
+  A text's word count is ``size(_words(t))``, so a NULL, empty or blank
+  text has 0 words.
+* :func:`_mean_word_len`: the characters of those words over their count,
+  NULL for a text with no word.
 * :func:`_word_counts`: how often each of those words occurs per group.
 * :func:`_word_ngrams`: word n-grams.
 * :func:`_term_key`: the lowercase ``[a-z0-9 ]`` form that term counts
@@ -19,20 +23,26 @@ from pyspark.sql import functions as F
 
 def _words(text: Column) -> Column:
     """The non-empty single-space tokens of ``text``, in order; a NULL
-    text has none.  The DuckDB oracles replay it as
+    text has none.  ``array_remove`` of the empty token: no per-element
+    lambda.  The DuckDB oracles replay it as
     ``list_filter(string_split(coalesce(text, ''), ' '), w -> length(w) > 0)``."""
-    t = F.coalesce(text, F.lit(""))
-    return F.filter(F.split(t, " "), lambda w: F.length(w) > 0)
+    return F.array_remove(F.split(F.coalesce(text, F.lit("")), " "), "")
+
+
+def _mean_word_len(text: Column) -> Column:
+    """The mean length of the :func:`_words` of ``text``: the characters of
+    the words (the text's non-space characters) over their count.  NULL
+    for a text with no word, as DuckDB's ``/`` gives for a zero divisor."""
+    return F.try_divide(
+        F.length(F.replace(text, F.lit(" "), F.lit(""))), F.size(_words(text))
+    )
 
 
 def _word_rows(df: DataFrame, text: str | Column, *keep: Column) -> DataFrame:
     """``(*keep, w)``: one row per word of :func:`_words`, so a NULL or
-    blank text has no row.  Explode, then drop the empty tokens: no
-    per-row lambda."""
+    blank text has no row."""
     t = F.col(text) if isinstance(text, str) else text
-    return df.select(*keep, F.explode(F.split(t, " ")).alias("w")).where(
-        F.length("w") > 0
-    )
+    return df.select(*keep, F.explode(_words(t)).alias("w"))
 
 
 def _word_counts(df: DataFrame, text_col: str, *keys: Column) -> DataFrame:

@@ -638,11 +638,12 @@ def repeated_ngram_coverage(
 def _word_segments(
     df: DataFrame, text: Column, seg_words: int, *keep: Column
 ) -> DataFrame:
-    """Fixed ``seg_words``-word segments of ``text`` split on single spaces:
-    ``(*keep, __s, __seg)`` with ``__s`` the 0-based segment index, one row
-    per segment and at least one per input row (an empty or NULL text
-    yields segment 0 = '').  One narrow explode, no shuffle."""
-    words = F.split(F.coalesce(text, F.lit("")), " ")
+    """Fixed ``seg_words``-word segments of the :func:`._tokens._words` of
+    ``text``, each segment's words joined by single spaces: ``(*keep, __s,
+    __seg)`` with ``__s`` the 0-based segment index, one row per segment
+    and at least one per input row (a text with no word yields segment
+    0 = '').  One narrow explode, no shuffle."""
+    words = _words(text)
     starts = F.sequence(
         F.lit(0),
         F.greatest(
@@ -1884,9 +1885,10 @@ def cdc_chunks(
     boundary_mod: int = 8,
 ) -> DataFrame:
     """Content-defined chunking at token granularity: ``(doc_id, chunk_idx,
-    chunk_hash, n_tokens)`` — one row per chunk, where a chunk boundary
-    falls AFTER any token whose md5 prefix is ≡ 0 (mod ``boundary_mod``),
-    giving ~boundary_mod-token expected chunks.
+    chunk_hash, n_tokens)`` — one row per chunk of the
+    :func:`._tokens._words` (a text with no word has none), where a chunk
+    boundary falls AFTER any token whose md5 prefix is ≡ 0 (mod
+    ``boundary_mod``), giving ~boundary_mod-token expected chunks.
 
     The storage-dedup primitive (rsync/LBFS/casync) applied to corpus
     management: because boundaries depend on CONTENT, not position, an
@@ -1903,7 +1905,7 @@ def cdc_chunks(
     chunk hash is partitioning-independent."""
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+        F.posexplode(_words(F.col(text_col))).alias("pos", "tok"),
     )
     is_boundary = (_hex_int(F.md5(F.col("tok")), 1, 4) % boundary_mod == 0).cast("long")
     w = (
@@ -1970,7 +1972,7 @@ def _window_positions(
     df: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
     """(id, i, h): every overlapping k-token window's start position and
-    md5 fingerprint, generated ROW-LOCALLY from the split array
+    md5 fingerprint, generated ROW-LOCALLY from the word array
     (sequence + slice + md5 — no token explode).  Documents shorter than
     ``k`` tokens contribute one whole-document window (the
     greatest(size-k+1, 1) clamp; slice clamps identically in Spark and
@@ -2013,7 +2015,7 @@ def token_window_dup_coverage(
     verbatim block is a licensing/contamination incident.
 
     Dataflow: window fingerprints are generated ROW-LOCALLY from the
-    split array (sequence + slice + md5 — no token explode), so the only
+    word array (sequence + slice + md5 — no token explode), so the only
     data-sized shuffles are (1) ONE exchange of 16-byte fingerprints for
     the shared-window flag (min!=max over the fingerprint partition, the
     single-shuffle trick from repeated_ngram_coverage), and (2) doc-keyed
@@ -2075,7 +2077,7 @@ def top_repeated_substrings(
     distinct docs, lexicographic-min (id, i) exemplar), a TakeOrdered
     top-k on (count desc, fingerprint) — never a global sort — and one
     BROADCAST join of the k winners back to the corpus to reconstruct
-    the gram text from the exemplar's split array (window text never
+    the gram text from the exemplar's word array (window text never
     rides the big shuffle).  Deterministic: ties cut by the fingerprint
     hex, and any exemplar reconstructs the same gram because the
     fingerprint pins the text."""
@@ -2134,7 +2136,7 @@ def dup_span_extract(
     equi-join of the surviving window set onto the positions, then the
     classic gaps-and-islands merge (``i - row_number`` grouping) inside
     per-document partitions — window sorts are DOC-sized, never
-    corpus-sized — and one id-keyed join back to the corpus split array
+    corpus-sized — and one id-keyed join back to the corpus word array
     to slice span text row-locally.  Nothing is all-pairs; span text
     never rides the wide shuffle (only (id, i, h) does)."""
     pos = _window_positions(df, k, text_col, id_col)
@@ -2422,18 +2424,19 @@ def token_survivorship(
     documents, but :func:`dedup_loss_by_source` accounts only docs — a
     syndicated source of LONG documents under-reports its dedup loss
     there by exactly the length skew this fixes.  ``n_tokens`` is the
-    whitespace token count (the ``ws_tokens`` definition of
-    ``text.token_count``), ``tokens_kept_exact`` the tokens of exact-dup
-    survivors (keep-lowest-id per md5 digest),
+    :func:`._tokens._words` count (``text.token_count``'s ``ws_tokens``,
+    0 for a NULL, empty or blank text), ``tokens_kept_exact`` the tokens
+    of exact-dup survivors (keep-lowest-id per md5 digest),
     ``tokens_lost_to_other_exact`` the tokens of rows whose surviving
     copy lives in a DIFFERENT source, ``tokens_kept_near`` the tokens
     surviving the full pipeline — exact dedup, then n-gram-Jaccard near
     dedup among the exact survivors under the keep-lowest-id-per-pair
     rule (a survivor is dropped iff it has a verified near-dup partner
     with a smaller id) — and ``token_loss_frac`` is
-    ``1 - tokens_kept_near / n_tokens`` snapped to 6 decimals.
+    ``1 - tokens_kept_near / n_tokens`` snapped to 6 decimals (NULL for a
+    source with no word).
 
-    Dataflow: token counts are ROW-LOCAL (size over the split array — no
+    Dataflow: token counts are ROW-LOCAL (size over the word array — no
     explode); exact survivorship is the one digest-partition window of
     :func:`_exact_winners`; the near stage is :func:`_near_winners`
     (bucketed shingle equi-join, ``max_df`` hot-shingle cap — never
@@ -2474,7 +2477,7 @@ def token_survivorship(
             "tokens_lost_to_other_exact",
             "tokens_kept_near",
             snap(
-                F.lit(1.0) - F.col("tokens_kept_near") / F.col("n_tokens")
+                F.lit(1.0) - F.try_divide("tokens_kept_near", "n_tokens")
             ).alias("token_loss_frac"),
         )
     )

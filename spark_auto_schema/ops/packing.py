@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._snap import snap
-from ._tokens import _hex_int
+from ._tokens import _hex_int, _words
 from .sampling import _hash_prefix, _hash_prefix_int, fraction_threshold
 
 # Bucket-local pack ids are composed as bucket * _PACK_STRIDE + local_seq so
@@ -252,10 +252,12 @@ def fim_transform(
     """Fill-in-the-middle training transform (PSM format): ``(doc_id,
     fim_applied, prefix, middle, suffix)`` where a deterministic
     md5(doc_id)-derived draw selects ~1/``fim_rate_mod`` of documents for
-    FIM and, for those, two hash-derived cut points split the token
-    sequence into prefix | middle | suffix.  Non-selected (and
-    too-short) documents pass through with the full text as ``prefix``
-    and empty middle/suffix — the causal-LM share of the mix.
+    FIM and, for those, two hash-derived cut points split the
+    :func:`._tokens._words` into prefix | middle | suffix, each span's
+    words joined by single spaces.  Non-selected (and too-short: fewer
+    than ``max(min_tokens, 3)`` words) documents pass through with the
+    full text as ``prefix`` and empty middle/suffix — the causal-LM share
+    of the mix.
 
     The objective-level data prep for code/infilling models (Bavarian et
     al.): downstream packing consumes the three spans in PSM order.  Cut
@@ -263,25 +265,32 @@ def fim_transform(
     pipeline on a grown corpus never re-cuts existing documents
     differently (the same property the split/sample operators guarantee).
 
-    Scale: a single narrow projection — split, two slices, three joins —
+    Scale: a single narrow projection — words, two slices, three joins —
     no shuffle, no Python; pipelines inside the scan like the text
     operators.  Cut derivation: c1 = h1 % (n-2) + 1 and c2 = c1 + (h2 %
     (n - c1 - 1)) + 1 with h1/h2 from disjoint md5 hex slices, so
     1 <= c1 < c2 <= n-1 and all three spans are non-empty."""
-    toks = F.split(F.col(text_col), " ")
+    # the words in a column of their own: each gated span below would
+    # otherwise split the text again
+    words = df.select(
+        F.col(id_col),
+        F.col(text_col).alias("__t"),
+        _words(F.col(text_col)).alias("__w"),
+    )
+    toks = F.col("__w")
     n = F.size(toks)
     h = F.md5(F.col(id_col).cast("string"))
-    apply_fim = (_hex_int(h, 1, 4) % fim_rate_mod == 0) & (n >= min_tokens)
+    apply_fim = (_hex_int(h, 1, 4) % fim_rate_mod == 0) & (n >= max(min_tokens, 3))
     h1 = _hex_int(h, 5, 8)
     h2 = _hex_int(h, 13, 8)
     c1 = h1 % (n - 2) + 1
     c2 = c1 + (h2 % (n - c1 - 1)) + 1
     join_ = lambda arr: F.array_join(arr, " ")
-    return df.select(
+    return words.select(
         F.col(id_col),
         apply_fim.alias("fim_applied"),
         F.when(apply_fim, join_(F.slice(toks, 1, c1)))
-        .otherwise(F.col(text_col))
+        .otherwise(F.col("__t"))
         .alias("prefix"),
         F.when(apply_fim, join_(F.slice(toks, c1 + 1, c2 - c1)))
         .otherwise(F.lit(""))
@@ -299,16 +308,18 @@ def span_corruption(
     mask_mod: int = 4,
 ) -> DataFrame:
     """T5-style span-corruption prep: ``(doc_id, input, target, n_spans)``
-    — ~1/``mask_mod`` of tokens are masked by a pure md5(doc_id:pos) draw,
-    consecutive masked tokens merge into ONE span, the input replaces
-    each span with its ``<extra_id_k>`` sentinel, and the target lists
-    every sentinel followed by the tokens it hides.
+    — ~1/``mask_mod`` of the :func:`._tokens._words` are masked by a pure
+    md5(doc_id:pos) draw (``pos`` counts words), consecutive masked
+    tokens merge into ONE span, the input replaces each span with its
+    ``<extra_id_k>`` sentinel, and the target lists every sentinel
+    followed by the tokens it hides; both streams are single-spaced.  A
+    text with no word has no row.
 
     The denoising-objective complement of :func:`fim_transform` (which
     rearranges, never hides): masking is positional-hash-pure, so the
     same document always corrupts identically — pipeline re-runs, corpus
     growth, and resharding reproduce the examples byte-for-byte.
-    Documents with no masked token pass through with the full text as
+    Documents with no masked token pass through with their words as
     ``input`` and an empty ``target`` (n_spans = 0).
 
     Scale: one posexplode + per-document lag/cumsum windows (partitions
@@ -317,7 +328,7 @@ def span_corruption(
     structs — the same partitioning end to end, no data-sized state."""
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+        F.posexplode(_words(F.col(text_col))).alias("pos", "tok"),
     )
     pos_key = F.concat_ws(
         ":", F.col("id").cast("string"), F.col("pos").cast("string")

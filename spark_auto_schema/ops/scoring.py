@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._snap import snap
+from ._tokens import _mean_word_len, _words
 from .analytics import _equi_width_bin
 
 # Stopword list shared with ops.text quality scoring: a small closed set
@@ -65,28 +66,24 @@ def featurize(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """JVM-side feature projection: (id, log_tokens, mean_word_len,
-    stopword_ratio, alpha_ratio).  Narrow, shuffle-free, codegen-friendly —
-    the features a lightweight quality classifier consumes."""
-    words = F.split(F.col(text_col), " ")
-    n_tokens = F.greatest(F.size(words), F.lit(1))
+    stopword_ratio, alpha_ratio) over the :func:`._tokens._words`.
+    Narrow, shuffle-free, codegen-friendly — the features a lightweight
+    quality classifier consumes.  A ratio over zero words or characters
+    is NULL, so a NULL, empty or blank text has a NULL
+    :func:`classifier_score`."""
+    t = F.col(text_col)
+    words = _words(t)
+    n_tokens = F.size(words)
     n_stop = F.size(
         F.filter(words, lambda w: F.lower(w).isin(*_STOPWORDS))
     )
-    n_alpha = F.length(F.regexp_replace(F.col(text_col), r"[^A-Za-z]", ""))
-    total_chars = F.greatest(F.length(F.col(text_col)), F.lit(1))
+    n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
     return df.select(
         F.col(id_col),
-        F.log(n_tokens.cast("double") + F.lit(1.0)).alias("log_tokens"),
-        (
-            (total_chars - (n_tokens - 1)).cast("double")
-            / n_tokens.cast("double")
-        ).alias("mean_word_len"),
-        (n_stop.cast("double") / n_tokens.cast("double")).alias(
-            "stopword_ratio"
-        ),
-        (n_alpha.cast("double") / total_chars.cast("double")).alias(
-            "alpha_ratio"
-        ),
+        F.log(n_tokens + F.lit(1.0)).alias("log_tokens"),
+        _mean_word_len(t).alias("mean_word_len"),
+        F.try_divide(n_stop, n_tokens).alias("stopword_ratio"),
+        F.try_divide(n_alpha, F.length(t)).alias("alpha_ratio"),
     )
 
 

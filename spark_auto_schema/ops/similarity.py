@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 from .._snap import snap
+from ._tokens import _words
 
 try:
     import numpy as _np
@@ -1819,10 +1820,10 @@ def cross_rerank(
     Pandas-UDF column builder ``text_column -> score_column`` — the same
     seam pattern as the multimodal codec stubs, but with a REAL
     deterministic default): when None, the score is the lexical overlap
-    F1 between the query terms and the candidate's distinct tokens,
-    ``2 * |Q ∩ D| / (|Q| + |D|)`` snapped to 6 decimals — monotone in
-    term coverage, length-normalized, and replayable in any engine with
-    list intersection.
+    F1 between the query terms and the candidate's distinct
+    :func:`._tokens._words`, ``2 * |Q ∩ D| / (|Q| + |D|)`` snapped to 6
+    decimals — monotone in term coverage, length-normalized, and
+    replayable in any engine with list intersection.
 
     Scale: the pool is k-sized BY CONTRACT (it already survived the
     retrievers' TakeOrdered cuts), so it broadcasts into the document
@@ -1844,7 +1845,7 @@ def cross_rerank(
     if scorer is not None:
         ce = scorer(F.col("__t"))
     else:
-        toks = F.array_distinct(F.split(F.col("__t"), " "))
+        toks = F.array_distinct(_words(F.col("__t")))
         m = F.size(F.array_intersect(toks, F.array(*[F.lit(t) for t in q])))
         ce = (
             F.lit(2.0) * m / (F.lit(len(q)) + F.size(toks))

@@ -19,7 +19,14 @@ from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 from .._snap import snap
-from ._tokens import _term_key, _word_counts, _word_ngrams, _word_rows, _words
+from ._tokens import (
+    _mean_word_len,
+    _term_key,
+    _word_counts,
+    _word_ngrams,
+    _word_rows,
+    _words,
+)
 
 # Stopword profiles for the n-gram/stopword-hit language heuristic.
 # Deterministic and tiny by design: language ID at scale must stay JVM-side.
@@ -70,10 +77,6 @@ _NFKC_WS_RUN_RE = r"[ \t\n\f\r\x0B]+"
 BPE_CHARS_PER_TOKEN = 4
 
 
-def _n_words(text: Column) -> Column:
-    return F.size(F.split(text, " "))
-
-
 def stopword_hits(text: Column, lang: str) -> Column:
     """Count of stopword occurrences for one language profile (word-bounded)."""
     pat = r"\b(" + "|".join(STOPWORDS[lang]) + r")\b"
@@ -81,27 +84,25 @@ def stopword_hits(text: Column, lang: str) -> Column:
 
 
 def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document surface statistics: chars, words, word length, punctuation."""
+    """Per-document surface statistics: chars, :func:`_words`, their mean
+    length (NULL for a text with no word), punctuation."""
     t = F.col(text_col)
-    n_words = _n_words(t)
-    n_chars = F.length(t)
     return df.select(
         F.col(id_col),
-        n_chars.alias("n_chars"),
-        n_words.alias("n_words"),
-        F.round(F.length(F.replace(t, F.lit(" "), F.lit(""))) / n_words, 4).alias(
-            "avg_word_len"
-        ),
+        F.length(t).alias("n_chars"),
+        F.size(_words(t)).alias("n_words"),
+        F.round(_mean_word_len(t), 4).alias("avg_word_len"),
         F.regexp_count(t, F.lit(PUNCT_RE)).alias("n_punct"),
     )
 
 
 def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Whitespace tokens + BPE-ish regex tokens per document."""
+    """Whitespace tokens (the :func:`_words`; 0 for a NULL, empty or blank
+    text) + BPE-ish regex tokens per document."""
     t = F.col(text_col)
     return df.select(
         F.col(id_col),
-        _n_words(t).alias("ws_tokens"),
+        F.size(_words(t)).alias("ws_tokens"),
         F.regexp_count(t, F.lit(BPE_TOKEN_RE)).alias("bpe_tokens"),
     )
 
@@ -146,15 +147,25 @@ def quality_score(
     stopword density.  The exact arithmetic (and its evaluation order) is
     mirrored in the DuckDB oracle, rounded to 4 decimals.
 
+    A text with no :func:`_words` (NULL, empty or blank) has no score:
+    NULL.
+
     ``keep_cols`` passes extra columns through unchanged (e.g. ``source``
     for per-group rollups like quality_drift_sources) — the score stays a
     per-row projection either way.
     """
-    t = F.col(text_col)
-    n_words = _n_words(t).cast("double")
-    n_chars = F.length(t).cast("double")
-    punct_ratio = F.regexp_count(t, F.lit(PUNCT_RE)) / n_chars
-    stop_ratio = stopword_hits(t, "en") / n_words
+    extra = [F.col(c) for c in (keep_cols or [])]
+    # the word count in a column of its own: the gate below would
+    # otherwise split every text once per use of the count
+    counted = df.select(
+        F.col(id_col),
+        *extra,
+        F.col(text_col).alias("__t"),
+        F.size(_words(F.col(text_col))).alias("__n"),
+    )
+    t, n_words = F.col("__t"), F.col("__n")
+    punct_ratio = F.try_divide(F.regexp_count(t, F.lit(PUNCT_RE)), F.length(t))
+    stop_ratio = F.try_divide(stopword_hits(t, "en"), n_words)
     score = (
         F.least(F.lit(1.0), n_words / F.lit(100.0)) * F.lit(0.5)
         + (F.lit(1.0) - punct_ratio) * F.lit(0.3)
@@ -163,9 +174,8 @@ def quality_score(
     # double-round through DECIMAL(18,10): engines disagree on round() of
     # doubles sitting one ulp below a half boundary (e.g. 0.49124999...96);
     # snapping to 10 decimal digits first makes the 4-digit round portable
-    quality = snap(score, 4, scale=10)
-    extra = [F.col(c) for c in (keep_cols or [])]
-    return df.select(F.col(id_col), *extra, quality.alias("quality"))
+    quality = snap(F.when(n_words > 0, score), 4, scale=10)
+    return counted.select(F.col(id_col), *extra, quality.alias("quality"))
 
 
 def top_terms(
@@ -278,19 +288,21 @@ def gopher_quality_filter(
     just the verdict) is what a curation pipeline needs to audit WHY a
     document was dropped and to tune thresholds per corpus.
 
-    Rules: word count in [GOPHER_MIN_WORDS, GOPHER_MAX_WORDS]; mean word
-    length in [GOPHER_MIN_AVG_WORD_LEN, GOPHER_MAX_AVG_WORD_LEN]; at least
-    GOPHER_MIN_STOPWORD_HITS English stopword occurrences; fraction of words
-    containing an alphabetic character >= GOPHER_MIN_ALPHA_FRAC.
+    Rules over the :func:`_words`: word count in [GOPHER_MIN_WORDS,
+    GOPHER_MAX_WORDS]; mean word length in [GOPHER_MIN_AVG_WORD_LEN,
+    GOPHER_MAX_AVG_WORD_LEN]; at least GOPHER_MIN_STOPWORD_HITS English
+    stopword occurrences; fraction of words containing an alphabetic
+    character >= GOPHER_MIN_ALPHA_FRAC.  The two per-word rules are NULL
+    for a text with no word (its ``keep`` is false).
 
     One narrow per-row projection of built-ins — no shuffle, no Python; at
     100 TB this pipelines inside the scan like every other filter here."""
     t = F.col(text_col)
-    words = F.split(t, " ")
+    words = _words(t)
     n_words = F.size(words)
-    avg_wl = F.length(F.replace(t, F.lit(" "), F.lit(""))) / n_words
-    alpha_frac = (
-        F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / n_words
+    avg_wl = _mean_word_len(t)
+    alpha_frac = F.try_divide(
+        F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))), n_words
     )
     wordcount_ok = (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS)
     word_len_ok = (avg_wl >= GOPHER_MIN_AVG_WORD_LEN) & (
@@ -459,26 +471,23 @@ def chunk_documents(
 ) -> DataFrame:
     """Split documents into overlapping token-window chunks — the step that
     turns a raw corpus into training/RAG units: (doc_id, chunk_id,
-    chunk_text, n_tokens), chunk windows of ``chunk_tokens`` whitespace
-    tokens advancing by ``chunk_tokens - overlap``.
+    chunk_text, n_tokens), chunk windows of ``chunk_tokens``
+    :func:`_words` advancing by ``chunk_tokens - overlap``, each window's
+    words joined by single spaces.  A text with no word has no chunk.
 
-    Built-ins only (split -> sequence of window starts -> slice -> explode):
+    Built-ins only (words -> sequence of window starts -> slice -> explode):
     a narrow per-row projection that pipelines inside the scan — no shuffle,
     no Python, output row count = ceil(tokens/step) per doc.  At 100 TB
     chunking is embarrassingly parallel and this stays a single map stage."""
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap
-    words = F.split(F.col(text_col), " ")
+    words = df.select(F.col(id_col), _words(F.col(text_col)).alias("__w"))
     starts = F.sequence(
-        F.lit(0), F.greatest(F.size(words) - 1, F.lit(0)), F.lit(step)
+        F.lit(0), F.greatest(F.size("__w") - 1, F.lit(0)), F.lit(step)
     )
     return (
-        df.select(
-            F.col(id_col),
-            F.explode(starts).alias("start"),
-            words.alias("__w"),
-        )
+        words.select(F.col(id_col), F.explode(starts).alias("start"), "__w")
         .select(
             F.col(id_col),
             (F.col("start") / step).cast("long").alias("chunk_id"),
@@ -525,7 +534,7 @@ def chunk_reconstruction_check(
     w_doc = Window.partitionBy(id_col)
     contrib = F.when(
         F.col("chunk_id") < F.max("chunk_id").over(w_doc),
-        F.concat_ws(" ", F.slice(F.split("chunk_text", " "), 1, step)),
+        F.concat_ws(" ", F.slice(_words(F.col("chunk_text")), 1, step)),
     ).otherwise(F.col("chunk_text"))
     rebuilt = (
         chunks.select(
@@ -549,12 +558,11 @@ def chunk_reconstruction_check(
             ).alias("__rebuilt"),
         )
     )
+    words = _words(F.col(text_col))
     doc = df.select(
         F.col(id_col),
-        F.size(F.split(F.col(text_col), " ")).cast("long").alias(
-            "doc_tokens"
-        ),
-        F.concat_ws(" ", F.split(F.col(text_col), " ")).alias("__stream"),
+        F.size(words).cast("long").alias("doc_tokens"),
+        F.concat_ws(" ", words).alias("__stream"),
     )
     return doc.join(rebuilt, id_col).select(
         id_col,
@@ -1032,7 +1040,7 @@ def tokenizer_fertility(
     bytes_per_token rising across snapshots of the same source is the
     cheapest early warning of encoding junk.
 
-    Scale: token counts are computed ROW-LOCALLY over the split array
+    Scale: token counts are computed ROW-LOCALLY over the word array
     (size/aggregate higher-order functions — no explode, so no
     (doc x token)-sized intermediate), then one hash aggregate to group
     granularity: the shuffle carries |groups| partial rows, map-side

@@ -22,7 +22,12 @@ from spark_auto_schema.ops import similarity
 from spark_auto_schema.ops import text
 from spark_auto_schema.registry.inference import (_infer_table_sql)
 from spark_auto_schema.registry.schema_ddl import _classify_sql
-from spark_auto_schema.registry.extensions import (_spread_docs, _spread_embs, _stop_pat)
+from spark_auto_schema.registry.extensions import (
+    _spread_docs,
+    _spread_embs,
+    _stop_pat,
+    _words_sql,
+)
 
 # ---------------------------------------------------------------------------
 # round-6 additions: behavioral analytics, collocations, MERGE, schema
@@ -729,8 +734,8 @@ def _q_chunk_documents(spark, sf_dir):
     )
 
 
-_CHUNK_DOCS_SQL = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+_CHUNK_DOCS_SQL = f"""
+WITH w AS (SELECT doc_id, {_words_sql()} AS w FROM documents)
 SELECT doc_id, t.i // 48 AS chunk_id,
        array_to_string(w[t.i + 1 : t.i + 64], ' ') AS chunk_text,
        least(len(w) - t.i, 64) AS n_tokens
@@ -789,8 +794,8 @@ def _q_chunk_reconstruction(spark, sf_dir):
     )
 
 
-_CHUNK_RECON_SQL = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+_CHUNK_RECON_SQL = f"""
+WITH w AS (SELECT doc_id, {_words_sql()} AS w FROM documents),
 ch AS (
   SELECT doc_id, t.i // 48 AS chunk_id,
          array_to_string(w[t.i + 1 : t.i + 64], ' ') AS chunk_text,
@@ -848,10 +853,10 @@ def _q_gopher_filter(spark, sf_dir):
 def _gopher_oracle_sql() -> str:
     """Generated from the same ops.text.GOPHER_* constants as the Spark op."""
     stop = f"len(regexp_extract_all(text, '{_stop_pat('en')}'))"
-    nw = "len(string_split(text, ' '))"
+    nw = f"len({_words_sql()})"
     awl = f"(length(replace(text, ' ', '')) / {nw})"
     af = (
-        "(len(list_filter(string_split(text, ' '), "
+        f"(len(list_filter({_words_sql()}, "
         f"w -> regexp_matches(w, '[A-Za-z]'))) / {nw})"
     )
     wc = f"({nw} >= {text.GOPHER_MIN_WORDS} AND {nw} <= {text.GOPHER_MAX_WORDS})"

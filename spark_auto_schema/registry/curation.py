@@ -21,13 +21,16 @@ from spark_auto_schema.ops import sampling
 from spark_auto_schema.ops import scoring
 from spark_auto_schema.ops import similarity
 from spark_auto_schema.ops import text
+from spark_auto_schema.ops._tokens import _words
 from spark_auto_schema.registry.extensions import (
     _lang_id_oracle_sql,
     _quality_oracle_sql,
     _region_fmt_path,
     _spread_docs,
     _spread_embs,
+    _words_sql,
 )
+from spark_auto_schema.registry.lifecycle import _FEATURES_SQL, _SCORE_SQL
 from spark_auto_schema.registry.analytics import (
     _CLUSTER_CLOSURE_CTE,
     _STREAM_SEQ,
@@ -1217,11 +1220,11 @@ def _q_remove_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REMOVE_BOILERPLATE_SQL = """
+_REMOVE_BOILERPLATE_SQL = f"""
 WITH segs AS (
   SELECT doc_id, i AS seg_idx,
          array_to_string(w[(i * 8 + 1):(i * 8 + 8)], ' ') AS seg
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+  FROM (SELECT doc_id, {_words_sql()} AS w FROM documents),
        UNNEST(generate_series(0, greatest(CAST(ceil(len(w) / 8.0) AS INT) - 1, 0)))
          AS t(i)
 ), boiler AS (
@@ -1654,28 +1657,13 @@ def _scored_with_lang_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scores.join(labels, "doc_id")
 
 
-_SCORED_LABELED_CTE = """
-WITH f AS (
-  SELECT doc_id,
-         ln(greatest(len(string_split(text, ' ')), 1) + 1.0) AS log_tokens,
-         (greatest(length(text), 1)
-            - (greatest(len(string_split(text, ' ')), 1) - 1)) * 1.0
-           / greatest(len(string_split(text, ' ')), 1) AS mean_word_len,
-         len(list_filter(string_split(text, ' '), w -> lower(w) IN
-             ('the','a','of','and','to','in','is','on','for','with'))) * 1.0
-           / greatest(len(string_split(text, ' ')), 1) AS stopword_ratio,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
-           / greatest(length(text), 1) AS alpha_ratio,
+_SCORED_LABELED_CTE = f"""
+WITH d AS (SELECT doc_id, text, lang, {_words_sql()} AS ws FROM documents),
+f AS (
+  SELECT doc_id, {_FEATURES_SQL},
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-  FROM documents
-), scored AS (
-  SELECT doc_id, label,
-         round(1.0 / (1.0 + exp(-(-1.0 + 0.35 * log_tokens
-                                  + 0.12 * mean_word_len
-                                  + 1.8 * stopword_ratio
-                                  + 0.9 * alpha_ratio))), 4) AS score
-  FROM f
-)
+  FROM d
+), scored AS (SELECT doc_id, label, {_SCORE_SQL} AS score FROM f)
 """
 
 
@@ -2145,14 +2133,14 @@ def _q_labeler_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     labeled = read_table(spark, sf_dir, "documents").select(
         (F.col("n_chars") >= 200).alias("len_ok"),
-        (F.size(F.split(F.col("text"), " ")) >= 40).alias("words_ok"),
+        (F.size(_words(F.col("text"))) >= 40).alias("words_ok"),
     )
     return scoring_ops.agreement_kappa(labeled, "len_ok", "words_ok")
 
 
-_LABELER_KAPPA_SQL = """
+_LABELER_KAPPA_SQL = f"""
 WITH l AS (
-  SELECT n_chars >= 200 AS a, len(string_split(text, ' ')) >= 40 AS b
+  SELECT n_chars >= 200 AS a, len({_words_sql()}) >= 40 AS b
   FROM documents
 ), c AS (
   SELECT count(*) AS n,
@@ -2254,10 +2242,10 @@ def _q_cdc_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cdc_dedup_stats(read_table(spark, sf_dir, "documents"))
 
 
-_CDC_DEDUP_STATS_SQL = """
+_CDC_DEDUP_STATS_SQL = f"""
 WITH toks AS (
   SELECT doc_id AS id, i - 1 AS pos, ws[i] AS tok
-  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+  FROM (SELECT doc_id, {_words_sql()} AS ws FROM documents),
        UNNEST(generate_series(1, len(ws))) AS t(i)
 ), b AS (
   SELECT id, pos, tok,
@@ -2371,11 +2359,11 @@ def _q_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packing.fim_transform(read_table(spark, sf_dir, "documents"))
 
 
-_FIM_TRANSFORM_SQL = """
-WITH t AS (
-  SELECT doc_id, text, string_split(text, ' ') AS ws,
-         len(string_split(text, ' ')) AS n, md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM documents
+_FIM_TRANSFORM_SQL = f"""
+WITH w AS (SELECT doc_id, text, {_words_sql()} AS ws FROM documents),
+t AS (
+  SELECT doc_id, text, ws, len(ws) AS n, md5(CAST(doc_id AS VARCHAR)) AS h
+  FROM w
 ), c AS (
   SELECT doc_id, text, ws, n,
          CAST(('0x' || substr(h, 1, 4)) AS BIGINT) % 2 = 0 AND n >= 8 AS fim,
@@ -2436,10 +2424,10 @@ def _q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packing.span_corruption(read_table(spark, sf_dir, "documents"))
 
 
-_SPAN_CORRUPTION_SQL = """
+_SPAN_CORRUPTION_SQL = f"""
 WITH toks AS (
   SELECT doc_id AS id, i - 1 AS pos, ws[i] AS tok
-  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+  FROM (SELECT doc_id, {_words_sql()} AS ws FROM documents),
        UNNEST(generate_series(1, len(ws))) AS t(i)
 ), m AS (
   SELECT id, pos, tok,

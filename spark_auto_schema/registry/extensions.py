@@ -24,6 +24,12 @@ from spark_auto_schema.ops import text
 # ---------------------------------------------------------------------------
 
 
+def _words_sql(text: str = "text") -> str:
+    """The DuckDB replay of ``ops/_tokens._words``: the non-empty
+    single-space tokens of ``text`` (a NULL text has none)."""
+    return f"list_filter(string_split(coalesce({text}, ''), ' '), w -> length(w) > 0)"
+
+
 def _stop_pat(lang: str) -> str:
     return r"\b(" + "|".join(text.STOPWORDS[lang]) + r")\b"
 
@@ -49,16 +55,20 @@ def _quality_expr_sql() -> str:
     oracle interpolate."""
     stop = f"len(regexp_extract_all(text, '{_stop_pat('en')}'))"
     punct = r"len(regexp_extract_all(text, '[^\w\s]'))"
-    nw = "len(string_split(text, ' '))"
+    nw = f"len({_words_sql()})"
     # literals cast to DOUBLE (DuckDB types bare x.y literals as DECIMAL) and
     # the final round done through DECIMAL(18,10), mirroring
-    # ops.text.quality_score's portable double-rounding
+    # ops.text.quality_score's portable double-rounding; a text with no
+    # word has no score
     raw = (
         f"least(1.0::DOUBLE, {nw} / 100.0::DOUBLE) * 0.5::DOUBLE + "
         f"(1.0::DOUBLE - {punct} / length(text)) * 0.3::DOUBLE + "
         f"least(1.0::DOUBLE, {stop} / {nw} * 5.0::DOUBLE) * 0.2::DOUBLE"
     )
-    return f"CAST(round(CAST({raw} AS DECIMAL(18,10)), 4) AS DOUBLE)"
+    return (
+        f"CAST(round(CAST(CASE WHEN {nw} > 0 THEN {raw} END AS DECIMAL(18,10)), 4)"
+        " AS DOUBLE)"
+    )
 
 
 def _quality_oracle_sql() -> str:
@@ -291,16 +301,16 @@ WITH h AS (
     )
 
 
-_TEXT_STATS_SQL = r"""
+_TEXT_STATS_SQL = rf"""
 SELECT doc_id, length(text) AS n_chars,
-       len(string_split(text, ' ')) AS n_words,
-       round(length(replace(text, ' ', '')) / len(string_split(text, ' ')), 4) AS avg_word_len,
+       len({_words_sql()}) AS n_words,
+       round(length(replace(text, ' ', '')) / len({_words_sql()}), 4) AS avg_word_len,
        len(regexp_extract_all(text, '[^\w\s]')) AS n_punct
 FROM documents
 """
 
-_TOKEN_COUNT_SQL = r"""
-SELECT doc_id, len(string_split(text, ' ')) AS ws_tokens,
+_TOKEN_COUNT_SQL = rf"""
+SELECT doc_id, len({_words_sql()}) AS ws_tokens,
        len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS bpe_tokens
 FROM documents
 """

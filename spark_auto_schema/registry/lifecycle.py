@@ -11,7 +11,7 @@ from spark_auto_schema.ops import corpus
 from spark_auto_schema.ops import dedup
 from spark_auto_schema.io import read_table
 from spark_auto_schema.ops import scoring
-from spark_auto_schema.registry.extensions import (_spread_docs)
+from spark_auto_schema.registry.extensions import _spread_docs, _words_sql
 
 # ---------------------------------------------------------------------------
 # corpus lifecycle + batch inference (round 3 additions)
@@ -237,11 +237,11 @@ def _q_segment_dedup(spark, sf_dir):
     )
 
 
-_SEGMENT_DEDUP_SQL = """
+_SEGMENT_DEDUP_SQL = f"""
 WITH segs AS (
   SELECT doc_id, i AS seg_idx,
          array_to_string(w[(i * 8 + 1):(i * 8 + 8)], ' ') AS seg
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+  FROM (SELECT doc_id, {_words_sql()} AS w FROM documents),
        UNNEST(generate_series(0, greatest(CAST(ceil(len(w) / 8.0) AS INT) - 1, 0)))
          AS t(i)
 ), marked AS (
@@ -289,26 +289,25 @@ def _q_classifier_scores(spark, sf_dir):
     return scoring.classifier_score(read_table(spark, sf_dir, "documents"))
 
 
-_CLASSIFIER_SCORES_SQL = """
-WITH f AS (
-  SELECT doc_id,
-         ln(greatest(len(string_split(text, ' ')), 1) + 1.0) AS log_tokens,
-         (greatest(length(text), 1)
-            - (greatest(len(string_split(text, ' ')), 1) - 1)) * 1.0
-           / greatest(len(string_split(text, ' ')), 1) AS mean_word_len,
-         len(list_filter(string_split(text, ' '), w -> lower(w) IN
-             ('the','a','of','and','to','in','is','on','for','with'))) * 1.0
-           / greatest(len(string_split(text, ' ')), 1) AS stopword_ratio,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
-           / greatest(length(text), 1) AS alpha_ratio
-  FROM documents
-)
-SELECT doc_id,
-       round(1.0 / (1.0 + exp(-(-1.0 + 0.35 * log_tokens
+# ops/scoring.featurize and classifier_score's logistic model, replayed over
+# a relation with doc_id, text and ws (the text's words): shared by every
+# oracle of a classifier_score query
+_FEATURES_SQL = """ln(len(ws) + 1.0) AS log_tokens,
+         length(replace(text, ' ', '')) / len(ws) AS mean_word_len,
+         len(list_filter(ws, w -> lower(w) IN
+             ('the','a','of','and','to','in','is','on','for','with')))
+           / len(ws) AS stopword_ratio,
+         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / length(text)
+           AS alpha_ratio"""
+_SCORE_SQL = """round(1.0 / (1.0 + exp(-(-1.0 + 0.35 * log_tokens
                                 + 0.12 * mean_word_len
                                 + 1.8 * stopword_ratio
-                                + 0.9 * alpha_ratio))), 4) AS score
-FROM f
+                                + 0.9 * alpha_ratio))), 4)"""
+
+_CLASSIFIER_SCORES_SQL = f"""
+WITH d AS (SELECT doc_id, text, {_words_sql()} AS ws FROM documents),
+f AS (SELECT doc_id, {_FEATURES_SQL} FROM d)
+SELECT doc_id, {_SCORE_SQL} AS score FROM f
 """
 
 

@@ -18,6 +18,7 @@ from spark_auto_schema.registry.extensions import (
     _quality_expr_sql,
     _spread_docs,
     _spread_embs,
+    _words_sql,
 )
 from spark_auto_schema.registry.analytics import (_CONTAMINATION_PROBES)
 from spark_auto_schema.registry.curation import (_RRF_POOL_CTE)
@@ -210,8 +211,8 @@ def _rerank_oracle_sql() -> str:
     q = sorted(set(_RERANK_TERMS))
     terms = ", ".join(f"'{t}'" for t in q)
     f1 = (
-        f"2.0 * len(list_intersect(list_distinct(string_split(d.text, ' ')), "
-        f"[{terms}])) / ({len(q)} + len(list_distinct(string_split(d.text, ' '))))"
+        f"2.0 * len(list_intersect(list_distinct({_words_sql('d.text')}), "
+        f"[{terms}])) / ({len(q)} + len(list_distinct({_words_sql('d.text')})))"
     )
     return _RRF_POOL_CTE + f""", pool AS (
   SELECT id, row_number() OVER (ORDER BY rrf DESC, id) AS pool_rank

@@ -16,6 +16,7 @@ from pyspark.sql import SparkSession
 
 from spark_auto_schema.io import read_table, spread_small_scan
 from spark_auto_schema.ops import similarity
+from spark_auto_schema.registry.extensions import _words_sql
 from spark_auto_schema.registry.pipeline_r11 import _SNAP6
 
 # ---------------------------------------------------------------------------
@@ -150,10 +151,9 @@ def _q_paragraph_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.paragraph_dedup_provenance(_spread_docs(spark, sf_dir))
 
 
-_PARAGRAPH_PROVENANCE_SQL = """
+_PARAGRAPH_PROVENANCE_SQL = f"""
 WITH ws AS (
-  SELECT doc_id AS did, source,
-         string_split(coalesce(text, ''), ' ') AS w
+  SELECT doc_id AS did, source, {_words_sql()} AS w
   FROM documents
 ), segs AS (
   SELECT did, source, s,

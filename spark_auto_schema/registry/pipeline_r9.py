@@ -15,7 +15,11 @@ from spark_auto_schema.io import read_table
 from spark_auto_schema.ops import sampling
 from spark_auto_schema.ops import similarity
 from spark_auto_schema.ops import text
-from spark_auto_schema.registry.extensions import (_spread_docs, _spread_embs)
+from spark_auto_schema.registry.extensions import (
+    _spread_docs,
+    _spread_embs,
+    _words_sql,
+)
 from spark_auto_schema.registry.analytics import (
     _STREAM_SEQ,
     _dot_sql,
@@ -517,9 +521,9 @@ def _q_paragraph_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.paragraph_minhash_pairs(_spread_docs(spark, sf_dir))
 
 
-_PARAGRAPH_MINHASH_SQL = """
+_PARAGRAPH_MINHASH_SQL = f"""
 WITH ws AS (
-  SELECT doc_id AS did, string_split(coalesce(text, ''), ' ') AS w
+  SELECT doc_id AS did, {_words_sql()} AS w
   FROM documents
 ), segs AS (
   SELECT CAST(did AS VARCHAR) || ':' || CAST(s AS VARCHAR) AS id,

@@ -1,6 +1,7 @@
 """Edge texts through every operator built on the shared text primitives
-of ``spark_auto_schema/ops/_tokens.py``: the word list, the per-group word
-count, the a-z0-9 term key and the md5 hex integer.
+of ``spark_auto_schema/ops/_tokens.py``: the word list, the mean word
+length, the per-group word count, the a-z0-9 term key and the md5 hex
+integer.
 
 The testdata corpora hold no NULL, empty or multi-space text, so the
 oracle check cannot see a slip in how one of these operators treats
@@ -8,10 +9,13 @@ them.  Each output here is pinned row for row."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
-from spark_auto_schema.ops import corpus, dedup, packing, sampling, text
+from spark_auto_schema.ops import corpus, dedup, packing, sampling, scoring, text
 
 # NULL, empty, blank, a double space, a leading and a trailing space, a tab
 # inside a word, plus ordinary texts so the corpus-level counts have content
@@ -61,6 +65,17 @@ CASES = {
     "text.cooccurrence_pmi": lambda df: text.cooccurrence_pmi(
         df, min_count=1, min_pair_docs=1
     ),
+    "text.text_stats": lambda df: text.text_stats(df),
+    "text.token_count": lambda df: text.token_count(df),
+    "text.quality_score": lambda df: text.quality_score(df),
+    "text.gopher_quality_filter": lambda df: text.gopher_quality_filter(df),
+    "scoring.featurize": lambda df: scoring.featurize(df),
+    "text.chunk_documents": lambda df: text.chunk_documents(
+        df, chunk_tokens=3, overlap=1
+    ),
+    "text.chunk_reconstruction_check": lambda df: text.chunk_reconstruction_check(
+        df, chunk_tokens=3, overlap=1
+    ),
     # term key
     "text.fingerprint": lambda df: text.fingerprint(df),
     # md5 hex integer
@@ -90,7 +105,8 @@ def _rows(df) -> list[tuple]:
 
 
 # heavy_hitters_sketch and cooccurrence_pmi once reported the empty token
-# ('') of a double space as a term; no row here holds it
+# ('') of a double space as a term; no row here holds it.  A NULL, empty or
+# blank text has no word: 0 words, no chunk, no masked token, NULL ratios
 EXPECTED: dict[str, list[tuple]] = {
     "corpus.epoch_shuffle": [
         (1, 0, 1), (2, 0, 4), (3, 2, 2), (4, 1, 3), (5, 0, 3), (6, 1, 1), (7, 2, 1),
@@ -109,12 +125,10 @@ EXPECTED: dict[str, list[tuple]] = {
         ("c921ba104c370ab156e3f581186f6676", 6),
     ],
     "dedup.cdc_chunks": [
-        (2, 0, "d41d8cd98f00b204e9800998ecf8427e", 1),
-        (3, 0, "7215ee9c7d9dc229d2921a40e899ec5f", 2),
-        (4, 0, "b5cf57e329bd2a219a57cd31692c2d69", 3),
-        (5, 0, "9b12aa994361316eab19bd79b6aabf7f", 4),
+        (4, 0, "0cc9cd4dd26c5137b675a0d819cb9ab0", 2),
+        (5, 0, "06f0760ec7f18687a7fbc0ddbf1b1722", 3),
         (6, 0, "b5fddffda43ed626a60026ef9d18ced2", 2),
-        (6, 1, "99020cb24bd13238d907c65cc2b57c03", 2),
+        (6, 1, "0cc175b9c0f1b6a831c399e269772661", 1),
         (7, 0, "31b0a6c9d2089007e81999aa5c57a74f", 1),
         (7, 1, "b89e5a133abfb103cd888ed2cad06dc5", 1),
         (7, 2, "0cc9cd4dd26c5137b675a0d819cb9ab0", 2),
@@ -154,17 +168,15 @@ EXPECTED: dict[str, list[tuple]] = {
         ("", 3, 3), ("a b", 5, 4), ("b c", 4, 3), ("c a", 2, 2),
     ],
     "packing.fim_transform": [
-        (1, None, None, "", ""), (2, False, "", "", ""), (3, False, " ", "", ""),
-        (4, True, "a", "", "b"), (5, True, "", "a b", "c"), (6, True, "b", "c a", ""),
+        (1, False, None, "", ""), (2, False, "", "", ""), (3, False, " ", "", ""),
+        (4, False, "a  b", "", ""), (5, True, "a", "b", "c"), (6, True, "b", "c", "a"),
         (7, True, "Ta\tb", "C,", "a b"), (8, True, "a", "b", "c a b c d"),
         (9, True, "d c b a d c", "b", "a"),
     ],
     "packing.span_corruption": [
-        (2, "<extra_id_0>", "<extra_id_0> ", 1),
-        (3, "<extra_id_0>", "<extra_id_0>  ", 1),
-        (4, "a <extra_id_0>", "<extra_id_0>  b", 1),
-        (5, "<extra_id_0> c", "<extra_id_0>  a b", 1),
-        (6, "b <extra_id_0>", "<extra_id_0> c a ", 1),
+        (4, "a <extra_id_0>", "<extra_id_0> b", 1),
+        (5, "<extra_id_0>", "<extra_id_0> a b c", 1),
+        (6, "b <extra_id_0>", "<extra_id_0> c a", 1),
         (7, "<extra_id_0> a b", "<extra_id_0> Ta\tb C,", 1),
         (8, "a <extra_id_0> b c d", "<extra_id_0> b c a", 1),
         (
@@ -193,6 +205,15 @@ EXPECTED: dict[str, list[tuple]] = {
         (2, "", "s1", 2.0), (4, "a  b", "s2", 4.0), (5, " a b c", "s2", 5.0),
         (6, "b c a ", "s2", 6.0), (7, "Ta\tb C, a b", "s1", 7.0),
     ],
+    "scoring.featurize": [
+        (1, 0.0, None, None, None), (2, 0.0, None, None, None),
+        (3, 0.0, None, None, 0.0), (4, 1.0986122886681096, 1.0, 0.5, 0.5),
+        (5, 1.3862943611198906, 1.0, 0.3333333333333333, 0.5),
+        (6, 1.3862943611198906, 1.0, 0.3333333333333333, 0.5),
+        (7, 1.6094379124341003, 2.0, 0.25, 0.5454545454545454),
+        (8, 2.0794415416798357, 1.0, 0.2857142857142857, 0.5384615384615384),
+        (9, 2.1972245773362196, 1.0, 0.25, 0.5333333333333333),
+    ],
     "text.bigram_logprob": [
         (4, -0.8473, 1), (5, -0.9385, 2), (6, -1.208, 2), (7, -1.1176, 3),
         (8, -1.1553, 6), (9, -1.4281, 7),
@@ -201,6 +222,16 @@ EXPECTED: dict[str, list[tuple]] = {
         ("a", "b", 5, 0.9977), ("a", "d", 1, 0.3691), ("b", "a", 2, 0.0814),
         ("b", "c", 4, 0.9081), ("c", "a", 3, 0.6204), ("c", "b", 2, 0.2149),
         ("c", "d", 1, 0.5026), ("d", "c", 2, 1.1958), ("tab", "c", 1, 1.6012),
+    ],
+    "text.chunk_documents": [
+        (4, 0, "a b", 2), (5, 0, "a b c", 3), (5, 1, "c", 1), (6, 0, "b c a", 3),
+        (6, 1, "a", 1), (7, 0, "Ta\tb C, a", 3), (7, 1, "a b", 2), (8, 0, "a b c", 3),
+        (8, 1, "c a b", 3), (8, 2, "b c d", 3), (8, 3, "d", 1), (9, 0, "d c b", 3),
+        (9, 1, "b a d", 3), (9, 2, "d c b", 3), (9, 3, "b a", 2),
+    ],
+    "text.chunk_reconstruction_check": [
+        (4, 1, 2, 2, 0, True), (5, 2, 3, 4, 1, True), (6, 2, 3, 4, 1, True),
+        (7, 2, 4, 5, 1, True), (8, 4, 7, 10, 3, True), (9, 4, 8, 11, 3, True),
     ],
     "text.cooccurrence_pmi": [
         ("C,", "Ta\tb", 1, 2.1972), ("C,", "a", 1, 0.4055), ("C,", "b", 1, 0.4055),
@@ -218,11 +249,31 @@ EXPECTED: dict[str, list[tuple]] = {
         (8, "0a1fcb708122770cddd909128f2a0b64"),
         (9, "430530dae271684171f86612d00935ad"),
     ],
+    "text.gopher_quality_filter": [
+        (1, False, None, None, None, False), (2, False, None, False, None, False),
+        (3, False, None, False, None, False), (4, False, False, False, True, False),
+        (5, False, False, False, True, False), (6, False, False, False, True, False),
+        (7, False, False, False, True, False), (8, False, False, True, True, False),
+        (9, False, False, True, True, False),
+    ],
     "text.heavy_hitters_sketch": [
         ("C,", 1), ("Ta\tb", 1), ("a", 8), ("b", 8), ("c", 6), ("d", 3),
     ],
     "text.lm_kl_between": [("s1", 0, 12, 6, 0.0393), ("s2", 12, 3, 4, 0.0059)],
     "text.lm_kl_divergence": [("s1", 12, 6, 0.0566), ("s2", 15, 4, 0.0082)],
+    "text.quality_score": [
+        (1, None), (2, None), (3, None), (4, 0.51), (5, 0.515), (6, 0.515), (7, 0.4927),
+        (8, 0.535), (9, 0.54),
+    ],
+    "text.text_stats": [
+        (1, None, 0, None, None), (2, 0, 0, None, 0), (3, 1, 0, None, 0),
+        (4, 4, 2, 1.0, 0), (5, 6, 3, 1.0, 0), (6, 6, 3, 1.0, 0), (7, 11, 4, 2.0, 1),
+        (8, 13, 7, 1.0, 0), (9, 15, 8, 1.0, 0),
+    ],
+    "text.token_count": [
+        (1, 0, None), (2, 0, 0), (3, 0, 0), (4, 2, 2), (5, 3, 3), (6, 3, 3), (7, 4, 6),
+        (8, 7, 7), (9, 8, 8),
+    ],
     "text.token_entropy": [("s1", 12, 6, 1.7046), ("s2", 15, 4, 1.2654)],
     "text.tokenizer_fertility": [
         ("s1", 5, 27, 27, 12, 12, 2.25, 2.25, 1.0),
@@ -270,3 +321,73 @@ def test_bm25_length_skips_the_empty_token(spark):
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     rows = text.bm25_topk(df, ["alpha"]).collect()
     assert len(rows) == 4 and len({r["bm25"] for r in rows}) == 1
+
+
+def test_word_counts_agree_per_source(spark):
+    # every whitespace word count in ops/ is the size of _tokens._words, so
+    # the four per-source totals agree on NULL, blank and odd-space texts
+    edge = spark.createDataFrame(EDGE_ROWS, EDGE_SCHEMA)
+
+    def per_source(counts, col):
+        by_source = counts.join(edge, "doc_id").groupBy("source").agg(F.sum(col))
+        return dict(by_source.collect())
+
+    ws = per_source(text.token_count(edge), "ws_tokens")
+    nw = per_source(text.text_stats(edge), "n_words")
+    fert = {
+        r["grp"]: r["n_ws_tokens"] for r in text.tokenizer_fertility(edge).collect()
+    }
+    surv = {r["source"]: r["n_tokens"] for r in dedup.token_survivorship(edge).collect()}
+    dedup.release_caches()
+    assert ws == nw == fert == surv == {"s1": 12, "s2": 15}
+
+
+@pytest.mark.parametrize("min_tokens", [1, 3])
+def test_fim_spans_are_non_empty_when_applied(spark, min_tokens):
+    # the documented contract: whenever FIM applies, prefix, middle and
+    # suffix are all non-empty and together are the text's words in order
+    edge = spark.createDataFrame(EDGE_ROWS, EDGE_SCHEMA)
+    texts = {r["doc_id"]: r["text"] for r in edge.collect()}
+    rows = packing.fim_transform(
+        edge, fim_rate_mod=1, min_tokens=min_tokens
+    ).collect()
+    applied = [r for r in rows if r["fim_applied"]]
+    assert len(applied) == 5
+    for r in applied:
+        spans = [r["prefix"], r["middle"], r["suffix"]]
+        words = [w for w in texts[r["doc_id"]].split(" ") if w]
+        assert all(spans), (r["doc_id"], spans)
+        assert " ".join(spans) == " ".join(words)
+
+
+# the only splits in ops/ outside _tokens.py: canonicalize_urls' query and
+# host splits
+_ALLOWED_SPLITS = ('F.split(query, "&")', 'F.split(host, r"\\.")')
+
+
+def test_ops_split_words_only_in_tokens():
+    ops_dir = Path(text.__file__).parent
+    found, allowed = [], 0
+    for path in sorted(ops_dir.glob("*.py")):
+        if path.name == "_tokens.py":
+            continue
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if not re.search(r"\bsplit\(", line):
+                continue
+            if any(a in line for a in _ALLOWED_SPLITS):
+                allowed += 1
+            else:
+                found.append(f"{path.name}:{i}: {line.strip()}")
+    assert allowed == len(_ALLOWED_SPLITS)
+    assert found == []
+
+
+def test_token_survivorship_of_a_source_with_no_word(spark):
+    # a source whose texts have no word has 0 tokens and no loss fraction
+    df = spark.createDataFrame(
+        [(1, " ", "s1"), (2, None, "s1"), (3, "a b", "s2")],
+        "doc_id long, text string, source string",
+    )
+    rows = sorted(tuple(r) for r in dedup.token_survivorship(df).collect())
+    dedup.release_caches()
+    assert rows == [("s1", 2, 0, 0, 0, 0, None), ("s2", 1, 2, 2, 0, 2, 0.0)]
