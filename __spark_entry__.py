@@ -18,25 +18,27 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from spark_auto_schema import SparkAutoSchema
-from spark_auto_schema.diff import evaluate_diffs
-from spark_auto_schema.inference import infer_table_schema, inference_to_df
-from spark_auto_schema.io import read_table
-from spark_auto_schema.ops import (
-    corpus,
-    dedup,
-    multimodal,
-    packing,
+
+# Every query/oracle lives in spark_auto_schema/registry/<family>.py; this
+# file names each one through its family module and is the single assembly
+# point for the driver contract below.
+from spark_auto_schema.registry import (
+    analytics,
+    curation,
+    extensions,
+    inference,
+    lifecycle,
+    pipeline_r9,
+    pipeline_r11,
+    pipeline_r12,
+    pipeline_r13,
+    pipeline_r14,
     relational,
-    sampling,
-    scoring,
-    similarity,
-    text,
+    schema_ddl,
+    tpch,
 )
-from spark_auto_schema.types import TYPE_CLASSES
 
 # ---------------------------------------------------------------------------
 # entry
@@ -52,620 +54,6 @@ def entry(spark: SparkSession) -> DataFrame:
         spark=spark,
     )
     return sas.metadata_df()
-
-
-
-
-# ---------------------------------------------------------------------------
-# family-split registry modules (round 11): every query/oracle lives in
-# spark_auto_schema/registry/<family>.py; this file re-exports the full
-# namespace (tests/tools address helpers as __spark_entry__._q_*) and
-# remains the single assembly point for the driver contract below.
-# ---------------------------------------------------------------------------
-
-from spark_auto_schema.registry.inference import (  # noqa: F401
-    _INT_RANGE_SQL,
-    _TABLE_KINDS,
-    _infer_col_sql,
-    _infer_query,
-    _infer_table_sql,
-)
-from spark_auto_schema.registry.schema_ddl import (  # noqa: F401
-    _DIFF_DEPLOYED,
-    _DIFF_PROPOSED,
-    _classify_sql,
-    _column_ddl_oracle_sql,
-    _diff_oracle_sql,
-    _diff_stub_dfs,
-    _q_column_ddl,
-    _q_column_list,
-    _q_schema_diff,
-    _values_sql,
-)
-from spark_auto_schema.registry.relational import (  # noqa: F401
-    _ASOF_PRIOR_CLICK_SQL,
-    _CUBE_EVENTS_SQL,
-    _ERROR_EVENTS_SQL,
-    _GROUPING_SETS_SQL,
-    _JSON_PROPS_SQL,
-    _LOCAL_SUPPLIER_SQL,
-    _MONTHLY_ORDERS_SQL,
-    _PRICING_SQL,
-    _REGION_CUSTOMERS_SQL,
-    _ROLLUP_ORDERS_SQL,
-    _SESSIONIZE_SQL,
-    _SHIPPING_PRIORITY_SQL,
-    _TIME_BUCKET_SQL,
-    _TOP_CUSTOMERS_SQL,
-    _TOP_EVENTS_SQL,
-    _hash_sample_oracle_sql,
-    _q_asof_prior_click,
-    _q_cube_events,
-    _q_customers_no_orders,
-    _q_customers_with_orders,
-    _q_distinct_status,
-    _q_error_events,
-    _q_grouping_sets,
-    _q_hash_sample,
-    _q_json_props,
-    _q_local_supplier_volume,
-    _q_monthly_orders,
-    _q_nation_presence,
-    _q_pricing_summary,
-    _q_region_customers,
-    _q_rollup_orders,
-    _q_sessionize,
-    _q_shipping_priority,
-    _q_stratified_sample,
-    _q_time_bucket,
-    _q_top_customers,
-    _q_top_events_per_user,
-    _q_train_eval_split,
-    _stratified_sample_oracle_sql,
-    _train_eval_oracle_sql,
-)
-from spark_auto_schema.registry.extensions import (  # noqa: F401
-    _BUCKETED_ROUNDTRIP_SQL,
-    _CSV_DIRS,
-    _DIMDRIFT_TOPK,
-    _EMBEDDING_TOPK_SQL,
-    _FINGERPRINT_SQL,
-    _FMT_DIRS,
-    _FRAME_SAMPLE_SQL,
-    _HASH_DEDUP_SQL,
-    _INFER_NATIVE_SQL,
-    _LABEL_NEARDUP_SQL,
-    _MULTIMODAL_BYTES_SQL,
-    _NGRAM_JACCARD_SQL,
-    _PARTITIONED_ROUNDTRIP_SQL,
-    _QDRIFT_GRID,
-    _TEXT_STATS_SQL,
-    _TOKEN_COUNT_SQL,
-    _TOP_TERMS_SQL,
-    _VALUE_TIERS,
-    _embedding_dim_drift_oracle_sql,
-    _lang_id_oracle_sql,
-    _length_drift_oracle_sql,
-    _norm_drift_oracle_sql,
-    _q_bucketed_roundtrip,
-    _q_csv_inference,
-    _q_csv_roundtrip,
-    _q_embedding_dim_drift,
-    _q_embedding_norm_drift,
-    _q_embedding_topk,
-    _q_fingerprint,
-    _q_frame_sample,
-    _q_hash_dedup,
-    _q_infer_embeddings_native,
-    _q_json_roundtrip,
-    _q_label_neardup,
-    _q_lang_id,
-    _q_length_drift,
-    _q_multimodal_bytes,
-    _q_ngram_jaccard,
-    _q_orc_roundtrip,
-    _q_partitioned_roundtrip,
-    _q_quality,
-    _q_quality_drift,
-    _q_range_join_tiers,
-    _q_text_stats,
-    _q_token_count,
-    _q_top_terms,
-    _quality_drift_oracle_sql,
-    _quality_expr_sql,
-    _quality_oracle_sql,
-    _range_join_oracle_sql,
-    _region_csv_path,
-    _region_fmt_path,
-    _score_drift_tail_sql,
-    _spread_docs,
-    _stop_pat,
-)
-from spark_auto_schema.registry.analytics import (  # noqa: F401
-    _ANN_RECALL_SQL,
-    _BIGRAM_PMI_SQL,
-    _CATALOG_CHECKS_SQL,
-    _CHUNK_DOCS_SQL,
-    _CHUNK_RECON_SQL,
-    _CLUSTER_CLOSURE_CTE,
-    _CONTAMINATION_PROBES,
-    _CORPUS_MIX_SQL,
-    _DDL_COLUMNS,
-    _DEDUP_CLUSTERS_SQL,
-    _DEDUP_CLUSTER_STATS_SQL,
-    _EMBEDDING_DIM_STATS_SQL,
-    _EVENT_TYPES,
-    _EWMA_FINAL_SQL,
-    _EWMA_VALUE_SQL,
-    _FUNNEL_SQL,
-    _HISTOGRAM_SQL,
-    _INCREMENTAL_DEDUP_SQL,
-    _INCREMENTAL_NEAR_DEDUP_SQL,
-    _INCR_SPLIT,
-    _IVF_TOPK_SQL,
-    _KMEANS_INERTIA_SQL,
-    _LABEL_CENTROIDS_SQL,
-    _MEDIA_FEATURES_SQL,
-    _MEDIA_RESIZE_SQL,
-    _MERGE_INSERT_ONLY_SQL,
-    _MERGE_UPSERT_SQL,
-    _MINHASH_CONTRACT_SQL,
-    _MINHASH_MD5_SQL,
-    _MOVING_AVG_SQL,
-    _PACK_SEQUENCES_SQL,
-    _PACK_SWEEP_BUDGETS,
-    _PERCENTILES_SQL,
-    _QUANTIZE_SQL,
-    _RANGE_ROUNDTRIP_SQL,
-    _REPEATED_NGRAM_SQL,
-    _REPETITION_SQL,
-    _RETENTION_SQL,
-    _SALTED_COUNTS_SQL,
-    _SALTED_JOIN_SQL,
-    _SBIAS_FRACTION,
-    _SCAP_CAP,
-    _SCHEMA_EVOLUTION_SQL,
-    _SESSION_WINDOWS_SQL,
-    _SIMHASH_DETERMINISM_SQL,
-    _SIMHASH_MD5_SQL,
-    _SIMHASH_PIGEONHOLE_SQL,
-    _SKEW_PROFILE_SQL,
-    _STREAMING_DEDUP_SQL,
-    _STREAM_DIRS,
-    _STREAM_ENRICHED_SQL,
-    _STREAM_SEQ,
-    _STREAM_WINDOW_SQL,
-    _SWEEP_THRESHOLDS,
-    _TFIDF_PAIRS_SQL,
-    _UNIGRAM_LOGPROB_SQL,
-    _VOCAB_COVERAGE_SQL,
-    _WEIGHTED_SAMPLE_SQL,
-    _WINDOW_FUNCTIONS_SQL,
-    _ZSCORE_SQL,
-    _ann_lsh_oracle_sql,
-    _approx_distinct_oracle_sql,
-    _approx_percentile_oracle_sql,
-    _clean_text_oracle_sql,
-    _contamination_diff_oracle_sql,
-    _contamination_oracle_sql,
-    _ddl_strings_oracle_sql,
-    _dedup_threshold_sweep_oracle_sql,
-    _dot_sql,
-    _events_stream_dir,
-    _events_stream_dir_dup,
-    _gopher_oracle_sql,
-    _incr_split,
-    _packing_length_sweep_oracle_sql,
-    _pivot_oracle_sql,
-    _q_ann_lsh,
-    _q_ann_recall_ok,
-    _q_approx_distinct_ok,
-    _q_approx_percentile_ok,
-    _q_bigram_pmi,
-    _q_catalog_checks,
-    _q_chunk_documents,
-    _q_chunk_reconstruction,
-    _q_clean_text,
-    _q_contamination,
-    _q_contamination_diff,
-    _q_corpus_mix,
-    _q_ddl_strings,
-    _q_dedup_cluster_stats,
-    _q_dedup_clusters,
-    _q_dedup_threshold_sweep,
-    _q_embedding_dim_stats,
-    _q_event_funnel,
-    _q_ewma_user_values,
-    _q_ewma_value_check,
-    _q_except_custkeys,
-    _q_gopher_filter,
-    _q_incremental_dedup,
-    _q_incremental_near_dedup,
-    _q_intersect_users,
-    _q_ivf_topk,
-    _q_kmeans_inertia_ok,
-    _q_label_centroids,
-    _q_media_features,
-    _q_media_resize,
-    _q_merge_insert_only,
-    _q_merge_upsert,
-    _q_minhash_md5,
-    _q_minhash_pairs,
-    _q_moving_avg_orders,
-    _q_pack_sequences,
-    _q_packing_length_sweep,
-    _q_pivot_event_counts,
-    _q_quantize_embeddings,
-    _q_range_partitioned_roundtrip,
-    _q_redact_pii,
-    _q_repeated_ngram_coverage,
-    _q_repetition_ratio,
-    _q_salted_event_counts,
-    _q_salted_join_segments,
-    _q_sample_bias_audit,
-    _q_schema_evolution_roundtrip,
-    _q_session_windows,
-    _q_simhash_determinism,
-    _q_simhash_md5,
-    _q_simhash_neardup,
-    _q_simhash_pigeonhole_check,
-    _q_simhash_sigs,
-    _q_skew_profile,
-    _q_streaming_dedup,
-    _q_streaming_domain_cap,
-    _q_streaming_drift,
-    _q_streaming_enriched_counts,
-    _q_streaming_user_stats,
-    _q_streaming_window_counts,
-    _q_tfidf_pairs,
-    _q_unigram_logprob,
-    _q_user_retention,
-    _q_value_histogram,
-    _q_value_percentiles,
-    _q_vocab_coverage,
-    _q_weighted_sample,
-    _q_window_functions,
-    _q_zscore_outliers,
-    _redact_pii_oracle_sql,
-    _sample_bias_oracle_sql,
-    _stage_events,
-    _streaming_domain_cap_oracle_sql,
-    _streaming_drift_oracle_sql,
-)
-from spark_auto_schema.registry.tpch import (  # noqa: F401
-    _CHEAPEST_PART_SQL,
-    _DISCOUNT_BAND_SQL,
-    _LARGE_VOLUME_SQL,
-    _ORDER_PRIORITY_SQL,
-    _PARTS_SUPPLIER_SQL,
-    _PRODUCT_PROFIT_SQL,
-    _PROMO_REVENUE_SQL,
-    _RETURNED_ITEMS_SQL,
-    _SALES_OPPORTUNITY_SQL,
-    _SMALL_QTY_SQL,
-    _TOP_SUPPLIER_SQL,
-    _VOLUME_SHIPPING_SQL,
-    _q_cheapest_part_per_type,
-    _q_discount_band_revenue,
-    _q_large_volume_orders,
-    _q_order_priority_check,
-    _q_parts_supplier_count,
-    _q_product_profit,
-    _q_promo_revenue,
-    _q_returned_items,
-    _q_sales_opportunity,
-    _q_small_qty_revenue,
-    _q_top_supplier,
-    _q_volume_shipping,
-)
-from spark_auto_schema.registry.lifecycle import (  # noqa: F401
-    _CLASSIFIER_SCORES_SQL,
-    _CORPUS_DIFF_SQL,
-    _EPOCH_SHUFFLE_SQL,
-    _MATERIALIZE_MIX_SQL,
-    _MIX_WEIGHTS_SQL,
-    _NGRAM_NOVELTY_SQL,
-    _PROFILE_DOCS_SQL,
-    _SEGMENT_DEDUP_SQL,
-    _SELECT_TOKEN_BUDGET_SQL,
-    _corpus_v2,
-    _q_classifier_scores,
-    _q_corpus_diff,
-    _q_epoch_shuffle,
-    _q_materialize_mix,
-    _q_mix_weights,
-    _q_ngram_novelty,
-    _q_profile_docs,
-    _q_segment_dedup,
-    _q_select_token_budget,
-)
-from spark_auto_schema.registry.curation import (  # noqa: F401
-    _BIGRAM_LOGPROB_SQL,
-    _BINARY_HAMMING_SQL,
-    _BINNED_ROC_SQL,
-    _BM25_TOPK_SQL,
-    _BOCC_SHINGLE,
-    _BURST_COLLAPSE_SQL,
-    _CALIBRATION_BINS_SQL,
-    _CANONICAL_DOCS_SQL,
-    _CDC_DEDUP_STATS_SQL,
-    _COMPACT_ROUNDTRIP_SQL,
-    _CONTAINMENT_SQL,
-    _CONTRASTIVE_NEGATIVES_SQL,
-    _CONVERSATION_ASSEMBLY_SQL,
-    _COOCCURRENCE_PMI_SQL,
-    _CORRELATION_MATRIX_SQL,
-    _CSV_QUARANTINE_SQL,
-    _DCAP_AUDIT_CAP,
-    _DEDUP_LOSS_SQL,
-    _DOMAIN_CAP_SQL,
-    _DQ_EXPECTATIONS_SQL,
-    _EQUIDEPTH_SQL,
-    _EVAL_SAMPLE_PER_LANG_SQL,
-    _FILTER_FUNNEL_SQL,
-    _FIM_TRANSFORM_SQL,
-    _FK_PROFILE_SQL,
-    _FUZZY_MATCH_SQL,
-    _GINI_SOURCES_SQL,
-    _GROUP_QUANTILE_FILTER_SQL,
-    _HEAVY_HITTERS_SQL,
-    _HLL_SHARDED_UNIQUES_SQL,
-    _INCR_SEMANTIC_SQL,
-    _INTERVAL_OVERLAP_SQL,
-    _KEY_SUGGESTIONS_APPROX_SQL,
-    _KEY_SUGGESTIONS_SQL,
-    _KFOLD_SPLIT_SQL,
-    _KS_DRIFT_SQL,
-    _LABELER_KAPPA_SQL,
-    _LENGTH_BUCKETS_SQL,
-    _MAD_OUTLIERS_SQL,
-    _NFKC_NORMALIZE_SQL,
-    _NORM_PRE,
-    _NORM_SUF,
-    _NORM_TAIL_EVEN,
-    _NORM_TAIL_ODD,
-    _PAGERANK_EVENT_TYPES_SQL,
-    _PSI_DRIFT_SQL,
-    _QUANTILE_NORMALIZE_SQL,
-    _QUARANTINE_DIRS,
-    _RANK_TRANSFORM_SQL,
-    _REMOVE_BOILERPLATE_SQL,
-    _RRF_HYBRID_SQL,
-    _RRF_POOL_CTE,
-    _SCD2_LOOKUP_SQL,
-    _SCD2_SQL,
-    _SCORED_LABELED_CTE,
-    _SEMANTIC_DEDUP_SQL,
-    _SPAN_CORRUPTION_SQL,
-    _STREAMING_ATTRIBUTION_SQL,
-    _STREAMING_KS_SQL,
-    _STREAMING_PSI_SQL,
-    _STREAMING_SESSIONS_SQL,
-    _SYNDICATION_SQL,
-    _TABLE_CHECKSUM_SQL,
-    _TEXT_DIRS,
-    _TEXT_ROUNDTRIP_SQL,
-    _TIME_EMBARGO_SQL,
-    _TOKENIZER_FERTILITY_SQL,
-    _TOKEN_ENTROPY_SQL,
-    _TOKEN_WINDOW_DEDUP_SQL,
-    _TOPIC_SHARE_NLIST,
-    _TOPIC_SHARE_SQL,
-    _TOP_REPEATED_SQL,
-    _TRANSITION_MATRIX_SQL,
-    _URL_ROLLUP_SQL,
-    _WATERFILL_SOURCES_SQL,
-    _WINSORIZE_EVENTS_SQL,
-    _ZIPF_SLOPE_SQL,
-    _ZONE_MAP_SQL,
-    _ZORDER_ROUNDTRIP_SQL,
-    _band_occupancy_oracle_sql,
-    _cleanup_text_dirs,
-    _docs_text_path,
-    _domain_cap_psl_audit_oracle_sql,
-    _jl_oracle_sql,
-    _lang_confusion_oracle_sql,
-    _leakage_safe_split_oracle_sql,
-    _pipeline_end_to_end_oracle_sql,
-    _q_band_occupancy,
-    _q_bigram_logprob,
-    _q_binary_hamming_topk,
-    _q_binned_roc,
-    _q_bloom_incremental_dedup,
-    _q_bm25_topk,
-    _q_burst_collapse_events,
-    _q_calibration_bins,
-    _q_canonical_docs,
-    _q_cdc_dedup_stats,
-    _q_compact_roundtrip,
-    _q_containment,
-    _q_contrastive_negatives,
-    _q_conversation_assembly,
-    _q_cooccurrence_pmi,
-    _q_correlation_matrix,
-    _q_csv_quarantine,
-    _q_dedup_loss_by_source,
-    _q_domain_cap_docs,
-    _q_domain_cap_psl_audit,
-    _q_dq_expectations,
-    _q_equidepth_histogram,
-    _q_eval_sample_per_lang,
-    _q_filter_funnel,
-    _q_fim_transform,
-    _q_fk_profile,
-    _q_fuzzy_match_customers,
-    _q_gini_sources,
-    _q_group_quantile_filter,
-    _q_heavy_hitters,
-    _q_hll_sharded_uniques,
-    _q_incremental_semantic_dedup,
-    _q_interval_overlap,
-    _q_jl_projection,
-    _q_jsonl_inference,
-    _q_key_suggestions,
-    _q_key_suggestions_approx_ok,
-    _q_kfold_split,
-    _q_ks_drift,
-    _q_labeler_kappa,
-    _q_lang_confusion,
-    _q_leakage_safe_split,
-    _q_length_buckets,
-    _q_mad_outliers,
-    _q_nfkc_normalize,
-    _q_pagerank_event_types,
-    _q_pipeline_end_to_end,
-    _q_psi_drift,
-    _q_quantile_normalize,
-    _q_rank_transform,
-    _q_remove_boilerplate,
-    _q_rrf_hybrid_topk,
-    _q_scd2_lookup,
-    _q_scd2_order_status,
-    _q_semantic_dedup,
-    _q_span_corruption,
-    _q_streaming_attribution,
-    _q_streaming_ks_monitor,
-    _q_streaming_psi_monitor,
-    _q_streaming_sessions,
-    _q_syndication_matrix,
-    _q_table_checksum,
-    _q_text_roundtrip,
-    _q_time_embargo_split,
-    _q_token_entropy,
-    _q_token_window_dedup,
-    _q_tokenizer_fertility,
-    _q_tombstone_delete,
-    _q_top_repeated_substrings,
-    _q_topic_share_balance,
-    _q_transition_matrix,
-    _q_url_domain_rollup,
-    _q_waterfill_sources,
-    _q_winsorize_events,
-    _q_zipf_slope,
-    _q_zone_map_events,
-    _q_zorder_roundtrip,
-    _quarantine_csv_path,
-    _scored_with_lang_label,
-    _sql_quote,
-    _tombstone_delete_oracle_sql,
-)
-from spark_auto_schema.registry.pipeline_r9 import (  # noqa: F401
-    _DSIR_BUCKETS,
-    _DSIR_N,
-    _DSIR_SQL,
-    _DSIR_TARGET_LANG,
-    _LANG_MIX_DRIFT_SQL,
-    _LM_KL_SNAPSHOTS_SQL,
-    _LM_KL_SQL,
-    _LSHR_K,
-    _LSHR_PANEL,
-    _LSHR_PLANES,
-    _LSHR_SEED,
-    _LSHR_TABLES,
-    _LSH_EMP_BIN,
-    _LSH_EMP_MINJ,
-    _LSH_S_CURVE_SQL,
-    _PARAGRAPH_MINHASH_SQL,
-    _PII_DENSITY_SQL,
-    _QREC_LEVELS,
-    _RECALL_K,
-    _RECALL_NLIST,
-    _RECALL_NPROBE,
-    _RECALL_PANEL,
-    _RECENCY_HL_DAYS,
-    _RECENCY_WEIGHTS_SQL,
-    _REDACTION_AUDIT_SQL,
-    _RETRIEVAL_RECALL_SQL,
-    _SCURVE_BANDS,
-    _SCURVE_GRID,
-    _SCURVE_HASHES,
-    _STREAMING_NOVELTY_SQL,
-    _cos_sql,
-    _lsh_empirical_oracle_sql,
-    _lsh_recall_oracle_sql,
-    _q_dsir_sample,
-    _q_lang_mix_drift,
-    _q_lm_kl,
-    _q_lm_kl_snapshots,
-    _q_lsh_empirical,
-    _q_lsh_recall,
-    _q_lsh_s_curve,
-    _q_paragraph_minhash,
-    _q_pii_density,
-    _q_quantized_recall,
-    _q_recency_weights,
-    _q_redaction_audit,
-    _q_retrieval_recall,
-    _q_streaming_novelty,
-    _quantized_recall_oracle_sql,
-)
-from spark_auto_schema.registry.pipeline_r12 import (  # noqa: F401
-    _DEDUP_PROVENANCE_SQL,
-    _LATE_DATA_AUDIT_SQL,
-    _MIX_POST_DEDUP_SQL,
-    _SCORE_DRIFT_APPROX_SQL,
-    _SEMANTIC_DEDUP_SCALED_SQL,
-    _TOKEN_SURVIVORSHIP_SQL,
-    _events_stream_dir_late,
-    _q_dedup_provenance,
-    _q_late_data_audit,
-    _q_mix_weights_post_dedup,
-    _q_score_drift_approx_ok,
-    _q_semantic_dedup_scaled,
-    _q_token_survivorship,
-)
-from spark_auto_schema.registry.pipeline_r13 import (  # noqa: F401
-    _CENTROID_ASSIGN_JOIN_SQL,
-    _LATE_DATA_ALERT_SQL,
-    _LATENESS_PROFILE_SQL,
-    _QUANTIZED_ASSIGN_AGREEMENT_SQL,
-    _TOPIC_DRIFT_MONITOR_SQL,
-    _TOPIC_SHARE_DRIFT_SQL,
-    _q_centroid_assign_join,
-    _q_late_data_alert,
-    _q_lateness_profile,
-    _q_quantized_assign_agreement,
-    _q_topic_drift_monitor,
-    _q_topic_share_drift,
-)
-from spark_auto_schema.registry.pipeline_r14 import (  # noqa: F401
-    _CENTROID_ASSIGN_TWO_LEVEL_SQL,
-    _PARAGRAPH_PROVENANCE_SQL,
-    _QUANTIZER_ROUNDTRIP_SQL,
-    _TWO_LEVEL_PROBE_SWEEP_SQL,
-    _q_centroid_assign_two_level,
-    _q_paragraph_provenance,
-    _q_quantizer_roundtrip,
-    _q_two_level_probe_sweep,
-)
-from spark_auto_schema.registry.pipeline_r11 import (  # noqa: F401
-    _CSWEEP_NS,
-    _CURR_PHASES,
-    _DEDUP_RATE_DRIFT_SQL,
-    _DSPAN_K,
-    _LCS_BANDS,
-    _MD5_HALF_SQL,
-    _NPROBE_SWEEP,
-    _RERANK_TERMS,
-    _SNAP6,
-    _STS_THRESHOLDS,
-    _contamination_sweep_oracle_sql,
-    _curriculum_oracle_sql,
-    _dup_spans_oracle_sql,
-    _ivf_nprobe_sweep_oracle_sql,
-    _lsh_config_sweep_oracle_sql,
-    _md5_half_col,
-    _q_contamination_sweep,
-    _q_curriculum_phases,
-    _q_dedup_rate_drift,
-    _q_dup_spans,
-    _q_ivf_nprobe_sweep,
-    _q_lsh_config_sweep,
-    _q_rerank,
-    _q_semantic_tsweep,
-    _rerank_oracle_sql,
-    _semantic_tsweep_oracle_sql,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -740,287 +128,289 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # post_dedup_mix_weights edit is a shared-Column refactor whose
     # analyzed plan is unchanged (same expression tree built once
     # instead of twice) ---
-    q["streaming_late_alert"] = _q_late_data_alert
-    q["centroid_assign_join"] = _q_centroid_assign_join
-    q["topic_share_drift"] = _q_topic_share_drift
-    q["streaming_lateness_profile"] = _q_lateness_profile
-    q["streaming_topic_drift"] = _q_topic_drift_monitor
-    q["quantized_assign_agreement"] = _q_quantized_assign_agreement
-    q["parts_supplier_count"] = _q_parts_supplier_count
-    q["small_qty_revenue"] = _q_small_qty_revenue
-    q["large_volume_orders"] = _q_large_volume_orders
-    q["discount_band_revenue"] = _q_discount_band_revenue
-    q["sales_opportunity"] = _q_sales_opportunity
-    q["cheapest_part_per_type"] = _q_cheapest_part_per_type
-    q["segment_dedup_docs"] = _q_segment_dedup
-    q["ngram_novelty_docs"] = _q_ngram_novelty
-    q["classifier_scores"] = _q_classifier_scores
-    q["profile_docs"] = _q_profile_docs
-    q["corpus_diff_docs"] = _q_corpus_diff
-    q["epoch_shuffle_docs"] = _q_epoch_shuffle
-    q["nfkc_normalize_docs"] = _q_nfkc_normalize
-    q["url_domain_rollup"] = _q_url_domain_rollup
-    q["token_window_dedup_docs"] = _q_token_window_dedup
-    q["tokenizer_fertility_sources"] = _q_tokenizer_fertility
-    q["top_repeated_substrings"] = _q_top_repeated_substrings
-    q["syndication_matrix"] = _q_syndication_matrix
-    q["zipf_slope_sources"] = _q_zipf_slope
-    q["lang_confusion_docs"] = _q_lang_confusion
-    q["dedup_loss_by_source"] = _q_dedup_loss_by_source
-    q["mix_weights_sources"] = _q_mix_weights
-    q["materialize_mix_docs"] = _q_materialize_mix
-    q["select_token_budget_docs"] = _q_select_token_budget
-    q["session_windows"] = _q_session_windows
-    q["error_events"] = _q_error_events
-    q["asof_prior_click"] = _q_asof_prior_click
-    q["time_bucket_events"] = _q_time_bucket
-    q["salted_join_segments"] = _q_salted_join_segments
-    q["pricing_summary"] = _q_pricing_summary
-    q["shipping_priority"] = _q_shipping_priority
-    q["local_supplier_volume"] = _q_local_supplier_volume
-    q["top_customers"] = _q_top_customers
-    q["region_customers"] = _q_region_customers
-    q["customers_with_orders"] = _q_customers_with_orders
-    q["customers_no_orders"] = _q_customers_no_orders
-    q["rollup_orders"] = _q_rollup_orders
-    q["cube_events"] = _q_cube_events
-    q["grouping_sets_orders"] = _q_grouping_sets
-    q["nation_presence"] = _q_nation_presence
-    q["intersect_users"] = _q_intersect_users
-    q["pivot_event_counts"] = _q_pivot_event_counts
-    q["window_functions"] = _q_window_functions
-    q["top_events_per_user"] = _q_top_events_per_user
+    q["streaming_late_alert"] = pipeline_r13._q_late_data_alert
+    q["centroid_assign_join"] = pipeline_r13._q_centroid_assign_join
+    q["topic_share_drift"] = pipeline_r13._q_topic_share_drift
+    q["streaming_lateness_profile"] = pipeline_r13._q_lateness_profile
+    q["streaming_topic_drift"] = pipeline_r13._q_topic_drift_monitor
+    q["quantized_assign_agreement"] = (
+        pipeline_r13._q_quantized_assign_agreement
+    )
+    q["parts_supplier_count"] = tpch._q_parts_supplier_count
+    q["small_qty_revenue"] = tpch._q_small_qty_revenue
+    q["large_volume_orders"] = tpch._q_large_volume_orders
+    q["discount_band_revenue"] = tpch._q_discount_band_revenue
+    q["sales_opportunity"] = tpch._q_sales_opportunity
+    q["cheapest_part_per_type"] = tpch._q_cheapest_part_per_type
+    q["segment_dedup_docs"] = lifecycle._q_segment_dedup
+    q["ngram_novelty_docs"] = lifecycle._q_ngram_novelty
+    q["classifier_scores"] = lifecycle._q_classifier_scores
+    q["profile_docs"] = lifecycle._q_profile_docs
+    q["corpus_diff_docs"] = lifecycle._q_corpus_diff
+    q["epoch_shuffle_docs"] = lifecycle._q_epoch_shuffle
+    q["nfkc_normalize_docs"] = curation._q_nfkc_normalize
+    q["url_domain_rollup"] = curation._q_url_domain_rollup
+    q["token_window_dedup_docs"] = curation._q_token_window_dedup
+    q["tokenizer_fertility_sources"] = curation._q_tokenizer_fertility
+    q["top_repeated_substrings"] = curation._q_top_repeated_substrings
+    q["syndication_matrix"] = curation._q_syndication_matrix
+    q["zipf_slope_sources"] = curation._q_zipf_slope
+    q["lang_confusion_docs"] = curation._q_lang_confusion
+    q["dedup_loss_by_source"] = curation._q_dedup_loss_by_source
+    q["mix_weights_sources"] = lifecycle._q_mix_weights
+    q["materialize_mix_docs"] = lifecycle._q_materialize_mix
+    q["select_token_budget_docs"] = lifecycle._q_select_token_budget
+    q["session_windows"] = analytics._q_session_windows
+    q["error_events"] = relational._q_error_events
+    q["asof_prior_click"] = relational._q_asof_prior_click
+    q["time_bucket_events"] = relational._q_time_bucket
+    q["salted_join_segments"] = analytics._q_salted_join_segments
+    q["pricing_summary"] = relational._q_pricing_summary
+    q["shipping_priority"] = relational._q_shipping_priority
+    q["local_supplier_volume"] = relational._q_local_supplier_volume
+    q["top_customers"] = relational._q_top_customers
+    q["region_customers"] = relational._q_region_customers
+    q["customers_with_orders"] = relational._q_customers_with_orders
+    q["customers_no_orders"] = relational._q_customers_no_orders
+    q["rollup_orders"] = relational._q_rollup_orders
+    q["cube_events"] = relational._q_cube_events
+    q["grouping_sets_orders"] = relational._q_grouping_sets
+    q["nation_presence"] = relational._q_nation_presence
+    q["intersect_users"] = analytics._q_intersect_users
+    q["pivot_event_counts"] = analytics._q_pivot_event_counts
+    q["window_functions"] = analytics._q_window_functions
+    q["top_events_per_user"] = relational._q_top_events_per_user
     # ---- entries below are past the driver's 50-entry window ----
     # --- planned r15 window: round-14 additions land HERE (never-
     # anchored; backlog precedence over anchored entries), then the r09
     # remainder, then the r10-anchored cohort head as tail-fill (pushed
     # out as r14 additions land) ---
-    q["centroid_assign_two_level"] = _q_centroid_assign_two_level
-    q["paragraph_provenance_docs"] = _q_paragraph_provenance
-    q["two_level_probe_sweep"] = _q_two_level_probe_sweep
-    q["quantizer_roundtrip"] = _q_quantizer_roundtrip
-    q["monthly_orders"] = _q_monthly_orders
-    q["distinct_status"] = _q_distinct_status
-    q["approx_distinct_ok"] = _q_approx_distinct_ok
-    q["hash_sample_docs"] = _q_hash_sample
-    q["stratified_sample_orders"] = _q_stratified_sample
-    q["train_eval_split"] = _q_train_eval_split
-    q["csv_roundtrip"] = _q_csv_roundtrip
-    q["json_roundtrip"] = _q_json_roundtrip
-    q["orc_roundtrip"] = _q_orc_roundtrip
-    q["csv_inference"] = _q_csv_inference
-    q["range_join_tiers"] = _q_range_join_tiers
-    q["salted_event_counts"] = _q_salted_event_counts
-    q["weighted_sample_docs"] = _q_weighted_sample
-    q["pack_sequences"] = _q_pack_sequences
-    q["ewma_user_values"] = _q_ewma_user_values
-    q["repeated_ngram_coverage"] = _q_repeated_ngram_coverage
+    q["centroid_assign_two_level"] = pipeline_r14._q_centroid_assign_two_level
+    q["paragraph_provenance_docs"] = pipeline_r14._q_paragraph_provenance
+    q["two_level_probe_sweep"] = pipeline_r14._q_two_level_probe_sweep
+    q["quantizer_roundtrip"] = pipeline_r14._q_quantizer_roundtrip
+    q["monthly_orders"] = relational._q_monthly_orders
+    q["distinct_status"] = relational._q_distinct_status
+    q["approx_distinct_ok"] = analytics._q_approx_distinct_ok
+    q["hash_sample_docs"] = relational._q_hash_sample
+    q["stratified_sample_orders"] = relational._q_stratified_sample
+    q["train_eval_split"] = relational._q_train_eval_split
+    q["csv_roundtrip"] = extensions._q_csv_roundtrip
+    q["json_roundtrip"] = extensions._q_json_roundtrip
+    q["orc_roundtrip"] = extensions._q_orc_roundtrip
+    q["csv_inference"] = extensions._q_csv_inference
+    q["range_join_tiers"] = extensions._q_range_join_tiers
+    q["salted_event_counts"] = analytics._q_salted_event_counts
+    q["weighted_sample_docs"] = analytics._q_weighted_sample
+    q["pack_sequences"] = analytics._q_pack_sequences
+    q["ewma_user_values"] = analytics._q_ewma_user_values
+    q["repeated_ngram_coverage"] = analytics._q_repeated_ngram_coverage
     # --- r10-anchored cohort (minus kmeans_inertia_ok, pinned into
     # the r13 window) and the r11-anchored cohort ---
-    q["pii_density_sources"] = _q_pii_density
-    q["lm_kl_sources"] = _q_lm_kl
-    q["retrieval_recall_panel"] = _q_retrieval_recall
-    q["dsir_sample_docs"] = _q_dsir_sample
-    q["paragraph_minhash_pairs"] = _q_paragraph_minhash
-    q["recency_weights_events"] = _q_recency_weights
-    q["lsh_s_curve_contract"] = _q_lsh_s_curve
-    q["lm_kl_snapshots"] = _q_lm_kl_snapshots
-    q["infer_lineitem"] = _infer_query("lineitem")
-    q["infer_orders"] = _infer_query("orders")
-    q["infer_events"] = _infer_query("events")
-    q["infer_documents"] = _infer_query("documents")
-    q["infer_customer"] = _infer_query("customer")
-    q["infer_embeddings"] = _infer_query("embeddings")
-    q["infer_part"] = _infer_query("part")
-    q["infer_supplier"] = _infer_query("supplier")
-    q["infer_nation"] = _infer_query("nation")
-    q["infer_region"] = _infer_query("region")
-    q["infer_embeddings_native"] = _q_infer_embeddings_native
-    q["schema_diff"] = _q_schema_diff
-    q["column_ddl"] = _q_column_ddl
-    q["ddl_strings"] = _q_ddl_strings
-    q["catalog_checks"] = _q_catalog_checks
-    q["column_list_lineitem"] = _q_column_list
-    q["simhash_md5_near_dup"] = _q_simhash_md5
-    q["simhash_pigeonhole_check"] = _q_simhash_pigeonhole_check
-    q["dedup_exact"] = _q_hash_dedup
-    q["ngram_jaccard_dups"] = _q_ngram_jaccard
-    q["dedup_clusters"] = _q_dedup_clusters
-    q["contamination_check"] = _q_contamination
-    q["incremental_dedup"] = _q_incremental_dedup
-    q["simhash_determinism"] = _q_simhash_determinism
-    q["embedding_topk"] = _q_embedding_topk
-    q["ann_lsh_topk"] = _q_ann_lsh
-    q["ann_recall_ok"] = _q_ann_recall_ok
-    q["ivf_topk"] = _q_ivf_topk
-    q["embedding_label_neardup"] = _q_label_neardup
-    q["embedding_dim_stats"] = _q_embedding_dim_stats
-    q["text_stats"] = _q_text_stats
-    q["token_count"] = _q_token_count
-    q["lang_id"] = _q_lang_id
-    q["quality_score"] = _q_quality
-    q["heavy_hitters_sketch"] = _q_heavy_hitters
-    q["canonical_docs"] = _q_canonical_docs
-    q["leakage_safe_split"] = _q_leakage_safe_split
-    q["lsh_recall_panel"] = _q_lsh_recall
-    q["contamination_snapshot_diff"] = _q_contamination_diff
-    q["quality_drift_sources"] = _q_quality_drift
-    q["domain_cap_psl_audit"] = _q_domain_cap_psl_audit
-    q["dedup_cluster_stats"] = _q_dedup_cluster_stats
-    q["redaction_audit_sources"] = _q_redaction_audit
-    q["embedding_norm_drift"] = _q_embedding_norm_drift
-    q["minhash_band_occupancy"] = _q_band_occupancy
-    q["lsh_empirical_detection"] = _q_lsh_empirical
-    q["lang_mix_drift"] = _q_lang_mix_drift
-    q["quantized_recall_panel"] = _q_quantized_recall
-    q["chunk_reconstruction_check"] = _q_chunk_reconstruction
-    q["sample_bias_audit"] = _q_sample_bias_audit
-    q["streaming_domain_cap"] = _q_streaming_domain_cap
-    q["dedup_threshold_sweep"] = _q_dedup_threshold_sweep
-    q["length_drift_sources"] = _q_length_drift
-    q["embedding_dim_drift"] = _q_embedding_dim_drift
-    q["packing_length_sweep"] = _q_packing_length_sweep
-    q["fingerprint_docs"] = _q_fingerprint
-    q["top_terms"] = _q_top_terms
-    q["clean_text"] = _q_clean_text
-    q["redact_pii"] = _q_redact_pii
-    q["repetition_ratio"] = _q_repetition_ratio
-    q["gopher_filter"] = _q_gopher_filter
-    q["unigram_logprob"] = _q_unigram_logprob
-    q["vocab_coverage"] = _q_vocab_coverage
-    q["tfidf_pairs"] = _q_tfidf_pairs
-    q["chunk_documents"] = _q_chunk_documents
-    q["corpus_mix"] = _q_corpus_mix
-    q["multimodal_bytes"] = _q_multimodal_bytes
-    q["media_features"] = _q_media_features
-    q["frame_sample"] = _q_frame_sample
-    q["streaming_user_stats"] = _q_streaming_user_stats
-    q["streaming_dedup"] = _q_streaming_dedup
-    q["streaming_enriched_counts"] = _q_streaming_enriched_counts
-    q["moving_avg_orders"] = _q_moving_avg_orders
-    q["value_percentiles"] = _q_value_percentiles
-    q["json_props_agg"] = _q_json_props
-    q["except_custkeys"] = _q_except_custkeys
-    q["bucketed_roundtrip"] = _q_bucketed_roundtrip
-    q["partitioned_roundtrip"] = _q_partitioned_roundtrip
-    q["user_retention_cohorts"] = _q_user_retention
-    q["event_funnel"] = _q_event_funnel
-    q["value_histogram"] = _q_value_histogram
-    q["zscore_outliers"] = _q_zscore_outliers
-    q["bigram_pmi"] = _q_bigram_pmi
-    q["merge_upsert_orders"] = _q_merge_upsert
-    q["schema_evolution_roundtrip"] = _q_schema_evolution_roundtrip
-    q["streaming_novelty_monitor"] = _q_streaming_novelty
-    q["embedding_quantize"] = _q_quantize_embeddings
+    q["pii_density_sources"] = pipeline_r9._q_pii_density
+    q["lm_kl_sources"] = pipeline_r9._q_lm_kl
+    q["retrieval_recall_panel"] = pipeline_r9._q_retrieval_recall
+    q["dsir_sample_docs"] = pipeline_r9._q_dsir_sample
+    q["paragraph_minhash_pairs"] = pipeline_r9._q_paragraph_minhash
+    q["recency_weights_events"] = pipeline_r9._q_recency_weights
+    q["lsh_s_curve_contract"] = pipeline_r9._q_lsh_s_curve
+    q["lm_kl_snapshots"] = pipeline_r9._q_lm_kl_snapshots
+    q["infer_lineitem"] = inference._infer_query("lineitem")
+    q["infer_orders"] = inference._infer_query("orders")
+    q["infer_events"] = inference._infer_query("events")
+    q["infer_documents"] = inference._infer_query("documents")
+    q["infer_customer"] = inference._infer_query("customer")
+    q["infer_embeddings"] = inference._infer_query("embeddings")
+    q["infer_part"] = inference._infer_query("part")
+    q["infer_supplier"] = inference._infer_query("supplier")
+    q["infer_nation"] = inference._infer_query("nation")
+    q["infer_region"] = inference._infer_query("region")
+    q["infer_embeddings_native"] = extensions._q_infer_embeddings_native
+    q["schema_diff"] = schema_ddl._q_schema_diff
+    q["column_ddl"] = schema_ddl._q_column_ddl
+    q["ddl_strings"] = analytics._q_ddl_strings
+    q["catalog_checks"] = analytics._q_catalog_checks
+    q["column_list_lineitem"] = schema_ddl._q_column_list
+    q["simhash_md5_near_dup"] = analytics._q_simhash_md5
+    q["simhash_pigeonhole_check"] = analytics._q_simhash_pigeonhole_check
+    q["dedup_exact"] = extensions._q_hash_dedup
+    q["ngram_jaccard_dups"] = extensions._q_ngram_jaccard
+    q["dedup_clusters"] = analytics._q_dedup_clusters
+    q["contamination_check"] = analytics._q_contamination
+    q["incremental_dedup"] = analytics._q_incremental_dedup
+    q["simhash_determinism"] = analytics._q_simhash_determinism
+    q["embedding_topk"] = extensions._q_embedding_topk
+    q["ann_lsh_topk"] = analytics._q_ann_lsh
+    q["ann_recall_ok"] = analytics._q_ann_recall_ok
+    q["ivf_topk"] = analytics._q_ivf_topk
+    q["embedding_label_neardup"] = extensions._q_label_neardup
+    q["embedding_dim_stats"] = analytics._q_embedding_dim_stats
+    q["text_stats"] = extensions._q_text_stats
+    q["token_count"] = extensions._q_token_count
+    q["lang_id"] = extensions._q_lang_id
+    q["quality_score"] = extensions._q_quality
+    q["heavy_hitters_sketch"] = curation._q_heavy_hitters
+    q["canonical_docs"] = curation._q_canonical_docs
+    q["leakage_safe_split"] = curation._q_leakage_safe_split
+    q["lsh_recall_panel"] = pipeline_r9._q_lsh_recall
+    q["contamination_snapshot_diff"] = analytics._q_contamination_diff
+    q["quality_drift_sources"] = extensions._q_quality_drift
+    q["domain_cap_psl_audit"] = curation._q_domain_cap_psl_audit
+    q["dedup_cluster_stats"] = analytics._q_dedup_cluster_stats
+    q["redaction_audit_sources"] = pipeline_r9._q_redaction_audit
+    q["embedding_norm_drift"] = extensions._q_embedding_norm_drift
+    q["minhash_band_occupancy"] = curation._q_band_occupancy
+    q["lsh_empirical_detection"] = pipeline_r9._q_lsh_empirical
+    q["lang_mix_drift"] = pipeline_r9._q_lang_mix_drift
+    q["quantized_recall_panel"] = pipeline_r9._q_quantized_recall
+    q["chunk_reconstruction_check"] = analytics._q_chunk_reconstruction
+    q["sample_bias_audit"] = analytics._q_sample_bias_audit
+    q["streaming_domain_cap"] = analytics._q_streaming_domain_cap
+    q["dedup_threshold_sweep"] = analytics._q_dedup_threshold_sweep
+    q["length_drift_sources"] = extensions._q_length_drift
+    q["embedding_dim_drift"] = extensions._q_embedding_dim_drift
+    q["packing_length_sweep"] = analytics._q_packing_length_sweep
+    q["fingerprint_docs"] = extensions._q_fingerprint
+    q["top_terms"] = extensions._q_top_terms
+    q["clean_text"] = analytics._q_clean_text
+    q["redact_pii"] = analytics._q_redact_pii
+    q["repetition_ratio"] = analytics._q_repetition_ratio
+    q["gopher_filter"] = analytics._q_gopher_filter
+    q["unigram_logprob"] = analytics._q_unigram_logprob
+    q["vocab_coverage"] = analytics._q_vocab_coverage
+    q["tfidf_pairs"] = analytics._q_tfidf_pairs
+    q["chunk_documents"] = analytics._q_chunk_documents
+    q["corpus_mix"] = analytics._q_corpus_mix
+    q["multimodal_bytes"] = extensions._q_multimodal_bytes
+    q["media_features"] = analytics._q_media_features
+    q["frame_sample"] = extensions._q_frame_sample
+    q["streaming_user_stats"] = analytics._q_streaming_user_stats
+    q["streaming_dedup"] = analytics._q_streaming_dedup
+    q["streaming_enriched_counts"] = analytics._q_streaming_enriched_counts
+    q["moving_avg_orders"] = analytics._q_moving_avg_orders
+    q["value_percentiles"] = analytics._q_value_percentiles
+    q["json_props_agg"] = relational._q_json_props
+    q["except_custkeys"] = analytics._q_except_custkeys
+    q["bucketed_roundtrip"] = extensions._q_bucketed_roundtrip
+    q["partitioned_roundtrip"] = extensions._q_partitioned_roundtrip
+    q["user_retention_cohorts"] = analytics._q_user_retention
+    q["event_funnel"] = analytics._q_event_funnel
+    q["value_histogram"] = analytics._q_value_histogram
+    q["zscore_outliers"] = analytics._q_zscore_outliers
+    q["bigram_pmi"] = analytics._q_bigram_pmi
+    q["merge_upsert_orders"] = analytics._q_merge_upsert
+    q["schema_evolution_roundtrip"] = analytics._q_schema_evolution_roundtrip
+    q["streaming_novelty_monitor"] = pipeline_r9._q_streaming_novelty
+    q["embedding_quantize"] = analytics._q_quantize_embeddings
     # --- r12-anchored cohort (the round-12 driver window minus the three
     # centroid-family pins; freshest, so they queue last for rotation) ---
-    q["dedup_rate_drift_sources"] = _q_dedup_rate_drift
-    q["curriculum_phases"] = _q_curriculum_phases
-    q["contamination_ngram_sweep"] = _q_contamination_sweep
-    q["rerank_cross_encoder"] = _q_rerank
-    q["dup_spans"] = _q_dup_spans
-    q["ivf_nprobe_sweep"] = _q_ivf_nprobe_sweep
-    q["lsh_config_sweep"] = _q_lsh_config_sweep
-    q["skew_profile_events"] = _q_skew_profile
-    q["streaming_drift_monitor"] = _q_streaming_drift
-    q["merge_insert_only_orders"] = _q_merge_insert_only
-    q["range_partitioned_roundtrip"] = _q_range_partitioned_roundtrip
-    q["media_resize"] = _q_media_resize
-    q["approx_percentile_ok"] = _q_approx_percentile_ok
-    q["group_quantile_filter"] = _q_group_quantile_filter
-    q["hll_sharded_uniques"] = _q_hll_sharded_uniques
-    q["zorder_roundtrip"] = _q_zorder_roundtrip
-    q["streaming_attribution"] = _q_streaming_attribution
-    q["tombstone_delete"] = _q_tombstone_delete
-    q["compact_roundtrip"] = _q_compact_roundtrip
-    q["binary_hamming_topk"] = _q_binary_hamming_topk
-    q["pipeline_end_to_end"] = _q_pipeline_end_to_end
-    q["winsorize_events"] = _q_winsorize_events
-    q["streaming_sessions"] = _q_streaming_sessions
-    q["domain_cap_docs"] = _q_domain_cap_docs
-    q["burst_collapse_events"] = _q_burst_collapse_events
-    q["scd2_order_status"] = _q_scd2_order_status
-    q["zone_map_events"] = _q_zone_map_events
-    q["psi_drift_events"] = _q_psi_drift
-    q["csv_quarantine"] = _q_csv_quarantine
-    q["key_suggestions"] = _q_key_suggestions
-    q["key_suggestions_approx_ok"] = _q_key_suggestions_approx_ok
-    q["fk_profile"] = _q_fk_profile
-    q["streaming_psi_monitor"] = _q_streaming_psi_monitor
-    q["equidepth_histogram_events"] = _q_equidepth_histogram
-    q["remove_boilerplate_docs"] = _q_remove_boilerplate
-    q["kfold_split_docs"] = _q_kfold_split
-    q["time_embargo_split_events"] = _q_time_embargo_split
-    q["ks_drift_events"] = _q_ks_drift
-    q["interval_overlap_sessions"] = _q_interval_overlap
-    q["jl_projection"] = _q_jl_projection
-    q["length_buckets_docs"] = _q_length_buckets
-    q["containment_docs"] = _q_containment
-    q["bigram_logprob_docs"] = _q_bigram_logprob
-    q["rank_transform_events"] = _q_rank_transform
-    q["minhash_dup_pairs"] = _q_minhash_pairs
-    q["minhash_md5_dup_pairs"] = _q_minhash_md5
-    q["incremental_near_dedup"] = _q_incremental_near_dedup
+    q["dedup_rate_drift_sources"] = pipeline_r11._q_dedup_rate_drift
+    q["curriculum_phases"] = pipeline_r11._q_curriculum_phases
+    q["contamination_ngram_sweep"] = pipeline_r11._q_contamination_sweep
+    q["rerank_cross_encoder"] = pipeline_r11._q_rerank
+    q["dup_spans"] = pipeline_r11._q_dup_spans
+    q["ivf_nprobe_sweep"] = pipeline_r11._q_ivf_nprobe_sweep
+    q["lsh_config_sweep"] = pipeline_r11._q_lsh_config_sweep
+    q["skew_profile_events"] = analytics._q_skew_profile
+    q["streaming_drift_monitor"] = analytics._q_streaming_drift
+    q["merge_insert_only_orders"] = analytics._q_merge_insert_only
+    q["range_partitioned_roundtrip"] = analytics._q_range_partitioned_roundtrip
+    q["media_resize"] = analytics._q_media_resize
+    q["approx_percentile_ok"] = analytics._q_approx_percentile_ok
+    q["group_quantile_filter"] = curation._q_group_quantile_filter
+    q["hll_sharded_uniques"] = curation._q_hll_sharded_uniques
+    q["zorder_roundtrip"] = curation._q_zorder_roundtrip
+    q["streaming_attribution"] = curation._q_streaming_attribution
+    q["tombstone_delete"] = curation._q_tombstone_delete
+    q["compact_roundtrip"] = curation._q_compact_roundtrip
+    q["binary_hamming_topk"] = curation._q_binary_hamming_topk
+    q["pipeline_end_to_end"] = curation._q_pipeline_end_to_end
+    q["winsorize_events"] = curation._q_winsorize_events
+    q["streaming_sessions"] = curation._q_streaming_sessions
+    q["domain_cap_docs"] = curation._q_domain_cap_docs
+    q["burst_collapse_events"] = curation._q_burst_collapse_events
+    q["scd2_order_status"] = curation._q_scd2_order_status
+    q["zone_map_events"] = curation._q_zone_map_events
+    q["psi_drift_events"] = curation._q_psi_drift
+    q["csv_quarantine"] = curation._q_csv_quarantine
+    q["key_suggestions"] = curation._q_key_suggestions
+    q["key_suggestions_approx_ok"] = curation._q_key_suggestions_approx_ok
+    q["fk_profile"] = curation._q_fk_profile
+    q["streaming_psi_monitor"] = curation._q_streaming_psi_monitor
+    q["equidepth_histogram_events"] = curation._q_equidepth_histogram
+    q["remove_boilerplate_docs"] = curation._q_remove_boilerplate
+    q["kfold_split_docs"] = curation._q_kfold_split
+    q["time_embargo_split_events"] = curation._q_time_embargo_split
+    q["ks_drift_events"] = curation._q_ks_drift
+    q["interval_overlap_sessions"] = curation._q_interval_overlap
+    q["jl_projection"] = curation._q_jl_projection
+    q["length_buckets_docs"] = curation._q_length_buckets
+    q["containment_docs"] = curation._q_containment
+    q["bigram_logprob_docs"] = curation._q_bigram_logprob
+    q["rank_transform_events"] = curation._q_rank_transform
+    q["minhash_dup_pairs"] = analytics._q_minhash_pairs
+    q["minhash_md5_dup_pairs"] = analytics._q_minhash_md5
+    q["incremental_near_dedup"] = analytics._q_incremental_near_dedup
     # --- r13-anchored cohort (the round-13 driver window: the six
     # round-12 additions, the displaced r07 trio, the r08 head and the
     # five r13 centroid-path pins; freshest anchors, so they queue last
     # for rotation) ---
-    q["dedup_token_survivorship"] = _q_token_survivorship
-    q["quality_drift_approx_ok"] = _q_score_drift_approx_ok
-    q["streaming_late_audit"] = _q_late_data_audit
-    q["semantic_dedup_scaled"] = _q_semantic_dedup_scaled
-    q["dedup_provenance_docs"] = _q_dedup_provenance
-    q["mix_weights_post_dedup"] = _q_mix_weights_post_dedup
-    q["correlation_matrix_lineitem"] = _q_correlation_matrix
-    q["streaming_ks_monitor"] = _q_streaming_ks_monitor
-    q["dq_expectations_orders"] = _q_dq_expectations
-    q["calibration_bins_docs"] = _q_calibration_bins
-    q["binned_roc_docs"] = _q_binned_roc
-    q["transition_matrix_events"] = _q_transition_matrix
-    q["token_entropy_sources"] = _q_token_entropy
-    q["conversation_assembly_events"] = _q_conversation_assembly
-    q["jsonl_inference"] = _q_jsonl_inference
-    q["eval_sample_per_lang"] = _q_eval_sample_per_lang
-    q["bloom_incremental_dedup"] = _q_bloom_incremental_dedup
-    q["bm25_topk_docs"] = _q_bm25_topk
-    q["pagerank_event_types"] = _q_pagerank_event_types
-    q["labeler_kappa_docs"] = _q_labeler_kappa
-    q["rrf_hybrid_topk"] = _q_rrf_hybrid_topk
-    q["cdc_dedup_stats"] = _q_cdc_dedup_stats
-    q["waterfill_sources"] = _q_waterfill_sources
-    q["fim_transform_docs"] = _q_fim_transform
-    q["contrastive_negatives"] = _q_contrastive_negatives
-    q["span_corruption_docs"] = _q_span_corruption
-    q["quantile_normalize_docs"] = _q_quantile_normalize
-    q["cooccurrence_pmi_docs"] = _q_cooccurrence_pmi
-    q["filter_funnel_docs"] = _q_filter_funnel
-    q["gini_source_concentration"] = _q_gini_sources
-    q["fuzzy_match_customers"] = _q_fuzzy_match_customers
-    q["scd2_lookup_events"] = _q_scd2_lookup
-    q["mad_outliers_events"] = _q_mad_outliers
-    q["table_checksum_orders"] = _q_table_checksum
-    q["text_roundtrip"] = _q_text_roundtrip
-    q["sessionize_events"] = _q_sessionize
-    q["ewma_value_check"] = _q_ewma_value_check
-    q["streaming_window_counts"] = _q_streaming_window_counts
-    q["label_centroids"] = _q_label_centroids
-    q["order_priority_check"] = _q_order_priority_check
-    q["volume_shipping"] = _q_volume_shipping
-    q["product_profit"] = _q_product_profit
-    q["returned_items"] = _q_returned_items
-    q["promo_revenue"] = _q_promo_revenue
-    q["top_supplier"] = _q_top_supplier
-    q["semantic_dedup"] = _q_semantic_dedup
-    q["semantic_threshold_sweep"] = _q_semantic_tsweep
-    q["incremental_semantic_dedup"] = _q_incremental_semantic_dedup
-    q["topic_share_balance"] = _q_topic_share_balance
-    q["kmeans_inertia_ok"] = _q_kmeans_inertia_ok
+    q["dedup_token_survivorship"] = pipeline_r12._q_token_survivorship
+    q["quality_drift_approx_ok"] = pipeline_r12._q_score_drift_approx_ok
+    q["streaming_late_audit"] = pipeline_r12._q_late_data_audit
+    q["semantic_dedup_scaled"] = pipeline_r12._q_semantic_dedup_scaled
+    q["dedup_provenance_docs"] = pipeline_r12._q_dedup_provenance
+    q["mix_weights_post_dedup"] = pipeline_r12._q_mix_weights_post_dedup
+    q["correlation_matrix_lineitem"] = curation._q_correlation_matrix
+    q["streaming_ks_monitor"] = curation._q_streaming_ks_monitor
+    q["dq_expectations_orders"] = curation._q_dq_expectations
+    q["calibration_bins_docs"] = curation._q_calibration_bins
+    q["binned_roc_docs"] = curation._q_binned_roc
+    q["transition_matrix_events"] = curation._q_transition_matrix
+    q["token_entropy_sources"] = curation._q_token_entropy
+    q["conversation_assembly_events"] = curation._q_conversation_assembly
+    q["jsonl_inference"] = curation._q_jsonl_inference
+    q["eval_sample_per_lang"] = curation._q_eval_sample_per_lang
+    q["bloom_incremental_dedup"] = curation._q_bloom_incremental_dedup
+    q["bm25_topk_docs"] = curation._q_bm25_topk
+    q["pagerank_event_types"] = curation._q_pagerank_event_types
+    q["labeler_kappa_docs"] = curation._q_labeler_kappa
+    q["rrf_hybrid_topk"] = curation._q_rrf_hybrid_topk
+    q["cdc_dedup_stats"] = curation._q_cdc_dedup_stats
+    q["waterfill_sources"] = curation._q_waterfill_sources
+    q["fim_transform_docs"] = curation._q_fim_transform
+    q["contrastive_negatives"] = curation._q_contrastive_negatives
+    q["span_corruption_docs"] = curation._q_span_corruption
+    q["quantile_normalize_docs"] = curation._q_quantile_normalize
+    q["cooccurrence_pmi_docs"] = curation._q_cooccurrence_pmi
+    q["filter_funnel_docs"] = curation._q_filter_funnel
+    q["gini_source_concentration"] = curation._q_gini_sources
+    q["fuzzy_match_customers"] = curation._q_fuzzy_match_customers
+    q["scd2_lookup_events"] = curation._q_scd2_lookup
+    q["mad_outliers_events"] = curation._q_mad_outliers
+    q["table_checksum_orders"] = curation._q_table_checksum
+    q["text_roundtrip"] = curation._q_text_roundtrip
+    q["sessionize_events"] = relational._q_sessionize
+    q["ewma_value_check"] = analytics._q_ewma_value_check
+    q["streaming_window_counts"] = analytics._q_streaming_window_counts
+    q["label_centroids"] = analytics._q_label_centroids
+    q["order_priority_check"] = tpch._q_order_priority_check
+    q["volume_shipping"] = tpch._q_volume_shipping
+    q["product_profit"] = tpch._q_product_profit
+    q["returned_items"] = tpch._q_returned_items
+    q["promo_revenue"] = tpch._q_promo_revenue
+    q["top_supplier"] = tpch._q_top_supplier
+    q["semantic_dedup"] = curation._q_semantic_dedup
+    q["semantic_threshold_sweep"] = pipeline_r11._q_semantic_tsweep
+    q["incremental_semantic_dedup"] = curation._q_incremental_semantic_dedup
+    q["topic_share_balance"] = curation._q_topic_share_balance
+    q["kmeans_inertia_ok"] = analytics._q_kmeans_inertia_ok
     # --- rows-only terminal queries (no DuckDB oracle possible: xxhash64
     # signatures; driver scores them err:no_oracle, so they are permanently
     # window-ineligible -- semantics pinned by oracle-checked contract twins
     # simhash_md5_near_dup / simhash_pigeonhole_check / simhash_determinism) ---
-    q["simhash_signatures"] = _q_simhash_sigs
-    q["simhash_near_dup"] = _q_simhash_neardup
+    q["simhash_signatures"] = analytics._q_simhash_sigs
+    q["simhash_near_dup"] = analytics._q_simhash_neardup
     return q
 
 def oracle_sql() -> dict[str, str]:
@@ -1050,19 +440,19 @@ def oracle_sql() -> dict[str, str]:
       first (same convention as the Spark side).
     """
     o: dict[str, str] = {}
-    for t in _TABLE_KINDS:
-        o[f"infer_{t}"] = _infer_table_sql(t)
+    for t in inference._TABLE_KINDS:
+        o[f"infer_{t}"] = inference._infer_table_sql(t)
     o["column_list_lineitem"] = (
         "SELECT column_name AS field FROM (DESCRIBE lineitem)"
     )
-    o["schema_diff"] = _diff_oracle_sql()
-    o["column_ddl"] = _column_ddl_oracle_sql()
-    o["pricing_summary"] = _PRICING_SQL
-    o["top_customers"] = _TOP_CUSTOMERS_SQL
-    o["region_customers"] = _REGION_CUSTOMERS_SQL
-    o["error_events"] = _ERROR_EVENTS_SQL
-    o["top_events_per_user"] = _TOP_EVENTS_SQL
-    o["monthly_orders"] = _MONTHLY_ORDERS_SQL
+    o["schema_diff"] = schema_ddl._diff_oracle_sql()
+    o["column_ddl"] = schema_ddl._column_ddl_oracle_sql()
+    o["pricing_summary"] = relational._PRICING_SQL
+    o["top_customers"] = relational._TOP_CUSTOMERS_SQL
+    o["region_customers"] = relational._REGION_CUSTOMERS_SQL
+    o["error_events"] = relational._ERROR_EVENTS_SQL
+    o["top_events_per_user"] = relational._TOP_EVENTS_SQL
+    o["monthly_orders"] = relational._MONTHLY_ORDERS_SQL
     o["distinct_status"] = "SELECT DISTINCT o_orderstatus FROM orders"
     o["customers_no_orders"] = (
         "SELECT c_custkey FROM customer WHERE NOT EXISTS "
@@ -1072,258 +462,266 @@ def oracle_sql() -> dict[str, str]:
         "SELECT c_custkey FROM customer WHERE EXISTS "
         "(SELECT 1 FROM orders WHERE o_custkey = c_custkey)"
     )
-    o["rollup_orders"] = _ROLLUP_ORDERS_SQL
-    o["cube_events"] = _CUBE_EVENTS_SQL
+    o["rollup_orders"] = relational._ROLLUP_ORDERS_SQL
+    o["cube_events"] = relational._CUBE_EVENTS_SQL
     o["nation_presence"] = (
         "SELECT c_nationkey AS nationkey FROM customer "
         "UNION SELECT s_nationkey FROM supplier"
     )
-    o["sessionize_events"] = _SESSIONIZE_SQL
-    o["session_windows"] = _SESSION_WINDOWS_SQL
-    o["approx_distinct_ok"] = _approx_distinct_oracle_sql()
-    o["window_functions"] = _WINDOW_FUNCTIONS_SQL
-    o["shipping_priority"] = _SHIPPING_PRIORITY_SQL
-    o["local_supplier_volume"] = _LOCAL_SUPPLIER_SQL
-    o["grouping_sets_orders"] = _GROUPING_SETS_SQL
-    o["asof_prior_click"] = _ASOF_PRIOR_CLICK_SQL
-    o["time_bucket_events"] = _TIME_BUCKET_SQL
-    o["json_props_agg"] = _JSON_PROPS_SQL
-    o["hash_sample_docs"] = _hash_sample_oracle_sql()
-    o["stratified_sample_orders"] = _stratified_sample_oracle_sql()
-    o["train_eval_split"] = _train_eval_oracle_sql()
-    o["infer_embeddings_native"] = _INFER_NATIVE_SQL
+    o["sessionize_events"] = relational._SESSIONIZE_SQL
+    o["session_windows"] = analytics._SESSION_WINDOWS_SQL
+    o["approx_distinct_ok"] = analytics._approx_distinct_oracle_sql()
+    o["window_functions"] = analytics._WINDOW_FUNCTIONS_SQL
+    o["shipping_priority"] = relational._SHIPPING_PRIORITY_SQL
+    o["local_supplier_volume"] = relational._LOCAL_SUPPLIER_SQL
+    o["grouping_sets_orders"] = relational._GROUPING_SETS_SQL
+    o["asof_prior_click"] = relational._ASOF_PRIOR_CLICK_SQL
+    o["time_bucket_events"] = relational._TIME_BUCKET_SQL
+    o["json_props_agg"] = relational._JSON_PROPS_SQL
+    o["hash_sample_docs"] = relational._hash_sample_oracle_sql()
+    o["stratified_sample_orders"] = relational._stratified_sample_oracle_sql()
+    o["train_eval_split"] = relational._train_eval_oracle_sql()
+    o["infer_embeddings_native"] = extensions._INFER_NATIVE_SQL
     o["csv_roundtrip"] = "SELECT r_regionkey, r_name FROM region"
     o["json_roundtrip"] = "SELECT r_regionkey, r_name FROM region"
-    o["bucketed_roundtrip"] = _BUCKETED_ROUNDTRIP_SQL
-    o["partitioned_roundtrip"] = _PARTITIONED_ROUNDTRIP_SQL
-    o["range_join_tiers"] = _range_join_oracle_sql()
+    o["bucketed_roundtrip"] = extensions._BUCKETED_ROUNDTRIP_SQL
+    o["partitioned_roundtrip"] = extensions._PARTITIONED_ROUNDTRIP_SQL
+    o["range_join_tiers"] = extensions._range_join_oracle_sql()
     o["orc_roundtrip"] = "SELECT r_regionkey, r_name FROM region"
-    o["csv_inference"] = _infer_table_sql("region")
-    o["salted_event_counts"] = _SALTED_COUNTS_SQL
-    o["catalog_checks"] = _CATALOG_CHECKS_SQL
-    o["ddl_strings"] = _ddl_strings_oracle_sql()
+    o["csv_inference"] = inference._infer_table_sql("region")
+    o["salted_event_counts"] = analytics._SALTED_COUNTS_SQL
+    o["catalog_checks"] = analytics._CATALOG_CHECKS_SQL
+    o["ddl_strings"] = analytics._ddl_strings_oracle_sql()
     o["intersect_users"] = (
         "SELECT user_id AS id FROM events INTERSECT SELECT o_custkey FROM orders"
     )
     o["except_custkeys"] = (
         "SELECT o_custkey AS id FROM orders EXCEPT SELECT user_id FROM events"
     )
-    o["pivot_event_counts"] = _pivot_oracle_sql()
-    o["moving_avg_orders"] = _MOVING_AVG_SQL
-    o["value_percentiles"] = _PERCENTILES_SQL
-    o["embedding_dim_stats"] = _EMBEDDING_DIM_STATS_SQL
-    o["text_stats"] = _TEXT_STATS_SQL
-    o["token_count"] = _TOKEN_COUNT_SQL
-    o["lang_id"] = _lang_id_oracle_sql()
-    o["quality_score"] = _quality_oracle_sql()
-    o["fingerprint_docs"] = _FINGERPRINT_SQL
-    o["clean_text"] = _clean_text_oracle_sql()
-    o["redact_pii"] = _redact_pii_oracle_sql()
-    o["repetition_ratio"] = _REPETITION_SQL
-    o["contamination_check"] = _contamination_oracle_sql()
-    o["dedup_exact"] = _HASH_DEDUP_SQL
-    o["ngram_jaccard_dups"] = _NGRAM_JACCARD_SQL
-    o["multimodal_bytes"] = _MULTIMODAL_BYTES_SQL
-    o["embedding_topk"] = _EMBEDDING_TOPK_SQL
-    o["top_terms"] = _TOP_TERMS_SQL
-    o["frame_sample"] = _FRAME_SAMPLE_SQL
-    o["embedding_label_neardup"] = _LABEL_NEARDUP_SQL
-    o["media_features"] = _MEDIA_FEATURES_SQL
-    o["ann_recall_ok"] = _ANN_RECALL_SQL
-    o["ann_lsh_topk"] = _ann_lsh_oracle_sql()
-    o["ivf_topk"] = _IVF_TOPK_SQL
-    o["minhash_md5_dup_pairs"] = _MINHASH_MD5_SQL
-    o["simhash_md5_near_dup"] = _SIMHASH_MD5_SQL
-    o["ewma_value_check"] = _EWMA_VALUE_SQL
-    o["simhash_determinism"] = _SIMHASH_DETERMINISM_SQL
-    o["dedup_clusters"] = _DEDUP_CLUSTERS_SQL
-    o["streaming_dedup"] = _STREAMING_DEDUP_SQL
-    o["streaming_enriched_counts"] = _STREAM_ENRICHED_SQL
-    o["chunk_documents"] = _CHUNK_DOCS_SQL
-    o["label_centroids"] = _LABEL_CENTROIDS_SQL
-    o["gopher_filter"] = _gopher_oracle_sql()
-    o["unigram_logprob"] = _UNIGRAM_LOGPROB_SQL
-    o["repeated_ngram_coverage"] = _REPEATED_NGRAM_SQL
-    o["vocab_coverage"] = _VOCAB_COVERAGE_SQL
-    o["tfidf_pairs"] = _TFIDF_PAIRS_SQL
-    o["embedding_quantize"] = _QUANTIZE_SQL
-    o["kmeans_inertia_ok"] = _KMEANS_INERTIA_SQL
-    o["weighted_sample_docs"] = _WEIGHTED_SAMPLE_SQL
-    o["pack_sequences"] = _PACK_SEQUENCES_SQL
-    o["corpus_mix"] = _CORPUS_MIX_SQL
-    o["incremental_dedup"] = _INCREMENTAL_DEDUP_SQL
-    o["incremental_near_dedup"] = _INCREMENTAL_NEAR_DEDUP_SQL
-    o["salted_join_segments"] = _SALTED_JOIN_SQL
-    o["leakage_safe_split"] = _leakage_safe_split_oracle_sql()
-    o["canonical_docs"] = _CANONICAL_DOCS_SQL
-    o["group_quantile_filter"] = _GROUP_QUANTILE_FILTER_SQL
-    o["hll_sharded_uniques"] = _HLL_SHARDED_UNIQUES_SQL
-    o["zorder_roundtrip"] = _ZORDER_ROUNDTRIP_SQL
-    o["streaming_attribution"] = _STREAMING_ATTRIBUTION_SQL
-    o["tombstone_delete"] = _tombstone_delete_oracle_sql()
-    o["compact_roundtrip"] = _COMPACT_ROUNDTRIP_SQL
-    o["binary_hamming_topk"] = _BINARY_HAMMING_SQL
-    o["pipeline_end_to_end"] = _pipeline_end_to_end_oracle_sql()
-    o["winsorize_events"] = _WINSORIZE_EVENTS_SQL
-    o["streaming_sessions"] = _STREAMING_SESSIONS_SQL
-    o["domain_cap_docs"] = _DOMAIN_CAP_SQL
-    o["burst_collapse_events"] = _BURST_COLLAPSE_SQL
-    o["scd2_order_status"] = _SCD2_SQL
-    o["zone_map_events"] = _ZONE_MAP_SQL
-    o["fuzzy_match_customers"] = _FUZZY_MATCH_SQL
-    o["semantic_dedup"] = _SEMANTIC_DEDUP_SQL
-    o["psi_drift_events"] = _PSI_DRIFT_SQL
-    o["csv_quarantine"] = _CSV_QUARANTINE_SQL
-    o["scd2_lookup_events"] = _SCD2_LOOKUP_SQL
-    o["key_suggestions"] = _KEY_SUGGESTIONS_SQL
-    o["fk_profile"] = _FK_PROFILE_SQL
-    o["streaming_psi_monitor"] = _STREAMING_PSI_SQL
-    o["mad_outliers_events"] = _MAD_OUTLIERS_SQL
-    o["equidepth_histogram_events"] = _EQUIDEPTH_SQL
-    o["incremental_semantic_dedup"] = _INCR_SEMANTIC_SQL
-    o["remove_boilerplate_docs"] = _REMOVE_BOILERPLATE_SQL
-    o["kfold_split_docs"] = _KFOLD_SPLIT_SQL
-    o["time_embargo_split_events"] = _TIME_EMBARGO_SQL
-    o["ks_drift_events"] = _KS_DRIFT_SQL
-    o["interval_overlap_sessions"] = _INTERVAL_OVERLAP_SQL
-    o["jl_projection"] = _jl_oracle_sql()
-    o["length_buckets_docs"] = _LENGTH_BUCKETS_SQL
-    o["containment_docs"] = _CONTAINMENT_SQL
-    o["bigram_logprob_docs"] = _BIGRAM_LOGPROB_SQL
-    o["table_checksum_orders"] = _TABLE_CHECKSUM_SQL
-    o["rank_transform_events"] = _RANK_TRANSFORM_SQL
-    o["correlation_matrix_lineitem"] = _CORRELATION_MATRIX_SQL
-    o["streaming_ks_monitor"] = _STREAMING_KS_SQL
-    o["calibration_bins_docs"] = _CALIBRATION_BINS_SQL
-    o["binned_roc_docs"] = _BINNED_ROC_SQL
-    o["transition_matrix_events"] = _TRANSITION_MATRIX_SQL
-    o["token_entropy_sources"] = _TOKEN_ENTROPY_SQL
-    o["conversation_assembly_events"] = _CONVERSATION_ASSEMBLY_SQL
-    o["text_roundtrip"] = _TEXT_ROUNDTRIP_SQL
-    o["nfkc_normalize_docs"] = _NFKC_NORMALIZE_SQL
-    o["pii_density_sources"] = _PII_DENSITY_SQL
-    o["lm_kl_sources"] = _LM_KL_SQL
-    o["retrieval_recall_panel"] = _RETRIEVAL_RECALL_SQL
-    o["lsh_recall_panel"] = _lsh_recall_oracle_sql()
-    o["contamination_snapshot_diff"] = _contamination_diff_oracle_sql()
-    o["quality_drift_sources"] = _quality_drift_oracle_sql()
-    o["domain_cap_psl_audit"] = _domain_cap_psl_audit_oracle_sql()
-    o["dedup_cluster_stats"] = _DEDUP_CLUSTER_STATS_SQL
-    o["redaction_audit_sources"] = _REDACTION_AUDIT_SQL
-    o["embedding_norm_drift"] = _norm_drift_oracle_sql()
-    o["minhash_band_occupancy"] = _band_occupancy_oracle_sql()
-    o["lsh_empirical_detection"] = _lsh_empirical_oracle_sql()
-    o["lang_mix_drift"] = _LANG_MIX_DRIFT_SQL
-    o["quantized_recall_panel"] = _quantized_recall_oracle_sql()
-    o["chunk_reconstruction_check"] = _CHUNK_RECON_SQL
-    o["sample_bias_audit"] = _sample_bias_oracle_sql()
-    o["streaming_domain_cap"] = _streaming_domain_cap_oracle_sql()
-    o["dedup_threshold_sweep"] = _dedup_threshold_sweep_oracle_sql()
-    o["length_drift_sources"] = _length_drift_oracle_sql()
-    o["embedding_dim_drift"] = _embedding_dim_drift_oracle_sql()
-    o["packing_length_sweep"] = _packing_length_sweep_oracle_sql()
-    o["dsir_sample_docs"] = _DSIR_SQL
-    o["paragraph_minhash_pairs"] = _PARAGRAPH_MINHASH_SQL
-    o["recency_weights_events"] = _RECENCY_WEIGHTS_SQL
-    o["streaming_novelty_monitor"] = _STREAMING_NOVELTY_SQL
-    o["lsh_s_curve_contract"] = _LSH_S_CURVE_SQL
-    o["lm_kl_snapshots"] = _LM_KL_SNAPSHOTS_SQL
-    o["url_domain_rollup"] = _URL_ROLLUP_SQL
-    o["token_window_dedup_docs"] = _TOKEN_WINDOW_DEDUP_SQL
-    o["tokenizer_fertility_sources"] = _TOKENIZER_FERTILITY_SQL
-    o["topic_share_balance"] = _TOPIC_SHARE_SQL
-    o["top_repeated_substrings"] = _TOP_REPEATED_SQL
-    o["syndication_matrix"] = _SYNDICATION_SQL
-    o["zipf_slope_sources"] = _ZIPF_SLOPE_SQL
-    o["lang_confusion_docs"] = _lang_confusion_oracle_sql()
-    o["dedup_loss_by_source"] = _DEDUP_LOSS_SQL
-    o["jsonl_inference"] = _infer_table_sql("region")
-    o["eval_sample_per_lang"] = _EVAL_SAMPLE_PER_LANG_SQL
+    o["pivot_event_counts"] = analytics._pivot_oracle_sql()
+    o["moving_avg_orders"] = analytics._MOVING_AVG_SQL
+    o["value_percentiles"] = analytics._PERCENTILES_SQL
+    o["embedding_dim_stats"] = analytics._EMBEDDING_DIM_STATS_SQL
+    o["text_stats"] = extensions._TEXT_STATS_SQL
+    o["token_count"] = extensions._TOKEN_COUNT_SQL
+    o["lang_id"] = extensions._lang_id_oracle_sql()
+    o["quality_score"] = extensions._quality_oracle_sql()
+    o["fingerprint_docs"] = extensions._FINGERPRINT_SQL
+    o["clean_text"] = analytics._clean_text_oracle_sql()
+    o["redact_pii"] = analytics._redact_pii_oracle_sql()
+    o["repetition_ratio"] = analytics._REPETITION_SQL
+    o["contamination_check"] = analytics._contamination_oracle_sql()
+    o["dedup_exact"] = extensions._HASH_DEDUP_SQL
+    o["ngram_jaccard_dups"] = extensions._NGRAM_JACCARD_SQL
+    o["multimodal_bytes"] = extensions._MULTIMODAL_BYTES_SQL
+    o["embedding_topk"] = extensions._EMBEDDING_TOPK_SQL
+    o["top_terms"] = extensions._TOP_TERMS_SQL
+    o["frame_sample"] = extensions._FRAME_SAMPLE_SQL
+    o["embedding_label_neardup"] = extensions._LABEL_NEARDUP_SQL
+    o["media_features"] = analytics._MEDIA_FEATURES_SQL
+    o["ann_recall_ok"] = analytics._ANN_RECALL_SQL
+    o["ann_lsh_topk"] = analytics._ann_lsh_oracle_sql()
+    o["ivf_topk"] = analytics._IVF_TOPK_SQL
+    o["minhash_md5_dup_pairs"] = analytics._MINHASH_MD5_SQL
+    o["simhash_md5_near_dup"] = analytics._SIMHASH_MD5_SQL
+    o["ewma_value_check"] = analytics._EWMA_VALUE_SQL
+    o["simhash_determinism"] = analytics._SIMHASH_DETERMINISM_SQL
+    o["dedup_clusters"] = analytics._DEDUP_CLUSTERS_SQL
+    o["streaming_dedup"] = analytics._STREAMING_DEDUP_SQL
+    o["streaming_enriched_counts"] = analytics._STREAM_ENRICHED_SQL
+    o["chunk_documents"] = analytics._CHUNK_DOCS_SQL
+    o["label_centroids"] = analytics._LABEL_CENTROIDS_SQL
+    o["gopher_filter"] = analytics._gopher_oracle_sql()
+    o["unigram_logprob"] = analytics._UNIGRAM_LOGPROB_SQL
+    o["repeated_ngram_coverage"] = analytics._REPEATED_NGRAM_SQL
+    o["vocab_coverage"] = analytics._VOCAB_COVERAGE_SQL
+    o["tfidf_pairs"] = analytics._TFIDF_PAIRS_SQL
+    o["embedding_quantize"] = analytics._QUANTIZE_SQL
+    o["kmeans_inertia_ok"] = analytics._KMEANS_INERTIA_SQL
+    o["weighted_sample_docs"] = analytics._WEIGHTED_SAMPLE_SQL
+    o["pack_sequences"] = analytics._PACK_SEQUENCES_SQL
+    o["corpus_mix"] = analytics._CORPUS_MIX_SQL
+    o["incremental_dedup"] = analytics._INCREMENTAL_DEDUP_SQL
+    o["incremental_near_dedup"] = analytics._INCREMENTAL_NEAR_DEDUP_SQL
+    o["salted_join_segments"] = analytics._SALTED_JOIN_SQL
+    o["leakage_safe_split"] = curation._leakage_safe_split_oracle_sql()
+    o["canonical_docs"] = curation._CANONICAL_DOCS_SQL
+    o["group_quantile_filter"] = curation._GROUP_QUANTILE_FILTER_SQL
+    o["hll_sharded_uniques"] = curation._HLL_SHARDED_UNIQUES_SQL
+    o["zorder_roundtrip"] = curation._ZORDER_ROUNDTRIP_SQL
+    o["streaming_attribution"] = curation._STREAMING_ATTRIBUTION_SQL
+    o["tombstone_delete"] = curation._tombstone_delete_oracle_sql()
+    o["compact_roundtrip"] = curation._COMPACT_ROUNDTRIP_SQL
+    o["binary_hamming_topk"] = curation._BINARY_HAMMING_SQL
+    o["pipeline_end_to_end"] = curation._pipeline_end_to_end_oracle_sql()
+    o["winsorize_events"] = curation._WINSORIZE_EVENTS_SQL
+    o["streaming_sessions"] = curation._STREAMING_SESSIONS_SQL
+    o["domain_cap_docs"] = curation._DOMAIN_CAP_SQL
+    o["burst_collapse_events"] = curation._BURST_COLLAPSE_SQL
+    o["scd2_order_status"] = curation._SCD2_SQL
+    o["zone_map_events"] = curation._ZONE_MAP_SQL
+    o["fuzzy_match_customers"] = curation._FUZZY_MATCH_SQL
+    o["semantic_dedup"] = curation._SEMANTIC_DEDUP_SQL
+    o["psi_drift_events"] = curation._PSI_DRIFT_SQL
+    o["csv_quarantine"] = curation._CSV_QUARANTINE_SQL
+    o["scd2_lookup_events"] = curation._SCD2_LOOKUP_SQL
+    o["key_suggestions"] = curation._KEY_SUGGESTIONS_SQL
+    o["fk_profile"] = curation._FK_PROFILE_SQL
+    o["streaming_psi_monitor"] = curation._STREAMING_PSI_SQL
+    o["mad_outliers_events"] = curation._MAD_OUTLIERS_SQL
+    o["equidepth_histogram_events"] = curation._EQUIDEPTH_SQL
+    o["incremental_semantic_dedup"] = curation._INCR_SEMANTIC_SQL
+    o["remove_boilerplate_docs"] = curation._REMOVE_BOILERPLATE_SQL
+    o["kfold_split_docs"] = curation._KFOLD_SPLIT_SQL
+    o["time_embargo_split_events"] = curation._TIME_EMBARGO_SQL
+    o["ks_drift_events"] = curation._KS_DRIFT_SQL
+    o["interval_overlap_sessions"] = curation._INTERVAL_OVERLAP_SQL
+    o["jl_projection"] = curation._jl_oracle_sql()
+    o["length_buckets_docs"] = curation._LENGTH_BUCKETS_SQL
+    o["containment_docs"] = curation._CONTAINMENT_SQL
+    o["bigram_logprob_docs"] = curation._BIGRAM_LOGPROB_SQL
+    o["table_checksum_orders"] = curation._TABLE_CHECKSUM_SQL
+    o["rank_transform_events"] = curation._RANK_TRANSFORM_SQL
+    o["correlation_matrix_lineitem"] = curation._CORRELATION_MATRIX_SQL
+    o["streaming_ks_monitor"] = curation._STREAMING_KS_SQL
+    o["calibration_bins_docs"] = curation._CALIBRATION_BINS_SQL
+    o["binned_roc_docs"] = curation._BINNED_ROC_SQL
+    o["transition_matrix_events"] = curation._TRANSITION_MATRIX_SQL
+    o["token_entropy_sources"] = curation._TOKEN_ENTROPY_SQL
+    o["conversation_assembly_events"] = curation._CONVERSATION_ASSEMBLY_SQL
+    o["text_roundtrip"] = curation._TEXT_ROUNDTRIP_SQL
+    o["nfkc_normalize_docs"] = curation._NFKC_NORMALIZE_SQL
+    o["pii_density_sources"] = pipeline_r9._PII_DENSITY_SQL
+    o["lm_kl_sources"] = pipeline_r9._LM_KL_SQL
+    o["retrieval_recall_panel"] = pipeline_r9._RETRIEVAL_RECALL_SQL
+    o["lsh_recall_panel"] = pipeline_r9._lsh_recall_oracle_sql()
+    o["contamination_snapshot_diff"] = (
+        analytics._contamination_diff_oracle_sql()
+    )
+    o["quality_drift_sources"] = extensions._quality_drift_oracle_sql()
+    o["domain_cap_psl_audit"] = curation._domain_cap_psl_audit_oracle_sql()
+    o["dedup_cluster_stats"] = analytics._DEDUP_CLUSTER_STATS_SQL
+    o["redaction_audit_sources"] = pipeline_r9._REDACTION_AUDIT_SQL
+    o["embedding_norm_drift"] = extensions._norm_drift_oracle_sql()
+    o["minhash_band_occupancy"] = curation._band_occupancy_oracle_sql()
+    o["lsh_empirical_detection"] = pipeline_r9._lsh_empirical_oracle_sql()
+    o["lang_mix_drift"] = pipeline_r9._LANG_MIX_DRIFT_SQL
+    o["quantized_recall_panel"] = pipeline_r9._quantized_recall_oracle_sql()
+    o["chunk_reconstruction_check"] = analytics._CHUNK_RECON_SQL
+    o["sample_bias_audit"] = analytics._sample_bias_oracle_sql()
+    o["streaming_domain_cap"] = analytics._streaming_domain_cap_oracle_sql()
+    o["dedup_threshold_sweep"] = analytics._dedup_threshold_sweep_oracle_sql()
+    o["length_drift_sources"] = extensions._length_drift_oracle_sql()
+    o["embedding_dim_drift"] = extensions._embedding_dim_drift_oracle_sql()
+    o["packing_length_sweep"] = analytics._packing_length_sweep_oracle_sql()
+    o["dsir_sample_docs"] = pipeline_r9._DSIR_SQL
+    o["paragraph_minhash_pairs"] = pipeline_r9._PARAGRAPH_MINHASH_SQL
+    o["recency_weights_events"] = pipeline_r9._RECENCY_WEIGHTS_SQL
+    o["streaming_novelty_monitor"] = pipeline_r9._STREAMING_NOVELTY_SQL
+    o["lsh_s_curve_contract"] = pipeline_r9._LSH_S_CURVE_SQL
+    o["lm_kl_snapshots"] = pipeline_r9._LM_KL_SNAPSHOTS_SQL
+    o["url_domain_rollup"] = curation._URL_ROLLUP_SQL
+    o["token_window_dedup_docs"] = curation._TOKEN_WINDOW_DEDUP_SQL
+    o["tokenizer_fertility_sources"] = curation._TOKENIZER_FERTILITY_SQL
+    o["topic_share_balance"] = curation._TOPIC_SHARE_SQL
+    o["top_repeated_substrings"] = curation._TOP_REPEATED_SQL
+    o["syndication_matrix"] = curation._SYNDICATION_SQL
+    o["zipf_slope_sources"] = curation._ZIPF_SLOPE_SQL
+    o["lang_confusion_docs"] = curation._lang_confusion_oracle_sql()
+    o["dedup_loss_by_source"] = curation._DEDUP_LOSS_SQL
+    o["jsonl_inference"] = inference._infer_table_sql("region")
+    o["eval_sample_per_lang"] = curation._EVAL_SAMPLE_PER_LANG_SQL
     # the bloom prune must be answer-preserving: same oracle as the plain
     # incremental dedup
-    o["bloom_incremental_dedup"] = _INCREMENTAL_DEDUP_SQL
-    o["bm25_topk_docs"] = _BM25_TOPK_SQL
-    o["dq_expectations_orders"] = _DQ_EXPECTATIONS_SQL
-    o["pagerank_event_types"] = _PAGERANK_EVENT_TYPES_SQL
-    o["labeler_kappa_docs"] = _LABELER_KAPPA_SQL
-    o["rrf_hybrid_topk"] = _RRF_HYBRID_SQL
-    o["cdc_dedup_stats"] = _CDC_DEDUP_STATS_SQL
-    o["waterfill_sources"] = _WATERFILL_SOURCES_SQL
-    o["heavy_hitters_sketch"] = _HEAVY_HITTERS_SQL
-    o["fim_transform_docs"] = _FIM_TRANSFORM_SQL
-    o["contrastive_negatives"] = _CONTRASTIVE_NEGATIVES_SQL
-    o["span_corruption_docs"] = _SPAN_CORRUPTION_SQL
-    o["quantile_normalize_docs"] = _QUANTILE_NORMALIZE_SQL
-    o["cooccurrence_pmi_docs"] = _COOCCURRENCE_PMI_SQL
-    o["filter_funnel_docs"] = _FILTER_FUNNEL_SQL
-    o["gini_source_concentration"] = _GINI_SOURCES_SQL
-    o["key_suggestions_approx_ok"] = _KEY_SUGGESTIONS_APPROX_SQL
-    o["streaming_window_counts"] = _STREAM_WINDOW_SQL
+    o["bloom_incremental_dedup"] = analytics._INCREMENTAL_DEDUP_SQL
+    o["bm25_topk_docs"] = curation._BM25_TOPK_SQL
+    o["dq_expectations_orders"] = curation._DQ_EXPECTATIONS_SQL
+    o["pagerank_event_types"] = curation._PAGERANK_EVENT_TYPES_SQL
+    o["labeler_kappa_docs"] = curation._LABELER_KAPPA_SQL
+    o["rrf_hybrid_topk"] = curation._RRF_HYBRID_SQL
+    o["cdc_dedup_stats"] = curation._CDC_DEDUP_STATS_SQL
+    o["waterfill_sources"] = curation._WATERFILL_SOURCES_SQL
+    o["heavy_hitters_sketch"] = curation._HEAVY_HITTERS_SQL
+    o["fim_transform_docs"] = curation._FIM_TRANSFORM_SQL
+    o["contrastive_negatives"] = curation._CONTRASTIVE_NEGATIVES_SQL
+    o["span_corruption_docs"] = curation._SPAN_CORRUPTION_SQL
+    o["quantile_normalize_docs"] = curation._QUANTILE_NORMALIZE_SQL
+    o["cooccurrence_pmi_docs"] = curation._COOCCURRENCE_PMI_SQL
+    o["filter_funnel_docs"] = curation._FILTER_FUNNEL_SQL
+    o["gini_source_concentration"] = curation._GINI_SOURCES_SQL
+    o["key_suggestions_approx_ok"] = curation._KEY_SUGGESTIONS_APPROX_SQL
+    o["streaming_window_counts"] = analytics._STREAM_WINDOW_SQL
     o["streaming_user_stats"] = (
         "SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS sum_value "
         "FROM events GROUP BY user_id"
     )
-    o["minhash_dup_pairs"] = _MINHASH_CONTRACT_SQL
-    o["ewma_user_values"] = _EWMA_FINAL_SQL
-    o["simhash_pigeonhole_check"] = _SIMHASH_PIGEONHOLE_SQL
-    o["order_priority_check"] = _ORDER_PRIORITY_SQL
-    o["volume_shipping"] = _VOLUME_SHIPPING_SQL
-    o["product_profit"] = _PRODUCT_PROFIT_SQL
-    o["returned_items"] = _RETURNED_ITEMS_SQL
-    o["promo_revenue"] = _PROMO_REVENUE_SQL
-    o["top_supplier"] = _TOP_SUPPLIER_SQL
-    o["parts_supplier_count"] = _PARTS_SUPPLIER_SQL
-    o["small_qty_revenue"] = _SMALL_QTY_SQL
-    o["large_volume_orders"] = _LARGE_VOLUME_SQL
-    o["discount_band_revenue"] = _DISCOUNT_BAND_SQL
-    o["sales_opportunity"] = _SALES_OPPORTUNITY_SQL
-    o["cheapest_part_per_type"] = _CHEAPEST_PART_SQL
-    o["profile_docs"] = _PROFILE_DOCS_SQL
-    o["corpus_diff_docs"] = _CORPUS_DIFF_SQL
-    o["epoch_shuffle_docs"] = _EPOCH_SHUFFLE_SQL
-    o["mix_weights_sources"] = _MIX_WEIGHTS_SQL
-    o["materialize_mix_docs"] = _MATERIALIZE_MIX_SQL
-    o["select_token_budget_docs"] = _SELECT_TOKEN_BUDGET_SQL
-    o["segment_dedup_docs"] = _SEGMENT_DEDUP_SQL
-    o["ngram_novelty_docs"] = _NGRAM_NOVELTY_SQL
-    o["classifier_scores"] = _CLASSIFIER_SCORES_SQL
-    o["user_retention_cohorts"] = _RETENTION_SQL
-    o["event_funnel"] = _FUNNEL_SQL
-    o["value_histogram"] = _HISTOGRAM_SQL
-    o["zscore_outliers"] = _ZSCORE_SQL
-    o["bigram_pmi"] = _BIGRAM_PMI_SQL
-    o["merge_upsert_orders"] = _MERGE_UPSERT_SQL
-    o["schema_evolution_roundtrip"] = _SCHEMA_EVOLUTION_SQL
-    o["skew_profile_events"] = _SKEW_PROFILE_SQL
-    o["streaming_drift_monitor"] = _streaming_drift_oracle_sql()
-    o["merge_insert_only_orders"] = _MERGE_INSERT_ONLY_SQL
-    o["range_partitioned_roundtrip"] = _RANGE_ROUNDTRIP_SQL
-    o["media_resize"] = _MEDIA_RESIZE_SQL
-    o["approx_percentile_ok"] = _approx_percentile_oracle_sql()
+    o["minhash_dup_pairs"] = analytics._MINHASH_CONTRACT_SQL
+    o["ewma_user_values"] = analytics._EWMA_FINAL_SQL
+    o["simhash_pigeonhole_check"] = analytics._SIMHASH_PIGEONHOLE_SQL
+    o["order_priority_check"] = tpch._ORDER_PRIORITY_SQL
+    o["volume_shipping"] = tpch._VOLUME_SHIPPING_SQL
+    o["product_profit"] = tpch._PRODUCT_PROFIT_SQL
+    o["returned_items"] = tpch._RETURNED_ITEMS_SQL
+    o["promo_revenue"] = tpch._PROMO_REVENUE_SQL
+    o["top_supplier"] = tpch._TOP_SUPPLIER_SQL
+    o["parts_supplier_count"] = tpch._PARTS_SUPPLIER_SQL
+    o["small_qty_revenue"] = tpch._SMALL_QTY_SQL
+    o["large_volume_orders"] = tpch._LARGE_VOLUME_SQL
+    o["discount_band_revenue"] = tpch._DISCOUNT_BAND_SQL
+    o["sales_opportunity"] = tpch._SALES_OPPORTUNITY_SQL
+    o["cheapest_part_per_type"] = tpch._CHEAPEST_PART_SQL
+    o["profile_docs"] = lifecycle._PROFILE_DOCS_SQL
+    o["corpus_diff_docs"] = lifecycle._CORPUS_DIFF_SQL
+    o["epoch_shuffle_docs"] = lifecycle._EPOCH_SHUFFLE_SQL
+    o["mix_weights_sources"] = lifecycle._MIX_WEIGHTS_SQL
+    o["materialize_mix_docs"] = lifecycle._MATERIALIZE_MIX_SQL
+    o["select_token_budget_docs"] = lifecycle._SELECT_TOKEN_BUDGET_SQL
+    o["segment_dedup_docs"] = lifecycle._SEGMENT_DEDUP_SQL
+    o["ngram_novelty_docs"] = lifecycle._NGRAM_NOVELTY_SQL
+    o["classifier_scores"] = lifecycle._CLASSIFIER_SCORES_SQL
+    o["user_retention_cohorts"] = analytics._RETENTION_SQL
+    o["event_funnel"] = analytics._FUNNEL_SQL
+    o["value_histogram"] = analytics._HISTOGRAM_SQL
+    o["zscore_outliers"] = analytics._ZSCORE_SQL
+    o["bigram_pmi"] = analytics._BIGRAM_PMI_SQL
+    o["merge_upsert_orders"] = analytics._MERGE_UPSERT_SQL
+    o["schema_evolution_roundtrip"] = analytics._SCHEMA_EVOLUTION_SQL
+    o["skew_profile_events"] = analytics._SKEW_PROFILE_SQL
+    o["streaming_drift_monitor"] = analytics._streaming_drift_oracle_sql()
+    o["merge_insert_only_orders"] = analytics._MERGE_INSERT_ONLY_SQL
+    o["range_partitioned_roundtrip"] = analytics._RANGE_ROUNDTRIP_SQL
+    o["media_resize"] = analytics._MEDIA_RESIZE_SQL
+    o["approx_percentile_ok"] = analytics._approx_percentile_oracle_sql()
     # --- round-11 operators ---
-    o["dedup_rate_drift_sources"] = _DEDUP_RATE_DRIFT_SQL
-    o["curriculum_phases"] = _curriculum_oracle_sql()
-    o["contamination_ngram_sweep"] = _contamination_sweep_oracle_sql()
-    o["rerank_cross_encoder"] = _rerank_oracle_sql()
-    o["dup_spans"] = _dup_spans_oracle_sql()
-    o["semantic_threshold_sweep"] = _semantic_tsweep_oracle_sql()
-    o["ivf_nprobe_sweep"] = _ivf_nprobe_sweep_oracle_sql()
-    o["lsh_config_sweep"] = _lsh_config_sweep_oracle_sql()
-    o["dedup_token_survivorship"] = _TOKEN_SURVIVORSHIP_SQL
-    o["quality_drift_approx_ok"] = _SCORE_DRIFT_APPROX_SQL
-    o["streaming_late_audit"] = _LATE_DATA_AUDIT_SQL
-    o["semantic_dedup_scaled"] = _SEMANTIC_DEDUP_SCALED_SQL
-    o["dedup_provenance_docs"] = _DEDUP_PROVENANCE_SQL
-    o["mix_weights_post_dedup"] = _MIX_POST_DEDUP_SQL
-    o["streaming_late_alert"] = _LATE_DATA_ALERT_SQL
-    o["centroid_assign_join"] = _CENTROID_ASSIGN_JOIN_SQL
-    o["topic_share_drift"] = _TOPIC_SHARE_DRIFT_SQL
-    o["streaming_lateness_profile"] = _LATENESS_PROFILE_SQL
-    o["streaming_topic_drift"] = _TOPIC_DRIFT_MONITOR_SQL
-    o["quantized_assign_agreement"] = _QUANTIZED_ASSIGN_AGREEMENT_SQL
+    o["dedup_rate_drift_sources"] = pipeline_r11._DEDUP_RATE_DRIFT_SQL
+    o["curriculum_phases"] = pipeline_r11._curriculum_oracle_sql()
+    o["contamination_ngram_sweep"] = (
+        pipeline_r11._contamination_sweep_oracle_sql()
+    )
+    o["rerank_cross_encoder"] = pipeline_r11._rerank_oracle_sql()
+    o["dup_spans"] = pipeline_r11._dup_spans_oracle_sql()
+    o["semantic_threshold_sweep"] = pipeline_r11._semantic_tsweep_oracle_sql()
+    o["ivf_nprobe_sweep"] = pipeline_r11._ivf_nprobe_sweep_oracle_sql()
+    o["lsh_config_sweep"] = pipeline_r11._lsh_config_sweep_oracle_sql()
+    o["dedup_token_survivorship"] = pipeline_r12._TOKEN_SURVIVORSHIP_SQL
+    o["quality_drift_approx_ok"] = pipeline_r12._SCORE_DRIFT_APPROX_SQL
+    o["streaming_late_audit"] = pipeline_r12._LATE_DATA_AUDIT_SQL
+    o["semantic_dedup_scaled"] = pipeline_r12._SEMANTIC_DEDUP_SCALED_SQL
+    o["dedup_provenance_docs"] = pipeline_r12._DEDUP_PROVENANCE_SQL
+    o["mix_weights_post_dedup"] = pipeline_r12._MIX_POST_DEDUP_SQL
+    o["streaming_late_alert"] = pipeline_r13._LATE_DATA_ALERT_SQL
+    o["centroid_assign_join"] = pipeline_r13._CENTROID_ASSIGN_JOIN_SQL
+    o["topic_share_drift"] = pipeline_r13._TOPIC_SHARE_DRIFT_SQL
+    o["streaming_lateness_profile"] = pipeline_r13._LATENESS_PROFILE_SQL
+    o["streaming_topic_drift"] = pipeline_r13._TOPIC_DRIFT_MONITOR_SQL
+    o["quantized_assign_agreement"] = (
+        pipeline_r13._QUANTIZED_ASSIGN_AGREEMENT_SQL
+    )
     # --- round-14 operators ---
-    o["centroid_assign_two_level"] = _CENTROID_ASSIGN_TWO_LEVEL_SQL
-    o["paragraph_provenance_docs"] = _PARAGRAPH_PROVENANCE_SQL
-    o["two_level_probe_sweep"] = _TWO_LEVEL_PROBE_SWEEP_SQL
-    o["quantizer_roundtrip"] = _QUANTIZER_ROUNDTRIP_SQL
+    o["centroid_assign_two_level"] = (
+        pipeline_r14._CENTROID_ASSIGN_TWO_LEVEL_SQL
+    )
+    o["paragraph_provenance_docs"] = pipeline_r14._PARAGRAPH_PROVENANCE_SQL
+    o["two_level_probe_sweep"] = pipeline_r14._TWO_LEVEL_PROBE_SWEEP_SQL
+    o["quantizer_roundtrip"] = pipeline_r14._QUANTIZER_ROUNDTRIP_SQL
     return o

@@ -25,11 +25,14 @@ import re
 
 from .types import redshift_to_spark_type
 
-_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_$]*$")
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_$]*")
+# a type name: words, then an optional (precision[, scale]) —
+# ``varchar(256)``, ``numeric(18,2)``, ``double precision``
+_TYPE_NAME = re.compile(r"[A-Za-z]\w*( [A-Za-z]\w*)*(\(\d+(, ?\d+)?\))?", re.ASCII)
 
 
 def _check_ident(name: str, what: str = "identifier") -> str:
-    if not _IDENT.match(name or ""):
+    if not _IDENT.fullmatch(name or ""):
         raise ValueError(f"invalid {what}: {name!r}")
     return name
 
@@ -39,6 +42,12 @@ def _check_ident_list(names: str, what: str) -> str:
     for part in str(names).split(","):
         _check_ident(part.strip(), what)
     return names
+
+
+def _check_type(name: str, what: str = "type") -> str:
+    if not _TYPE_NAME.fullmatch(name or ""):
+        raise ValueError(f"invalid {what}: {name!r}")
+    return name
 
 
 def generate_schema_ddl(schema: str) -> str:
@@ -88,7 +97,10 @@ def generate_table_ddl(
     ddl = f"CREATE TABLE {schema}.{table} (\n" + "\n".join(body_lines) + "\n"
 
     if export_field_name and export_field_type:
-        ddl += f" , {_check_ident(export_field_name, 'column')} {export_field_type}\n"
+        ddl += (
+            f" , {_check_ident(export_field_name, 'column')} "
+            f"{_check_type(export_field_type, 'export field type')}\n"
+        )
 
     if primary_key:
         ddl += f" , PRIMARY KEY ({_check_ident_list(primary_key, 'primary key')})\n"
@@ -139,11 +151,16 @@ def generate_spark_table_ddl(
         f"  {_check_ident(n, 'column')} {redshift_to_spark_type(t)}"
         for n, t in columns
     )
-    ddl = f"CREATE TABLE {schema}.{table} (\n{cols}\n)\nUSING {fmt}"
+    ddl = (
+        f"CREATE TABLE {schema}.{table} (\n{cols}\n)\n"
+        f"USING {_check_ident(fmt, 'format')}"
+    )
     if partitioned_by:
         parts = ", ".join(_check_ident(p, "partition column") for p in partitioned_by)
         ddl += f"\nPARTITIONED BY ({parts})"
     if location:
+        if "'" in location or "\\" in location:
+            raise ValueError(f"invalid location: {location!r}")
         ddl += f"\nLOCATION '{location}'"
     return ddl
 

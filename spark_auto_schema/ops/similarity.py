@@ -69,11 +69,19 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _cos_over_norms(a: Column, b: Column, an: Column, bn: Column) -> Column:
+    """Cosine of ``a`` and ``b`` from their precomputed norms ``an`` and
+    ``bn`` — the one search-path cosine.  A zero norm gives NULL, not an
+    ANSI ``DIVIDE_BY_ZERO``, and every ordering on it is ``desc``, so a
+    zero-norm vector ranks last instead of failing the whole search."""
+    return F.try_divide(dot(a, b), an * bn)
+
+
 def _qsim(vec: Column, vn: Column) -> Column:
     """Cosine of a corpus vector (norm ``vn``) against the query vector of
     the joined query row ``(qvec, qn)`` — the one similarity every search
     and recall path ranks by."""
-    return dot(vec, F.col("qvec")) / (vn * F.col("qn"))
+    return _cos_over_norms(vec, F.col("qvec"), vn, F.col("qn"))
 
 
 def _with_norm(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
@@ -283,8 +291,8 @@ def _ivf_quantizer(
             F.col(vec_col),
             F.col("vn"),
             F.col("cid"),
-            (
-                dot(F.col(vec_col), F.col("cvec")) / (F.col("vn") * F.col("cn"))
+            _cos_over_norms(
+                F.col(vec_col), F.col("cvec"), F.col("vn"), F.col("cn")
             ).alias("csim"),
         )
     )
@@ -309,8 +317,8 @@ def _probe_ranks(qs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
             "qvec",
             "qn",
             "cid",
-            (
-                dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
+            _cos_over_norms(
+                F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
             ).alias("csim"),
         )
         .withColumn("crank", F.row_number().over(w))

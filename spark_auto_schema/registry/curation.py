@@ -1415,14 +1415,14 @@ def _q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bucket comes from an exact integer array_min/filter — no float
     log2 whose last ulp could flip a boundary between engines."""
     d = read_table(spark, sf_dir, "documents").select(
-        F.size(F.split("text", " ")).alias("ws_tokens")
+        F.size(_words(F.col("text"))).alias("ws_tokens")
     )
     return packing.length_buckets(d, "ws_tokens", max_len=128, min_bucket=16)
 
 
-_LENGTH_BUCKETS_SQL = """
+_LENGTH_BUCKETS_SQL = f"""
 WITH t AS (
-  SELECT least(len(string_split(text, ' ')), 128) AS t FROM documents
+  SELECT least(len({_words_sql()}), 128) AS t FROM documents
 ), b AS (
   SELECT list_min(list_filter([16, 32, 64, 128], c -> c >= greatest(t, 1))) AS bucket, t
   FROM t
@@ -2281,7 +2281,7 @@ def _q_waterfill_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sizes = (
         read_table(spark, sf_dir, "documents")
-        .select("source", F.size(F.split(F.col("text"), " ")).alias("nt"))
+        .select("source", F.size(_words(F.col("text"))).alias("nt"))
         .groupBy("source")
         .agg(F.sum("nt").alias("n_tokens"))
     )
@@ -2290,9 +2290,9 @@ def _q_waterfill_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WATERFILL_SOURCES_SQL = """
+_WATERFILL_SOURCES_SQL = f"""
 WITH g AS (
-  SELECT source AS grp, CAST(sum(len(string_split(text, ' '))) AS DOUBLE) AS t
+  SELECT source AS grp, CAST(sum(len({_words_sql()})) AS DOUBLE) AS t
   FROM documents GROUP BY 1
 ), r AS (
   SELECT grp, t, row_number() OVER (ORDER BY t, grp) AS rn,
@@ -2555,7 +2555,7 @@ def _q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_auto_schema.ops import corpus
 
     d = read_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.col("text"), " "))
+    toks = F.size(_words(F.col("text")))
     return corpus.filter_funnel(
         d,
         [
@@ -2567,12 +2567,12 @@ def _q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FILTER_FUNNEL_SQL = """
+_FILTER_FUNNEL_SQL = f"""
 WITH k AS (
   SELECT coalesce(n_chars >= 200, false) AS k1,
-         coalesce(len(string_split(text, ' ')) >= 40, false) AS k2,
+         coalesce(len({_words_sql()}) >= 40, false) AS k2,
          coalesce(lang = 'en', false) AS k3,
-         coalesce(n_chars <= 6 * len(string_split(text, ' ')), false) AS k4
+         coalesce(n_chars <= 6 * len({_words_sql()}), false) AS k4
   FROM documents
 ), a AS (
   -- every sum cast to BIGINT: DuckDB integer sum() is HUGEINT/decimal128,

@@ -18,6 +18,7 @@ from spark_auto_schema.ops import relational
 from spark_auto_schema.ops import scoring
 from spark_auto_schema.ops import similarity
 from spark_auto_schema.ops import text
+from spark_auto_schema.ops._tokens import _words
 
 # ---------------------------------------------------------------------------
 # extension queries (text / dedup / similarity / multimodal)
@@ -164,9 +165,7 @@ def _q_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = d.select(
         "doc_id",
         "source",
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
-        .cast("double")
-        .alias("n_tokens"),
+        F.size(_words(F.col("text"))).cast("double").alias("n_tokens"),
     )
     half = F.pmod(
         F.conv(
@@ -185,10 +184,10 @@ def _q_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _length_drift_oracle_sql() -> str:
     return _score_drift_tail_sql(
-        """
+        f"""
 WITH h AS (
   SELECT source AS grp,
-         CAST(len(string_split(coalesce(text, ''), ' ')) AS DOUBLE) AS v,
+         CAST(len({_words_sql()}) AS DOUBLE) AS v,
          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 2
            AS half
   FROM documents

@@ -11,6 +11,7 @@ from spark_auto_schema.ops import corpus
 from spark_auto_schema.ops import dedup
 from spark_auto_schema.io import read_table
 from spark_auto_schema.ops import scoring
+from spark_auto_schema.ops._tokens import _words
 from spark_auto_schema.registry.extensions import _spread_docs, _words_sql
 
 # ---------------------------------------------------------------------------
@@ -186,7 +187,7 @@ def _q_select_token_budget(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
+        F.size(_words(F.col("text"))).cast("long").alias("n_tokens"),
         (
             F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", ""))
             / F.greatest(F.length("text"), F.lit(1))
@@ -195,9 +196,9 @@ def _q_select_token_budget(spark, sf_dir):
     return corpus.select_token_budget(scored, budget_tokens=8000)
 
 
-_SELECT_TOKEN_BUDGET_SQL = """
+_SELECT_TOKEN_BUDGET_SQL = f"""
 WITH d AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+  SELECT doc_id, CAST(len({_words_sql()}) AS BIGINT) AS n_tokens,
          CAST(floor(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0
                     / greatest(length(text), 1) * 1000.0 + 0.5) AS BIGINT)
            AS bucket

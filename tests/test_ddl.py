@@ -75,7 +75,7 @@ def test_column_ddl():
 
 
 @pytest.mark.parametrize(
-    "bad", ["s; DROP TABLE x", "s.t", "s t", "", "1abc", 'a"b']
+    "bad", ["s; DROP TABLE x", "s.t", "s t", "", "1abc", 'a"b', "s\n"]
 )
 def test_injection_rejected(bad):
     # the reference interpolates raw f-strings (RAS.py:104,120); we validate
@@ -108,3 +108,42 @@ def test_spark_dialect_runs_in_spark(spark, tmp_path):
     cols = {c.name for c in spark.catalog.listColumns("sas_ddl_check", "default")}
     assert cols == {"user_id", "amount", "note"}
     spark.sql("DROP TABLE default.sas_ddl_check")
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"fmt": "parquet OPTIONS (path '/x')"},
+        {"fmt": "parquet; DROP TABLE t"},
+        {"fmt": "parquet\n"},
+        {"location": "/tmp/t'; DROP TABLE t; --"},
+        {"location": "/tmp/t\\"},
+    ],
+)
+def test_spark_dialect_free_text_rejected(kwargs):
+    # USING and LOCATION are interpolated into the statement: a format is an
+    # identifier, and a location cannot close or escape its quotes
+    with pytest.raises(ValueError):
+        ddl.generate_spark_table_ddl("analytics", "t1", COLS, **kwargs)
+
+
+@pytest.mark.parametrize(
+    "bad", ["date); DROP TABLE x; --", "varchar(256", "int\n", "a b;", " "]
+)
+def test_export_field_type_rejected(bad):
+    with pytest.raises(ValueError):
+        ddl.generate_table_ddl(
+            "analytics", "t1", COLS,
+            export_field_name="export_date", export_field_type=bad,
+        )
+
+
+@pytest.mark.parametrize(
+    "good", ["varchar(256)", "numeric(18,2)", "double precision"]
+)
+def test_export_field_type_accepted(good):
+    out = ddl.generate_table_ddl(
+        "analytics", "t1", COLS,
+        export_field_name="export_date", export_field_type=good,
+    )
+    assert f" , export_date {good}\n" in out

@@ -1816,6 +1816,42 @@ def test_recall_eval_panel_guard_names_the_bad_query_id(spark, fn, qid, diagnosi
     similarity.release_caches()
 
 
+def test_zero_norm_corpus_vector_ranks_last_not_raises(spark):
+    """A zero-norm vector that is not a query has no cosine with anything:
+    it must rank last in the exact, IVF and recall-eval searches, not fail
+    them with an ANSI DIVIDE_BY_ZERO.  Each call returns the rows it
+    returns on the corpus without that vector.  Its id is picked so its
+    md5 sorts after every other id's, keeping it out of the IVF centroid
+    sample (which would rightly change the lists)."""
+    import hashlib
+
+    def md5(i):
+        return hashlib.md5(str(i).encode()).hexdigest()
+
+    clean = spark.createDataFrame(
+        [(i, [float(i + 1), 1.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    zid = next(z for z in range(100, 1000) if md5(z) > max(map(md5, range(6))))
+    dirty = clean.unionByName(
+        spark.createDataFrame(
+            [(zid, [0.0, 0.0])], "vec_id long, embedding array<double>"
+        )
+    )
+    calls = [
+        lambda df: similarity.cosine_topk(df, query_id=0, k=3),
+        lambda df: similarity.ivf_topk(df, query_id=0, k=3, nlist=2, nprobe=2),
+        lambda df: similarity.retrieval_recall_eval(
+            df, query_ids=[0, 3], k=2, nlist=2, nprobe=2
+        ),
+    ]
+    for call in calls:
+        want = sorted(tuple(r) for r in call(clean).collect())
+        got = sorted(tuple(r) for r in call(dirty).collect())
+        similarity.release_caches()
+        assert want and got == want
+
+
 def test_paragraph_minhash_handles_string_and_colon_ids(spark):
     """Doc ids that are strings — even containing ':' — survive the
     segment-id round-trip (review finding: a bare cast-to-long NULLed
@@ -2005,10 +2041,11 @@ def test_domain_cap_psl_audit_branches(spark):
     resolved to its correct registered domain — a PSL regression would
     re-bucket hosts and break these exact counts."""
     import __spark_entry__ as entry
+    from spark_auto_schema.registry.curation import _DCAP_AUDIT_CAP
 
     got = {
         r["registered_domain"]: r
-        for r in entry._q_domain_cap_psl_audit(
+        for r in entry.queries()["domain_cap_psl_audit"](
             spark, "/root/testdata/sf0.001"
         ).collect()
     }
@@ -2021,8 +2058,8 @@ def test_domain_cap_psl_audit_branches(spark):
         "example.org",          # generic fallback, skew target
     }
     org = got["example.org"]
-    assert org["capped"] and org["n_kept"] == entry._DCAP_AUDIT_CAP
-    assert org["n_urls"] > entry._DCAP_AUDIT_CAP
+    assert org["capped"] and org["n_kept"] == _DCAP_AUDIT_CAP
+    assert org["n_urls"] > _DCAP_AUDIT_CAP
     for dom, r in got.items():
         if dom != "example.org":
             assert not r["capped"] and r["n_kept"] == r["n_urls"]
@@ -2351,6 +2388,7 @@ def test_embedding_dim_drift_detects_planted_dimension(spark):
     import hashlib
 
     import __spark_entry__ as entry
+    from spark_auto_schema.registry.extensions import _DIMDRIFT_TOPK
 
     def half(i):
         return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 2
@@ -2369,8 +2407,8 @@ def test_embedding_dim_drift_detects_planted_dimension(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-        got = entry._q_embedding_dim_drift(spark, d).collect()
-    assert len(got) == entry._DIMDRIFT_TOPK
+        got = entry.queries()["embedding_dim_drift"](spark, d).collect()
+    assert len(got) == _DIMDRIFT_TOPK
     top = got[0]
     assert top["pos"] == 3 and top["abs_diff"] == 10.0
     diffs = [r["abs_diff"] for r in got]
@@ -2395,7 +2433,7 @@ def test_length_drift_sources_zero_on_uniform_lengths(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        got = entry._q_length_drift(spark, d).collect()
+        got = entry.queries()["length_drift_sources"](spark, d).collect()
     assert got, "every source has both hash halves at n=120"
     for r in got:
         assert r["max_qdiff"] == 0.0 and r["avg_qdiff"] == 0.0

@@ -15,6 +15,7 @@ import pytest
 import __spark_entry__ as entry
 
 SF_DIR = "/root/testdata/sf0.001"
+QUERIES = entry.queries()
 
 
 @pytest.fixture(autouse=True)
@@ -79,14 +80,14 @@ def test_inference_is_one_scan_no_wide_shuffle(spark):
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    df = entry._q_error_events(spark, SF_DIR)
+    df = QUERIES["error_events"](spark, SF_DIR)
     plan = plan_of(df)
     assert "PushedFilters:" in plan
     assert "IsNotNull(event_type)" in plan or "EqualTo(event_type,error)" in plan
 
 
 def test_column_pruning(spark):
-    df = entry._q_multimodal_bytes(spark, SF_DIR)
+    df = QUERIES["multimodal_bytes"](spark, SF_DIR)
     plan = plan_of(df)
     # the scan must read only the two needed columns, not all six
     readschema = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -97,19 +98,19 @@ def test_column_pruning(spark):
 
 
 def test_dim_joins_are_broadcast(spark):
-    plan = plan_of(entry._q_region_customers(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["region_customers"](spark, SF_DIR), "simple")
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
 
 
 def test_top_customers_broadcast_join(spark):
-    plan = plan_of(entry._q_top_customers(spark, SF_DIR))
+    plan = plan_of(QUERIES["top_customers"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_pricing_summary_partial_agg(spark):
-    plan = plan_of(entry._q_pricing_summary(spark, SF_DIR))
+    plan = plan_of(QUERIES["pricing_summary"](spark, SF_DIR))
     # map-side partial aggregation before the key exchange
     first_agg = plan.find("HashAggregate")
     assert first_agg != -1
@@ -118,12 +119,12 @@ def test_pricing_summary_partial_agg(spark):
 
 
 def test_anti_join_is_join_not_subquery_loop(spark):
-    plan = plan_of(entry._q_customers_no_orders(spark, SF_DIR))
+    plan = plan_of(QUERIES["customers_no_orders"](spark, SF_DIR))
     assert "LeftAnti" in plan
 
 
 def test_cosine_topk_is_takeordered(spark):
-    plan = plan_of(entry._q_embedding_topk(spark, SF_DIR))
+    plan = plan_of(QUERIES["embedding_topk"](spark, SF_DIR))
     # global top-k must be TakeOrdered (k per partition then k global),
     # never a full sort of the corpus
     assert "TakeOrderedAndProject" in plan
@@ -131,7 +132,7 @@ def test_cosine_topk_is_takeordered(spark):
 
 
 def test_hash_sample_is_narrow_no_shuffle(spark):
-    df = entry._q_hash_sample(spark, SF_DIR)
+    df = QUERIES["hash_sample_docs"](spark, SF_DIR)
     plan = plan_of(df, "simple")
     # a content-hash sample is a per-row filter inside the scan stage:
     # no exchange anywhere in the plan
@@ -140,7 +141,7 @@ def test_hash_sample_is_narrow_no_shuffle(spark):
 
 
 def test_shipping_priority_broadcasts_dim_and_pushes_filters(spark):
-    plan = plan_of(entry._q_shipping_priority(spark, SF_DIR))
+    plan = plan_of(QUERIES["shipping_priority"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan  # filtered customer dim is broadcast
     assert "PushedFilters:" in plan
     assert "TakeOrderedAndProject" in plan  # top-10 is not a global sort
@@ -170,7 +171,7 @@ def test_streaming_uses_stateful_operator(spark):
 
 
 def test_grouping_sets_single_scan(spark):
-    plan = plan_of(entry._q_grouping_sets(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["grouping_sets_orders"](spark, SF_DIR), "simple")
     # grouping sets must expand, not re-scan per set
     assert plan.count("Scan parquet") == 1
     assert "Expand" in plan
@@ -332,14 +333,14 @@ def test_pack_sequences_single_exchange(spark):
 
 
 def test_mix_by_column_is_narrow_no_shuffle(spark):
-    plan = plan_of(entry._q_corpus_mix(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["corpus_mix"](spark, SF_DIR), "simple")
     # domain re-weighting is a CASE-threshold filter inside the scan stage
     assert "Exchange" not in plan
     assert "Filter" in plan
 
 
 def test_incremental_exact_dedup_is_anti_join_on_hashes(spark):
-    plan = plan_of(entry._q_incremental_dedup(spark, SF_DIR))
+    plan = plan_of(QUERIES["incremental_dedup"](spark, SF_DIR))
     # novelty check must be an anti join (never a per-row subquery), keyed
     # on the md5 hash, after a partial-aggregated batch dedup
     assert "LeftAnti" in plan
@@ -394,10 +395,10 @@ def test_unigram_model_join_is_broadcast(spark):
 def test_tpch_part_joins_are_broadcast(spark):
     # Q14/Q19 shapes: the part dimension must broadcast onto the lineitem
     # scan, and the brand/size disjunction must still prune the part scan.
-    for q in (entry._q_promo_revenue, entry._q_discount_band_revenue):
-        plan = plan_of(q(spark, SF_DIR))
-        assert "BroadcastHashJoin" in plan, q.__name__
-    plan = plan_of(entry._q_discount_band_revenue(spark, SF_DIR))
+    for name in ("promo_revenue", "discount_band_revenue"):
+        plan = plan_of(QUERIES[name](spark, SF_DIR))
+        assert "BroadcastHashJoin" in plan, name
+    plan = plan_of(QUERIES["discount_band_revenue"](spark, SF_DIR))
     # Catalyst derives a per-side residual of the OR-of-ANDs and pushes it
     # into BOTH scans: brand/size disjunction to part, quantity bands to
     # lineitem
@@ -408,7 +409,7 @@ def test_tpch_part_joins_are_broadcast(spark):
 def test_order_priority_exists_is_semi_join(spark):
     # Q4 shape: the correlated EXISTS must compile to ONE semi join on the
     # order key, never a per-order subquery or an inner join + distinct.
-    plan = plan_of(entry._q_order_priority_check(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["order_priority_check"](spark, SF_DIR), "simple")
     assert "LeftSemi" in plan
     assert plan.count("Join") == 1
 
@@ -416,7 +417,7 @@ def test_order_priority_exists_is_semi_join(spark):
 def test_top_supplier_scalar_max_is_broadcast(spark):
     # Q15 shape: the max-revenue scalar joins back via a broadcast of the
     # 1-row aggregate — no global sort of the supplier-revenue relation.
-    plan = plan_of(entry._q_top_supplier(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["top_supplier"](spark, SF_DIR), "simple")
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "Sort [total_revenue" not in plan
 
@@ -424,7 +425,7 @@ def test_top_supplier_scalar_max_is_broadcast(spark):
 def test_large_volume_having_runs_before_joins(spark):
     # Q18 shape: the sum_qty>300 filter must apply to the orderkey aggregate
     # BEFORE the orders/customer joins (aggregate appears under the joins).
-    plan = plan_of(entry._q_large_volume_orders(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["large_volume_orders"](spark, SF_DIR), "simple")
     agg_pos = plan.find("HashAggregate")
     join_pos = plan.find("Join")
     assert agg_pos != -1 and join_pos != -1
@@ -435,7 +436,7 @@ def test_large_volume_having_runs_before_joins(spark):
 
 def test_sales_opportunity_anti_join(spark):
     # Q22 shape: NOT EXISTS = left-anti join; scalar avg = broadcast.
-    plan = plan_of(entry._q_sales_opportunity(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["sales_opportunity"](spark, SF_DIR), "simple")
     assert "LeftAnti" in plan
     assert "Broadcast" in plan
 
@@ -636,7 +637,7 @@ _EXCHANGE_PINS = {
 
 def test_pinned_exchange_ceilings(spark):
     for name, ceiling in _EXCHANGE_PINS.items():
-        df = entry.queries()[name](spark, SF_DIR)
+        df = QUERIES[name](spark, SF_DIR)
         plan = plan_of(df, "simple")
         n = plan.count("Exchange") - plan.count("BroadcastExchange")
         assert n <= ceiling, (
@@ -813,7 +814,7 @@ def test_bloom_prune_probe_is_broadcast_and_verify_is_anti(spark):
     — a shuffled join there would defeat the runtime-filter pattern — and
     both the prune outcome split and the exact verify must be anti-joins,
     never subquery loops."""
-    plan = plan_of(entry._q_bloom_incremental_dedup(spark, SF_DIR))
+    plan = plan_of(QUERIES["bloom_incremental_dedup"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan  # bit-set probe (and positive split)
     assert plan.count("LeftAnti") >= 2  # negative split + exact verify
     assert "CartesianProduct" not in plan
@@ -822,7 +823,7 @@ def test_bloom_prune_probe_is_broadcast_and_verify_is_anti(spark):
 def test_bm25_topk_plan(spark):
     """Corpus scalars ride broadcast nested-loop 1-row joins; per-term df
     broadcasts; the final top-k is TakeOrdered, never a global sort."""
-    plan = plan_of(entry._q_bm25_topk(spark, SF_DIR))
+    plan = plan_of(QUERIES["bm25_topk_docs"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
     # the query-term filter must reach the token source before aggregation
@@ -833,7 +834,7 @@ def test_expectation_suite_is_single_aggregate(spark):
     """All six expectations reduce in ONE aggregation over ONE scan: the
     plan must contain exactly one scan of orders and no join/shuffle other
     than the final 1-row aggregate exchange."""
-    plan = plan_of(entry._q_dq_expectations(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["dq_expectations_orders"](spark, SF_DIR), "simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
 
@@ -842,14 +843,14 @@ def test_heavy_hitters_sketch_never_shuffles_vocabulary(spark):
     """The sketch aggregate's exchange must carry partial SKETCHES (a
     single-group aggregate), never a vocabulary-keyed hashpartitioning —
     that vocabulary shuffle is exactly what the sketch exists to avoid."""
-    plan = plan_of(entry._q_heavy_hitters(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["heavy_hitters_sketch"](spark, SF_DIR), "simple")
     assert "hashpartitioning(term" not in plan
     assert "SinglePartition" in plan  # partial-sketch merge
 
 
 def test_fim_transform_is_shuffle_free(spark):
     """FIM is a pure per-row projection: no Exchange of any kind."""
-    plan = plan_of(entry._q_fim_transform(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["fim_transform_docs"](spark, SF_DIR), "simple")
     assert "Exchange" not in plan
 
 
@@ -857,7 +858,7 @@ def test_filter_funnel_is_single_scan_single_aggregate(spark):
     """Every rule counter (standalone + cumulative) reduces in ONE
     aggregation over ONE documents scan — adding rules adds agg
     expressions, never passes."""
-    plan = plan_of(entry._q_filter_funnel(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["filter_funnel_docs"](spark, SF_DIR), "simple")
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
 
@@ -867,7 +868,7 @@ def test_gini_concentration_windows_are_aggregate_sized(spark):
     row data: exactly one scan, and the only hashpartitioning exchange
     is the group-count aggregate (the window itself runs on a
     SinglePartition frame of group rows)."""
-    plan = plan_of(entry._q_gini_sources(spark, SF_DIR), "simple")
+    plan = plan_of(QUERIES["gini_source_concentration"](spark, SF_DIR), "simple")
     assert plan.count("FileScan parquet") == 1
     assert "hashpartitioning(doc_id" not in plan  # never row-keyed
 

@@ -225,11 +225,14 @@ def test_paragraph_minhash_defaults_match_oracle_constants():
 
 
 def test_family_split_entry_stays_thin():
-    """Round-11 refactor (r10 verdict item 6): every query/oracle pair lives
-    in spark_auto_schema/registry/<family>.py; __spark_entry__.py holds only
-    entry(), the re-export block, and the queries()/oracle_sql() assembly.
-    Pin that so new operators land in a family module, not back in the
-    monolith — and so each family module stays independently importable."""
+    """Every query/oracle pair lives in spark_auto_schema/registry/<family>.py;
+    __spark_entry__.py holds only entry() and the queries()/oracle_sql()
+    assembly, which names each query through its family module
+    (``curation._q_filter_funnel``).  Pin that so new operators land in a
+    family module, not back in the monolith, that the entry file imports
+    family modules and never their names (a name import is a second place
+    to edit per query), and that each family module stays independently
+    importable."""
     import ast
     import importlib
 
@@ -243,21 +246,33 @@ def test_family_split_entry_stays_thin():
         f"found in __spark_entry__.py: {top_defs}"
     )
 
-    families = [
-        "inference", "schema_ddl", "relational", "extensions", "analytics",
-        "tpch", "lifecycle", "curation", "pipeline_r9", "pipeline_r11",
+    pkg = src.parent / "spark_auto_schema" / "registry"
+    name_imports = [
+        f"{n.module}.{a.name}"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+        and (n.module or "").startswith("spark_auto_schema.registry")
+        for a in n.names
+        if n.module != "spark_auto_schema.registry"
+        or not (pkg / f"{a.name}.py").is_file()
     ]
+    assert not name_imports, (
+        "__spark_entry__.py imports registry modules, not their names: "
+        f"{name_imports[:5]}"
+    )
+
+    families = sorted(p.stem for p in pkg.glob("*.py") if p.stem != "__init__")
     for fam in families:
         mod = importlib.import_module(f"spark_auto_schema.registry.{fam}")
         assert mod.__doc__, fam
 
 
 def test_family_modules_define_disjoint_names():
-    """The entry file re-exports EVERY top-level name from every family
-    module; two modules defining the same name would silently shadow one
-    another there (import order wins) — exactly the failure a flat module
-    could never have.  Pin disjointness, and pin that the cross-module
-    import graph stays acyclic so the package keeps importing."""
+    """Each top-level name of the registry is defined by one family
+    module, so a name read in a test or a sibling module has one home and
+    a grep finds it once.  Pin disjointness, and pin that the
+    cross-module import graph stays acyclic so the package keeps
+    importing."""
     import ast
     import collections
 

@@ -379,6 +379,12 @@ def test_ops_split_words_only_in_tokens():
             else:
                 found.append(f"{path.name}:{i}: {line.strip()}")
     assert allowed == len(_ALLOWED_SPLITS)
+    # the registry's Spark queries count words through _words too (their
+    # DuckDB oracles through registry.extensions._words_sql)
+    for path in sorted((ops_dir.parent / "registry").glob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "F.split(" in line:
+                found.append(f"registry/{path.name}:{i}: {line.strip()}")
     assert found == []
 
 
