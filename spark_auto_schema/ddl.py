@@ -29,6 +29,15 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_$]*")
 # a type name: words, then an optional (precision[, scale]) —
 # ``varchar(256)``, ``numeric(18,2)``, ``double precision``
 _TYPE_NAME = re.compile(r"[A-Za-z]\w*( [A-Za-z]\w*)*(\(\d+(, ?\d+)?\))?", re.ASCII)
+# an innermost nested type, in Spark's simpleString form (what inference
+# emits with compat_nested=False): ``array<float>``, ``map<string,int>``,
+# ``struct<a:int,b:string>``; an element is a type name or ``#``, a nested
+# type already reduced
+_E = rf"(?:{_TYPE_NAME.pattern}|#)"
+_FIELD = rf"[A-Za-z_]\w*:{_E}"
+_NESTED = re.compile(
+    rf"array<{_E}>|map<{_E},{_E}>|struct<{_FIELD}(?:,{_FIELD})*>", re.ASCII
+)
 
 
 def _check_ident(name: str, what: str = "identifier") -> str:
@@ -45,7 +54,16 @@ def _check_ident_list(names: str, what: str) -> str:
 
 
 def _check_type(name: str, what: str = "type") -> str:
-    if not _TYPE_NAME.fullmatch(name or ""):
+    """Validate a column type: a :data:`_TYPE_NAME`, or a nested type over
+    them, whose innermost nested types reduce to ``#`` until one is left."""
+    # ``#`` marks a reduced nested type, so an input holding one is invalid
+    t = "" if "#" in (name or "") else name or ""
+    while True:
+        reduced = _NESTED.sub("#", t)
+        if reduced == t:
+            break
+        t = reduced
+    if t != "#" and not _TYPE_NAME.fullmatch(t):
         raise ValueError(f"invalid {what}: {name!r}")
     return name
 
@@ -91,7 +109,7 @@ def generate_table_ddl(
     body_lines = []
     for j, (name, rtype) in enumerate(columns):
         _check_ident(name, "column")
-        rtype = "varchar(256)" if rtype == "notype" else rtype
+        rtype = "varchar(256)" if rtype == "notype" else _check_type(rtype)
         prefix = "" if j == 0 else ", "
         body_lines.append(f'{prefix}"{name}" {rtype}')
     ddl = f"CREATE TABLE {schema}.{table} (\n" + "\n".join(body_lines) + "\n"
@@ -127,7 +145,8 @@ def generate_column_ddl(
     _check_ident(schema, "schema")
     _check_ident(table, "table")
     return "\n".join(
-        f"ALTER TABLE {schema}.{table} ADD COLUMN {_check_ident(f, 'column')} {t};"
+        f"ALTER TABLE {schema}.{table} ADD COLUMN {_check_ident(f, 'column')} "
+        f"{_check_type(t)};"
         for f, t in missing
     )
 
@@ -148,7 +167,7 @@ def generate_spark_table_ddl(
     _check_ident(schema, "schema")
     _check_ident(table, "table")
     cols = ",\n".join(
-        f"  {_check_ident(n, 'column')} {redshift_to_spark_type(t)}"
+        f"  {_check_ident(n, 'column')} {redshift_to_spark_type(_check_type(t))}"
         for n, t in columns
     )
     ddl = (
@@ -179,7 +198,7 @@ def generate_spark_column_ddl(
     _check_ident(schema, "schema")
     _check_ident(table, "table")
     cols = ", ".join(
-        f"{_check_ident(f, 'column')} {redshift_to_spark_type(t)}"
+        f"{_check_ident(f, 'column')} {redshift_to_spark_type(_check_type(t))}"
         for f, t in missing
     )
     return f"ALTER TABLE {schema}.{table} ADD COLUMNS ({cols});"

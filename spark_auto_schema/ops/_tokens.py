@@ -7,7 +7,7 @@
 * :func:`_mean_word_len`: the characters of those words over their count,
   NULL for a text with no word.
 * :func:`_word_counts`: how often each of those words occurs per group.
-* :func:`_word_ngrams`: word n-grams.
+* :func:`_word_ngrams`: word n-grams, as SQL text.
 * :func:`_term_key`: the lowercase ``[a-z0-9 ]`` form that term counts
   and fingerprints read.
 * :func:`_hex_int`: a slice of a hex digest as a long.
@@ -52,16 +52,18 @@ def _word_counts(df: DataFrame, text_col: str, *keys: Column) -> DataFrame:
     return rows.groupBy(*rows.columns).agg(F.count(F.lit(1)).alias("c"))
 
 
-def _word_ngrams(text: Column, n: int) -> Column:
-    """Word ``n``-grams of ``text`` split on single spaces, in order,
-    duplicates kept: for each word start, the ``n`` words from there joined
-    by single spaces.  One ``regexp_extract_all`` with a literal (compiled
-    once) pattern: a zero-width match at each word start whose lookahead
-    captures the next ``n`` words.  A text of fewer than ``n`` words yields
-    itself (the short-doc clamp); a NULL text yields ``['']``."""
-    t = F.coalesce(text, F.lit(""))
-    g = F.regexp_extract_all(t, F.lit("(?<=^| )(?=([^ ]*" + " [^ ]*" * (n - 1) + "))"), 1)
-    return F.when(F.size(g) == 0, F.array(t)).otherwise(g)
+def _word_ngrams(text: str, n: int) -> str:
+    """Word ``n``-grams of the SQL text ``text`` split on single spaces, as
+    SQL text: for each word start, the ``n`` words from there joined by
+    single spaces, in order, duplicates kept.  One ``regexp_extract_all``
+    with a literal (compiled once) pattern: a zero-width match at each word
+    start whose lookahead captures the next ``n`` words.  A text of fewer
+    than ``n`` words yields itself (the short-doc clamp); a NULL text
+    yields ``['']``.  SQL text so a caller composes it into its own
+    expression without a JVM call per function."""
+    t = f"coalesce({text}, '')"
+    g = f"regexp_extract_all({t}, '(?<=^| )(?=([^ ]*{' [^ ]*' * (n - 1)}))', 1)"
+    return f"CASE WHEN size({g}) = 0 THEN array({t}) ELSE {g} END"
 
 
 def _term_key(text: Column) -> Column:

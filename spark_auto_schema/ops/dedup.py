@@ -9,7 +9,14 @@ Scale design (100 TB):
   -> band buckets -> candidate pairs only *within* buckets.  Never an
   all-pairs cross join; candidate count scales with collision rate, not n^2.
   Exact verify scores each candidate pair from the two docs' shingle sets,
-  collected by that same doc-id shuffle.
+  collected by that same doc-id shuffle.  The pair call runs one bounded
+  collect (:func:`_driver_local`): a pair set under
+  ``_DRIVER_CC_EDGE_BUDGET // 2`` rows comes back as a local frame, so the
+  caller's reads and :func:`dedup_clusters` on it run no Spark job; above
+  the budget the lazy frame comes back, and the caller's action repeats
+  the candidate and verify stages from the cached signatures.  Each step
+  is one SQL text, so the signature and band widths cost no JVM round
+  trip per hash.
 * SimHash — 64-bit signatures via one explode + groupBy; near-dup pairs by
   pigeonhole chunk bucketing (hamming <= 3 guarantees one of 4 equal 16-bit
   chunks -> 65,536 buckets), exact hamming check only inside buckets.
@@ -28,16 +35,16 @@ from pyspark.sql import types as T
 
 from .._cache import local_checkpoint, persist, release_caches  # noqa: F401
 from .._snap import snap
-from ..io import local_df
+from ..io import local_df, sql_name
 from ._tokens import _hex_int, _word_ngrams, _word_rows, _words
 
 
 # ------------------------------------------------------------------ exact
-def _content_digest(text: Column) -> Column:
-    """The exact-content key of every exact-dedup operator:
-    ``md5(coalesce(text, ''))``, so NULL and empty texts are one content
-    and the key is never NULL."""
-    return F.md5(F.coalesce(text, F.lit("")))
+def _content_digest(text: str) -> str:
+    """The exact-content key of every exact-dedup operator, as SQL text
+    over the SQL text ``text``: ``md5(coalesce(text, ''))``, so NULL and
+    empty texts are one content and the key is never NULL."""
+    return f"md5(coalesce({text}, ''))"
 
 
 def hash_dedup(
@@ -48,11 +55,11 @@ def hash_dedup(
 
     Hashing first keeps the shuffle key small (16 bytes instead of full
     documents) — at 100 TB the shuffle moves hashes, not texts."""
-    h = _content_digest(F.col(content_col))
+    i = sql_name(id_col)
     return (
-        df.select(F.col(id_col), h.alias("content_hash"))
+        df.selectExpr(i, f"{_content_digest(sql_name(content_col))} AS content_hash")
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.expr(f"min({i}) AS keep_id"), F.expr("count(1) AS dup_count"))
     )
 
 
@@ -72,13 +79,12 @@ def shingles(
     and set sizes are collision-free w.h.p. while the shuffle moves 8-byte
     keys instead of strings — the 100 TB configuration.
     """
-    grams = _word_ngrams(F.col(text_col), n)
-    out = (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(grams)).alias("shingle"))
-        .where(F.length("shingle") > 0)
-    )
+    grams = _word_ngrams(sql_name(text_col), n)
+    out = df.selectExpr(
+        f"{sql_name(id_col)} AS id", f"explode(array_distinct({grams})) AS shingle"
+    ).where("length(shingle) > 0")
     if hashed:
-        out = out.select("id", F.xxhash64("shingle").alias("shingle"))
+        out = out.selectExpr("id", "xxhash64(shingle) AS shingle")
     return out
 
 
@@ -95,45 +101,39 @@ def _minhash_sig(
 
     ``with_set`` appends ``set``, the doc's exact-verify shingle set, built
     by the same ``groupBy("id")``: the raw shingles on the md5 grade (what
-    the oracles replay), else their xxhash64 (8-byte set members)."""
-    if md5_grade:
-        aggs = [
-            F.min(
-                F.substring(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))), 1, 16)
-            ).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
+    the oracles replay), else their xxhash64 (8-byte set members).
+
+    One SQL text: a ``named_struct`` of every aggregate, so building the
+    plan costs the same few JVM calls at any ``num_hashes``."""
+    h = (
+        "min(substring(md5(concat('{i}:', shingle)), 1, 16))"
+        if md5_grade
+        else "min(xxhash64({i}, shingle))"
+    )
+    fields = [f"'h{i}', " + h.format(i=i) for i in range(num_hashes)]
     if with_set:
-        key = F.col("shingle") if md5_grade else F.xxhash64("shingle")
-        aggs.append(F.collect_set(key).alias("set"))
-    return sh.groupBy("id").agg(*aggs)
+        key = "shingle" if md5_grade else "xxhash64(shingle)"
+        fields.append(f"'set', collect_set({key})")
+    sig = F.expr(f"named_struct({', '.join(fields)}) AS sig")
+    return sh.groupBy("id").agg(sig).selectExpr("id", "sig.*")
 
 
 def _band_buckets(
     sig: DataFrame, num_hashes: int, bands: int, md5_grade: bool
 ) -> DataFrame:
-    """(id, band, bucket) LSH entries: one bucket hash per signature band."""
+    """(id, band, bucket) LSH entries: one bucket hash per signature band,
+    from one SQL-text ``inline`` of the band structs."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
 
-    def _bucket(b: int):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        return F.md5(F.concat_ws("|", *cols)) if md5_grade else F.xxhash64(*cols)
+    def _bucket(b: int) -> str:
+        hs = ", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))
+        return f"md5(concat_ws('|', {hs}))" if md5_grade else f"xxhash64({hs})"
 
-    band_entries = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
-            for b in range(bands)
-        ]
+    entries = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {_bucket(b)})" for b in range(bands)
     )
-    return sig.select("id", F.explode(band_entries).alias("be")).select(
-        "id", F.col("be.band").alias("band"), F.col("be.bucket").alias("bucket")
-    )
+    return sig.selectExpr("id", f"inline(array({entries}))")
 
 
 def minhash_signatures(
@@ -165,10 +165,19 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, jaccard) with id_a < id_b.  Docs land in the same
     bucket iff one band of their signatures matches exactly; candidates are
     generated by an equi-join on (band index, band hash) — bucket-local, not
-    all-pairs."""
-    return _lsh_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_n, verify_threshold,
-        md5_grade=False,
+    all-pairs.
+
+    Not plan-only: the call runs one bounded collect of the pairs
+    (:func:`_driver_local`).  A pair set under the driver budget comes back
+    as a local frame, so collecting it and :func:`dedup_clusters` on it run
+    no Spark job.  Above the budget the lazy frame comes back, and the
+    caller's action repeats the candidate and verify stages from the cached
+    signatures."""
+    return _driver_local(
+        _lsh_plan(
+            df, text_col, id_col, num_hashes, bands, shingle_n, verify_threshold,
+            md5_grade=False,
+        )
     )
 
 
@@ -179,13 +188,13 @@ def _band_candidates(buckets: DataFrame) -> DataFrame:
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
         a.join(b, on=["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .where("a.id < b.id")
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
 
 
-def _lsh_pairs(
+def _lsh_plan(
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -195,9 +204,9 @@ def _lsh_pairs(
     verify_threshold: float | None,
     md5_grade: bool,
 ) -> DataFrame:
-    """The one banded MinHash-LSH pipeline behind :func:`minhash_lsh_pairs`
-    and :func:`minhash_lsh_pairs_md5`; ``md5_grade`` picks the hash
-    construction of every step."""
+    """The lazy plan of the one banded MinHash-LSH pipeline behind
+    :func:`minhash_lsh_pairs` and :func:`minhash_lsh_pairs_md5`;
+    ``md5_grade`` picks the hash construction of every step."""
     verify = verify_threshold is not None
     # the one cached frame: both sides of the band self-join read it, and
     # so do both set joins of the verify; under a cached child AQE's
@@ -215,14 +224,15 @@ def _lsh_pairs(
     return _pair_jaccard(cand, sig).where(F.col("jaccard") >= verify_threshold)
 
 
-def _jaccard(inter: Column, sz_a: Column, sz_b: Column) -> Column:
-    """Jaccard from an intersection and the two set sizes, snapped through
+def _jaccard() -> Column:
+    """``jaccard`` of a frame with the columns ``inter`` (an intersection
+    size) and ``sz_a``, ``sz_b`` (the two set sizes), snapped through
     DECIMAL(18,12) before the 4-decimal round: plain round(double, 4)
     half-rounds differently from DuckDB on half-ulp boundaries (the
     dup_frac divergence class), and a bounded fraction cannot overflow
     18,12.  The one formula of every exact-Jaccard path, so they stay in
     lockstep with the oracles."""
-    return snap(inter / (sz_a + sz_b - inter), 4)
+    return snap(F.expr("inter / (sz_a + sz_b - inter)"), 4).alias("jaccard")
 
 
 def _pair_jaccard(
@@ -246,21 +256,21 @@ def _pair_jaccard(
     merge into one set, as they merge into one signature.  Joins are
     unhinted — AQE picks broadcast when a side is actually small."""
     sets_b = sets_a if sets_b is None else sets_b
-    a = sets_a.select(F.col("id").alias(a_col), F.col("set").alias("__a"))
-    b = sets_b.select(F.col("id").alias(b_col), F.col("set").alias("__b"))
-    inter, sz_a, sz_b = F.col("inter"), F.col("sz_a"), F.col("sz_b")
+    qa, qb = sql_name(a_col), sql_name(b_col)
+    a = sets_a.selectExpr(f"id AS {qa}", "`set` AS __a")
+    b = sets_b.selectExpr(f"id AS {qb}", "`set` AS __b")
     return (
         pairs.join(a, on=a_col)
         .join(b, on=b_col)
-        .select(
-            a_col,
-            b_col,
-            F.size(F.array_intersect("__a", "__b")).alias("inter"),
-            F.size("__a").alias("sz_a"),
-            F.size("__b").alias("sz_b"),
+        .selectExpr(
+            qa,
+            qb,
+            "size(array_intersect(__a, __b)) AS inter",
+            "size(__a) AS sz_a",
+            "size(__b) AS sz_b",
         )
-        .where(inter > 0)
-        .select(a_col, b_col, _jaccard(inter, sz_a, sz_b).alias("jaccard"))
+        .where("inter > 0")
+        .select(a_col, b_col, _jaccard())
     )
 
 
@@ -357,10 +367,9 @@ def _jaccard_from_shingles(
 ) -> DataFrame:
     """(id_a, id_b, jaccard) for every pair in ``sh`` sharing a shingle,
     over the ``max_df``-capped shingle space of :func:`_co_shingle_pairs`."""
-    jac = _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b"))
     return (
         _co_shingle_pairs(sh, max_df)
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        .select("id_a", "id_b", _jaccard())
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -410,10 +419,17 @@ def minhash_lsh_pairs_md5(
     and scale shape as :func:`minhash_lsh_pairs` (one explode, one
     groupBy(id), bucket-local candidate join); xxhash64 stays the fast
     default for production, this variant is the verification-grade twin.
+
+    Not plan-only, as :func:`minhash_lsh_pairs`: one bounded collect; a
+    pair set under the driver budget comes back as a local frame, and
+    above it the caller's action repeats the candidate and verify stages
+    from the cached signatures.
     """
-    return _lsh_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_n, verify_threshold,
-        md5_grade=True,
+    return _driver_local(
+        _lsh_plan(
+            df, text_col, id_col, num_hashes, bands, shingle_n, verify_threshold,
+            md5_grade=True,
+        )
     )
 
 
@@ -448,7 +464,7 @@ def _absent_from(
     a left-anti join on the corpus's distinct :func:`_content_digest`
     hashes."""
     corpus = corpus_df.select(
-        _content_digest(F.col(content_col)).alias("content_hash")
+        F.expr(_content_digest(sql_name(content_col))).alias("content_hash")
     ).distinct()
     return batch.join(corpus, on="content_hash", how="left_anti")
 
@@ -770,14 +786,34 @@ def ngram_novelty(
 # below this many SYMMETRIZED edges the component labeling is a collected
 # union-find instead of several distributed join+localCheckpoint rounds
 # whose fixed per-round cost dominates small graphs.  Above it the
-# iterative min-label propagation runs — the corpus-scale path.  Budget
-# sizing (r14 ADVICE): a collected edge is a pyspark Row (~150-300 B with
+# iterative min-label propagation runs — the corpus-scale path.  The same
+# budget bounds the MinHash-LSH pair sets returned as local frames
+# (_driver_local), so such a pair set always takes the union-find path.
+# Budget sizing: a collected edge is a pyspark Row (~150-300 B with
 # object overhead) plus up to two parent/comp_min dict entries, so 250k
 # edges bounds the transient driver footprint at roughly 100 MB — well
 # inside the 8 GB driver — where the former 1M budget could reach several
 # hundred MB.  Tests monkeypatch this to pin bit-identical results across
 # both paths.
 _DRIVER_CC_EDGE_BUDGET = 250_000
+
+
+def _driver_rows(df: DataFrame) -> list | None:
+    """The rows of ``df`` when it is driver-sized, else None: the one
+    bounded collect (at most ``_DRIVER_CC_EDGE_BUDGET // 2 + 1`` rows)
+    behind the driver cutovers of :func:`_driver_local` and
+    :func:`dedup_clusters`.  A row set fits when its symmetrized edge count
+    (2 x rows) fits the budget."""
+    rows = df.limit(_DRIVER_CC_EDGE_BUDGET // 2 + 1).collect()
+    return rows if 2 * len(rows) <= _DRIVER_CC_EDGE_BUDGET else None
+
+
+def _driver_local(df: DataFrame) -> DataFrame:
+    """``df`` as a local frame when :func:`_driver_rows` collects all of
+    it, else ``df`` itself: the cutover that ends both MinHash-LSH pair
+    functions, so a driver-sized pair set is computed once."""
+    rows = _driver_rows(df)
+    return df if rows is None else local_df(df.sparkSession, rows, df.schema)
 
 
 def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -807,9 +843,9 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     cluster by definition and joining them in would just re-shuffle the
     corpus.
 
-    Path cutover: one collect of at most ``_DRIVER_CC_EDGE_BUDGET // 2 + 1``
-    pairs decides it.  When the symmetrized edge count (2 x pairs) fits
-    the budget, those pairs feed a driver-side union-find and the result
+    Path cutover: one bounded collect (:func:`_driver_rows`) decides it.
+    When the symmetrized edge count (2 x pairs) fits the budget, those
+    pairs feed a driver-side union-find and the result
     is a local relation — near-dup graphs are usually a few edges per
     clustered doc, so the edge count a single machine handles in
     milliseconds costs several distributed rounds of
@@ -823,8 +859,8 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # read by the bounded collect and, above the budget, by both
         # directions of the edge union: the caller's lineage runs once
         src = persist(src)
-    rows = src.limit(_DRIVER_CC_EDGE_BUDGET // 2 + 1).collect()
-    if 2 * len(rows) <= _DRIVER_CC_EDGE_BUDGET:
+    rows = _driver_rows(src)
+    if rows is not None:
         parent: dict = {}
 
         def find(x):
@@ -975,11 +1011,12 @@ def contamination_ngram_sweep(
     def tagged_grams(df: DataFrame) -> DataFrame:
         # identical per-n gram construction to shingles(); one (n, grams)
         # struct per swept n, so one scan+explode serves every n in the sweep
+        t = sql_name(text_col)
         per_n = F.array(
             *[
                 F.struct(
                     F.lit(n).alias("n"),
-                    F.array_distinct(_word_ngrams(F.col(text_col), n)).alias("gs"),
+                    F.array_distinct(F.expr(_word_ngrams(t, n))).alias("gs"),
                 )
                 for n in ns
             ]
@@ -1810,7 +1847,7 @@ def bloom_bitset(
     future batch without re-shuffling the corpus.  Deliberately md5-based
     so the construction is exactly replayable by an ANSI-SQL oracle
     (Spark's BloomFilter sketch is not)."""
-    h = _content_digest(F.col(content_col))
+    h = F.expr(_content_digest(sql_name(content_col)))
     bits = _bloom_bits(h, num_bits, num_hashes)
     return df.select(F.explode(bits).alias("bit")).distinct()
 
@@ -2197,7 +2234,7 @@ def cross_source_duplication(
     (pair branch + each totals side), no digest self-join anywhere."""
     sets = (
         df.select(
-            _content_digest(F.col(text_col)).alias("d"),
+            F.expr(_content_digest(sql_name(text_col))).alias("d"),
             F.col(group_col).alias("src"),
         )
         .groupBy("d")
@@ -2272,7 +2309,7 @@ def _exact_winners(
             F.col(id_col),
             F.col(group_col).alias("src"),
             *carry,
-            _content_digest(F.col(text_col)).alias("__d"),
+            F.expr(_content_digest(sql_name(text_col))).alias("__d"),
         )
         .withColumn("__winner", F.first(id_col).over(w))
         .withColumn("__kept", F.col(id_col) == F.col("__winner"))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .._cache import persist, release_caches  # noqa: F401 re-export
 from .._snap import snap
+from ..io import sql_name
 from ._tokens import (
     _mean_word_len,
     _term_key,
@@ -250,7 +251,7 @@ def repetition_ratio(
     Computed with array functions on the row (one ``regexp_extract_all``
     for the grams, then ``size`` and ``array_distinct``) — no explode, no
     shuffle: the per-document gram list never leaves its row."""
-    grams = _word_ngrams(F.col(text_col), 3)
+    grams = F.expr(_word_ngrams(sql_name(text_col), 3))
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
     return df.select(
@@ -425,7 +426,7 @@ def tfidf_top_pairs(
     term text, so the rewrite is semantics-preserving up to 64-bit hash
     collisions (~n_terms^2 / 2^64 — negligible at any corpus size where
     this operator is usable)."""
-    grams = _word_ngrams(F.col(text_col), n)
+    grams = F.expr(_word_ngrams(sql_name(text_col), n))
     toks = (
         df.select(F.col(id_col).alias("id"), F.explode(grams).alias("__g"))
         .where(F.length("__g") > 0)

@@ -147,3 +147,70 @@ def test_export_field_type_accepted(good):
         export_field_name="export_date", export_field_type=good,
     )
     assert f" , export_date {good}\n" in out
+
+
+_BAD_COLUMN_TYPES = [
+    "int; DROP TABLE x",
+    "int); DROP TABLE x; --",
+    "numeric(18,2)); DROP TABLE x; --",
+    "decimal(38,18) NOT NULL, evil int",
+    "array<int>; DROP TABLE x",
+    "array<int>x",
+    "struct<a int>",
+    "#",
+    "int\n",
+]
+
+
+@pytest.mark.parametrize("bad", _BAD_COLUMN_TYPES)
+def test_column_type_rejected_in_every_dialect(bad):
+    # every emitter interpolates the column type into the statement, and
+    # the Spark dialect maps a decimal's precision text through as written
+    cols = [("c", bad)]
+    for emit in (
+        lambda: ddl.generate_table_ddl("analytics", "t1", cols),
+        lambda: ddl.generate_column_ddl("analytics", "t1", cols),
+        lambda: ddl.generate_spark_table_ddl("analytics", "t1", cols),
+        lambda: ddl.generate_spark_column_ddl("analytics", "t1", cols),
+    ):
+        with pytest.raises(ValueError):
+            emit()
+
+
+@pytest.mark.parametrize(
+    "good",
+    [
+        "int2", "int4", "int8", "float8", "bool", "date", "timestamp",
+        "varchar(256)", "varchar(65535)", "numeric(18,2)", "double precision",
+        "notype", "binary", "array<float>", "struct<a:int>",
+        "map<string,array<int>>", "struct<a:int,b:struct<c:string>>",
+        "array<decimal(10,2)>",
+    ],
+)
+def test_column_type_accepted(good):
+    rtype = "varchar(256)" if good == "notype" else good
+    assert f'"c" {rtype}\n' in ddl.generate_table_ddl("analytics", "t1", [("c", good)])
+    assert ddl.generate_column_ddl("analytics", "t1", [("c", good)]).endswith(
+        f" c {good};"
+    )
+    assert ddl.generate_spark_column_ddl("analytics", "t1", [("c", good)])
+
+
+def test_native_nested_inference_types_pass_the_type_check(spark):
+    # compat_nested=False reports Spark's simpleString for nested columns;
+    # the DDL emitters must take every type inference emits
+    from spark_auto_schema.inference import infer_table_schema
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0], {"k": 1}, (3, "x"))],
+        "id int, v array<float>, m map<string,int>, s struct<a:int,b:string>",
+    )
+    cols = [
+        (c.name, c.proposed_type)
+        for c in infer_table_schema(df, compat_nested=False)
+    ]
+    assert {t for _, t in cols} >= {
+        "array<float>", "map<string,int>", "struct<a:int,b:string>"
+    }
+    ddl.generate_table_ddl("analytics", "t1", cols)
+    ddl.generate_spark_table_ddl("analytics", "t1", cols)

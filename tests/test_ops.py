@@ -119,7 +119,7 @@ def test_word_ngrams_matches_lambda_form(spark, n):
         F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
     )
-    got = dedup._word_ngrams(F.col("text"), n)
+    got = F.expr(dedup._word_ngrams("text", n))
     assert df.where(~got.eqNullSafe(ref)).count() == 0
 
 
@@ -134,6 +134,79 @@ def test_ngram_jaccard_finds_clones(spark, docs_with_dups):
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     # each clone pairs with its original at jaccard 1.0
     assert {(i, i + 100000) for i in range(3)} <= got
+
+
+@pytest.mark.parametrize("verify", [None, 0.5])
+@pytest.mark.parametrize("engine", ["minhash_lsh_pairs", "minhash_lsh_pairs_md5"])
+def test_lsh_pairs_under_budget_are_local_and_equal_the_lazy_path(
+    spark, docs_with_dups, engine, verify, monkeypatch
+):
+    """A pair set under the driver budget comes back as a local frame:
+    its rows equal the lazy path's (budget 0), and collecting it and
+    clustering it start no Spark job."""
+    lsh = getattr(dedup, engine)
+    dedup.release_caches()
+    pairs = lsh(docs_with_dups, verify_threshold=verify)
+    assert pairs.isLocal()
+    sc = spark.sparkContext
+    sc.setJobGroup("sas-lsh-local-jobs", "local pair set job-count pin")
+    try:
+        local_rows = sorted(tuple(r) for r in pairs.collect())
+        clusters = dedup.dedup_clusters(pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("sas-lsh-local-jobs") == []
+    assert {(i, i + 100000) for i in range(3)} <= {r[:2] for r in local_rows}
+    assert clusters
+    dedup.release_caches()
+
+    monkeypatch.setattr(dedup, "_DRIVER_CC_EDGE_BUDGET", 0)
+    lazy = lsh(docs_with_dups, verify_threshold=verify)
+    assert not lazy.isLocal()
+    assert sorted(tuple(r) for r in lazy.collect()) == local_rows
+    assert lazy.schema == pairs.schema
+    dedup.release_caches()
+
+
+@pytest.mark.parametrize("md5_grade", [False, True])
+def test_signature_and_band_plans_cost_the_same_jvm_calls_at_any_width(
+    spark, docs, md5_grade, monkeypatch
+):
+    """The signature aggregate and the band buckets are SQL text: building
+    their plans makes as many JVM round trips at 64 hashes / 16 bands as
+    at 16 / 4, so a Column per hash or band cannot come back."""
+    import gc
+
+    sh = dedup.shingles(docs)
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    def build_calls(num_hashes, bands):
+        dedup._band_buckets(  # warm: the first build may resolve JVM names
+            dedup._minhash_sig(sh, num_hashes, md5_grade, with_set=True),
+            num_hashes, bands, md5_grade,
+        )
+        calls[0] = 0
+        dedup._band_buckets(
+            dedup._minhash_sig(sh, num_hashes, md5_grade, with_set=True),
+            num_hashes, bands, md5_grade,
+        )
+        return calls[0]
+
+    monkeypatch.setattr(client, "send_command", counting)
+    gc.disable()  # no finalizer round trip lands inside a count
+    try:
+        narrow, wide = build_calls(16, 4), build_calls(64, 16)
+    finally:
+        gc.enable()
+    assert narrow > 0
+    assert narrow == wide
 
 
 @pytest.mark.parametrize("engine", ["minhash_lsh_pairs", "minhash_lsh_pairs_md5"])

@@ -1126,16 +1126,19 @@ def test_dsir_single_feature_pass_takeordered_cut(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_paragraph_minhash_bucket_local_no_cartesian(spark):
+def test_paragraph_minhash_bucket_local_no_cartesian(spark, monkeypatch):
     """Candidate generation stays band-bucket-local (equi-join on
     (band, bucket)) at segment granularity — no cartesian product, no
-    corpus-wide nested loop."""
+    corpus-wide nested loop.  Read on the lazy segment-pair plan (budget
+    0): under the budget the pairs are a local frame."""
     from spark_auto_schema.io import read_table
     from spark_auto_schema.ops import dedup
 
+    monkeypatch.setattr(dedup, "_DRIVER_CC_EDGE_BUDGET", 0)
     docs = read_table(spark, SF_DIR, "documents")
     plan = plan_of(dedup.paragraph_minhash_pairs(docs), "simple")
     dedup.release_caches()
+    assert "InMemoryTableScan" in plan  # the signature aggregate
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -1332,8 +1335,13 @@ def test_candidate_verify_paths_have_no_unbounded_broadcast_hint(spark):
             "ResolvedHint"
         )
 
-    assert hints(dedup.minhash_lsh_pairs(docs, verify_threshold=0.5)) == 0
-    assert hints(dedup.minhash_lsh_pairs_md5(docs, verify_threshold=0.5)) == 0
+    # the lazy pair plans: a returned pair set under the driver budget is
+    # a LocalRelation, which carries no hint whatever the pipeline does
+    for md5_grade in (False, True):
+        lazy = dedup._lsh_plan(docs, "text", "doc_id", 16, 4, 3, 0.5, md5_grade)
+        assert "Join" in lazy._jdf.queryExecution().analyzed().toString()
+        assert hints(lazy) == 0
+    dedup.release_caches()
     assert (
         hints(
             dedup.incremental_near_dedup(
@@ -1495,14 +1503,20 @@ def test_pair_engines_persist_shared_shingle_base(spark):
     dedup.release_caches()
     assert not _cache._CACHED
 
+    # the returned pair set is under the driver budget, so it is local;
+    # the lazy pair plan that computed it reads the one cached frame
     out2 = dedup.minhash_lsh_pairs_md5(half, verify_threshold=0.5)
+    assert len(_cache._CACHED) == 1  # the signature+set aggregate
+    assert "LocalTableScan" in plan_of(out2, "simple")
+    dedup.release_caches()
+    lazy = dedup._lsh_plan(half, "text", "doc_id", 16, 4, 3, 0.5, md5_grade=True)
     assert len(_cache._CACHED) == 1  # the signature+set aggregate
     assert all(
         df.columns[:2] == ["id", "h0"] and "set" in df.columns
         for df, _ in _cache._CACHED
     )
-    assert "InMemoryTableScan" in plan_of(out2, "simple")
-    out2.count()
+    assert "InMemoryTableScan" in plan_of(lazy, "simple")
+    assert lazy.count() == out2.count()
     dedup.release_caches()
 
     # capped engine: the pre-cap relation (hot aggregate + anti-join input)
