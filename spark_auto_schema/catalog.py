@@ -17,10 +17,9 @@ behaves exactly like the reference's ``udt_name || '(len)'`` strings.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from .ddl import _check_ident
-from .io import local_df, sql_name
+from .io import sql_name, sql_string
 from .types import spark_to_redshift_type
 
 
@@ -38,26 +37,27 @@ def table_exists(spark: SparkSession, schema: str, table: str) -> bool:
     return spark.catalog.tableExists(_table_name(schema, table))
 
 
-_DEPLOYED_SCHEMA = T.StructType(
-    [T.StructField(c, T.StringType(), False) for c in ("field", "deployed_type")]
-)
-
-
 def deployed_schema_df(spark: SparkSession, schema: str, table: str) -> DataFrame:
     """Deployed columns as (field, deployed_type) in ordinal order.
 
     Mirrors the reference's information_schema query (RAS.py:215-216) against
     the Spark catalog.  Resolving the table's schema is driver-local metadata
-    work; the result is a local relation, so the diff reads it without a
-    Spark job.  A table that does not exist has no deployed columns, as the
-    reference's query returns no rows for it, so every proposed column
-    diffs as MISSING.
+    work, and the result is an inline ``VALUES`` table built from SQL text: a
+    local relation that the diff reads without a Spark job or a
+    ``createDataFrame``.  A table that does not exist has no deployed
+    columns, as the reference's query returns no rows for it, so every
+    proposed column diffs as MISSING.
     """
     rows = []
     if table_exists(spark, schema, table):
         columns = spark.table(_table_name(schema, table)).schema
         rows = [(c.name, spark_to_redshift_type(c.dataType)) for c in columns]
-    return local_df(spark, rows, _DEPLOYED_SCHEMA)
+    # VALUES needs a row: an empty side filters out a blank one
+    values = ", ".join(
+        f"({sql_string(f)}, {sql_string(t)})" for f, t in rows or [("", "")]
+    )
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t(field, deployed_type){where}")
 
 
 def deployed_columns_query(
@@ -123,10 +123,10 @@ def deployed_schema_df_jdbc(
     dependency.
 
     The query is pushed down to the warehouse (a single-partition read of a
-    catalog-sized result — no parallelism needed); the result feeds
-    :func:`spark_auto_schema.diff.evaluate_diffs` exactly like
-    :func:`deployed_schema_df`.  ``properties`` passes JDBC options through
-    (``user``, ``password``, ``driver``, ...)."""
+    catalog-sized result — no parallelism needed); the result is the
+    ``deployed_df`` of ``SparkAutoSchema.evaluate_table_ddl_diffs``, read
+    like :func:`deployed_schema_df`.  ``properties`` passes JDBC options
+    through (``user``, ``password``, ``driver``, ...)."""
     query = deployed_columns_query(schema, table, dialect=dialect)
     df = _jdbc_load(spark, url, query, dict(properties or {}))
     # normalize column case: some JDBC catalogs upper-case unquoted aliases

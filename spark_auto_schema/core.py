@@ -5,14 +5,16 @@ Mirrors the 9-method surface of ``RedshiftAutoSchema``
 README.md:36-46) with the psycopg2 Redshift connection replaced by the Spark
 catalog and the per-column pandas inference loop replaced by the single-pass
 aggregate (inference.py).  The diff stays on the driver like the reference's
-pandas merge: both sides are catalog-sized, so it is returned as a local
-DataFrame that its consumers read without a Spark job (diff.py).
+pandas merge: both sides are catalog-sized, so ``self.metadata`` and the
+collected deployed columns stay Python lists, and the one Spark frame a
+diff builds is the local DataFrame it returns (diff.py), which the ALTER
+emitters read without a Spark job.
 
 Constructor parameters track RAS.py:47-80; ``conn`` becomes ``spark``, and
-``file_df`` accepts a Spark DataFrame.  An optional ``deployed_df`` can be
-passed to ``evaluate_table_ddl_diffs`` for catalog-independent diffing
-(e.g. against a stubbed deployed schema, or one fetched over JDBC from a
-real Redshift).
+``file_df`` accepts a Spark DataFrame.  ``evaluate_table_ddl_diffs`` takes
+one option, ``deployed_df``, for catalog-independent diffing: a stubbed
+deployed schema, or a live warehouse's via
+``catalog.deployed_schema_df_jdbc``.
 """
 
 from __future__ import annotations
@@ -123,6 +125,11 @@ class SparkAutoSchema:
             self._generate_table_metadata()
         return self.metadata
 
+    def _proposed(self) -> list[tuple[str, str]] | None:
+        """(field, proposed_type) per column; None for empty input."""
+        meta = self._ensure_metadata()
+        return None if meta is None else [(ci.name, ci.proposed_type) for ci in meta]
+
     def metadata_df(self) -> DataFrame | None:
         """Inference result as a DataFrame (field, spark_type, proposed_type)."""
         meta = self._ensure_metadata()
@@ -150,13 +157,13 @@ class SparkAutoSchema:
         )
 
     def generate_table_ddl(self) -> str | None:
-        meta = self._ensure_metadata()
-        if meta is None:
+        columns = self._proposed()
+        if columns is None:
             return None  # empty file -> no DDL (RAS.py:149-150)
         return _ddl.generate_table_ddl(
             self.schema,
             self.table,
-            [(ci.name, ci.proposed_type) for ci in meta],
+            columns,
             export_field_name=self.export_field_name,
             export_field_type=self.export_field_type,
             primary_key=self.primary_key,
@@ -170,14 +177,14 @@ class SparkAutoSchema:
         partitioned_by: list[str] | None = None,
         location: str | None = None,
     ) -> str | None:
-        """Spark SQL dialect DDL (rebuild extension)."""
-        meta = self._ensure_metadata()
-        if meta is None:
+        """Spark SQL dialect DDL (rebuild extension); None for empty input."""
+        columns = self._proposed()
+        if columns is None:
             return None
         return _ddl.generate_spark_table_ddl(
             self.schema,
             self.table,
-            [(ci.name, ci.proposed_type) for ci in meta],
+            columns,
             fmt=fmt,
             partitioned_by=partitioned_by,
             location=location,
@@ -185,50 +192,43 @@ class SparkAutoSchema:
 
     # ----------------------------------------------------------------- diff
     def evaluate_table_ddl_diffs(
-        self,
-        deployed_df: DataFrame | None = None,
-        jdbc_url: str | None = None,
-        jdbc_properties: dict[str, str] | None = None,
+        self, deployed_df: DataFrame | None = None
     ) -> DataFrame:
         """RAS.py:202-225 — proposed vs deployed full-outer diff, as a local
-        DataFrame (field, proposed_type, deployed_type, reason).
-
-        Deployed-schema source, in precedence order: an explicit
-        ``deployed_df`` (field, deployed_type); a live warehouse via
-        ``jdbc_url`` (the reference's psycopg2 information_schema fetch,
-        RAS.py:215-216, re-expressed over ``spark.read.jdbc``); else the
-        Spark catalog.
-        """
+        DataFrame (field, proposed_type, deployed_type, reason) held in
+        ``self.diff`` (set it to None to diff again).  The deployed side is
+        ``deployed_df`` (field, deployed_type), e.g. a live warehouse's via
+        ``catalog.deployed_schema_df_jdbc`` (RAS.py:215-216), else the Spark
+        catalog's; it is collected and diffed against ``self.metadata`` in
+        Python.  Raises ``ValueError("no metadata (empty input file)")`` for
+        empty input."""
         spark = self._require_spark()
-        meta = self._ensure_metadata()
-        if meta is None:
+        proposed = self._proposed()
+        if proposed is None:
             raise ValueError("no metadata (empty input file)")
-        if deployed_df is None and jdbc_url is not None:
-            deployed_df = _catalog.deployed_schema_df_jdbc(
-                spark, jdbc_url, self.schema, self.table, jdbc_properties
-            )
         if deployed_df is None:
             deployed_df = _catalog.deployed_schema_df(spark, self.schema, self.table)
-        proposed_df = inference_to_df(spark, meta).select("field", "proposed_type")
-        self.diff = _diff.evaluate_diffs(proposed_df, deployed_df)
+        deployed = deployed_df.select("field", "deployed_type").collect()
+        self.diff = _diff.evaluate_diffs(spark, proposed, deployed)
         return self.diff
 
-    def generate_column_ddl(self, deployed_df: DataFrame | None = None) -> str | None:
-        """RAS.py:177-192 — ALTER ADD COLUMN for each MISSING diff row."""
+    def _missing(self) -> list[tuple[str, str]]:
         if self.diff is None:
-            self.evaluate_table_ddl_diffs(deployed_df)
-        missing = _diff.missing_columns(self.diff)
-        return _ddl.generate_column_ddl(self.schema, self.table, missing)
+            self.evaluate_table_ddl_diffs()
+        return _diff.missing_columns(self.diff)
 
-    def generate_spark_column_ddl(
-        self, deployed_df: DataFrame | None = None
-    ) -> str | None:
+    def generate_column_ddl(self) -> str | None:
+        """RAS.py:177-192 — ALTER ADD COLUMN for each MISSING diff row,
+        diffing against the Spark catalog first if no diff is held.
+        Raises ``ValueError("no metadata (empty input file)")`` for empty
+        input."""
+        return _ddl.generate_column_ddl(self.schema, self.table, self._missing())
+
+    def generate_spark_column_ddl(self) -> str | None:
         """Spark SQL dialect twin of :meth:`generate_column_ddl`: one
         runnable ``ALTER TABLE ... ADD COLUMNS (...)`` for the MISSING
         rows — executing it against the Spark catalog and re-running
         :meth:`evaluate_table_ddl_diffs` reconverges the diff to empty
-        (lifecycle-tested)."""
-        if self.diff is None:
-            self.evaluate_table_ddl_diffs(deployed_df)
-        missing = _diff.missing_columns(self.diff)
-        return _ddl.generate_spark_column_ddl(self.schema, self.table, missing)
+        (lifecycle-tested).  Raises ``ValueError("no metadata (empty input
+        file)")`` for empty input."""
+        return _ddl.generate_spark_column_ddl(self.schema, self.table, self._missing())

@@ -7,17 +7,17 @@ on the column name, then row-wise classification into
 TYPE MISMATCH / MISSING / DEPRECATED, dropping ``notype`` proposals.
 
 Both sides hold one row per column, so the diff stays in Python like the
-reference's: :func:`diff_rows` is the one implementation of the rule, and
-:func:`evaluate_diffs` returns its rows as a local relation that consumers
-collect, filter and project without a Spark job.
+reference's: :func:`diff_rows` is the one implementation of the rule over
+two (field, type) row lists, :func:`evaluate_diffs` lifts its rows into the
+one local relation a diff builds, and :func:`missing_columns` reads that
+relation's rows back in Python, without a Spark job.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .io import local_df
@@ -64,24 +64,19 @@ def diff_rows(
     return [(f, p, d, reason) for f, p, d in joined if (reason := _reason(p, d))]
 
 
-def evaluate_diffs(proposed: DataFrame, deployed: DataFrame) -> DataFrame:
-    """:func:`diff_rows` over DataFrames (field, proposed_type) and
-    (field, deployed_type), returned as a local DataFrame with the columns
-    (field, proposed_type, deployed_type, reason).  Both sides are collected;
-    for local relations that runs no Spark job."""
-    rows = diff_rows(
-        proposed.select("field", "proposed_type").collect(),
-        deployed.select("field", "deployed_type").collect(),
-    )
-    return local_df(proposed.sparkSession, rows, DIFF_SCHEMA)
+def evaluate_diffs(
+    spark: SparkSession,
+    proposed: Sequence[tuple[str, str | None]],
+    deployed: Sequence[tuple[str, str | None]],
+) -> DataFrame:
+    """:func:`diff_rows` of (field, proposed_type) and (field, deployed_type)
+    rows, as a local DataFrame (field, proposed_type, deployed_type, reason)
+    whose reads run no Spark job."""
+    return local_df(spark, diff_rows(proposed, deployed), DIFF_SCHEMA)
 
 
 def missing_columns(diff: DataFrame) -> list[tuple[str, str]]:
-    """Collect (field, proposed_type) for MISSING rows (RAS.py:188-189);
-    over the local diff relation this runs no Spark job."""
-    rows = (
-        diff.filter(F.col("reason") == REASON_MISSING)
-        .select("field", "proposed_type")
-        .collect()
-    )
-    return [(r["field"], r["proposed_type"]) for r in rows]
+    """(field, proposed_type) of the MISSING rows (RAS.py:188-189), read
+    from the diff's rows in Python; over the local diff relation this runs
+    no Spark job."""
+    return [(f, p) for f, p, _, reason in diff.collect() if reason == REASON_MISSING]

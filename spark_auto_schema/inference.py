@@ -55,14 +55,13 @@ what pandas-typed CSV input already produces.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .io import local_df, spread_small_scan, sql_name
+from .io import local_df, spread_small_scan, sql_name, sql_string
 
 BOOL_LITERALS = ("true", "false", "t", "f", "0", "1")
 INT4_MIN, INT4_MAX = -2147483648, 2147483647
@@ -131,29 +130,15 @@ class ColumnInference:
     proposed_type: str  # Redshift-vocabulary proposed type (or Spark type in native mode)
 
 
-def _sql_string(s: str) -> str:
-    """A SQL string constant for ``s`` that reads the same under every
-    ``spark.sql.parser.escapedStringLiterals`` setting: quotes and
-    backslashes are spliced in as ``chr`` calls, which fold to a literal."""
-    parts = [
-        f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'"
-        for p in re.split(r"(['\\])", s)
-        if p
-    ]
-    if len(parts) == 1:
-        return parts[0]
-    return f"concat({', '.join(parts)})" if parts else "''"
-
-
 def _parsed_timestamp_sql(c: str) -> str:
     """The first of :data:`COMPLETE_DATE_FORMATS` that parses SQL column
     ``c``, as a timestamp; NULL when none does."""
     stamps = ", ".join(
-        f"CASE WHEN {c} RLIKE {_sql_string(prefix)} "
-        f"THEN try_to_timestamp({c}, {_sql_string(fmt)}) END"
+        f"CASE WHEN {c} RLIKE {sql_string(prefix)} "
+        f"THEN try_to_timestamp({c}, {sql_string(fmt)}) END"
         for fmt, prefix in COMPLETE_DATE_FORMATS.items()
     )
-    return f"CASE WHEN {c} RLIKE {_sql_string(DATEISH_RE)} THEN coalesce({stamps}) END"
+    return f"CASE WHEN {c} RLIKE {sql_string(DATEISH_RE)} THEN coalesce({stamps}) END"
 
 
 def _cells_sql(i: int, name: str, dtype: T.DataType) -> str:
@@ -196,7 +181,7 @@ def _cells_sql(i: int, name: str, dtype: T.DataType) -> str:
 # try_cast: ANSI-safe — malformed numeric text yields NULL, mirroring the
 # reference's try/except around astype(float) (RAS.py:314-326).
 _PROBES = (
-    f"CASE WHEN s RLIKE {_sql_string(NUMERIC_HINT_RE)} THEN try_cast(s AS DOUBLE) END AS d",
+    f"CASE WHEN s RLIKE {sql_string(NUMERIC_HINT_RE)} THEN try_cast(s AS DOUBLE) END AS d",
     f"{_parsed_timestamp_sql('s')} AS t",
 )
 # Null handling: the reference drops nulls before probing (RAS.py:309).
@@ -206,7 +191,7 @@ _PROBES = (
 # ``d`` and ``t``; only typed cells carry ``x`` and ``g``.
 _STATS = (
     "count_if(nn) AS cnt",
-    f"bool_and(lower(s) IN ({', '.join(_sql_string(b) for b in BOOL_LITERALS)})) AS b01",
+    f"bool_and(lower(s) IN ({', '.join(sql_string(b) for b in BOOL_LITERALS)})) AS b01",
     "bool_and(CASE WHEN s IS NOT NULL THEN d IS NOT NULL END) AS isnum",
     "bool_and(coalesce(g, d = floor(d))) AS intg",
     "min(coalesce(x, d)) AS mn",

@@ -30,6 +30,8 @@ Spark-native differences:
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as _pa
 import pyarrow.parquet as _pq
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -43,6 +45,20 @@ from .session import _scoped_conf
 def sql_name(name: str) -> str:
     """``name`` as a backtick-quoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """A SQL string constant for ``s`` that reads the same under every
+    ``spark.sql.parser.escapedStringLiterals`` setting: quotes and
+    backslashes are spliced in as ``chr`` calls, which fold to a literal."""
+    parts = [
+        f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'"
+        for p in re.split(r"(['\\])", s)
+        if p
+    ]
+    if len(parts) == 1:
+        return parts[0]
+    return f"concat({', '.join(parts)})" if parts else "''"
 
 
 def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:

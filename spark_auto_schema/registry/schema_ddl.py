@@ -7,13 +7,13 @@ Assembled by __spark_entry__.queries() / oracle_sql() — the single driver cont
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from spark_auto_schema import SparkAutoSchema
 from pyspark.sql import SparkSession
 from spark_auto_schema.io import local_df
 from spark_auto_schema.types import TYPE_CLASSES
-from spark_auto_schema.diff import evaluate_diffs
+from spark_auto_schema.ddl import generate_column_ddl
+from spark_auto_schema.diff import evaluate_diffs, missing_columns
 
 # ---------------------------------------------------------------------------
 # diff / ddl queries
@@ -51,15 +51,8 @@ def _strings(*names: str) -> T.StructType:
     return T.StructType([T.StructField(n, T.StringType()) for n in names])
 
 
-def _diff_stub_dfs(spark: SparkSession):
-    p = local_df(spark, _DIFF_PROPOSED, _strings("field", "proposed_type"))
-    d = local_df(spark, _DIFF_DEPLOYED, _strings("field", "deployed_type"))
-    return p, d
-
-
 def _q_schema_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p, d = _diff_stub_dfs(spark)
-    return evaluate_diffs(p, d)
+    return evaluate_diffs(spark, _DIFF_PROPOSED, _DIFF_DEPLOYED)
 
 
 def _values_sql(rows: list[tuple[str, str]]) -> str:
@@ -84,17 +77,9 @@ WHERE (proposed_type IS NULL OR proposed_type != 'notype') AND reason IS NOT NUL
 
 
 def _q_column_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    diff = _q_schema_diff(spark, sf_dir)
-    return diff.where(F.col("reason") == "MISSING").select(
-        "field",
-        F.concat(
-            F.lit("ALTER TABLE analytics.t ADD COLUMN "),
-            F.col("field"),
-            F.lit(" "),
-            F.col("proposed_type"),
-            F.lit(";"),
-        ).alias("ddl"),
-    )
+    missing = missing_columns(_q_schema_diff(spark, sf_dir))
+    rows = [(f, generate_column_ddl("analytics", "t", [(f, t)])) for f, t in missing]
+    return local_df(spark, rows, _strings("field", "ddl"))
 
 
 def _column_ddl_oracle_sql() -> str:

@@ -123,12 +123,14 @@ def test_catalog_existence_and_diff(spark, tmp_path):
 
 def test_deployed_schema_df_type_strings(spark, tmp_path):
     """Deployed Spark types lifted into the Redshift vocabulary, in catalog
-    order, for a table whose name only parses backtick-quoted."""
+    order, for a table whose name only parses backtick-quoted and column
+    names a SQL string literal must escape."""
     spark.sql("CREATE DATABASE IF NOT EXISTS sas_types_test")
     spark.sql("DROP TABLE IF EXISTS sas_types_test.`2024`")
     spark.sql(
         "CREATE TABLE sas_types_test.`2024` (c CHAR(8), v VARCHAR(64), "
-        "ntz TIMESTAMP_NTZ, d DECIMAL(10,2), arr ARRAY<INT>, `x y` INT) "
+        "ntz TIMESTAMP_NTZ, d DECIMAL(10,2), arr ARRAY<INT>, `x y` INT, "
+        "`it's\\x` INT) "
         "USING parquet LOCATION '" + str(tmp_path / "t2024") + "'"
     )
     try:
@@ -141,15 +143,19 @@ def test_deployed_schema_df_type_strings(spark, tmp_path):
             ("d", "numeric"),
             ("arr", "text"),
             ("x y", "int4"),
+            ("it's\\x", "int4"),  # quote and backslash survive the SQL text
         ]
     finally:
         spark.sql("DROP TABLE IF EXISTS sas_types_test.`2024`")
         spark.sql("DROP DATABASE IF EXISTS sas_types_test")
 
 
-def test_catalog_diff_runs_no_spark_job(spark, tmp_path):
+def test_catalog_diff_runs_no_spark_job(spark, tmp_path, monkeypatch):
     """Once inference has run, the catalog read, the diff, its collect and
-    both column-DDL dialects are catalog-sized driver work: 0 Spark jobs."""
+    both column-DDL dialects are catalog-sized driver work: 0 Spark jobs,
+    and one ``createDataFrame`` (the diff itself)."""
+    from pyspark.sql import SparkSession
+
     spark.sql("CREATE DATABASE IF NOT EXISTS sas_jobs_test")
     spark.sql("DROP TABLE IF EXISTS sas_jobs_test.nation")
     spark.sql(
@@ -165,6 +171,14 @@ def test_catalog_diff_runs_no_spark_job(spark, tmp_path):
             spark=spark,
         )
         sas._ensure_metadata()
+        frames = []
+        create_data_frame = SparkSession.createDataFrame
+
+        def counted(self, *args, **kwargs):
+            frames.append(args[0])
+            return create_data_frame(self, *args, **kwargs)
+
+        monkeypatch.setattr(SparkSession, "createDataFrame", counted)
         sc.setJobGroup("sas-diff-jobs", "diff job-count pin")
         try:
             rows = sas.evaluate_table_ddl_diffs().collect()
@@ -173,7 +187,10 @@ def test_catalog_diff_runs_no_spark_job(spark, tmp_path):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+            monkeypatch.undo()
         assert sc.statusTracker().getJobIdsForGroup("sas-diff-jobs") == []
+        # catalog-sized rows stay Python lists: the diff is the one frame
+        assert len(frames) == 1, frames
         assert {r["field"]: r["reason"] for r in rows} == {
             "n_regionkey": "MISSING",
             "gone": "DEPRECATED",
@@ -193,6 +210,15 @@ def test_empty_file_returns_none_ddl(spark, tmp_path):
     pq.write_table(pa.table({"a": pa.array([], type=pa.string())}), path)
     sas = SparkAutoSchema(schema="s", table="t", file=path, spark=spark)
     assert sas.generate_table_ddl() is None  # RAS.py:149-150
+    assert sas.generate_spark_table_ddl() is None
+    # the diff and both ALTER emitters have no proposed side to diff
+    for diff_call in (
+        sas.evaluate_table_ddl_diffs,
+        sas.generate_column_ddl,
+        sas.generate_spark_column_ddl,
+    ):
+        with pytest.raises(ValueError, match=r"^no metadata \(empty input file\)$"):
+            diff_call()
 
 
 def test_read_table_events_nanos(spark):
@@ -261,7 +287,7 @@ def test_schema_evolution_merge_and_infer(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from spark_auto_schema.diff import evaluate_diffs
-    from spark_auto_schema.inference import infer_table_schema, inference_to_df
+    from spark_auto_schema.inference import infer_table_schema
     from spark_auto_schema.io import read_parquet_evolving
 
     d = tmp_path / "evolving"
@@ -283,14 +309,11 @@ def test_schema_evolution_merge_and_infer(spark, tmp_path):
     inferred = {ci.name: ci.proposed_type for ci in infer_table_schema(df)}
     assert inferred == {"id": "int4", "name": "varchar(256)", "score": "float8"}
 
-    proposed = inference_to_df(
-        spark, infer_table_schema(df)
-    ).select("field", "proposed_type")
-    deployed = spark.createDataFrame(
-        [("id", "int4"), ("name", "varchar(256)")],
-        "field string, deployed_type string",
-    )
-    diff = {r["field"]: r["reason"] for r in evaluate_diffs(proposed, deployed).collect()}
+    deployed = [("id", "int4"), ("name", "varchar(256)")]
+    diff = {
+        r["field"]: r["reason"]
+        for r in evaluate_diffs(spark, list(inferred.items()), deployed).collect()
+    }
     assert diff == {"score": "MISSING"}
 
 

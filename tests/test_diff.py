@@ -57,22 +57,10 @@ def test_classify_type(t, cls):
     assert classify_type(t) == cls
 
 
-def _mk(spark, rows, col):
-    return spark.createDataFrame(rows, f"field string, {col} string")
-
-
 def test_diff_matrix(spark):
-    proposed = _mk(
-        spark,
-        [("a", "int4"), ("b", "int4"), ("c", "float8"), ("e", "notype")],
-        "proposed_type",
-    )
-    deployed = _mk(
-        spark,
-        [("a", "integer"), ("b", "varchar(256)"), ("d", "date")],
-        "deployed_type",
-    )
-    diff = evaluate_diffs(proposed, deployed)
+    proposed = [("a", "int4"), ("b", "int4"), ("c", "float8"), ("e", "notype")]
+    deployed = [("a", "integer"), ("b", "varchar(256)"), ("d", "date")]
+    diff = evaluate_diffs(spark, proposed, deployed)
     got = {r["field"]: (r["proposed_type"], r["deployed_type"], r["reason"])
            for r in diff.collect()}
     assert got == {
@@ -86,16 +74,12 @@ def test_diff_matrix(spark):
 
 
 def test_diff_empty_when_identical(spark):
-    proposed = _mk(spark, [("a", "int4")], "proposed_type")
-    deployed = _mk(spark, [("a", "int")], "deployed_type")
-    assert evaluate_diffs(proposed, deployed).count() == 0
+    assert evaluate_diffs(spark, [("a", "int4")], [("a", "int")]).count() == 0
 
 
 def test_diff_unknown_types_both_class0_no_mismatch(spark):
     # reference behavior: two unknown types both classify 0 -> equal -> no diff
-    proposed = _mk(spark, [("a", "weird1")], "proposed_type")
-    deployed = _mk(spark, [("a", "weird2")], "deployed_type")
-    assert evaluate_diffs(proposed, deployed).count() == 0
+    assert evaluate_diffs(spark, [("a", "weird1")], [("a", "weird2")]).count() == 0
 
 
 # ------------------------------------------------------- diff parity pins
@@ -137,9 +121,7 @@ PARITY_CASES = {
 @pytest.mark.parametrize("case", sorted(PARITY_CASES))
 def test_diff_parity(spark, case):
     proposed, deployed, want = PARITY_CASES[case]
-    diff = evaluate_diffs(
-        _mk(spark, proposed, "proposed_type"), _mk(spark, deployed, "deployed_type")
-    )
+    diff = evaluate_diffs(spark, proposed, deployed)
     assert diff.columns == ["field", "proposed_type", "deployed_type", "reason"]
     assert sorted(tuple(r) for r in diff.collect()) == sorted(want)
     assert missing_columns(diff) == [
@@ -161,9 +143,7 @@ def test_diff_row_order_proposed_then_deprecated(spark):
                 ("p5", "int8")]
     deployed = [("z_dep", "int4"), ("p3", "timestamp"), ("a_dep", "date"),
                 ("p1", "integer"), ("m_dep", "bool")]
-    diff = evaluate_diffs(
-        _mk(spark, proposed, "proposed_type"), _mk(spark, deployed, "deployed_type")
-    )
+    diff = evaluate_diffs(spark, proposed, deployed)
     assert [tuple(r) for r in diff.collect()] == [
         ("p2", "float8", None, "MISSING"),
         ("p3", "date", "timestamp", "TYPE MISMATCH"),
@@ -201,9 +181,11 @@ def test_deployed_columns_query_rejects_non_identifiers(bad):
 
 
 def test_deployed_schema_df_jdbc_stubbed(spark, monkeypatch):
-    """Stub the JDBC seam (_jdbc_load) and drive the full live-diff flow:
-    jdbc fetch -> evaluate_diffs -> MISSING/TYPE MISMATCH/DEPRECATED."""
-    from spark_auto_schema import catalog
+    """Stub the JDBC seam (_jdbc_load) and drive the full live-diff flow
+    through the facade's one option: jdbc fetch ->
+    ``evaluate_table_ddl_diffs(deployed_df=...)`` ->
+    MISSING/TYPE MISMATCH/DEPRECATED -> ALTER for the MISSING rows."""
+    from spark_auto_schema import SparkAutoSchema, catalog
 
     captured = {}
 
@@ -229,16 +211,21 @@ def test_deployed_schema_df_jdbc_stubbed(spark, monkeypatch):
     assert "table_name = 'orders'" in captured["query"]
     assert captured["properties"]["user"] == "u"
 
-    proposed = _mk(
-        spark,
-        [("a", "int4"), ("b", "int4"), ("c", "float8")],
-        "proposed_type",
+    sas = SparkAutoSchema(
+        schema="analytics",
+        table="orders",
+        file_df=spark.createDataFrame([(5, 7, 2.5)], "a long, b long, c double"),
+        spark=spark,
     )
+    assert [(ci.name, ci.proposed_type) for ci in sas._ensure_metadata()] == [
+        ("a", "int4"), ("b", "int4"), ("c", "float8"),
+    ]
     got = {
         r["field"]: r["reason"]
-        for r in evaluate_diffs(proposed, deployed).collect()
+        for r in sas.evaluate_table_ddl_diffs(deployed_df=deployed).collect()
     }
     assert got == {"b": "TYPE MISMATCH", "c": "MISSING", "d": "DEPRECATED"}
+    assert sas.generate_column_ddl() == "ALTER TABLE analytics.orders ADD COLUMN c float8;"
 
 
 def test_missing_catalog_table_diffs_every_column_as_missing(spark, tmp_path):

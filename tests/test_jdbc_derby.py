@@ -22,7 +22,7 @@ import pytest
 
 from spark_auto_schema.catalog import deployed_schema_df_jdbc
 from spark_auto_schema.diff import evaluate_diffs
-from spark_auto_schema.inference import infer_table_schema, inference_to_df
+from spark_auto_schema.inference import infer_table_schema
 from spark_auto_schema.io import read_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -106,14 +106,13 @@ def test_jdbc_live_diff_end_to_end(spark, derby_url):
     deployed schema over JDBC, diff — MISSING / TYPE MISMATCH / DEPRECATED
     must each surface exactly where the drift was planted."""
     li = read_table(spark, SF_DIR, "lineitem")
-    proposed = inference_to_df(spark, infer_table_schema(li)).select(
-        "field", "proposed_type"
-    )
+    proposed = [(ci.name, ci.proposed_type) for ci in infer_table_schema(li)]
     deployed = deployed_schema_df_jdbc(
         spark, derby_url, "analytics", "lineitem_live", dialect="ansi"
-    )
+    ).collect()
     diffs = {
-        r["field"]: r["reason"] for r in evaluate_diffs(proposed, deployed).collect()
+        r["field"]: r["reason"]
+        for r in evaluate_diffs(spark, proposed, deployed).collect()
     }
     assert diffs == {
         "l_shipdate": "MISSING",
